@@ -1,6 +1,8 @@
 """Full oracle sweep: run every declared query against the DuckDB oracle.
 
 Usage: python scripts/oracle_sweep.py [sf_dir]   (default /root/testdata/sf0.01)
+Without sf_dir, $SPARK_GRAFT_SF_DIR (the variable bench.py reads) replaces
+that default when set.
 Prints one line per query and a final PASS/FAIL tally.
 """
 
@@ -18,6 +20,8 @@ from wiki_entity_linker_spark.session import get_spark
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    if len(sys.argv) == 1:
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", sf_dir)
     spark = get_spark()
     qs = entry.queries()
     sqls = entry.oracle_sql()

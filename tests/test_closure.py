@@ -1,13 +1,24 @@
 """Connected components + transitive closure vs Python references
 (closure_edges micro-fixture, FIXTURES.md §6)."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.operators import closure
 from wiki_entity_linker_spark.operators.closure import (
     components_with_singletons,
     connected_components,
     transitive_closure,
 )
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Lower both tail-solve cut-overs to 0 so the star-contraction and
+    doubling loops run distributed to convergence (only an empty edge set
+    still goes to the driver)."""
+    monkeypatch.setattr(closure, "_CC_LOCAL_SOLVE_EDGES", 0)
+    monkeypatch.setattr(closure, "_CLOSURE_LOCAL_SOLVE_EDGES", 0)
 
 
 def _py_components(edges: list[tuple[str, str]]) -> dict[str, str]:
@@ -29,7 +40,7 @@ def _py_components(edges: list[tuple[str, str]]) -> dict[str, str]:
     return {n: find(n) for n in nodes}
 
 
-def test_cc_matches_union_find(spark):
+def test_cc_matches_union_find(spark, distributed):
     edges = [("a", "b"), ("b", "c"), ("x", "y"), ("p", "p"),
              ("m", "n"), ("n", "o"), ("o", "m")]  # chain + pair + loop + cycle
     df = spark.createDataFrame(edges, "id_a string, id_b string")
@@ -38,7 +49,7 @@ def test_cc_matches_union_find(spark):
     assert got == want
 
 
-def test_cc_long_chain(spark):
+def test_cc_long_chain(spark, distributed):
     """Chains are label propagation's worst case; alternating stars must
     converge within the iteration budget."""
     n = 200
@@ -49,7 +60,7 @@ def test_cc_long_chain(spark):
     assert {r["component"] for r in out} == {"n0000"}
 
 
-def test_cc_singletons(spark):
+def test_cc_singletons(spark, distributed):
     nodes = spark.createDataFrame([("a",), ("b",), ("c",)], "file_id string")
     edges = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
     got = {r["id"]: r["component"] for r in
@@ -57,7 +68,7 @@ def test_cc_singletons(spark):
     assert got == {"a": "a", "b": "a", "c": "c"}
 
 
-def test_transitive_closure_cycle_and_chain(spark):
+def test_transitive_closure_cycle_and_chain(spark, distributed):
     """create_all_types_mapping.py:20-49 semantics: cycle-safe, full
     reachability over a 4-deep chain."""
     edges = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"),  # 4-deep chain
@@ -71,7 +82,7 @@ def test_transitive_closure_cycle_and_chain(spark):
     assert got == want
 
 
-def test_cc_local_solve_matches_distributed(spark):
+def test_cc_local_solve_matches_distributed(spark, monkeypatch):
     """The CC-MR hybrid (driver union-find under the edge threshold) must
     produce byte-identical labels to the fully distributed loop, on string
     and long ids, including the mid-loop cutover."""
@@ -81,29 +92,28 @@ def test_cc_local_solve_matches_distributed(spark):
         ("id_a bigint, id_b bigint",
          [(i + 1, i) for i in range(60)] + [(100, 200), (201, 200)]),
     ]
+
+    def labels(df, cut_over):
+        monkeypatch.setattr(closure, "_CC_LOCAL_SOLVE_EDGES", cut_over)
+        return {(r["id"], r["component"])
+                for r in connected_components(df).collect()}
+
     for schema, edges in cases:
         df = spark.createDataFrame(edges, schema)
-        dist = {(r["id"], r["component"])
-                for r in connected_components(df).collect()}
-        # threshold larger than the edge set → immediate local solve
-        local = {(r["id"], r["component"])
-                 for r in connected_components(
-                     df, local_solve_threshold=10_000).collect()}
+        dist = labels(df, 0)
+        # cut-over larger than the edge set → immediate local solve
+        local = labels(df, 10_000)
         assert local == dist, schema
-        # threshold hit only after contraction rounds (mid-loop cutover):
+        # cut-over hit only after contraction rounds (mid-loop cutover):
         # the 60-edge chain shrinks below 30 edges after a round or two
         if "bigint" in schema:
-            mid = {(r["id"], r["component"])
-                   for r in connected_components(
-                       df, local_solve_threshold=30).collect()}
+            mid = labels(df, 30)
             assert mid == dist
 
 
-def test_transitive_closure_raises_on_depth_overflow(spark):
+def test_transitive_closure_raises_on_depth_overflow(spark, distributed):
     """VERDICT r3 #3: a graph deeper than max_depth must fail loudly, not
     return a silently partial closure; a sufficient max_depth succeeds."""
-    import pytest
-
     edges = [(f"n{i}", f"n{i+1}") for i in range(60)]  # 60-deep chain
     df = spark.createDataFrame(edges, "child string, parent string")
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -112,30 +122,48 @@ def test_transitive_closure_raises_on_depth_overflow(spark):
     assert got.count() == 61 * 60 // 2  # full reachability of the chain
 
 
-def test_transitive_closure_local_solve_matches_distributed(spark):
+def test_transitive_closure_local_solve_matches_distributed(spark, monkeypatch):
     """r7: the driver-side BFS tail-solve must be row-identical to the
     doubling loop, including the depth-overflow raise (its cap is the
     loop's convergence bound, not max_depth itself)."""
-    import pytest
-
     # branching DAG with a diamond + a cycle: a->b->c->a, c->d, b->d, d->e
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("b", "d"),
              ("d", "e")] + [(f"m{i}", f"m{i+1}") for i in range(9)]
     df = spark.createDataFrame(edges, "child string, parent string")
+    monkeypatch.setattr(closure, "_CLOSURE_LOCAL_SOLVE_EDGES", 0)
     dist = {(r["child"], r["parent"])
             for r in transitive_closure(df, max_depth=20).collect()}
+    monkeypatch.setattr(closure, "_CLOSURE_LOCAL_SOLVE_EDGES", 10_000)
     loc = {(r["child"], r["parent"])
-           for r in transitive_closure(
-               df, max_depth=20, local_solve_threshold=10_000).collect()}
+           for r in transitive_closure(df, max_depth=20).collect()}
     assert loc == dist
     # overflow parity: 60-deep chain raises under the same bound
     deep = spark.createDataFrame(
         [(f"n{i}", f"n{i+1}") for i in range(60)], "child string, parent string"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        transitive_closure(deep, max_depth=20, local_solve_threshold=10_000)
-    ok = transitive_closure(deep, max_depth=64, local_solve_threshold=10_000)
+        transitive_closure(deep, max_depth=20)
+    ok = transitive_closure(deep, max_depth=64)
     assert ok.count() == 61 * 60 // 2
+
+
+def test_transitive_closure_plan_does_not_grow_with_rounds(spark, distributed):
+    """Each doubling round references the closure three times, so an uncut
+    loop's plan triples per round (a 60-edge chain once grew the driver to
+    15 GB). With the per-round cut the
+    returned frame's analyzed plan has the same node count whether the loop
+    ran two rounds or six."""
+    def plan_nodes(depth):
+        df = spark.createDataFrame(
+            [(f"n{i}", f"n{i+1}") for i in range(depth)],
+            "child string, parent string",
+        )
+        out = transitive_closure(df, max_depth=32)
+        assert out.count() == (depth + 1) * depth // 2
+        return len(out._jdf.queryExecution().analyzed().treeString().splitlines())
+
+    # depth 2 converges in 2 doubling rounds, depth 30 needs 6
+    assert plan_nodes(30) == plan_nodes(2)
 
 
 def _cluster_sets(rows) -> set[frozenset]:
@@ -147,7 +175,7 @@ def _cluster_sets(rows) -> set[frozenset]:
     return {frozenset(v) for v in d.values()}
 
 
-def test_merge_components_equals_full_recompute(spark):
+def test_merge_components_equals_full_recompute(spark, distributed):
     """Incremental absorb (base comps + new edges) must equal one CC over
     the union — clusters AND labels (labels are min member id in both)."""
     from wiki_entity_linker_spark.operators.closure import merge_components
@@ -189,7 +217,7 @@ def test_merge_components_equals_full_recompute(spark):
     assert got["a"] == "A0" == want["a"]
 
 
-def test_merge_components_empty_batch(spark):
+def test_merge_components_empty_batch(spark, distributed):
     from wiki_entity_linker_spark.operators.closure import merge_components
 
     old = components_with_singletons(
@@ -205,7 +233,9 @@ def test_merge_components_empty_batch(spark):
     assert {r["id"]: r["component"] for r in out} == {"a": "a", "b": "a"}
 
 
-def test_merge_components_shuffle_fallback_matches_broadcast(spark):
+def test_merge_components_shuffle_fallback_matches_broadcast(
+    spark, monkeypatch, distributed
+):
     """A pathological batch whose edges bridge more base clusters than the
     broadcast threshold must take the shuffle-join relabel path and produce
     EXACTLY the broadcast path's (and a full recompute's) output."""
@@ -228,9 +258,8 @@ def test_merge_components_shuffle_fallback_matches_broadcast(spark):
 
     outs = []
     for thr in (0, 500_000):  # forced shuffle path vs broadcast path
-        got = merge_components(
-            old_comps, edges, new_nodes, broadcast_threshold=thr
-        ).collect()
+        monkeypatch.setattr(closure, "_BROADCAST_MAP_ROWS", thr)
+        got = merge_components(old_comps, edges, new_nodes).collect()
         outs.append({r["id"]: r["component"] for r in got})
     assert outs[0] == outs[1]
 

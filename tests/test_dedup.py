@@ -225,9 +225,10 @@ def test_ivf_hot_cell_guard(spark):
     assert got == {0, 1, 2, 3, 4}  # lowest-id survivors, deterministic
 
 
-def test_minhash_incremental_equals_oneshot(spark):
+def test_minhash_incremental_equals_oneshot(spark, monkeypatch):
     """Incremental clustering (base + batch probe) must equal one-shot
     clustering of the union — same partition, same min-member labels."""
+    from wiki_entity_linker_spark.operators import closure
     from wiki_entity_linker_spark.operators.closure import (
         components_with_singletons,
     )
@@ -262,6 +263,9 @@ def test_minhash_incremental_equals_oneshot(spark):
         df, "doc_id", "text",
         k_shingle=3, n_hashes=16, bands=8, jaccard_threshold=0.3,
     ).select("id_a", "id_b")
+    # the incremental side took the driver tail-solve; solve the one-shot
+    # reference with the distributed star-contraction loop
+    monkeypatch.setattr(closure, "_CC_LOCAL_SOLVE_EDGES", 0)
     full = components_with_singletons(
         df.select(F.col("doc_id").alias("file_id")), full_pairs,
         id_col="file_id",

@@ -220,6 +220,15 @@ def test_kcore_convergence_rounds(spark, request, sf_fixture):
     assert out.count() > 0  # non-trivial core, converged within the bound
 
 
+@pytest.fixture
+def distributed_matching(monkeypatch):
+    """Lower the matching's tail-solve cut-over to 0 so the locally-dominant
+    rounds run distributed until the edge set drains."""
+    from wiki_entity_linker_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_MATCHING_LOCAL_SOLVE_EDGES", 0)
+
+
 def _greedy_matching_ref(edges):
     """Sequential greedy: scan edges by (score desc, ea, eb); take a pair
     iff both endpoints are still free."""
@@ -231,7 +240,8 @@ def _greedy_matching_ref(edges):
     return sorted(out)
 
 
-def test_locally_dominant_matching_equals_greedy(spark):
+def test_locally_dominant_matching_equals_greedy(spark, monkeypatch):
+    from wiki_entity_linker_spark.operators import graph
     from wiki_entity_linker_spark.operators.graph import locally_dominant_matching
 
     # chain with descending scores forces multiple rounds; add ties to
@@ -242,17 +252,20 @@ def test_locally_dominant_matching_equals_greedy(spark):
         (20, 21, 1.0), (21, 22, 1.0),
     ]
     df = spark.createDataFrame(edges, ["id_a", "id_b", "score"])
-    got = sorted(
-        (r["id_a"], r["id_b"], r["score"])
-        for r in locally_dominant_matching(df).collect()
-    )
-    assert got == _greedy_matching_ref(edges)
-    # one-to-one: no node appears twice
-    nodes = [n for ea, eb, _ in got for n in (ea, eb)]
-    assert len(nodes) == len(set(nodes))
+    # distributed rounds, then the driver-side sequential greedy
+    for cut_over in (0, 500_000):
+        monkeypatch.setattr(graph, "_MATCHING_LOCAL_SOLVE_EDGES", cut_over)
+        got = sorted(
+            (r["id_a"], r["id_b"], r["score"])
+            for r in locally_dominant_matching(df).collect()
+        )
+        assert got == _greedy_matching_ref(edges)
+        # one-to-one: no node appears twice
+        nodes = [n for ea, eb, _ in got for n in (ea, eb)]
+        assert len(nodes) == len(set(nodes))
 
 
-def test_locally_dominant_matching_string_ids(spark):
+def test_locally_dominant_matching_string_ids(spark, distributed_matching):
     # the ER pipeline's canonical file_id is a sha256 STRING: the tie-break
     # must be order-based, not numeric negation. Same chain/tie shape as the
     # numeric test, under the lexicographic id order the greedy ref uses.
@@ -274,7 +287,7 @@ def test_locally_dominant_matching_string_ids(spark):
     assert len(nodes) == len(set(nodes))
 
 
-def test_locally_dominant_matching_empty_and_bound(spark):
+def test_locally_dominant_matching_empty_and_bound(spark, distributed_matching):
     import pytest as _pytest
 
     from wiki_entity_linker_spark.operators.graph import locally_dominant_matching
@@ -291,7 +304,9 @@ def test_locally_dominant_matching_empty_and_bound(spark):
 
 
 @pytest.mark.parametrize("sf_fixture", ["sf0001", "sf001"])
-def test_matching_convergence_rounds(spark, request, sf_fixture):
+def test_matching_convergence_rounds(
+    spark, request, sf_fixture, distributed_matching
+):
     # the onetoone_matching oracle unrolls 5 rounds; pin that the pair
     # graph drains within that bound at BOTH the test SF and the driver's
     from wiki_entity_linker_spark.operators.dedup import minhash_neardup_pairs
@@ -318,7 +333,9 @@ def test_graph_ops_accept_symmetrized_edge_lists(spark):
     assert tc[1]["degree"] == 1 and tc[2]["degree"] == 1
 
 
-def test_matching_drains_exactly_at_bound_and_max_score_dedup(spark):
+def test_matching_drains_exactly_at_bound_and_max_score_dedup(
+    spark, distributed_matching
+):
     from wiki_entity_linker_spark.operators.graph import locally_dominant_matching
 
     # drains in exactly 1 round with max_rounds=1: must SUCCEED (the bound

@@ -48,7 +48,7 @@ def test_pairs_from_blocks_canonical(spark):
     assert got == {("x", "y"), ("x", "z"), ("y", "z")}
 
 
-def test_salt_large_blocks_caps_and_chains(spark):
+def test_salt_large_blocks_caps_and_chains(spark, monkeypatch):
     ids = [f"f{i:03d}" for i in range(100)]
     df = spark.createDataFrame(
         [("hot", i) for i in ids] + [("cold", "f000"), ("cold", "f001")],
@@ -60,8 +60,11 @@ def test_salt_large_blocks_caps_and_chains(spark):
     assert max(prof.values()) <= 17
     assert prof["cold"] == 2
     # chaining keeps the block connected: union of pairs forms one component
+    from wiki_entity_linker_spark.operators import closure
     from wiki_entity_linker_spark.operators.closure import connected_components
 
+    # run the distributed star-contraction loop, not the driver tail-solve
+    monkeypatch.setattr(closure, "_CC_LOCAL_SOLVE_EDGES", 0)
     pairs = pairs_from_blocks(salted.filter(F.col("block_key") != "cold"))
     comp = connected_components(pairs)
     assert comp.select("component").distinct().count() == 1

@@ -8,13 +8,10 @@ row-at-a-time ``F.udf``.
 
 Where Spark has a JVM-side builtin (``levenshtein``) we prefer it — built-ins
 run inside whole-stage codegen and beat any UDF; the pandas UDFs cover what
-the JVM lacks (Jaro-Winkler, TF-IDF cosine).
+the JVM lacks (Jaro-Winkler, term-frequency cosine).
 """
 
 from __future__ import annotations
-
-import math
-from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -25,7 +22,6 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -269,74 +265,8 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# TF-IDF cosine over token arrays (batched; idf-weighted term vectors)
+# TF cosine over hashed token arrays (per-doc compression + per-pair dot)
 # ---------------------------------------------------------------------------
-
-def _tfidf_vec(tokens: list[str], idf: dict[str, float] | None) -> dict[str, float]:
-    tf = Counter(tokens)
-    if idf is None:
-        return dict(tf)
-    return {t: c * idf.get(t, 1.0) for t, c in tf.items()}
-
-
-def _cosine(u: dict[str, float], v: dict[str, float]) -> float:
-    if not u or not v:
-        return 1.0 if (not u and not v) else 0.0
-    if len(u) > len(v):
-        u, v = v, u
-    dot = sum(w * v[t] for t, w in u.items() if t in v)
-    nu = math.sqrt(sum(w * w for w in u.values()))
-    nv = math.sqrt(sum(w * w for w in v.values()))
-    if nu == 0.0 or nv == 0.0:
-        return 0.0
-    return dot / (nu * nv)
-
-
-_TF_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(StringType())),
-        StructField("vals", ArrayType(IntegerType())),
-    ]
-)
-
-
-@F.pandas_udf(_TF_SCHEMA)
-def term_freq_udf(tokens: pd.Series) -> pd.DataFrame:
-    """Per-document term-frequency vectors, computed ONCE per document.
-
-    Building the Counter per *pair side* made the pair scorer O(pairs x
-    doc_len); with per-doc TF arrays the scorer is O(pairs x distinct_terms)
-    — an order of magnitude less Python work on real corpora.
-    """
-    keys, vals = [], []
-    for toks in tokens:
-        c = Counter(toks if toks is not None else [])
-        ks = sorted(c)
-        keys.append(ks)
-        vals.append([c[k] for k in ks])
-    return pd.DataFrame({"keys": keys, "vals": vals})
-
-
-def make_tf_cosine_pairs_udf(idf: dict[str, float] | None = None):
-    """Arrow-batched cosine over precomputed (keys, vals) TF vectors."""
-
-    @F.pandas_udf(DoubleType())
-    def tf_cosine_pairs_udf(
-        ka: pd.Series, va: pd.Series, kb: pd.Series, vb: pd.Series
-    ) -> pd.Series:
-        out = np.empty(len(ka), dtype=np.float64)
-        kav, vav, kbv, vbv = (s.to_numpy() for s in (ka, va, kb, vb))
-        for i in range(len(kav)):
-            u = dict(zip(kav[i], vav[i])) if kav[i] is not None else {}
-            v = dict(zip(kbv[i], vbv[i])) if kbv[i] is not None else {}
-            if idf is not None:
-                u = {t: c * idf.get(t, 1.0) for t, c in u.items()}
-                v = {t: c * idf.get(t, 1.0) for t, c in v.items()}
-            out[i] = _cosine(u, v)
-        return pd.Series(out)
-
-    return tf_cosine_pairs_udf
-
 
 def hashed_tokens(tokens: Column | str) -> Column:
     """Token array -> int64 hash array (JVM xxhash64). Shipping int64 through
@@ -393,47 +323,3 @@ def tf_dot_udf(
             @ np.asarray(cy, dtype=np.float64)[mask]
         )
     return pd.Series(out)
-
-
-@F.pandas_udf(DoubleType())
-def hashed_tf_cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """TF cosine over hashed-token arrays — fully vectorized per row
-    (np.unique counts + sorted-intersection dot product, no Python dicts)."""
-    out = np.empty(len(a), dtype=np.float64)
-    av, bv = a.to_numpy(), b.to_numpy()
-    for i in range(len(av)):
-        xa = np.asarray(av[i] if av[i] is not None else [], dtype=np.int64)
-        xb = np.asarray(bv[i] if bv[i] is not None else [], dtype=np.int64)
-        if xa.size == 0 or xb.size == 0:
-            out[i] = 1.0 if (xa.size == 0 and xb.size == 0) else 0.0
-            continue
-        ua, ca = np.unique(xa, return_counts=True)
-        ub, cb = np.unique(xb, return_counts=True)
-        idx = np.searchsorted(ua, ub)
-        idx[idx == ua.size] = 0
-        mask = ua[idx] == ub
-        dot = float(ca[idx[mask]] @ cb[mask])
-        out[i] = dot / (np.sqrt(ca @ ca) * np.sqrt(cb @ cb))
-    return pd.Series(out)
-
-
-def make_tfidf_cosine_udf(idf: dict[str, float] | None = None):
-    """Build an Arrow-batched cosine scorer over two token-array columns.
-
-    ``idf`` is a plain dict captured in the closure — Spark ships it once per
-    task via the pickled closure (for large vocabularies pass a
-    ``sc.broadcast`` handle's ``.value`` at call time instead). ``idf=None``
-    degrades to raw term-frequency cosine (the oracle-checkable variant).
-    """
-
-    @F.pandas_udf(DoubleType())
-    def tfidf_cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.empty(len(a), dtype=np.float64)
-        av, bv = a.to_numpy(), b.to_numpy()
-        for i in range(len(av)):
-            ta = list(av[i]) if av[i] is not None else []
-            tb = list(bv[i]) if bv[i] is not None else []
-            out[i] = _cosine(_tfidf_vec(ta, idf), _tfidf_vec(tb, idf))
-        return pd.Series(out)
-
-    return tfidf_cosine_udf

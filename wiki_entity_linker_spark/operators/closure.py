@@ -10,14 +10,33 @@ the same skeleton twice:
   rounds, each round two groupBy-min shuffles; per-round ``localCheckpoint``
   cuts lineage so plans don't grow (the driver-loop is control flow only —
   all data stays distributed).
-* :func:`transitive_closure` — frontier-expansion reachability with a depth
-  cap and cycle safety via accumulated ``dropDuplicates``.
+* :func:`transitive_closure` — iterative-doubling reachability (R := R ∪ R.R)
+  with a depth cap; cycle safety via per-round ``dropDuplicates``, and the
+  same per-round ``localCheckpoint`` cut.
+
+Each loop picks its own tail-solve cut-over (finish a small residual graph on
+the driver, result-identically) from the module constants below; shuffle
+width is the session's ``spark.sql.shuffle.partitions``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Tail-solve cut-overs, in canonical edges. Connected components (and the
+# merge graph, which runs them): once star-contraction has shrunk the edge
+# set to at most this, the driver finishes it with union-find. Sized for the ER
+# pipeline's 64-char sha256 string ids (~300 B of driver RSS per edge, so
+# ~150 MB; int64-id graphs could afford 10x); each avoided round saves 2
+# shuffles + a checkpoint + a stats job.
+_CC_LOCAL_SOLVE_EDGES = 500_000
+# Transitive closure: the driver BFS costs O(V·E) and holds every output
+# pair (≤ nodes × reachable set), so only a few thousand edges pay off.
+_CLOSURE_LOCAL_SOLVE_EDGES = 4_096
+# Relabel maps at or under this many rows are broadcast (see
+# :func:`broadcast_if_small`): ~150 B/row driver-side for sha256 labels.
+_BROADCAST_MAP_ROWS = 500_000
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -62,27 +81,6 @@ def _small_star(e: DataFrame) -> DataFrame:
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
-
-
-class _scoped_shuffle_partitions:
-    """Temporarily lower ``spark.sql.shuffle.partitions`` around an
-    iterative driver loop. Star-contraction rounds are many small BARRIER
-    stages; on a small graph their wall time is pure task-dispatch latency,
-    so a 32-partition shuffle of a thousand edges costs 4× the scheduling of
-    an 8-partition one for zero parallelism gain. At scale callers pass
-    ``None`` and the session setting stands."""
-
-    def __init__(self, spark, n: int | None):
-        self.spark, self.n, self.old = spark, n, None
-
-    def __enter__(self):
-        if self.n is not None:
-            self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        if self.old is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
 
 
 def _local_union_find(spark, e: DataFrame) -> DataFrame:
@@ -131,27 +129,18 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    shuffle_partitions: int | None = None,
-    local_solve_threshold: int = 0,
 ) -> DataFrame:
     """→ ``(id, component)`` where component = min node id of the component.
 
     Nodes appearing only as isolated vertices must be handled by the caller
     (left-join the result and coalesce to the node's own id).
-    ``shuffle_partitions``: scoped override for small graphs (see
-    :class:`_scoped_shuffle_partitions`).
 
-    ``local_solve_threshold``: when > 0 and the canonical edge set (checked
-    before the loop and after every contraction round) fits under it, the
-    remaining graph is finished on the driver with union-find — the CC-MR
-    hybrid: star-contraction shrinks the edge set geometrically, so the tail
-    rounds are pure task-dispatch latency on data that fits in one process.
-    Size the threshold to the ID TYPE: ~32 MB of Arrow per 2M int64-id
-    edges, but ~10-15x that in driver RSS for 64-char string ids (the ER
-    pipeline uses 500k for its sha256 ids); each avoided round saves 2
-    shuffles + a checkpoint + a stats job. 0 (the default, and what the
-    registered oracle queries use) keeps the loop fully distributed to
-    convergence.
+    CC-MR hybrid: once the canonical edge set (checked before the loop and
+    after every contraction round) fits under ``_CC_LOCAL_SOLVE_EDGES``, the
+    remaining graph is finished on the driver with union-find —
+    star-contraction shrinks the edge set geometrically, so the tail rounds
+    are pure task-dispatch latency on data that fits in one process. Both
+    paths return the same labels.
     """
     def _stats(d: DataFrame) -> tuple:
         """Cheap set fingerprint: (count, xors of two DISTINCT hash
@@ -171,21 +160,19 @@ def connected_components(
 
     spark = edges.sparkSession
     converged = False
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        e = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
-        prev = _stats(e)
-        if local_solve_threshold and prev[0] <= local_solve_threshold:
+    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
+    prev = _stats(e)
+    if prev[0] <= _CC_LOCAL_SOLVE_EDGES:
+        return _local_union_find(spark, e)
+    for _ in range(max_iter):
+        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        cur = _stats(e)
+        if cur[0] <= _CC_LOCAL_SOLVE_EDGES:
             return _local_union_find(spark, e)
-        for _ in range(max_iter):
-            e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
-            cur = _stats(e2)
-            e = e2
-            if local_solve_threshold and cur[0] <= local_solve_threshold:
-                return _local_union_find(spark, e)
-            if cur == prev:
-                converged = True
-                break
-            prev = cur
+        if cur == prev:
+            converged = True
+            break
+        prev = cur
     if not converged:
         # A partially-converged edge set still contains conflicting
         # (id, component) rows; the dropDuplicates below would pick one
@@ -207,13 +194,9 @@ def connected_components(
 def components_with_singletons(
     nodes: DataFrame, edges: DataFrame, id_col: str = "file_id",
     src: str = "id_a", dst: str = "id_b", max_iter: int = 20,
-    shuffle_partitions: int | None = None,
-    local_solve_threshold: int = 0,
 ) -> DataFrame:
     """All nodes labeled: edge components + singletons as their own id."""
-    comp = connected_components(
-        edges, src, dst, max_iter, shuffle_partitions, local_solve_threshold
-    )
+    comp = connected_components(edges, src, dst, max_iter)
     return (
         nodes.select(F.col(id_col).alias("id"))
         .dropDuplicates(["id"])
@@ -273,79 +256,70 @@ def transitive_closure(
     src: str = "child",
     dst: str = "parent",
     max_depth: int = 20,
-    shuffle_partitions: int | None = None,
-    local_solve_threshold: int = 0,
 ) -> DataFrame:
     """All (src, ancestor) pairs reachable via directed edges — the Spark
     recast of create_all_types_mapping.py:20-49 (depth-capped, cycle-safe).
 
     Uses **iterative doubling** (R := R + R.R): reachable depth doubles per
-    round, so ``ceil(log2(max_depth))`` rounds suffice and — critically —
-    the logical plan only gains a constant number of nodes per round. A
-    frontier-expansion loop that subtracts the accumulated closure from each
-    step references the closure twice per iteration, doubling the *plan* per
-    round; Catalyst analysis then dominates the runtime long before the data
-    does (measured: 160 s at round 5 on a 254-edge graph).
+    round, so ``ceil(log2(max_depth))`` rounds suffice. Each round references
+    the closure three times (both join sides and the union), so without a cut
+    the *plan* triples per round and Catalyst analysis dominates the runtime
+    long before the data does; every round therefore ends in a
+    ``localCheckpoint``, the same cut :func:`connected_components` uses, and
+    the returned plan has a constant size whatever the round count.
 
-    ``local_solve_threshold``: when > 0 and the deduped edge set fits under
-    it, the closure is finished on the driver with BFS (min-depth tracked, so
+    When the deduped edge set fits under ``_CLOSURE_LOCAL_SOLVE_EDGES`` the
+    closure is finished on the driver with BFS instead (min-depth tracked, so
     the depth-overflow raise is bit-identical to the doubling loop's
-    convergence bound) — the same tail-solve discipline as
-    :func:`connected_components`'s CC-MR hybrid: the doubling loop's rounds
-    are pure task-dispatch latency on a graph that fits in one process. Size
-    it to BOTH driver memory for the output pairs (≤ nodes × reachable-set)
-    and the O(V·E) BFS cost — a few thousand edges is the sweet spot; 0 (the
-    default) keeps the loop fully distributed.
+    convergence bound): on a graph that fits in one process the doubling
+    rounds are pure task-dispatch latency.
     """
     import math
 
-    with _scoped_shuffle_partitions(edges.sparkSession, shuffle_partitions):
-        base = (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .dropDuplicates(["a", "b"])
-            .persist()
+    base = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .dropDuplicates(["a", "b"])
+        .localCheckpoint(eager=True)
+    )
+    closure = base
+    prev = closure.count()
+    # +1 confirmation round: a graph of depth exactly max_depth still
+    # grows in the final doubling round, so convergence needs one extra
+    # no-growth round to be observable
+    rounds = max(1, math.ceil(math.log2(max(2, max_depth)))) + 1
+    if prev <= _CLOSURE_LOCAL_SOLVE_EDGES:
+        out = _local_closure(
+            edges.sparkSession, base, 2 ** (rounds - 1), rounds, max_depth
         )
-        closure = base
-        prev = closure.count()
-        # +1 confirmation round: a graph of depth exactly max_depth still
-        # grows in the final doubling round, so convergence needs one extra
-        # no-growth round to be observable
-        rounds = max(1, math.ceil(math.log2(max(2, max_depth)))) + 1
-        if local_solve_threshold and prev <= local_solve_threshold:
-            out = _local_closure(
-                edges.sparkSession, base, 2 ** (rounds - 1), rounds, max_depth
-            )
-            base.unpersist()
-            return out.select(F.col("a").alias(src), F.col("b").alias(dst))
-        converged = False
-        for _ in range(rounds):
-            doubled = (
-                closure.alias("l")
-                .join(closure.alias("r"), F.col("l.b") == F.col("r.a"))
-                .select(F.col("l.a").alias("a"), F.col("r.b").alias("b"))
-                .filter(F.col("a") != F.col("b"))
-            )
-            nxt = closure.unionByName(doubled).dropDuplicates(["a", "b"]).persist()
-            n = nxt.count()  # materializes nxt, so the old closure can be dropped
-            if closure is not base:
-                closure.unpersist()  # bound executor storage: one live round only
-            closure = nxt
-            if n == prev:
-                converged = True
-                break
-            prev = n
-        base.unpersist()
-        if not converged:
-            # mirror connected_components' loud non-convergence: a silently
-            # partial closure corrupts every downstream join
-            closure.unpersist()
-            raise RuntimeError(
-                f"transitive_closure did not converge within {rounds} doubling "
-                f"rounds (max_depth={max_depth}): the graph has paths longer "
-                f"than max_depth. Raise max_depth (rounds grow only "
-                f"logarithmically) or break cycles upstream."
-            )
+        return out.select(F.col("a").alias(src), F.col("b").alias(dst))
+    converged = False
+    for _ in range(rounds):
+        doubled = (
+            closure.alias("l")
+            .join(closure.alias("r"), F.col("l.b") == F.col("r.a"))
+            .select(F.col("l.a").alias("a"), F.col("r.b").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+        )
+        closure = (
+            closure.unionByName(doubled)
+            .dropDuplicates(["a", "b"])
+            .localCheckpoint(eager=True)
+        )
+        n = closure.count()
+        if n == prev:
+            converged = True
+            break
+        prev = n
+    if not converged:
+        # mirror connected_components' loud non-convergence: a silently
+        # partial closure corrupts every downstream join
+        raise RuntimeError(
+            f"transitive_closure did not converge within {rounds} doubling "
+            f"rounds (max_depth={max_depth}): the graph has paths longer "
+            f"than max_depth. Raise max_depth (rounds grow only "
+            f"logarithmically) or break cycles upstream."
+        )
     return closure.select(F.col("a").alias(src), F.col("b").alias(dst))
 
 
@@ -359,15 +333,26 @@ def relabel_through_map(
     table: rows whose component appears in the map take the new label,
     everything else passes through verbatim. The single relabel shape shared
     by :func:`merge_components`, the incremental assignment stage, and
-    ``read_canonical``'s delta resolution — hint ``relabel_map`` with
-    ``F.broadcast`` (or rely on Catalyst's size stats for parquet-backed
-    maps) per call site."""
+    ``read_canonical``'s delta resolution — pass ``relabel_map`` through
+    :func:`broadcast_if_small` (or rely on Catalyst's size stats for
+    parquet-backed maps) per call site."""
     return df.join(
         relabel_map, df[comp_col] == relabel_map["__old_c"], "left"
     ).select(
         df[id_col].alias("id"),
         F.coalesce(relabel_map["__new_c"], df[comp_col]).alias("component"),
     )
+
+
+def broadcast_if_small(relabel_map: DataFrame) -> DataFrame:
+    """Hint a materialized relabel map for broadcast when it has at most
+    ``_BROADCAST_MAP_ROWS`` rows. Maps are batch-sized by construction, but a
+    pathological batch (one edge set bridging millions of base clusters)
+    would blow a forced broadcast, so the size is probed (one count job) and
+    a larger map falls back to a shuffle join."""
+    if relabel_map.count() <= _BROADCAST_MAP_ROWS:
+        return F.broadcast(relabel_map)
+    return relabel_map
 
 
 def merge_components(
@@ -379,8 +364,6 @@ def merge_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    local_solve_threshold: int = 0,
-    broadcast_threshold: int = 500_000,
     return_map: bool = False,
 ) -> DataFrame:
     """Absorb a batch of new nodes into an existing components labeling
@@ -450,11 +433,10 @@ def merge_components(
         e,
         id_col="id",
         max_iter=max_iter,
-        local_solve_threshold=local_solve_threshold,
     ).localCheckpoint(eager=True)  # consumed 3×: merge map, relabel, new rows
     # touched-cluster relabel map: rows of the mini solve whose node id IS an
     # old component label; batch-sized by construction → broadcast when it
-    # actually fits (size probed below)
+    # actually fits (broadcast_if_small)
     old_labels = old_comps.select(F.col(comp_col).alias("id")).dropDuplicates(["id"])
     merge_map = (
         mini.join(old_labels, "id", "left_semi")
@@ -464,18 +446,8 @@ def merge_components(
         # (and the semi-join against corpus-sized old_labels must not rerun)
         .localCheckpoint(eager=True)
     )
-    # batch-sized by construction, but a pathological batch (one edge set
-    # bridging millions of base clusters) would blow a forced broadcast —
-    # probe the actual size and fall back to a shuffle join above the
-    # threshold (~150 B/row driver-side for sha256 string labels, so the
-    # 500k default budgets ~75 MB)
-    probed_map = (
-        F.broadcast(merge_map)
-        if merge_map.count() <= broadcast_threshold
-        else merge_map
-    )
     relabeled_old = relabel_through_map(
-        old_comps, probed_map, id_col=id_col, comp_col=comp_col
+        old_comps, broadcast_if_small(merge_map), id_col=id_col, comp_col=comp_col
     )
     new_assign = mini.join(
         new_nodes.select(F.col(id_col).alias("id")), "id", "left_semi"

@@ -135,7 +135,6 @@ def minhash_neardup_clusters_incremental(
     n_hashes: int = 16,
     bands: int = 8,
     jaccard_threshold: float = 0.5,
-    local_solve_threshold: int = 500_000,
     mgr=None,
 ) -> DataFrame:
     """Cluster ``base_df``, then absorb ``new_df`` incrementally —
@@ -218,7 +217,6 @@ def minhash_neardup_clusters_incremental(
         base.select(F.col(id_col).alias("file_id")),
         _verify(pairs_from_blocks(blocks_b, id_col), toks_b),
         id_col="file_id",
-        local_solve_threshold=local_solve_threshold,
     )
 
     # probe: batch band keys against the base block table (semi-join keeps
@@ -256,7 +254,6 @@ def minhash_neardup_clusters_incremental(
         base_comps,
         edges,
         new.select(F.col(id_col).alias("id")),
-        local_solve_threshold=local_solve_threshold,
     )
 
 

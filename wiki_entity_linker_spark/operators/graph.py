@@ -13,12 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.operators.dedup import _cut
 
-def _cut(df: DataFrame, mgr, name: str) -> DataFrame:
-    """Materialize a multiply-consumed frame once (see dedup._cut)."""
-    if mgr is None:
-        return df.localCheckpoint(eager=True)
-    return mgr.stage(name, lambda: df)
+# Matching tail-solve cut-over, in deduped edges: at or under this the
+# sequential greedy runs on the driver (one Arrow transfer + one sorted scan)
+# instead of O(log) barrier rounds. Sized like closure._CC_LOCAL_SOLVE_EDGES.
+_MATCHING_LOCAL_SOLVE_EDGES = 500_000
 
 
 def pagerank_fixed_point(
@@ -302,7 +302,6 @@ def locally_dominant_matching(
     id_b: str = "id_b",
     score_col: str = "score",
     max_rounds: int = 100,
-    local_solve_threshold: int = 0,
     mgr=None,
 ) -> DataFrame:
     """Distributed greedy one-to-one matching (Preis 1999 / locally
@@ -318,13 +317,11 @@ def locally_dominant_matching(
     LOUD raise past ``max_rounds``. Returns the matched canonical pairs
     with their score.
 
-    ``local_solve_threshold``: when > 0 and the deduped edge set fits under
-    it, the sequential greedy itself runs on the driver (one Arrow
-    transfer + one sorted scan) — result-identical by the equivalence
-    above, and it skips the per-round barrier latency (each distributed
-    round is ~5 shuffles + 3 lineage cuts). The CC-MR-hybrid discipline of
-    connected_components applied to matching; 0 keeps the loop fully
-    distributed.
+    When the deduped edge set fits under ``_MATCHING_LOCAL_SOLVE_EDGES``
+    the sequential greedy itself runs on the driver — result-identical by
+    the equivalence above, and it skips the per-round barrier latency (each
+    distributed round is ~5 shuffles + 3 lineage cuts). The CC-MR-hybrid
+    discipline of connected_components applied to matching.
     """
     edges = (
         scored_pairs.select(
@@ -339,7 +336,7 @@ def locally_dominant_matching(
         .agg(F.max("s").alias("s"))
     )
     edges = _cut(edges, mgr, "ldm_edges_0")
-    if local_solve_threshold and edges.count() <= local_solve_threshold:
+    if edges.count() <= _MATCHING_LOCAL_SOLVE_EDGES:
         return _local_greedy_matching(
             scored_pairs.sparkSession, edges
         ).select(

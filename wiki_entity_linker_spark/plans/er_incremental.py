@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 from wiki_entity_linker_spark.eval.pairwise import evaluate_against_labeled_pairs
 from wiki_entity_linker_spark.operators.blocking import pairs_from_blocks, with_file_id
 from wiki_entity_linker_spark.operators.closure import (
+    broadcast_if_small,
     merge_components,
     relabel_through_map,
 )
@@ -423,8 +424,6 @@ def run_er_incremental(
                     id_col="id",
                     comp_col="component",
                     max_iter=cfg.max_cc_iter,
-                    local_solve_threshold=cfg.cc_local_solve_threshold,
-                    broadcast_threshold=cfg.merge_broadcast_threshold,
                     # the batch-sized relabel map is reused verbatim by the
                     # assignment/delta stages — re-deriving it from the merged
                     # output would cost a corpus-scale semi-join per stage
@@ -473,19 +472,16 @@ def run_er_incremental(
         # was touched) + every batch file. The base side is relabeled through
         # the BATCH-SIZED map — broadcast when it fits (one map-side pass
         # over the old assignment, no shuffle), size-guarded shuffle join
-        # when a pathological batch bridges more base clusters than
-        # cfg.merge_broadcast_threshold.
+        # when a pathological batch bridges too many base clusters
+        # (broadcast_if_small).
         def _assign() -> DataFrame:
             if _merged:  # merge ran this invocation: its map is already cut
                 changed = _merged[0][1]
             else:  # components stage resumed: derive the map from the table
                 changed = _changed_from(comps).localCheckpoint(eager=True)
-            probed = (
-                F.broadcast(changed)
-                if changed.count() <= cfg.merge_broadcast_threshold
-                else changed
+            relabeled_old = relabel_through_map(
+                old_assign, broadcast_if_small(changed)
             )
-            relabeled_old = relabel_through_map(old_assign, probed)
             return relabeled_old.unionByName(_batch_members(comps))
 
         assignment = mgr.stage("assignment", _assign)

@@ -102,19 +102,6 @@ class ERConfig:
     stopword_block_max: int = 20000
     salt_cap: int = 64
     max_cc_iter: int = 20
-    # CC-MR hybrid cutover: star-contraction shrinks the match-edge graph
-    # geometrically; once it fits under this many edges the driver finishes
-    # it with union-find instead of paying 2 shuffles + a checkpoint + a
-    # stats job per residual round. Node ids here are 64-char sha256
-    # STRINGS, so budget ~150 B/object-pair: 500k edges ≈ 150 MB driver RSS
-    # (int64-id graphs can afford 10x this). 0 disables (fully distributed
-    # to convergence).
-    cc_local_solve_threshold: int = 500_000
-    # incremental-append relabel maps (merge_components' merge_map and the
-    # assignment stage's changed-labels map) are batch-sized by construction
-    # and broadcast; a pathological batch bridging more base clusters than
-    # this falls back to a shuffle join instead of blowing the broadcast
-    merge_broadcast_threshold: int = 500_000
     # sorted-neighborhood blocking over path stems (Hernandez-Stolfo): >= 2
     # unions every pair within this many consecutive rows of the stem-sorted
     # corpus into the candidate set — catches near-miss stems that never
@@ -418,7 +405,6 @@ def run_er_pipeline(
             edges,
             id_col="file_id",
             max_iter=cfg.max_cc_iter,
-            local_solve_threshold=cfg.cc_local_solve_threshold,
         ),
     )
 

@@ -413,14 +413,9 @@ def closure_query(spark, sf_dir):
             F.floor(F.col("c_custkey") / 2).cast("long").alias("parent"),
         )
     )
-    # tail-solve discipline (CC-MR hybrid, same as the flagship clustering):
-    # a few-hundred-edge graph pays ~6 barrier rounds of pure task-dispatch
-    # latency in the doubling loop; under the threshold the closure (and its
-    # depth-overflow bound) is finished on the driver, result-identically
-    out = transitive_closure(
-        edges, "child", "parent", shuffle_partitions=8,
-        local_solve_threshold=4096,
-    )
+    # a few-hundred-edge graph: transitive_closure finishes it (and its
+    # depth-overflow bound) on the driver, result-identically
+    out = transitive_closure(edges, "child", "parent")
     return out.select(F.col("child").cast("long"), F.col("parent").cast("long").alias("ancestor"))
 
 
@@ -443,14 +438,11 @@ def connected_components_query(spark, sf_dir):
         .select(F.col("file_id").alias("id_a"), (F.col("file_id") + 1).alias("id_b"))
         .join(nodes.select(F.col("file_id").alias("id_b")), "id_b", "left_semi")
     )
+    # the 500-node chain fixture sits under the CC tail-solve cut-over, so
+    # it is finished on the driver; the distributed star-contraction loop is
+    # exercised by the closure unit tests, which lower the cut-over
     return components_with_singletons(
-        nodes, edges, id_col="file_id", shuffle_partitions=8,
-        # CC-MR hybrid (same config as the flagship er_cluster_documents):
-        # the 500-node chain fixture pays ~7 alternating-star rounds of pure
-        # task-dispatch latency otherwise; the distributed loop stays
-        # exercised (and oracle-pinned) above the threshold and in the
-        # dedicated closure unit tests
-        local_solve_threshold=500_000,
+        nodes, edges, id_col="file_id"
     ).select(
         F.col("id"), F.col("component")
     )
@@ -1309,22 +1301,14 @@ def er_cluster_documents(spark, sf_dir):
     oracle-checked: banding, verify threshold AND the transitive clustering
     are replicated in DuckDB (recursive CTE)."""
     d = _t(spark, sf_dir, "documents")
-    # cut the verified pairs BEFORE the components call: its scoped
-    # 8-partition override (sized for the tiny star-contraction rounds)
-    # would otherwise execute the LAZY verify chain — the query's most
-    # expensive stage — at 8 shuffle partitions instead of the session's
     pairs = minhash_neardup_pairs(
         d, "doc_id", "text", k_shingle=3, n_hashes=16, bands=8, jaccard_threshold=0.3
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    ).select("id_a", "id_b")
     nodes = d.select(F.col("doc_id").alias("file_id"))
     # the flagship mirrors the ER pipeline's scale path: CC-MR hybrid
     # (driver union-find once star-contraction shrinks the edge set) —
-    # result-identical to the fully distributed loop, which stays
-    # oracle-pinned by the connected_components query above
-    return components_with_singletons(
-        nodes, pairs, id_col="file_id", shuffle_partitions=8,
-        local_solve_threshold=500_000,
-    )
+    # result-identical to the fully distributed loop
+    return components_with_singletons(nodes, pairs, id_col="file_id")
 
 
 @q("er_incremental_documents", _cc_oracle(16, 8, 3, 0.3))
@@ -1345,7 +1329,6 @@ def er_incremental_documents(spark, sf_dir):
     return minhash_neardup_clusters_incremental(
         base, batch, "doc_id", "text",
         k_shingle=3, n_hashes=16, bands=8, jaccard_threshold=0.3,
-        local_solve_threshold=500_000,
     )
 
 
@@ -3175,16 +3158,12 @@ def _flagship_gold_items(spark, sf_dir):
     (source × 100-char length bucket) — one definition so a banding or
     bucketing tweak can never skew one metric and not the other."""
     d = _t(spark, sf_dir, "documents")
-    # cut before the scoped-8 components call (see er_cluster_documents)
     pairs = minhash_neardup_pairs(
         d, "doc_id", "text", k_shingle=3, n_hashes=16, bands=8,
         jaccard_threshold=0.3,
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    ).select("id_a", "id_b")
     nodes = d.select(F.col("doc_id").alias("file_id"))
-    comp = components_with_singletons(
-        nodes, pairs, id_col="file_id", shuffle_partitions=8,
-        local_solve_threshold=500_000,
-    )
+    comp = components_with_singletons(nodes, pairs, id_col="file_id")
     gold = d.select(
         "doc_id",
         F.concat_ws(
@@ -4013,10 +3992,10 @@ def onetoone_matching(spark, sf_dir):
         d, "doc_id", "text", k_shingle=3, n_hashes=16, bands=8,
         jaccard_threshold=0.3,
     ).select("id_a", "id_b", F.col("jaccard").alias("score"))
-    # sequential-greedy tail-solve under the threshold (same CC-MR-hybrid
-    # discipline as the flagship clustering; result-identical per the
-    # locally-dominant == sequential-greedy equivalence, oracle-pinned)
-    return locally_dominant_matching(pairs, local_solve_threshold=500_000)
+    # sequential-greedy tail-solve under the matching's cut-over (same
+    # CC-MR-hybrid discipline as the flagship clustering; result-identical
+    # per the locally-dominant == sequential-greedy equivalence, oracle-pinned)
+    return locally_dominant_matching(pairs)
 
 
 def _fs_em_oracle(
