@@ -278,68 +278,6 @@ def test_minhash_incremental_equals_oneshot(spark, monkeypatch):
     assert got[12] == got[13] != got[1]  # batch-internal family
 
 
-def test_ngram_jaccard_stage_table_cut_matches_and_resumes(spark, tmp_path):
-    """The cluster-scale form of the shared-subtree cut: with a StageManager
-    the inverted-index/sizes materializations become durable stage tables —
-    identical result to the localCheckpoint default, and a re-run over the
-    same workdir RESUMES them instead of recomputing."""
-    from wiki_entity_linker_spark.plans.checkpoint import StageManager
-
-    df = spark.createDataFrame(
-        [("a", "one two three four five six"),
-         ("b", "one two three four five seven"),
-         ("c", "alpha beta gamma delta")],
-        "id string, content string",
-    )
-    want = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(df, "id", n=2, threshold=0.3).collect()
-    }
-
-    root = str(tmp_path / "ngram_stages")
-    mgr1 = StageManager(spark, root, {"op": "ngram", "n": 2})
-    got1 = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(df, "id", n=2, threshold=0.3, mgr=mgr1).collect()
-    }
-    assert got1 == want
-    assert not any(m["resumed"] for m in mgr1.counters.values())
-    assert mgr1.store.exists(spark, "ngram_inv")
-    assert mgr1.store.exists(spark, "ngram_sizes")
-
-    # fresh manager, same root + params → every cut resumes from disk
-    mgr2 = StageManager(spark, root, {"op": "ngram", "n": 2})
-    got2 = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(df, "id", n=2, threshold=0.3, mgr=mgr2).collect()
-    }
-    assert got2 == want
-    assert mgr2.counters and all(m["resumed"] for m in mgr2.counters.values())
-
-
-def test_minhash_neardup_stage_table_cut_matches(spark, tmp_path):
-    from wiki_entity_linker_spark.plans.checkpoint import StageManager
-
-    texts = [
-        ("a", "the quick brown fox jumps over the lazy dog again and again"),
-        ("b", "the quick brown fox jumps over the lazy dog again and once"),
-        ("c", "completely different words with nothing shared at all here"),
-    ]
-    df = spark.createDataFrame(texts, "id string, content string")
-    want = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_neardup_pairs(df, "id", k_shingle=3).collect()
-    }
-    mgr = StageManager(spark, str(tmp_path / "mh_stages"), {"op": "mh"})
-    got = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_neardup_pairs(df, "id", k_shingle=3, mgr=mgr).collect()
-    }
-    assert got == want and want  # non-empty: the planted near-pair found
-    assert mgr.store.exists(spark, "minhash_toks")
-    assert mgr.store.exists(spark, "minhash_blocks")
-
-
 def test_segment_dedup_first_writer_wins(spark, tmp_path):
     from wiki_entity_linker_spark.operators.dedup import segment_dedup_stats
     from wiki_entity_linker_spark.plans.checkpoint import StageManager
@@ -405,9 +343,15 @@ def test_exact_substring_coverage_planted(spark, tmp_path):
         }
 
     assert rows() == want
-    mgr = StageManager(spark, str(tmp_path / "exsub_stages"), {"op": "es"})
+    root = str(tmp_path / "exsub_stages")
+    mgr = StageManager(spark, root, {"op": "es"})
     assert rows(mgr) == want
+    assert not any(m["resumed"] for m in mgr.counters.values())
     assert mgr.store.exists(spark, "exact_substring_grams")
+    # fresh manager, same root + params → every nested cut resumes from disk
+    mgr2 = StageManager(spark, root, {"op": "es"})
+    assert rows(mgr2) == want
+    assert mgr2.counters and all(m["resumed"] for m in mgr2.counters.values())
 
 
 def test_winnowing_guarantee_and_caps(spark):

@@ -98,36 +98,6 @@ def test_ann_plans_are_bucketed(spark, sf001):
         assert "CartesianProduct" not in plan, fn.__name__
 
 
-def test_bucketed_join_elides_exchange(spark, sf001, tmp_path):
-    """Two tables bucketed on the same key+count must join with NO Exchange
-    on either side (co-located scan feeds the SortMergeJoin directly) —
-    the repeated-join answer for the pair/score stages at 100 TB."""
-    from wiki_entity_linker_spark.sources.bucketed import read_bucketed, write_bucketed
-
-    docs = spark.read.parquet(f"{sf001}/documents.parquet")
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # sf0.01 tables are broadcast-sized; turn broadcast off so the plan
-        # shows what a 100 TB fact-fact join would do with these tables
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(docs.select("doc_id", "lang"), "bk_meta", "doc_id", 8)
-        write_bucketed(docs.select("doc_id", "source"), "bk_src", "doc_id", 8)
-        joined = read_bucketed(spark, "bk_meta").join(
-            read_bucketed(spark, "bk_src"), "doc_id"
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert "Bucketed: true" in plan
-        # parity with the plain join
-        want = docs.select("doc_id", "lang", "source").count()
-        assert joined.count() == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        spark.sql("DROP TABLE IF EXISTS bk_meta")
-        spark.sql("DROP TABLE IF EXISTS bk_src")
-
-
 def test_coref_window_single_exchange(spark, sf001):
     """The antecedent-resolution window is ONE hash exchange + ONE window —
     no join, no extra shuffle (the coref stage's scale property)."""

@@ -14,13 +14,6 @@ from wiki_entity_linker_spark.functions.similarity import (
     jaro_winkler_batch,
     jaro_winkler_py,
 )
-from wiki_entity_linker_spark.operators.multimodal import (
-    decode_ppm_p6,
-    decode_wav_pcm16,
-    make_ppm,
-    make_wav_pcm16,
-    resize_nearest,
-)
 
 # short alphabet maximizes repeated chars → exercises the transposition and
 # greedy-window paths far harder than uniformly random strings would
@@ -38,47 +31,6 @@ def test_jw_vectorized_kernel_matches_scalar(pairs):
     got = jaro_winkler_batch(av, bv)
     want = np.array([jaro_winkler_py(a, b) for a, b in pairs])
     assert np.allclose(got, want, atol=1e-12), list(zip(pairs, got, want))
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=40),
-    st.integers(min_value=1, max_value=40),
-    st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_ppm_roundtrip_property(w, h, seed):
-    rng = np.random.RandomState(seed)
-    pixels = np.random.RandomState(seed).randint(0, 256, (h, w, 3), dtype=np.uint8)
-    img = decode_ppm_p6(make_ppm(w, h, rng))
-    assert img is not None and (img == pixels).all()
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.binary(min_size=0, max_size=200))
-def test_media_decoders_never_raise(buf):
-    """Arbitrary bytes — including near-miss RIFF/P6 prefixes — must decode
-    to None or a value, never raise (stage-survival contract)."""
-    for prefix in (b"", b"P6", b"P6\n", b"RIFF", b"RIFF\x20\x00\x00\x00WAVE"):
-        b = prefix + buf
-        decode_ppm_p6(b)
-        decode_wav_pcm16(b)
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=30),
-    st.integers(min_value=1, max_value=30),
-    st.integers(min_value=1, max_value=30),
-    st.integers(min_value=1, max_value=30),
-)
-def test_resize_nearest_property(h, w, oh, ow):
-    img = np.arange(h * w, dtype=np.int64).reshape(h, w)
-    out = resize_nearest(img, oh, ow)
-    assert out.shape == (oh, ow)
-    # nearest-neighbor: every output pixel exists in the input,
-    # and corners map to corners
-    assert np.isin(out, img).all()
-    assert out[0, 0] == img[0, 0]
 
 
 @settings(max_examples=150, deadline=None)

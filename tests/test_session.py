@@ -1,6 +1,12 @@
 """Session factory + 100 TB conf profile (SURVEY §2.10 X3)."""
 
-from wiki_entity_linker_spark.session import cluster_conf_profile, get_spark
+import os
+
+from wiki_entity_linker_spark.session import (
+    cluster_conf_profile,
+    default_driver_memory,
+    get_spark,
+)
 
 
 def test_cluster_conf_profile_shape():
@@ -36,3 +42,15 @@ def test_factory_applies_profile_runtime_confs(spark):
         assert s.conf.get("spark.sql.shuffle.partitions") == str(3 * 4 * 2)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_default_driver_memory_fits_physical_ram():
+    """The derived spark.driver.memory default never exceeds physical RAM
+    (and never the old 24g ceiling), so the JVM raises its own OOM error
+    instead of being killed by the kernel."""
+    got = default_driver_memory()
+    assert got.endswith("m")
+    mb = int(got[:-1])
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert 0 < mb < ram_mb
+    assert mb <= 24 * 1024

@@ -20,11 +20,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def sha256_hex(col: Column | str) -> Column:
-    """Per-row invariant hash (BASELINE input_hint): sha256 hex of a string."""
-    return F.sha2(F.col(col) if isinstance(col, str) else col, 256)
-
-
 def h64(col: Column | str) -> Column:
     """Portable 60-bit hash of a string column (same value in DuckDB)."""
     c = F.col(col) if isinstance(col, str) else col

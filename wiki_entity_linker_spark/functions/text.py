@@ -142,13 +142,6 @@ def middle_name_variants(col: Column | str) -> Column:
     )
 
 
-def acronym_of(tokens: Column | str) -> Column:
-    """Upper-cased initials of a token array — extract_akronyms.py:24-35
-    recast (the reference extracts ``r" \\(([A-Z]+)\\)"`` patterns; the graft
-    derives acronym block keys from identifier tokens)."""
-    return F.upper(F.concat_ws("", F.transform(_c(tokens), lambda t: F.substring(t, 1, 1))))
-
-
 # ---------------------------------------------------------------------------
 # Training-data-pipeline text analysis (documents table)
 # ---------------------------------------------------------------------------
@@ -185,17 +178,6 @@ def lang_id(col: Column | str) -> Column:
 def token_count(col: Column | str) -> Column:
     """Whitespace-ish token count — count_unigrams.py analogue."""
     return F.size(tokenize(col))
-
-
-def bpe_ish_piece_count(col: Column | str) -> Column:
-    """BPE-ish subword proxy: count of runs matched by a GPT-2-style regex
-    (letter runs, digit runs, single punctuation)."""
-    return F.size(
-        F.filter(
-            F.split(_c(col), "(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda t: (t != "") & (t != " "),
-        )
-    )
 
 
 def quality_score(col: Column | str) -> Column:

@@ -43,7 +43,3 @@ def cosine_prenorm(
     denom = _c(norm_a) * _c(norm_b)
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
 
-
-def l2_normalize(a: Column | str) -> Column:
-    n = norm(a)
-    return F.transform(_c(a), lambda x: F.when(n == 0, F.lit(0.0)).otherwise(x.cast("double") / n))

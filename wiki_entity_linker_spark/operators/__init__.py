@@ -1,17 +1,1 @@
-from wiki_entity_linker_spark.operators import (  # noqa: F401
-    ann,
-    argmax,
-    asof,
-    blocking,
-    bloom,
-    closure,
-    dedup,
-    er_metrics,
-    graph,
-    multimodal,
-    packing,
-    quantize,
-    retrieval,
-    skew,
-    spans,
-)
+"""DataFrame operators: blocking, dedup, closure, graph, ANN and friends."""

@@ -291,7 +291,6 @@ def meta_block_prune(
     id_col: str = "id",
     block_col: str = "block_key",
     scale: int = 10**6,
-    mgr=None,
 ) -> DataFrame:
     """Meta-blocking with weight-edge pruning (Papadakis et al.,
     "Meta-Blocking: Taking Entity Resolution to the Next Level", TKDE
@@ -320,17 +319,13 @@ def meta_block_prune(
     id-keyed joins for the block-set sizes, and a 1-row broadcast for the
     global mean. Nothing here is ever pairs² and no driver collect.
     """
-    from wiki_entity_linker_spark.operators.dedup import _cut
-
     # b feeds three consumers (both self-join sides + the block-set sizes)
     # and w two (global mean + final verdict) — cut each once so the
     # posting dedup and the pair aggregation run a single time
-    b = _cut(
-        blocks.select(
-            F.col(id_col).alias("id"), F.col(block_col).alias("bk")
-        ).dropDuplicates(["id", "bk"]),
-        mgr,
-        "meta_block_postings",
+    b = (
+        blocks.select(F.col(id_col).alias("id"), F.col(block_col).alias("bk"))
+        .dropDuplicates(["id", "bk"])
+        .localCheckpoint(eager=True)
     )
     nb = b.groupBy("id").agg(F.count("*").cast("long").alias("nb"))
     pairs = (
@@ -354,7 +349,7 @@ def meta_block_prune(
             F.expr(f"({scale} * cbs) div (nb_a + nb_b - cbs)").cast("long"),
         )
     )
-    w = _cut(w, mgr, "meta_block_weights")
+    w = w.localCheckpoint(eager=True)
     mean = w.agg(F.expr("sum(js_w) div count(*)").cast("long").alias("__mw"))
     return (
         w.crossJoin(F.broadcast(mean))

@@ -32,14 +32,14 @@ from wiki_entity_linker_spark.operators.skew import spread_small_input
 def _cut(df: DataFrame, mgr, name: str) -> DataFrame:
     """Materialize a multiply-consumed intermediate exactly once.
 
-    ``mgr=None`` (local/bench default): ``localCheckpoint`` — fastest cut,
-    but executor-volatile (a lost executor kills the lineage-truncated RDD).
-    With a :class:`~wiki_entity_linker_spark.plans.checkpoint.StageManager`,
-    the same cut becomes a durable stage table: executor failure replays
-    from the stage table, and re-runs resume it — the cluster-scale form of
-    the identical plan (downstream consumers see one materialized scan
-    either way)."""
-    if mgr is None:
+    With an enabled
+    :class:`~wiki_entity_linker_spark.plans.checkpoint.StageManager` the cut
+    is a durable stage table: executor failure replays from the stage
+    table, and re-runs resume it. Otherwise (``mgr=None`` or a passthrough
+    manager) it is ``localCheckpoint(eager=True)`` — executor-volatile, but
+    it truncates lineage, which a passthrough stage (a lazy ``persist``)
+    would not. Downstream consumers see one materialized scan either way."""
+    if mgr is None or not mgr.enabled:
         return df.localCheckpoint(eager=True)
     return mgr.stage(name, lambda: df)
 
@@ -74,31 +74,24 @@ def minhash_neardup_pairs(
     n_hashes: int = 16,
     bands: int = 8,
     jaccard_threshold: float = 0.5,
-    mgr=None,
 ) -> DataFrame:
     """LSH candidate pairs verified with exact shingle Jaccard.
 
     shingle → minhash → band → bucket self-join → exact-Jaccard filter:
-    → ``(id_a, id_b, jaccard)``. Pass a ``StageManager`` as ``mgr`` to make
-    the two internal materialization cuts durable stage tables instead of
-    executor-volatile localCheckpoints (see :func:`_cut`).
+    → ``(id_a, id_b, jaccard)``.
     """
     df = spread_small_input(df)
     # ONE tokenize/shingle pass: the shingle arrays feed the signature
     # derivation AND both verify sides; without the cut Catalyst re-runs
     # the scan per consumer (measured: 8 parquet scans in this plan)
-    toks = _cut(
-        df.select(
-            F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
-        ),
-        mgr,
-        "minhash_toks",
-    )
+    toks = df.select(
+        F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
+    ).localCheckpoint(eager=True)
     sigs = minhash_from_shingles(toks, id_col, "sh", n_hashes)
     # blocks feed both sides of the pair self-join: cut here too so the
     # minhash aggregation itself runs once
-    blocks = _cut(
-        lsh_band_blocks(sigs, id_col, bands, n_hashes), mgr, "minhash_blocks"
+    blocks = lsh_band_blocks(sigs, id_col, bands, n_hashes).localCheckpoint(
+        eager=True
     )
     pairs = pairs_from_blocks(blocks, id_col)
     # shuffle_hash on the shingle-array sides: sort-merge would SORT the
@@ -135,7 +128,6 @@ def minhash_neardup_clusters_incremental(
     n_hashes: int = 16,
     bands: int = 8,
     jaccard_threshold: float = 0.5,
-    mgr=None,
 ) -> DataFrame:
     """Cluster ``base_df``, then absorb ``new_df`` incrementally —
     result-identical to clustering base ∪ new in one shot.
@@ -166,36 +158,20 @@ def minhash_neardup_clusters_incremental(
 
     base = spread_small_input(base_df)
     new = spread_small_input(new_df)
-    toks_b = _cut(
-        base.select(
-            F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
-        ),
-        mgr,
-        "minhash_inc_toks_base",
-    )
-    toks_n = _cut(
-        new.select(
-            F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
-        ),
-        mgr,
-        "minhash_inc_toks_new",
-    )
-    blocks_b = _cut(
-        lsh_band_blocks(
-            minhash_from_shingles(toks_b, id_col, "sh", n_hashes),
-            id_col, bands, n_hashes,
-        ),
-        mgr,
-        "minhash_inc_blocks_base",
-    )
-    blocks_n = _cut(
-        lsh_band_blocks(
-            minhash_from_shingles(toks_n, id_col, "sh", n_hashes),
-            id_col, bands, n_hashes,
-        ),
-        mgr,
-        "minhash_inc_blocks_new",
-    )
+    toks_b = base.select(
+        F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
+    ).localCheckpoint(eager=True)
+    toks_n = new.select(
+        F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
+    ).localCheckpoint(eager=True)
+    blocks_b = lsh_band_blocks(
+        minhash_from_shingles(toks_b, id_col, "sh", n_hashes),
+        id_col, bands, n_hashes,
+    ).localCheckpoint(eager=True)
+    blocks_n = lsh_band_blocks(
+        minhash_from_shingles(toks_n, id_col, "sh", n_hashes),
+        id_col, bands, n_hashes,
+    ).localCheckpoint(eager=True)
 
     def _verify(pairs: DataFrame, toks: DataFrame) -> DataFrame:
         # shuffle_hash: see minhash_neardup_pairs — avoids sorting the
@@ -244,10 +220,10 @@ def minhash_neardup_clusters_incremental(
     # cut: _verify consumes toks_touch on BOTH join sides — without the cut
     # the touched semi-join + union re-evaluates per side (measured ~2s of
     # the sf1 append's verify stage)
-    toks_touch = _cut(
-        toks_b.join(touched, id_col, "left_semi").unionByName(toks_n),
-        mgr,
-        "minhash_inc_toks_touched",
+    toks_touch = (
+        toks_b.join(touched, id_col, "left_semi")
+        .unionByName(toks_n)
+        .localCheckpoint(eager=True)
     )
     edges = _verify(pairs, toks_touch)
     return merge_components(
@@ -326,7 +302,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.4,
     max_doc_freq: int | None = 10000,
-    mgr=None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup via inverted-index join (no LSH loss).
 
@@ -356,10 +331,8 @@ def ngram_jaccard_pairs(
     # aggregation, per-id sizes, both sides of the self-join) and Catalyst
     # otherwise re-runs the tokenize/shingle scan per consumer — measured as
     # 4 full document scans in the sf1 plan. The cut stores the exploded
-    # (id, gram) rows (two 8-byte columns) and truncates lineage — pass a
-    # StageManager as ``mgr`` to make it a durable stage table at cluster
-    # scale (identical plan, executor-failure-safe).
-    inv = _cut(inv, mgr, "ngram_inv")
+    # (id, gram) rows (two 8-byte columns) and truncates lineage.
+    inv = inv.localCheckpoint(eager=True)
     if max_doc_freq is not None:
         # the HOT list is tiny by construction → broadcast anti-join; the
         # second checkpoint stops Catalyst cloning the hot aggregation and
@@ -371,14 +344,16 @@ def ngram_jaccard_pairs(
             .filter(F.col("df") > max_doc_freq)
             .select("gram")
         )
-        inv = _cut(
-            inv.join(F.broadcast(hot), "gram", "left_anti"), mgr, "ngram_inv_cold"
+        inv = inv.join(F.broadcast(hot), "gram", "left_anti").localCheckpoint(
+            eager=True
         )
     # sizes from KEPT grams (arrays are distinct, so count(*) = |set|);
     # materialized once — it feeds both sides of the final size join AND a
     # driver-side bounds probe (below) from one tiny table
-    sizes = _cut(
-        inv.groupBy("id").agg(F.count("*").alias("n_grams")), mgr, "ngram_sizes"
+    sizes = (
+        inv.groupBy("id")
+        .agg(F.count("*").alias("n_grams"))
+        .localCheckpoint(eager=True)
     )
     # The pair aggregation is the scale bottleneck: the self-join emits
     # Σ|posting|²/2 rows and nearly every (id_a, id_b) group is unique, so
@@ -863,7 +838,6 @@ def allpairs_jaccard_join(
     k_shingle: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mgr=None,
 ) -> DataFrame:
     """EXACT all-pairs set-similarity join via prefix filtering (Bayardo,
     Ma & Srikant 2007; Chaudhuri et al. 2006) — every pair of documents
@@ -891,8 +865,8 @@ def allpairs_jaccard_join(
     candidate join. Shuffle inventory: df-count (combinable), df join to
     the exploded stream (keyed by shingle), per-doc prefix window (keyed
     by id), candidate self-join (keyed by rare shingles), verify joins
-    (keyed by id). Shingle sets are materialized once (_cut) and consumed
-    by all stages.
+    (keyed by id). Shingle sets are materialized once (localCheckpoint) and
+    consumed by all stages.
     """
     from fractions import Fraction
 
@@ -903,15 +877,11 @@ def allpairs_jaccard_join(
     toks = docs.select(F.col(id_col), tokenize(text_col).alias("tk")).filter(
         F.size("tk") > 0
     )
-    sets = _cut(
-        toks.select(
-            id_col,
-            shingles("tk", k_shingle).alias("s"),
-            F.size(shingles("tk", k_shingle)).cast("long").alias("sz"),
-        ),
-        mgr,
-        "allpairs_sets",
-    )
+    sets = toks.select(
+        id_col,
+        shingles("tk", k_shingle).alias("s"),
+        F.size(shingles("tk", k_shingle)).cast("long").alias("sz"),
+    ).localCheckpoint(eager=True)
     ex = sets.select(id_col, "sz", F.explode("s").alias("sh"))
     dfreq = ex.groupBy("sh").agg(F.count("*").cast("long").alias("df"))
     # prefix length p = sz - ceil(t*sz) + 1, ceil in exact integers

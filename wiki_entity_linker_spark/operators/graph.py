@@ -30,7 +30,6 @@ def pagerank_fixed_point(
     damp_num: int = 85,
     damp_den: int = 100,
     checkpoint_every: int = 8,
-    mgr=None,
 ) -> DataFrame:
     """PageRank on the UNDIRECTED graph of ``edges`` in fixed-point integer
     arithmetic — ``(node, degree, pr_fp, pr)`` after ``n_iter`` power
@@ -50,9 +49,8 @@ def pagerank_fixed_point(
     Scale shape: the classic Pregel-lite DataFrame loop — per iteration
     one shuffle join (messages = edges ⋈ scores on src) and one
     map-side-combinable groupBy(dst) sum; edge and degree frames are
-    materialized ONCE up front (localCheckpoint locally, durable stage
-    tables with ``mgr``) so iterations re-scan nothing upstream, and the
-    score lineage is cut every ``checkpoint_every`` iterations to stop
+    materialized ONCE up front (localCheckpoint) so iterations re-scan
+    nothing upstream, and the score lineage is cut every ``checkpoint_every`` iterations to stop
     plan growth (the closure.py discipline). Undirected expansion means
     every node has out-degree ≥ 1 — no dangling-mass special case. Hot
     nodes (celebrity entities) are single groupBy keys: partial
@@ -60,17 +58,15 @@ def pagerank_fixed_point(
     """
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
-    und = _cut(
-        edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
-            edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        ),
-        mgr,
-        "pagerank_edges",
+    und = (
+        edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .union(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        .localCheckpoint(eager=True)
     )
-    deg = _cut(
-        und.groupBy("src").agg(F.count("*").cast("long").alias("deg")),
-        mgr,
-        "pagerank_degrees",
+    deg = (
+        und.groupBy("src")
+        .agg(F.count("*").cast("long").alias("deg"))
+        .localCheckpoint(eager=True)
     )
     n_nodes = deg.select(F.count("*").alias("n"))  # 1 row, broadcast below
     base = F.expr(f"{scale} div n")
@@ -99,7 +95,7 @@ def pagerank_fixed_point(
             )
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            pr = _cut(pr, mgr, f"pagerank_iter_{i + 1}")
+            pr = pr.localCheckpoint(eager=True)
     return pr.select(
         F.col("src").alias("node"),
         F.col("deg").alias("degree"),
@@ -126,7 +122,6 @@ def triangle_counts(
     edges: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    mgr=None,
 ) -> DataFrame:
     """Per-node triangle participation + local clustering coefficient over
     the undirected graph of canonical (``id_a < id_b``) edges — the cluster
@@ -143,7 +138,7 @@ def triangle_counts(
     list. Returns ``(node, degree, triangles, clustering_coeff)`` for every
     node in the edge set, coefficient = 2T / (d·(d−1)) (0.0 when d < 2).
     """
-    und = _cut(_undirected(edges, id_a, id_b), mgr, "tri_und")
+    und = _undirected(edges, id_a, id_b).localCheckpoint(eager=True)
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
     # orient u→v iff (deg_u, u) < (deg_v, v): joins deg twice (node-sized
     # dimension; AQE broadcasts it when small, shuffles when not)
@@ -157,7 +152,7 @@ def triangle_counts(
             | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
         )
     )
-    ori = _cut(ranked.select("u", "v", "dv"), mgr, "tri_oriented")
+    ori = ranked.select("u", "v", "dv").localCheckpoint(eager=True)
     # wedges from the low vertex; order the two high endpoints so the
     # closing edge's orientation is known (v before w in the total order)
     w1 = ori.select(F.col("u"), F.col("v").alias("x"), F.col("dv").alias("dx"))
@@ -197,7 +192,6 @@ def k_core(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 200,
-    mgr=None,
 ) -> DataFrame:
     """Nodes of the k-core (maximal subgraph with min induced degree ≥ k)
     of the undirected graph of canonical edges, with their in-core degree —
@@ -223,9 +217,9 @@ def k_core(
     shrink steps.)
     """
     n_part = max(edges.sparkSession.sparkContext.defaultParallelism, 1)
-    und = _cut(_undirected(edges, id_a, id_b), mgr, "kcore_und")
+    und = _undirected(edges, id_a, id_b).localCheckpoint(eager=True)
     alive = und.select(F.col("u").alias("id")).distinct()
-    alive = _cut(alive, mgr, "kcore_alive_0")
+    alive = alive.localCheckpoint(eager=True)
     n_alive = alive.count()
     n_at_cut = n_alive
     for r in range(1, max_rounds + 1):
@@ -239,7 +233,7 @@ def k_core(
             .filter(F.col("__d") >= k)
             .select(F.col("u").alias("id"))
         )
-        nxt = _cut(nxt, mgr, f"kcore_alive_{r}")
+        nxt = nxt.localCheckpoint(eager=True)
         n_next = nxt.count()
         if n_next == n_alive:
             alive = nxt
@@ -253,7 +247,7 @@ def k_core(
             # of the current induced graph, so correctness is unaffected)
             # at a partition count matched to the shrunken size
             parts = max(1, min(n_part, n_alive // 50_000 + 1))
-            und = _cut(surv.coalesce(parts), mgr, f"kcore_edges_{r}")
+            und = surv.coalesce(parts).localCheckpoint(eager=True)
             n_at_cut = n_alive
     else:
         raise RuntimeError(

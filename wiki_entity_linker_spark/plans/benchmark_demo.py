@@ -92,24 +92,6 @@ def hyperlink_alias_dict(
     return pool.groupBy("alias", "entity_id").agg(F.count("*").alias("freq"))
 
 
-def gold_mentions(articles: DataFrame) -> DataFrame:
-    """Root, non-coref, non-optional gold labels as flat span rows."""
-    return (
-        articles.select(F.col("id").alias("article_id"), F.explode("labels").alias("l"))
-        .filter(
-            F.col("l.parent").isNull()
-            & ~F.coalesce(F.col("l.coref"), F.lit(False))
-            & ~F.coalesce(F.col("l.optional"), F.lit(False))
-        )
-        .select(
-            "article_id",
-            F.element_at("l.span", 1).alias("start"),
-            F.element_at("l.span", 2).alias("end"),
-            F.col("l.entity_id").alias("entity_id"),
-        )
-    )
-
-
 def run_benchmark_demo(
     spark: SparkSession,
     benchmark_path: str = BENCHMARK,

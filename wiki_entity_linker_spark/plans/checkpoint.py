@@ -133,9 +133,10 @@ class StageManager:
         store: ParquetStore | IcebergStore | None = None,
     ):
         """``enabled=False`` turns the manager into a passthrough (each stage
-        is ``localCheckpoint``-ed to cut lineage but nothing hits disk and no
-        counters are collected) — used by throughput benchmarks where the
-        durability contract isn't under test. ``store`` swaps the stage-table
+        is lazily ``persist``-ed — computed once and reused, but its lineage
+        is kept — nothing hits disk and no counters are collected) — used by
+        throughput benchmarks where the durability contract isn't under
+        test. ``store`` swaps the stage-table
         backend (parquet directories by default, Iceberg tables when a
         catalog is configured); resume manifests stay as JSON files under
         ``root`` either way."""
