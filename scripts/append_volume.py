@@ -1,16 +1,18 @@
-"""Measure per-append WRITE volume: materialized vs delta-chained
-components/assignment (BASELINE.md round-5 table).
+"""Measure one ER append's WRITE volume against the base run's canonical
+tables (BASELINE.md round-5 table).
 
 The round-4 evidence showed append-time READ volume is O(batch) (input
-bytes 0.10x at a 10% batch). The remaining O(corpus) term was the WRITE of
-the components/assignment relabel outputs; ``materialize_assignment=False``
-delta-chains those too. This script runs one 10% append in each mode on the
-benchxl corpus (189k files) and reports bytes actually written per stage
-table — deterministic disk sizes, immune to shared-host load — plus a
-parity check that the delta mode's resolved assignment equals the
-materialized one.
+bytes 0.10x at a 10% batch). An append also writes only batch deltas: for
+components/assignment that is the batch-sized relabel map plus the batch's
+own rows, which ``read_canonical`` resolves into the whole-corpus view.
+This script runs a full ER run over the base (1 - batch-frac) of a fixture
+corpus, appends the rest, and reports bytes actually written per stage
+table — deterministic disk sizes, immune to shared-host load — next to the
+base run's materialized components/assignment bytes. It checks that the
+resolved assignment has exactly one row per file and exits non-zero if not.
 
 Run: ``python scripts/append_volume.py [--scale benchxl] [--cpus 32]``
+(writes ``.benchmarks/append_volume.json``)
 """
 
 from __future__ import annotations
@@ -83,43 +85,23 @@ def main() -> None:
     run_er_pipeline(spark, base, None, base_wd)["_cleanup"]()
     t_base = time.time() - t0
 
-    results = {}
-    for mode, mat in (("materialized", True), ("delta", False)):
-        wd = os.path.join(args.root, f"append_{mode}")
-        shutil.rmtree(wd, ignore_errors=True)
-        t0 = time.time()
-        out = run_er_incremental(
-            spark, base_wd, batch, wd, materialize_assignment=mat
-        )
-        n_assign = out["assignment"].count()  # force the resolved view too
-        wall = time.time() - t0
-        out["_cleanup"]()
-        sizes = stage_sizes(wd)
-        canonical = {
-            k: v for k, v in sizes.items()
-            if k in ("assignment", "components",
-                     "relabel_map", "batch_components", "batch_assignment")
-        }
-        results[mode] = {
-            "wall_s": round(wall, 1),
-            "rows_assignment": n_assign,
-            "bytes_total": sum(sizes.values()),
-            "bytes_canonical_outputs": sum(canonical.values()),
-            "canonical_stage_bytes": canonical,
-            "all_stage_bytes": sizes,
-        }
-
-    # parity: the delta mode's resolved assignment equals the materialized one
-    from wiki_entity_linker_spark.plans.er_incremental import read_canonical
-
-    delta_assign = read_canonical(
-        spark, os.path.join(args.root, "append_delta"), "assignment")
-    mat_assign = spark.read.parquet(
-        os.path.join(args.root, "append_materialized", "assignment.parquet"))
-    diff = delta_assign.exceptAll(mat_assign).count() + mat_assign.exceptAll(
-        delta_assign).count()
+    wd = os.path.join(args.root, "append")
+    shutil.rmtree(wd, ignore_errors=True)
+    t0 = time.time()
+    out = run_er_incremental(spark, base_wd, batch, wd)
+    n_assign = out["assignment"].count()  # force the resolved view too
+    wall = time.time() - t0
+    n_ids = out["assignment"].select("id").distinct().count()
+    out["_cleanup"]()
+    sizes = stage_sizes(wd)
+    canonical = {
+        k: v for k, v in sizes.items()
+        if k in ("relabel_map", "batch_components", "batch_assignment")
+    }
 
     base_sizes = stage_sizes(base_wd)
+    base_canonical = {k: base_sizes.get(k, 0) for k in ("assignment", "components")}
+    one_row_per_file = n_assign == n_ids == n_base + n_batch
     report = {
         "metric": "append_write_volume",
         "scale": args.scale,
@@ -127,20 +109,31 @@ def main() -> None:
         "files_base": n_base,
         "files_batch": n_batch,
         "base_full_run_wall_s": round(t_base, 1),
-        "base_canonical_bytes": {
-            k: base_sizes.get(k, 0) for k in ("assignment", "components")},
-        "modes": results,
-        "delta_vs_materialized_canonical_ratio": round(
-            results["delta"]["bytes_canonical_outputs"]
-            / max(results["materialized"]["bytes_canonical_outputs"], 1), 4),
-        "assignment_parity_diff_rows": diff,
+        "base_canonical_bytes": base_canonical,
+        "append": {
+            "wall_s": round(wall, 1),
+            "rows_assignment": n_assign,
+            "distinct_ids_assignment": n_ids,
+            "bytes_total": sum(sizes.values()),
+            "bytes_canonical_outputs": sum(canonical.values()),
+            "canonical_stage_bytes": canonical,
+            "all_stage_bytes": sizes,
+        },
+        "append_vs_base_canonical_ratio": round(
+            sum(canonical.values()) / max(sum(base_canonical.values()), 1), 4),
+        "assignment_one_row_per_file": one_row_per_file,
     }
     print(json.dumps(report))
     with open(os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".benchmarks", "append_volume_r5.json"), "w") as f:
+            ".benchmarks", "append_volume.json"), "w") as f:
         json.dump(report, f, indent=1)
     spark.stop()
+    if not one_row_per_file:
+        sys.exit(
+            f"resolved assignment: {n_assign} rows, {n_ids} distinct ids, "
+            f"expected {n_base + n_batch} files"
+        )
 
 
 if __name__ == "__main__":

@@ -9,10 +9,18 @@ from wiki_entity_linker_spark.plans.curation import (
     CurationConfig,
     run_curation_pipeline,
 )
+from wiki_entity_linker_spark.plans.checkpoint import (
+    ParquetStore,
+    chain_base,
+    chain_depth,
+    chain_head,
+)
 from wiki_entity_linker_spark.plans.curation_incremental import (
+    compact_curation_chain,
     read_chained_index,
     run_curation_increment,
 )
+from wiki_entity_linker_spark.streaming import streaming_curation_append
 
 SF = "/root/testdata/sf0.001"
 
@@ -101,25 +109,32 @@ def test_guards(spark, replay):
         )
 
 
+class _VerdictsWriteFails(ParquetStore):
+    def write(self, spark, name, df):
+        if name == "verdicts":
+            raise OSError("verdicts write failed")
+        return super().write(spark, name, df)
+
+
 def test_compact_then_append(spark, replay, tmp_path):
     """Compacting a chain head yields a self-contained workdir (no
     chain.json walk) that further appends build on, with final verdicts
-    still equal to the one-shot run."""
-    import os
-
-    from wiki_entity_linker_spark.plans.curation_incremental import (
-        compact_curation_chain,
-    )
-
+    still equal to the one-shot run. A failed write of a narrow table
+    raises instead of leaving a compacted workdir without it."""
     full, _, _, root, train, batch, bench = replay
     b1 = batch.filter(F.col("doc_id") < 430)
     b2 = batch.filter(F.col("doc_id") >= 430)
     inc1 = run_curation_increment(
         spark, str(root / "base"), b1, str(root / "c_inc1"), benchmark=bench
     )
+    with pytest.raises(OSError, match="verdicts write failed"):
+        compact_curation_chain(
+            spark, str(root / "c_inc1"), str(root / "c_fail"),
+            store_factory=_VerdictsWriteFails,
+        )
     cdir = str(root / "c_compact")
     compact_curation_chain(spark, str(root / "c_inc1"), cdir)
-    assert not os.path.exists(os.path.join(cdir, "chain.json"))
+    assert chain_base(cdir) is None
     # chained index resolved into full-run names
     resolved = read_chained_index(spark, cdir, "exact_substring_grams")
     chained = read_chained_index(spark, str(root / "c_inc1"),
@@ -136,12 +151,6 @@ def test_streaming_curation_append(spark, replay, tmp_path):
     is filtered to a no-op; compact_every=1 exercises inline compaction;
     final verdicts equal the one-shot run."""
     import os
-
-    from wiki_entity_linker_spark.streaming.curation_append import (
-        chain_depth,
-        chain_head,
-        streaming_curation_append,
-    )
 
     full, _, _, root, train, batch, bench = replay
     src = str(tmp_path / "drops")
@@ -179,8 +188,6 @@ def test_streaming_curation_append(spark, replay, tmp_path):
     head2 = chain_head(chain_root)
     assert head2.endswith("_compact"), head2  # depth hit compact_every
     assert chain_depth(chain_root) == 0
-
-    from wiki_entity_linker_spark.plans.checkpoint import ParquetStore
 
     got = ParquetStore(head2).read(spark, "verdicts")
     assert _rows(full["verdicts"]) == _rows(got)

@@ -1,12 +1,26 @@
 """Incremental ER append (plans/er_incremental.py) vs full-recompute replay
 on the deterministic fixture corpus."""
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.operators.blocking import with_file_id
-from wiki_entity_linker_spark.plans.er_incremental import run_er_incremental
+from wiki_entity_linker_spark.plans.checkpoint import (
+    ParquetStore,
+    chain_base,
+    chain_depth,
+    chain_head,
+    write_chain_base,
+)
+from wiki_entity_linker_spark.plans.er_incremental import (
+    read_canonical,
+    run_er_incremental,
+)
 from wiki_entity_linker_spark.plans.er_pipeline import run_er_pipeline
+from wiki_entity_linker_spark.streaming import streaming_er_append
 
 
 def _assign_map(df) -> dict:
@@ -35,6 +49,30 @@ def _split_by_file_id(spark, corpus_dir, frac=0.9):
     base = tagged.filter(F.col("file_id") < cutoff).drop("file_id")
     batch = tagged.filter(F.col("file_id") >= cutoff).drop("file_id")
     return src, base, batch
+
+
+def _drop(df, tmp_path, name) -> str:
+    """Land ``df`` as one flat parquet file in ``tmp_path/drops`` (the file
+    stream source wants flat files, not directory datasets); returns the
+    drops directory."""
+    stage = tmp_path / f"stage_{name}"
+    df.coalesce(1).write.parquet(str(stage))
+    part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
+    drops = tmp_path / "drops"
+    os.makedirs(drops, exist_ok=True)
+    shutil.copy(stage / part, drops / f"{name}.parquet")
+    return str(drops)
+
+
+def _halves(batch):
+    """Split a batch at its median file_id (both halves keep id order)."""
+    tagged = with_file_id(batch)
+    ids = sorted(r["file_id"] for r in tagged.select("file_id").collect())
+    mid = ids[len(ids) // 2]
+    return (
+        tagged.filter(F.col("file_id") < mid).drop("file_id"),
+        tagged.filter(F.col("file_id") >= mid).drop("file_id"),
+    )
 
 
 def test_incremental_matches_full_run(spark, tiny_corpus_dir, tmp_path):
@@ -112,10 +150,7 @@ def test_incremental_chains_across_batches(spark, tiny_corpus_dir, tmp_path):
     one append serve as the base of the next, and the final partition equals
     the one-shot run over everything."""
     src, base, batch = _split_by_file_id(spark, tiny_corpus_dir, frac=0.8)
-    ids = sorted(r["file_id"] for r in with_file_id(batch).select("file_id").collect())
-    mid = ids[len(ids) // 2]
-    b1 = with_file_id(batch).filter(F.col("file_id") < mid).drop("file_id")
-    b2 = with_file_id(batch).filter(F.col("file_id") >= mid).drop("file_id")
+    b1, b2 = _halves(batch)
 
     run_er_pipeline(spark, base, None, str(tmp_path / "base"))
     inc1 = run_er_incremental(spark, str(tmp_path / "base"), b1, str(tmp_path / "i1"))
@@ -153,63 +188,82 @@ def test_streaming_er_append_chains_drops(spark, tiny_corpus_dir, tmp_path):
     """Two streamed drops chain onto a batch base and reach the one-shot
     partition; re-running the drained stream (restart, no new files) leaves
     the chain head untouched."""
-    import os
-
-    from wiki_entity_linker_spark.streaming.er_append import (
-        chain_head,
-        streaming_er_append,
-    )
-
     src, base, batch = _split_by_file_id(spark, tiny_corpus_dir, frac=0.8)
-    ids = sorted(r["file_id"] for r in with_file_id(batch).select("file_id").collect())
-    mid = ids[len(ids) // 2]
-    b1 = with_file_id(batch).filter(F.col("file_id") < mid).drop("file_id")
-    b2 = with_file_id(batch).filter(F.col("file_id") >= mid).drop("file_id")
+    b1, b2 = _halves(batch)
 
     run_er_pipeline(spark, base, None, str(tmp_path / "base"))
     full = run_er_pipeline(spark, src, None, str(tmp_path / "full"))
 
-    drops = tmp_path / "drops"
-    os.makedirs(drops)
     chain_root = str(tmp_path / "chain")
     ckpt = str(tmp_path / "stream_ckpt")
 
-    def drop(df, name):
-        df.coalesce(1).write.parquet(str(tmp_path / f"stage_{name}"))
-        import shutil
-
-        part = next(
-            p for p in os.listdir(tmp_path / f"stage_{name}") if p.endswith(".parquet")
-        )
-        shutil.copy(tmp_path / f"stage_{name}" / part, drops / f"{name}.parquet")
-
-    drop(b1, "b1")
+    drops = _drop(b1, tmp_path, "b1")
     q = streaming_er_append(
-        spark, str(drops), str(tmp_path / "base"), chain_root, ckpt
+        spark, drops, str(tmp_path / "base"), chain_root, ckpt
     )
     q.awaitTermination(300)
     head1 = chain_head(chain_root)
     assert head1 is not None
 
-    drop(b2, "b2")
+    _drop(b2, tmp_path, "b2")
     q = streaming_er_append(
-        spark, str(drops), str(tmp_path / "base"), chain_root, ckpt
+        spark, drops, str(tmp_path / "base"), chain_root, ckpt
     )
     q.awaitTermination(300)
     head2 = chain_head(chain_root)
     assert head2 != head1
 
-    got = _assign_map(spark.read.parquet(os.path.join(head2, "assignment.parquet")))
+    got = _assign_map(read_canonical(spark, head2, "assignment"))
     want = _assign_map(full["assignment"])
     assert _normalized(got) == _normalized(want)
 
     # drained restart: no new files → no new epoch, head unchanged
     q = streaming_er_append(
-        spark, str(drops), str(tmp_path / "base"), chain_root, ckpt
+        spark, drops, str(tmp_path / "base"), chain_root, ckpt
     )
     q.awaitTermination(300)
     assert chain_head(chain_root) == head2
     full["_cleanup"]()
+
+
+def test_stream_head_survives_failed_advance(
+    spark, tiny_corpus_dir, tmp_path, monkeypatch
+):
+    """A crash while the chain head is being written must leave the previous
+    head readable (temp file + atomic rename, never truncate-then-write), so
+    the restarted stream resumes from it and then advances normally."""
+    import json
+
+    src, base, batch = _split_by_file_id(spark, tiny_corpus_dir, frac=0.8)
+    b1, b2 = _halves(batch)
+    base_wd = str(tmp_path / "base")
+    run_er_pipeline(spark, base, None, base_wd)
+    chain_root = str(tmp_path / "chain")
+    ckpt = str(tmp_path / "stream_ckpt")
+
+    drops = _drop(b1, tmp_path, "b1")
+    streaming_er_append(spark, drops, base_wd, chain_root, ckpt).awaitTermination(300)
+    head1 = chain_head(chain_root)
+    assert head1 is not None
+
+    real_dump = json.dump
+
+    def crash_on_head(obj, fp, *args, **kwargs):
+        if "head.json" in getattr(fp, "name", ""):
+            raise OSError("simulated crash while writing the chain head")
+        return real_dump(obj, fp, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", crash_on_head)
+    _drop(b2, tmp_path, "b2")
+    with pytest.raises(Exception, match="simulated crash"):
+        streaming_er_append(spark, drops, base_wd, chain_root, ckpt).awaitTermination(300)
+    assert chain_head(chain_root) == head1
+
+    # restart: the un-committed epoch re-runs onto head1 and commits
+    monkeypatch.undo()
+    streaming_er_append(spark, drops, base_wd, chain_root, ckpt).awaitTermination(300)
+    assert chain_head(chain_root) not in (None, head1)
+    assert chain_depth(chain_root) == 2
 
 
 def test_incremental_intra_batch_duplicate_rows(spark, tiny_corpus_dir, tmp_path):
@@ -246,21 +300,16 @@ def test_compact_chain_then_append(spark, tiny_corpus_dir, tmp_path):
     """Compacting a chain head yields a self-contained base (no chain.json
     walk) that further appends build on, with the final partition still
     equal to the one-shot run."""
-    import os
-
     from wiki_entity_linker_spark.plans.er_incremental import compact_chain
 
     src, base, batch = _split_by_file_id(spark, tiny_corpus_dir, frac=0.8)
-    ids = sorted(r["file_id"] for r in with_file_id(batch).select("file_id").collect())
-    mid = ids[len(ids) // 2]
-    b1 = with_file_id(batch).filter(F.col("file_id") < mid).drop("file_id")
-    b2 = with_file_id(batch).filter(F.col("file_id") >= mid).drop("file_id")
+    b1, b2 = _halves(batch)
 
     run_er_pipeline(spark, base, None, str(tmp_path / "base"))
     inc1 = run_er_incremental(spark, str(tmp_path / "base"), b1, str(tmp_path / "i1"))
     compact_chain(spark, str(tmp_path / "i1"), str(tmp_path / "c1"))
     # compacted dir resolves every canonical table WITHOUT a chain pointer
-    assert not os.path.exists(tmp_path / "c1" / "chain.json")
+    assert chain_base(str(tmp_path / "c1")) is None
     inc2 = run_er_incremental(spark, str(tmp_path / "c1"), b2, str(tmp_path / "i2"))
     full = run_er_pipeline(spark, src, None, str(tmp_path / "full"))
     assert _normalized(_assign_map(inc2["assignment"])) == _normalized(
@@ -319,22 +368,9 @@ def test_streaming_auto_compaction_bounds_chain_depth(
     """Six streamed drops with compact_every=2: the chain depth never
     exceeds 2, the head after a compaction epoch is self-contained (no
     chain.json walk), and the final clustering equals the one-shot run.
-    Runs in delta-assignment mode — the production shape — so every epoch
-    additionally writes only O(batch) (no corpus-sized assignment table in
-    any epoch workdir) and compaction is the only place the whole-corpus
-    tables materialize. (The materialized streaming path is covered by
-    test_streaming_er_append_chains_drops; the two modes share all code but
-    the stage-write set.)"""
-    import os
-
-    materialize = False
-
-    from wiki_entity_linker_spark.streaming.er_append import (
-        chain_depth,
-        chain_head,
-        streaming_er_append,
-    )
-
+    Every epoch writes only O(batch) (no corpus-sized assignment table in
+    any epoch workdir): compaction is the only place the whole-corpus
+    tables materialize."""
     src, base, batch = _split_by_file_id(spark, tiny_corpus_dir, frac=0.7)
     ids = sorted(r["file_id"] for r in with_file_id(batch).select("file_id").collect())
     n_drops = 6
@@ -353,43 +389,31 @@ def test_streaming_auto_compaction_bounds_chain_depth(
     run_er_pipeline(spark, base, None, str(tmp_path / "base"))
     full = run_er_pipeline(spark, src, None, str(tmp_path / "full"))
 
-    drops = tmp_path / "drops"
-    os.makedirs(drops)
     chain_root = str(tmp_path / "chain")
     ckpt = str(tmp_path / "stream_ckpt")
 
-    def drop(df, name):
-        import shutil
-
-        df.coalesce(1).write.parquet(str(tmp_path / f"stage_{name}"))
-        part = next(
-            p for p in os.listdir(tmp_path / f"stage_{name}") if p.endswith(".parquet")
-        )
-        shutil.copy(tmp_path / f"stage_{name}" / part, drops / f"{name}.parquet")
-
     for i, sl in enumerate(slices):
-        drop(sl, f"d{i}")
+        drops = _drop(sl, tmp_path, f"d{i}")
         q = streaming_er_append(
-            spark, str(drops), str(tmp_path / "base"), chain_root, ckpt,
-            compact_every=2, materialize_assignment=materialize,
+            spark, drops, str(tmp_path / "base"), chain_root, ckpt,
+            compact_every=2,
         )
         q.awaitTermination(300)
         assert chain_depth(chain_root) <= 2
-        if not materialize:
-            head_now = chain_head(chain_root)
-            if not head_now.endswith("_compact"):
-                # epoch workdirs never carry the corpus-sized table
-                assert not os.path.exists(
-                    os.path.join(head_now, "assignment.parquet"))
-                assert os.path.exists(
-                    os.path.join(head_now, "relabel_map.parquet"))
+        head_now = chain_head(chain_root)
+        if not head_now.endswith("_compact"):
+            # epoch workdirs never carry the corpus-sized table
+            assert not os.path.exists(
+                os.path.join(head_now, "assignment.parquet"))
+            assert os.path.exists(
+                os.path.join(head_now, "relabel_map.parquet"))
 
     head = chain_head(chain_root)
     # 6 appends at compact_every=2 → the last epoch compacted: head is a
     # self-contained workdir and depth reset to 0
     assert chain_depth(chain_root) == 0
     assert head.endswith("_compact")
-    assert not os.path.exists(os.path.join(head, "chain.json"))
+    assert chain_base(head) is None
 
     got = _assign_map(spark.read.parquet(os.path.join(head, "assignment.parquet")))
     want = _assign_map(full["assignment"])
@@ -403,12 +427,6 @@ def test_read_canonical_store_factory_threads_through_chain(spark, tmp_path):
     every level's tables live in a parquet store rooted AWAY from its
     workdir, so resolution succeeds only if store_factory is consulted at
     each level."""
-    import json
-    import os
-
-    from wiki_entity_linker_spark.plans.checkpoint import ParquetStore
-    from wiki_entity_linker_spark.plans.er_incremental import read_canonical
-
     base_wd = str(tmp_path / "base_wd")
     inc_wd = str(tmp_path / "inc_wd")
     stores_root = tmp_path / "stores"
@@ -423,69 +441,42 @@ def test_read_canonical_store_factory_threads_through_chain(spark, tmp_path):
         [("f3", 3.0)], "file_id string, score double")
     factory(base_wd).write(spark, "features", base_feats)
     factory(inc_wd).write(spark, "batch_features", delta_feats)
-    with open(os.path.join(inc_wd, "chain.json"), "w") as f:
-        json.dump({"base": base_wd}, f)
+    write_chain_base(inc_wd, base_wd)
 
-    got = read_canonical(
-        spark, inc_wd, "features",
-        store=factory(inc_wd), store_factory=factory,
-    )
+    got = read_canonical(spark, inc_wd, "features", store_factory=factory)
     assert {r["file_id"] for r in got.collect()} == {"f1", "f2", "f3"}
 
-    # without the factory, the base level would resolve as
-    # ParquetStore(base_wd) — empty — and must fail loudly, not silently
+    # without the factory, the levels resolve as ParquetStore(workdir) —
+    # empty — and must fail loudly, not silently
     with pytest.raises(ValueError, match="lacks the checkpointed"):
-        read_canonical(spark, inc_wd, "features", store=factory(inc_wd)).collect()
+        read_canonical(spark, inc_wd, "features").collect()
 
 
 def test_incremental_delta_assignment_matches_materialized(spark, tiny_corpus_dir, tmp_path):
-    """materialize_assignment=False writes only the batch-sized relabel map
-    + batch rows, yet the resolved components/assignment views equal the
-    materialized mode's tables AND the one-shot run — across a two-batch
-    chain — and compaction re-materializes them."""
-    import os
-
+    """Appends write only the batch-sized relabel map + batch rows, yet the
+    resolved components/assignment views across a two-batch chain equal the
+    one-shot run, and compaction re-materializes exactly those views."""
     from wiki_entity_linker_spark.plans.er_incremental import compact_chain
 
     src, base, batch = _split_by_file_id(spark, tiny_corpus_dir, frac=0.8)
-    ids = sorted(r["file_id"] for r in with_file_id(batch).select("file_id").collect())
-    mid = ids[len(ids) // 2]
-    b1 = with_file_id(batch).filter(F.col("file_id") < mid).drop("file_id")
-    b2 = with_file_id(batch).filter(F.col("file_id") >= mid).drop("file_id")
+    b1, b2 = _halves(batch)
 
     run_er_pipeline(spark, base, None, str(tmp_path / "base"))
     full = run_er_pipeline(spark, src, None, str(tmp_path / "full"))
 
-    d1 = run_er_incremental(
-        spark, str(tmp_path / "base"), b1, str(tmp_path / "d1"),
-        materialize_assignment=False,
-    )
-    d2 = run_er_incremental(
-        spark, str(tmp_path / "d1"), b2, str(tmp_path / "d2"),
-        materialize_assignment=False,
-    )
-    m1 = run_er_incremental(
-        spark, str(tmp_path / "base"), b1, str(tmp_path / "m1")
-    )
-    m2 = run_er_incremental(
-        spark, str(tmp_path / "m1"), b2, str(tmp_path / "m2")
-    )
+    d1 = run_er_incremental(spark, str(tmp_path / "base"), b1, str(tmp_path / "d1"))
+    d2 = run_er_incremental(spark, str(tmp_path / "d1"), b2, str(tmp_path / "d2"))
 
-    # O(batch) write: no corpus-sized tables in the delta workdirs
+    # O(batch) write: no corpus-sized tables in the append workdirs
     for wd in ("d1", "d2"):
         assert not os.path.exists(tmp_path / wd / "assignment.parquet")
         assert not os.path.exists(tmp_path / wd / "components.parquet")
         assert os.path.exists(tmp_path / wd / "relabel_map.parquet")
         assert os.path.exists(tmp_path / wd / "batch_assignment.parquet")
 
-    # resolved views: EXACT label parity with the materialized chain and the
-    # one-shot run (not just same partitions)
-    want = _assign_map(full["assignment"])
-    assert _assign_map(d2["assignment"]) == _assign_map(m2["assignment"])
-    assert _normalized(_assign_map(d2["assignment"])) == _normalized(want)
-    d_comps = {r["id"]: r["component"] for r in d2["components"].collect()}
-    m_comps = {r["id"]: r["component"] for r in m2["components"].collect()}
-    assert d_comps == m_comps
+    # resolved views: same partition as the one-shot run
+    got = _assign_map(d2["assignment"])
+    assert _normalized(got) == _normalized(_assign_map(full["assignment"]))
 
     # per-level delta sizes are batch-bounded
     n_b2 = b2.count()
@@ -495,8 +486,10 @@ def test_incremental_delta_assignment_matches_materialized(spark, tiny_corpus_di
     compact_chain(spark, str(tmp_path / "d2"), str(tmp_path / "c"))
     assert os.path.exists(tmp_path / "c" / "assignment.parquet")
     got_c = _assign_map(spark.read.parquet(str(tmp_path / "c" / "assignment.parquet")))
-    assert got_c == _assign_map(m2["assignment"])
-    for o in (full, d1, d2, m1, m2):
+    assert got_c == got
+    c_comps = _assign_map(spark.read.parquet(str(tmp_path / "c" / "components.parquet")))
+    assert c_comps == _assign_map(d2["components"])
+    for o in (full, d1, d2):
         o["_cleanup"]()
 
 
@@ -505,12 +498,6 @@ def test_delta_assignment_resolution_plan_is_broadcast(spark, tmp_path):
     through BROADCAST joins (the maps are tiny parquet stage tables whose
     size Catalyst knows) — no sort-merge shuffle of the corpus-sized base,
     no cartesian product."""
-    import json
-    import os
-
-    from wiki_entity_linker_spark.plans.checkpoint import ParquetStore
-    from wiki_entity_linker_spark.plans.er_incremental import read_canonical
-
     base_wd, l1, l2 = (str(tmp_path / d) for d in ("b", "l1", "l2"))
     st_b, st_1, st_2 = (ParquetStore(d) for d in (base_wd, l1, l2))
     for d in (base_wd, l1, l2):
@@ -525,8 +512,8 @@ def test_delta_assignment_resolution_plan_is_broadcast(spark, tmp_path):
         [("f2", "a1")], "__old_c string, __new_c string"))
     st_2.write(spark, "batch_assignment", spark.createDataFrame(
         [("a1", "a1")], "id string, component string"))
-    json.dump({"base": base_wd}, open(os.path.join(l1, "chain.json"), "w"))
-    json.dump({"base": l1}, open(os.path.join(l2, "chain.json"), "w"))
+    write_chain_base(l1, base_wd)
+    write_chain_base(l2, l1)
 
     resolved = read_canonical(spark, l2, "assignment")
     got = {r["id"]: r["component"] for r in resolved.collect()}
@@ -544,37 +531,29 @@ def test_delta_assignment_resolution_plan_is_broadcast(spark, tmp_path):
 
 
 def test_delta_mode_rerun_resumes_and_clears_stale_materialized(spark, tiny_corpus_dir, tmp_path):
-    """Two review-pinned behaviors of the delta mode: (1) a workdir that
-    previously ran MATERIALIZED mode must not let its stale
-    components/assignment tables shadow the delta resolution (they are
-    deleted when delta mode runs); (2) re-running a completed delta append
-    resumes every stage from disk — including never re-running the merge."""
-    import os
-
+    """Two review-pinned behaviors of the append workdir: (1) a stale
+    materialized components/assignment table left in it (e.g. by an older
+    append mode) must not shadow the delta resolution; (2) re-running a
+    completed append resumes every stage from disk — including never
+    re-running the merge."""
     src, base, batch = _split_by_file_id(spark, tiny_corpus_dir, frac=0.8)
-    run_er_pipeline(spark, base, None, str(tmp_path / "base"))
+    base_out = run_er_pipeline(spark, base, None, str(tmp_path / "base"))
     wd = str(tmp_path / "inc")
 
-    # materialized first: leaves components.parquet/assignment.parquet
-    m = run_er_incremental(spark, str(tmp_path / "base"), batch, wd)
-    want = _assign_map(m["assignment"])
-    assert os.path.exists(tmp_path / "inc" / "assignment.parquet")
-    m["_cleanup"]()
-
-    # same workdir, delta mode: stale tables must be gone and the resolved
-    # view must equal the materialized result
-    d = run_er_incremental(
-        spark, str(tmp_path / "base"), batch, wd, materialize_assignment=False
-    )
+    d = run_er_incremental(spark, str(tmp_path / "base"), batch, wd)
+    want = _assign_map(d["assignment"])
     assert not os.path.exists(tmp_path / "inc" / "assignment.parquet")
-    assert not os.path.exists(tmp_path / "inc" / "components.parquet")
-    assert _assign_map(d["assignment"]) == want
     d["_cleanup"]()
 
-    # re-run: every stage resumes (nothing recomputed, merge included)
-    d2 = run_er_incremental(
-        spark, str(tmp_path / "base"), batch, wd, materialize_assignment=False
-    )
+    # plant stale whole-corpus tables: the BASE labeling, which lacks every
+    # batch row and every relabel the append made
+    for name in ("components", "assignment"):
+        ParquetStore(wd).write(spark, name, base_out[name])
+    assert _assign_map(read_canonical(spark, wd, "assignment")) == want
+
+    # re-run: every stage resumes (nothing recomputed, merge included) and
+    # the resolved view still ignores the stale tables
+    d2 = run_er_incremental(spark, str(tmp_path / "base"), batch, wd)
     staged = {
         k: v for k, v in d2["_counters"].items()
         if k not in ("metrics",)
@@ -583,4 +562,6 @@ def test_delta_mode_rerun_resumes_and_clears_stale_materialized(spark, tiny_corp
         k: v.get("resumed") for k, v in staged.items()
     }
     assert _assign_map(d2["assignment"]) == want
+    assert _assign_map(d2["components"]) != _assign_map(base_out["components"])
     d2["_cleanup"]()
+    base_out["_cleanup"]()

@@ -332,10 +332,9 @@ def relabel_through_map(
     """Apply a ``(__old_c, __new_c)`` relabel map to an ``(id, component)``
     table: rows whose component appears in the map take the new label,
     everything else passes through verbatim. The single relabel shape shared
-    by :func:`merge_components`, the incremental assignment stage, and
-    ``read_canonical``'s delta resolution — pass ``relabel_map`` through
-    :func:`broadcast_if_small` (or rely on Catalyst's size stats for
-    parquet-backed maps) per call site."""
+    by :func:`merge_components` and ``read_canonical``'s delta resolution —
+    pass ``relabel_map`` through :func:`broadcast_if_small` (or rely on
+    Catalyst's size stats for parquet-backed maps) per call site."""
     return df.join(
         relabel_map, df[comp_col] == relabel_map["__old_c"], "left"
     ).select(
@@ -455,7 +454,7 @@ def merge_components(
     out = relabeled_old.unionByName(new_assign)
     if return_map:
         # the batch-sized relabel map is a byproduct the incremental append
-        # needs verbatim (its assignment stage applies the SAME map to the
+        # stores verbatim (read_canonical applies the SAME map to the
         # corpus-sized assignment) — returning it saves the caller a
         # corpus-scale re-derivation from the merged output
         return out, merge_map

@@ -10,6 +10,12 @@ together with a manifest recording ``params_hash``, total and
 per-partition row counts. Re-running with identical params skips straight to
 the stored table; changing any upstream param invalidates every downstream
 stage (hash chaining).
+
+The module also owns the on-disk format of append chains (plans/
+er_incremental.py, plans/curation_incremental.py, streaming/appends.py): each
+append workdir's ``chain.json`` names the workdir it builds on, and a
+streaming chain root's ``head.json`` names its newest complete workdir. Every
+manifest here is written atomically (:func:`write_json_atomic`).
 """
 
 from __future__ import annotations
@@ -27,6 +33,60 @@ def params_hash(params: dict) -> str:
     return hashlib.sha256(
         json.dumps(params, sort_keys=True, default=str).encode()
     ).hexdigest()[:16]
+
+
+def write_json_atomic(path: str, obj: dict) -> None:
+    """Write ``obj`` as JSON to ``path`` through a temp file in the same
+    directory and ``os.replace``: a crash mid-write leaves the previous
+    manifest intact, never a truncated one that every later read fails on."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def write_chain_base(workdir: str, base_workdir: str) -> None:
+    """Record that the append level at ``workdir`` builds on ``base_workdir``."""
+    write_json_atomic(
+        os.path.join(workdir, "chain.json"), {"base": os.path.abspath(base_workdir)}
+    )
+
+
+def chain_base(workdir: str) -> str | None:
+    """The workdir an append level builds on; ``None`` for a self-contained
+    workdir (a full run or a compaction)."""
+    p = os.path.join(workdir, "chain.json")
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return json.load(f)["base"]
+
+
+def _head_state(chain_root: str) -> dict:
+    p = os.path.join(chain_root, "head.json")
+    if not os.path.exists(p):
+        return {}
+    with open(p) as f:
+        return json.load(f)
+
+
+def chain_head(chain_root: str, default: str | None = None) -> str | None:
+    """The workdir holding the newest complete state of a streaming chain."""
+    return _head_state(chain_root).get("head", default)
+
+
+def chain_depth(chain_root: str) -> int:
+    """Number of un-compacted append levels above the nearest self-contained
+    workdir (0 right after a full run or a compaction)."""
+    return _head_state(chain_root).get("depth", 0)
+
+
+def advance_head(chain_root: str, head: str, epoch_id: int, depth: int) -> None:
+    """Point the chain at ``head``; call only once its tables are written."""
+    write_json_atomic(
+        os.path.join(chain_root, "head.json"),
+        {"head": head, "epoch": epoch_id, "depth": depth},
+    )
 
 
 def partition_lineage(df: DataFrame) -> list[dict]:
@@ -196,7 +256,6 @@ class StageManager:
             "rows_out": out.count(),
             "partitions": partition_lineage(out) if collect_lineage else [],
         }
-        with open(meta_path, "w") as f:
-            json.dump(meta, f)
+        write_json_atomic(meta_path, meta)
         self.counters[name] = meta | {"resumed": False}
         return out

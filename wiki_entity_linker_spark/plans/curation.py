@@ -31,7 +31,6 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-import json
 import os
 
 from wiki_entity_linker_spark.functions.hashing import h64
@@ -45,7 +44,7 @@ from wiki_entity_linker_spark.operators.dedup import (
     exact_substring_coverage,
     segment_dedup_stats,
 )
-from wiki_entity_linker_spark.plans.checkpoint import StageManager
+from wiki_entity_linker_spark.plans.checkpoint import StageManager, write_json_atomic
 from wiki_entity_linker_spark.plans.er_pipeline import _input_fingerprint
 
 
@@ -320,8 +319,9 @@ def run_curation_pipeline(
     )
     if checkpoint:
         # the incremental append validates its cfg against the base run's
-        with open(os.path.join(workdir, "curation_meta.json"), "w") as f:
-            json.dump({"cfg": asdict(cfg)}, f)
+        write_json_atomic(
+            os.path.join(workdir, "curation_meta.json"), {"cfg": asdict(cfg)}
+        )
 
     docs = documents.select("doc_id", "source", "text")
 

@@ -35,8 +35,9 @@ Append semantics (full-recompute parity, pinned by tests):
 
 Index I/O per append: the bulky gram/segment/hash tables are DELTA-CHAINED —
 the append writes only ``batch_grams`` / ``batch_segs`` / ``batch_hashes``
-plus a base pointer (chain.json — the same manifest-over-appends pattern as
-plans/er_incremental.py; on Iceberg these become real table appends).
+plus a base pointer (``write_chain_base`` in plans/checkpoint.py — the same
+manifest-over-appends pattern as plans/er_incremental.py; on Iceberg these
+become real table appends).
 ``gram_counts`` (distinct-gram rows) and ``verdicts`` / ``contamination`` /
 ``doc_sources`` (doc rows) are narrow and materialized per append. Old-side
 lookups are broadcast-filtered SCANS of the chained index — the batch's
@@ -62,7 +63,13 @@ from wiki_entity_linker_spark.operators.dedup import (
     segment_stats_from_flags,
     substring_coverage_from_positions,
 )
-from wiki_entity_linker_spark.plans.checkpoint import ParquetStore, StageManager
+from wiki_entity_linker_spark.plans.checkpoint import (
+    ParquetStore,
+    StageManager,
+    chain_base,
+    write_chain_base,
+    write_json_atomic,
+)
 from wiki_entity_linker_spark.plans.curation import (
     CurationConfig,
     budget_sample,
@@ -82,30 +89,22 @@ _DELTA_STAGES = {
 }
 
 
-def _chain_path(workdir: str) -> str:
-    return os.path.join(workdir, "chain.json")
-
-
 def _meta_path(workdir: str) -> str:
     return os.path.join(workdir, "curation_meta.json")
 
 
 def read_chained_index(
-    spark: SparkSession, workdir: str, name: str, store_factory=None
+    spark: SparkSession, workdir: str, name: str, store_factory=ParquetStore
 ) -> DataFrame:
     """Resolve a chained index table (full-run stage name) as the union of
     per-append deltas down to the full-run base. ``store_factory(workdir)
-    -> store`` overrides the per-level store (default ParquetStore)."""
-    store = (store_factory or ParquetStore)(workdir)
-    chain = _chain_path(workdir)
-    if not os.path.exists(chain):
+    -> store`` picks the store of every level."""
+    store = store_factory(workdir)
+    base = chain_base(workdir)
+    if base is None:
         return store.read(spark, name)
-    with open(chain) as f:
-        base = json.load(f)["base"]
     delta = store.read(spark, _DELTA_STAGES[name])
-    return delta.unionByName(
-        read_chained_index(spark, base, name, store_factory=store_factory)
-    )
+    return delta.unionByName(read_chained_index(spark, base, name, store_factory))
 
 
 def _load_cfg(workdir: str) -> dict:
@@ -120,14 +119,14 @@ def run_curation_increment(
     out_workdir: str,
     cfg: CurationConfig | None = None,
     benchmark: DataFrame | None = None,
-    store=None,
-    store_factory=None,
+    store_factory=ParquetStore,
 ) -> dict[str, DataFrame]:
     """Absorb ``new_docs`` into the curated corpus at ``base_workdir``,
     writing a new chained workdir whose outputs equal a full
     :func:`run_curation_pipeline` over old ∪ new (parity pinned by
     tests/test_curation_incremental.py). See the module docstring for the
-    per-tier reasoning and cost model."""
+    per-tier reasoning and cost model. ``store_factory(workdir) -> store``
+    picks the store of ``out_workdir`` and of every base chain level."""
     cfg = cfg or CurationConfig()
     base_cfg = _load_cfg(base_workdir)
     if base_cfg != asdict(cfg):
@@ -146,12 +145,12 @@ def run_curation_increment(
             "batch": _input_fingerprint(new_docs),
             "benchmark": None if benchmark is None else _input_fingerprint(benchmark),
         },
-        store=store,
+        store=store_factory(out_workdir),
     )
 
     sf = store_factory
-    base_store = (sf or ParquetStore)(base_workdir)
-    old_verdicts = base_store.read(spark, "verdicts")
+    old_store = sf(base_workdir)
+    old_verdicts = old_store.read(spark, "verdicts")
     old_hashes = read_chained_index(spark, base_workdir, "exact_hashes", sf)
     old_grams = read_chained_index(spark, base_workdir, "exact_substring_grams", sf)
     old_segs = read_chained_index(spark, base_workdir, "segment_dedup_seg", sf)
@@ -219,9 +218,9 @@ def run_curation_increment(
 
     # --- gram counts: maintained narrow table --------------------------------
     def _counts() -> DataFrame:
-        try:
-            oc = base_store.read(spark, "gram_counts")
-        except Exception:
+        if old_store.exists(spark, "gram_counts"):
+            oc = old_store.read(spark, "gram_counts")
+        else:
             # full-run base has no counts table yet: one count-only
             # aggregation over the chained gram index (map-side combined),
             # paid once — every later append reads the maintained table
@@ -379,7 +378,7 @@ def run_curation_increment(
     contaminated = None
     if benchmark is not None:
         def _cont() -> DataFrame:
-            old_cont = base_store.read(spark, "contamination")
+            old_cont = old_store.read(spark, "contamination")
             return old_cont.unionByName(
                 contamination_flags(batch, benchmark, cfg.decontam_k)
             )
@@ -389,10 +388,10 @@ def run_curation_increment(
     # --- doc_id -> source map (narrow, materialized; keep-side suffices,
     # see module docstring #3) ----------------------------------------------------
     def _sources() -> DataFrame:
-        try:
-            old_src = base_store.read(spark, "doc_sources")
-        except Exception:
-            old_src = base_store.read(spark, "kept").select("doc_id", "source")
+        if old_store.exists(spark, "doc_sources"):
+            old_src = old_store.read(spark, "doc_sources")
+        else:  # a full-run base
+            old_src = old_store.read(spark, "kept").select("doc_id", "source")
         return old_src.unionByName(batch.select("doc_id", "source"))
 
     sources = mgr.stage("doc_sources", _sources)
@@ -419,10 +418,8 @@ def run_curation_increment(
         "eval_slice", lambda: stratified_eval_slice(kept, cfg.eval_per_stratum)
     )
 
-    with open(_chain_path(out_workdir), "w") as f:
-        json.dump({"base": base_workdir}, f)
-    with open(_meta_path(out_workdir), "w") as f:
-        json.dump({"cfg": asdict(cfg)}, f)
+    write_chain_base(out_workdir, base_workdir)
+    write_json_atomic(_meta_path(out_workdir), {"cfg": asdict(cfg)})
 
     out: dict[str, DataFrame] = {
         "verdicts": verdicts,
@@ -438,16 +435,16 @@ def run_curation_increment(
 
 
 #: narrow tables an increment materializes per level (copied verbatim by a
-#: compaction; the chained bulky indexes are resolved through chain.json)
-_MATERIALIZED_STAGES = ("verdicts", "gram_counts", "doc_sources")
+#: compaction; the chained bulky indexes are resolved over the chain).
+#: ``contamination`` exists only when the chain runs with a benchmark.
+_MATERIALIZED_STAGES = ("verdicts", "gram_counts", "doc_sources", "contamination")
 
 
 def compact_curation_chain(
     spark: SparkSession,
     workdir: str,
     out_workdir: str,
-    store=None,
-    store_factory=None,
+    store_factory=ParquetStore,
 ) -> dict[str, DataFrame]:
     """Materialize a curation chain head into a self-contained workdir —
     the LSM compaction step, analogous to er_incremental.compact_chain.
@@ -455,13 +452,15 @@ def compact_curation_chain(
     is FULLY determined by the index + narrow tables, so compaction never
     re-reads a document: the chained gram/segment/hash indexes are resolved
     once into full-run-named stage tables, the materialized narrow tables
-    copy verbatim, and the output carries curation_meta.json but NO
-    chain.json — subsequent appends based on it read a single level again.
+    copy verbatim, and the output carries curation_meta.json but no base
+    pointer — subsequent appends based on it read a single level again.
+    ``store_factory`` picks the store of every chain level and of
+    ``out_workdir``.
     """
     if os.path.abspath(workdir) == os.path.abspath(out_workdir):
         raise ValueError("compact_curation_chain: out_workdir must differ")
-    st = store or ParquetStore(out_workdir)
-    src_store = (store_factory or ParquetStore)(workdir)
+    st = store_factory(out_workdir)
+    src_store = store_factory(workdir)
     os.makedirs(out_workdir, exist_ok=True)
     out: dict[str, DataFrame] = {}
     for name in _DELTA_STAGES:  # full-run stage names
@@ -471,18 +470,9 @@ def compact_curation_chain(
             read_chained_index(spark, workdir, name, store_factory),
         )
     for name in _MATERIALIZED_STAGES:
-        try:
+        # a full-run workdir (depth-0 "chain") lacks gram_counts /
+        # doc_sources — the next append re-derives them as usual
+        if src_store.exists(spark, name):
             out[name] = st.write(spark, name, src_store.read(spark, name))
-        except Exception:
-            # a full-run workdir (depth-0 "chain") lacks gram_counts /
-            # doc_sources — the next append re-derives them as usual
-            continue
-    try:
-        out["contamination"] = st.write(
-            spark, "contamination", src_store.read(spark, "contamination")
-        )
-    except Exception:
-        pass
-    with open(_meta_path(out_workdir), "w") as f:
-        json.dump({"cfg": _load_cfg(workdir)}, f)
+    write_json_atomic(_meta_path(out_workdir), {"cfg": _load_cfg(workdir)})
     return out

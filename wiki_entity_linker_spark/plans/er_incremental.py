@@ -7,9 +7,9 @@ at the graft's 10^12-file scale a daily append cannot re-read 100 TB. This
 plan completes the StageManager story: :func:`run_er_pipeline`'s checkpointed
 stage tables (``exact_groups``, ``features``, ``raw_blocks``, ``components``,
 ``assignment``) double as the incremental index, and each append writes a new
-workdir carrying the SAME canonical tables, so appends chain indefinitely
-(base → batch₁ → batch₂ → …) — the Iceberg-append pattern expressed through
-the swappable stage store.
+workdir from which the SAME canonical tables resolve, so appends chain
+indefinitely (base → batch₁ → batch₂ → …) — the Iceberg-append pattern
+expressed through the swappable stage store.
 
 Work per append:
 
@@ -32,22 +32,24 @@ Work per append:
    verbatim, touched clusters relabel to min member id exactly as a full
    recompute would.
 
-Store note: for the bulky INDEX tables, compute and I/O are O(batch +
-touched). ``components``/``assignment`` are array-free relabel outputs that
-by default ARE rewritten per append (O(corpus) rows, but tiny fixed-width
-rows — the content/feature bytes, which dominate at 100 TB, are never
-re-read or re-written); pass ``materialize_assignment=False`` to delta-chain
-them too (batch-sized relabel map + batch rows per level, resolved by
-:func:`read_canonical`), making the ENTIRE append's write volume
-O(batch + touched). The bulky index tables
-(``features``/``raw_blocks``/``exact_groups``) are delta-chained — each
-append writes only its batch rows plus a base pointer, and
-:func:`read_canonical` resolves the whole-corpus view as a union over the
-chain (exactly the manifest-over-appended-files pattern Iceberg implements
-natively; on the :class:`IcebergStore` the deltas become real table appends).
-Only ``components``/``assignment`` (array-free relabel outputs) are
-materialized per append; reads over a long chain amortize by re-running the
-full pipeline as compaction.
+Store note: an append's compute and write volume are O(batch + touched);
+no canonical table is rewritten. Each append workdir stores batch deltas
+plus a base pointer (``chain_base``/``write_chain_base`` in
+plans/checkpoint.py), and :func:`read_canonical` resolves the whole-corpus
+view over the chain — exactly the manifest-over-appended-files pattern
+Iceberg implements natively (on the :class:`IcebergStore` the deltas become
+real table appends):
+
+* ``features``/``raw_blocks``/``exact_groups`` store the batch's rows and
+  resolve as a union over the chain;
+* ``components``/``assignment`` store the batch-sized relabel map
+  (``relabel_map``) plus the batch's own rows
+  (``batch_components``/``batch_assignment``) and resolve as the base view
+  relabeled through the map, plus the batch rows.
+
+Reads over a long chain pay one union (or map join) per level;
+:func:`compact_chain` rewrites the resolved view into a self-contained
+workdir and bounds the depth.
 
 Fidelity note: inside blocks larger than ``cfg.salt_cap`` the full run salts
 into chained sub-blocks (operators/skew.py), scoring only chunk-local pairs
@@ -69,7 +71,6 @@ from pyspark.sql import functions as F
 from wiki_entity_linker_spark.eval.pairwise import evaluate_against_labeled_pairs
 from wiki_entity_linker_spark.operators.blocking import pairs_from_blocks, with_file_id
 from wiki_entity_linker_spark.operators.closure import (
-    broadcast_if_small,
     merge_components,
     relabel_through_map,
 )
@@ -77,7 +78,12 @@ from wiki_entity_linker_spark.operators.skew import (
     cap_and_salt_blocks,
     spread_small_input,
 )
-from wiki_entity_linker_spark.plans.checkpoint import ParquetStore, StageManager
+from wiki_entity_linker_spark.plans.checkpoint import (
+    ParquetStore,
+    StageManager,
+    chain_base,
+    write_chain_base,
+)
 from wiki_entity_linker_spark.plans.er_pipeline import (
     ERConfig,
     _input_fingerprint,
@@ -88,81 +94,65 @@ from wiki_entity_linker_spark.plans.er_pipeline import (
     score_pairs,
 )
 
-#: canonical tables an incremental run resolves from its base chain; the
-#: bulky index tables (exact_groups/features/raw_blocks) are DELTA-CHAINED —
-#: each append stores only its batch rows plus a base pointer (chain.json),
-#: the manifest-over-appends pattern Iceberg implements natively — while
-#: components/assignment (array-free, relabeled per append) are materialized
+#: canonical tables an incremental run resolves from its base chain; every
+#: append stores only batch deltas of them (see the module docstring)
 CANONICAL_STAGES = ("exact_groups", "features", "raw_blocks", "components", "assignment")
 
-#: delta-chained subset of CANONICAL_STAGES and each one's per-batch delta
-#: stage name inside an incremental workdir
+#: each canonical table's per-batch delta stage name inside an append workdir
 _DELTA_STAGES = {
     "features": "batch_features",
     "raw_blocks": "batch_raw_blocks",
     "exact_groups": "batch_groups",
+    "components": "batch_components",
+    "assignment": "batch_assignment",
 }
 
 
-def _chain_path(workdir: str) -> str:
-    return os.path.join(workdir, "chain.json")
-
-
 def read_canonical(
-    spark: SparkSession, workdir: str, name: str, store=None, store_factory=None
+    spark: SparkSession, workdir: str, name: str, store_factory=ParquetStore
 ) -> DataFrame:
     """Resolve a canonical table for ``workdir``, walking the append chain.
 
-    A full-pipeline workdir materializes every canonical table, so the walk
-    terminates there. An incremental workdir materializes
-    components/assignment but stores the bulky index tables as batch deltas
-    + a base pointer; ``features``/``raw_blocks`` resolve as union-over-chain
-    and ``exact_groups`` re-aggregates group sizes (rep ids are
-    first-writer-stable, so ``min`` over the chain is the original rep).
-    Reads cost O(chain length) unions — compact by re-running the full
-    pipeline (or, on Iceberg, letting the table service compact).
+    A full-pipeline or compacted workdir materializes every canonical table,
+    so the walk terminates there. An append workdir stores batch deltas + a
+    base pointer: ``features``/``raw_blocks`` resolve as union-over-chain,
+    ``exact_groups`` re-aggregates group sizes (rep ids are
+    first-writer-stable, so ``min`` over the chain is the original rep), and
+    ``components``/``assignment`` relabel the resolved base view through the
+    level's ``relabel_map`` and add the batch rows. Reads cost O(chain
+    length) unions — :func:`compact_chain` bounds the depth.
 
-    ``store`` applies to THIS level only; deeper chain levels resolve their
-    store via ``store_factory(workdir) -> store`` when given, else default
-    to :class:`ParquetStore`. A chain whose levels live in a non-default
-    store (e.g. :class:`IcebergStore` per-workdir namespaces) must pass the
-    factory, otherwise the walk silently falls back to parquet one level
-    down — exactly the trap this parameter closes.
+    ``store_factory(workdir) -> store`` picks the stage store of every
+    level, so a chain whose levels live in a non-default store (e.g.
+    :class:`IcebergStore` per-workdir namespaces) resolves through it all
+    the way down.
     """
-    import json
-
-    st = store or (store_factory(workdir) if store_factory else ParquetStore(workdir))
-    if st.exists(spark, name):
-        return st.read(spark, name)
-    cp = _chain_path(workdir)
+    st = store_factory(workdir)
+    base_workdir = chain_base(workdir)
     if (
         name in ("components", "assignment")
-        and os.path.exists(cp)
+        and base_workdir is not None
         and st.exists(spark, "relabel_map")
     ):
-        # delta-assignment workdir (run_er_incremental with
-        # materialize_assignment=False): the level stores only its
-        # batch-sized relabel map + batch rows, and the whole-corpus view is
-        # base-relabeled-through-the-map ∪ batch rows. Chaining nests
-        # naturally: level k relabels the RESOLVED level-(k-1) view, so maps
-        # compose without any explicit composition step. No broadcast hint:
-        # the map is a parquet stage table whose size Catalyst knows — small
-        # maps auto-broadcast, a pathological mass-merge map falls back to a
+        # level k relabels the RESOLVED level-(k-1) view, so maps compose
+        # without any explicit composition step. No broadcast hint: the map
+        # is a stage table whose size Catalyst knows — small maps
+        # auto-broadcast, a pathological mass-merge map falls back to a
         # shuffle join on its own (the same guard merge_components applies).
-        with open(cp) as f:
-            base_workdir = json.load(f)["base"]
-        base = read_canonical(spark, base_workdir, name, store_factory=store_factory)
+        # Checked before any materialized table of the same name, so a
+        # table an older append mode left in the workdir cannot shadow it.
+        base = read_canonical(spark, base_workdir, name, store_factory)
         relabeled = relabel_through_map(base, st.read(spark, "relabel_map"))
-        delta = "batch_components" if name == "components" else "batch_assignment"
-        return relabeled.unionByName(st.read(spark, delta).select("id", "component"))
-    if name not in _DELTA_STAGES or not os.path.exists(cp):
+        delta = st.read(spark, _DELTA_STAGES[name]).select("id", "component")
+        return relabeled.unionByName(delta)
+    if st.exists(spark, name):
+        return st.read(spark, name)
+    if name not in _DELTA_STAGES or base_workdir is None:
         raise ValueError(
             f"workdir {workdir!r} lacks the checkpointed stage tables "
             f"needed to resolve {name!r} (no materialized table, no chain)"
         )
-    with open(cp) as f:
-        base_workdir = json.load(f)["base"]
-    base = read_canonical(spark, base_workdir, name, store_factory=store_factory)
+    base = read_canonical(spark, base_workdir, name, store_factory)
     if name == "exact_groups":
         delta = st.read(spark, _DELTA_STAGES[name]).select(
             "content_hash", "rep_id", F.col("batch_size").alias("group_size")
@@ -176,28 +166,24 @@ def read_canonical(
 
 
 def compact_chain(
-    spark: SparkSession, workdir: str, out_workdir: str, store=None,
-    store_factory=None,
+    spark: SparkSession, workdir: str, out_workdir: str, store_factory=ParquetStore
 ) -> dict[str, DataFrame]:
     """Materialize a chain head's canonical tables into a self-contained
     workdir — the LSM compaction step. After N appends, reads through
     :func:`read_canonical` pay N unions; compacting rewrites the resolved
     view once, and subsequent appends based on ``out_workdir`` read a single
     level again. (On Iceberg this is the table service's rewrite-data-files
-    job; here it is one pass per canonical table.)
+    job; here it is one pass per canonical table.) ``store_factory`` picks
+    the store of every chain level and of ``out_workdir``.
     """
     if os.path.abspath(workdir) == os.path.abspath(out_workdir):
         raise ValueError("compact_chain: out_workdir must differ from workdir")
-    st = store or ParquetStore(out_workdir)
+    st = store_factory(out_workdir)
     os.makedirs(out_workdir, exist_ok=True)
-    out: dict[str, DataFrame] = {}
-    for name in CANONICAL_STAGES:
-        out[name] = st.write(
-            spark,
-            name,
-            read_canonical(spark, workdir, name, store_factory=store_factory),
-        )
-    return out
+    return {
+        name: st.write(spark, name, read_canonical(spark, workdir, name, store_factory))
+        for name in CANONICAL_STAGES
+    }
 
 
 def run_er_incremental(
@@ -208,10 +194,7 @@ def run_er_incremental(
     cfg: ERConfig | None = None,
     labeled_pairs: DataFrame | None = None,
     alias_dict: DataFrame | None = None,
-    store=None,
-    base_store=None,
-    store_factory=None,
-    materialize_assignment: bool = True,
+    store_factory=ParquetStore,
 ) -> dict[str, DataFrame]:
     """Append ``new_files`` to the clustering checkpointed at
     ``base_workdir``; write the merged canonical stage tables to ``workdir``.
@@ -219,24 +202,17 @@ def run_er_incremental(
     ``workdir`` must differ from ``base_workdir``: the base tables feed the
     merged ones lazily, and overwriting an input mid-plan corrupts it.
 
-    ``store``/``base_store`` pick the stage store for this append's workdir
-    and the immediate base; ``store_factory(workdir) -> store`` covers
-    DEEPER chain levels when base_workdir is itself an append over a
-    non-default store (without it, levels below the base resolve as
-    :class:`ParquetStore` — see :func:`read_canonical`).
+    ``store_factory(workdir) -> store`` picks the stage store of this
+    append's workdir and of every level of the base chain.
 
-    ``materialize_assignment=True`` (default) rewrites the full
-    ``components``/``assignment`` tables per append — array-free fixed-width
-    rows, but still O(corpus) rows of write. ``False`` delta-chains them
-    like the index tables: the level stores only its batch-sized relabel map
-    (``relabel_map``) plus the batch's own rows
-    (``batch_components``/``batch_assignment``), making the ENTIRE append's
-    write volume O(batch + touched); :func:`read_canonical` resolves the
-    whole-corpus view by relabeling the base through the map (one map-side
-    join per chain level — compaction bounds the depth). At 10^12 files a
-    daily append must not write 10^12 assignment rows; this is the mode a
-    real deployment runs, with the materialized default kept for
-    self-contained workdirs and short-lived chains.
+    The append writes only batch deltas: for ``components``/``assignment``
+    that is the batch-sized relabel map (``relabel_map``) plus the batch's
+    own rows (``batch_components``/``batch_assignment``), so the whole
+    append's write volume is O(batch + touched) — at 10^12 files a daily
+    append must not write 10^12 assignment rows. The returned
+    ``components``/``assignment`` are the whole-corpus views
+    :func:`read_canonical` resolves from them (one map-side join per chain
+    level — :func:`compact_chain` bounds the depth).
     """
     cfg = cfg or ERConfig()
     if cfg.snm_window:
@@ -254,11 +230,10 @@ def run_er_incremental(
             "over a lazily-read parquet input corrupts it)"
         )
     try:
-        old_exact = read_canonical(spark, base_workdir, "exact_groups", base_store, store_factory)
-        old_feats = read_canonical(spark, base_workdir, "features", base_store, store_factory)
-        old_raw_blocks = read_canonical(spark, base_workdir, "raw_blocks", base_store, store_factory)
-        old_comps = read_canonical(spark, base_workdir, "components", base_store, store_factory)
-        old_assign = read_canonical(spark, base_workdir, "assignment", base_store, store_factory)
+        old_exact, old_feats, old_raw_blocks, old_comps, old_assign = (
+            read_canonical(spark, base_workdir, name, store_factory)
+            for name in CANONICAL_STAGES
+        )
     except Exception as exc:  # noqa: BLE001 — surface an actionable message
         raise ValueError(
             f"base workdir {base_workdir!r} lacks the checkpointed stage "
@@ -274,11 +249,9 @@ def run_er_incremental(
             "base": os.path.abspath(base_workdir),
             "input": _input_fingerprint(new_files),
             "alias_dict": None if alias_dict is None else _input_fingerprint(alias_dict),
-            # mode changes the stage-table set — must invalidate, not resume
-            "materialize_assignment": materialize_assignment,
         },
         enabled=True,
-        store=store,
+        store=store_factory(workdir),
     )
     n_part = spark.sparkContext.defaultParallelism
     raw = with_file_id(
@@ -413,6 +386,7 @@ def run_er_incremental(
     # eagerly here (it costs several jobs, including joins against the
     # corpus-sized old components view).
     _merged: list = []
+    new_rep_nodes = new_rep_ids.select(F.col("file_id").alias("id"))
 
     def _merge():
         if not _merged:
@@ -420,44 +394,25 @@ def run_er_incremental(
                 merge_components(
                     old_comps,
                     edges,
-                    new_rep_ids.select(F.col("file_id").alias("id")),
+                    new_rep_nodes,
                     id_col="id",
                     comp_col="component",
                     max_iter=cfg.max_cc_iter,
-                    # the batch-sized relabel map is reused verbatim by the
-                    # assignment/delta stages — re-deriving it from the merged
-                    # output would cost a corpus-scale semi-join per stage
+                    # the batch-sized relabel map is stored verbatim as the
+                    # relabel_map delta — re-deriving it from the merged
+                    # output would cost a corpus-scale semi-join
                     return_map=True,
                 )
             )
         return _merged[0]
 
-    comps: DataFrame
-    if materialize_assignment:
-        comps = mgr.stage("components", lambda: _merge()[0])
-    else:
-        # delta mode materializes only the batch-sized stages below; the
-        # merged view stays lazy (its expensive inner pieces are cut inside
-        # merge_components when it actually runs)
-        comps = None  # type: ignore[assignment]
-
-    def _changed_from(comps_df: DataFrame) -> DataFrame:
-        # fallback derivation when the components stage RESUMED from disk
-        # (so merge_components never ran this invocation): an old label x is
-        # its own component in old_comps, so x is touched iff comps[x] != x
-        old_label_rows = old_comps.filter(
-            F.col("id") == F.col("component")
-        ).select("id")
-        return (
-            comps_df.join(old_label_rows, "id", "left_semi")
-            .filter(F.col("component") != F.col("id"))
-            .select(F.col("id").alias("__old_c"), F.col("component").alias("__new_c"))
-        )
-
-    def _batch_members(comps_src: DataFrame) -> DataFrame:
+    # 7. write ONLY the batch-sized pieces; the whole-corpus
+    # components/assignment views resolve through read_canonical (base
+    # relabeled through the map ∪ batch rows, nesting across the chain)
+    def _batch_assignment() -> DataFrame:
         # every batch file's row: hash hits via their old rep, new files via
-        # their batch rep. comps covers old reps ∪ new reps by construction.
-        rep_comp = comps_src.join(
+        # their batch rep. The merged view covers old reps ∪ new reps.
+        rep_comp = _merge()[0].join(
             batch_groups.select(F.col("rep_id").alias("id")), "id", "left_semi"
         ).select(F.col("id").alias("rep_id"), "component")
         return (
@@ -467,57 +422,16 @@ def run_er_incremental(
             .select(F.col("file_id").alias("id"), "component")
         )
 
-    if materialize_assignment:
-        # 7. full assignment: every base file (relabeled where its cluster
-        # was touched) + every batch file. The base side is relabeled through
-        # the BATCH-SIZED map — broadcast when it fits (one map-side pass
-        # over the old assignment, no shuffle), size-guarded shuffle join
-        # when a pathological batch bridges too many base clusters
-        # (broadcast_if_small).
-        def _assign() -> DataFrame:
-            if _merged:  # merge ran this invocation: its map is already cut
-                changed = _merged[0][1]
-            else:  # components stage resumed: derive the map from the table
-                changed = _changed_from(comps).localCheckpoint(eager=True)
-            relabeled_old = relabel_through_map(
-                old_assign, broadcast_if_small(changed)
-            )
-            return relabeled_old.unionByName(_batch_members(comps))
+    mgr.stage("relabel_map", lambda: _merge()[1])
+    mgr.stage(
+        "batch_components", lambda: _merge()[0].join(new_rep_nodes, "id", "left_semi")
+    )
+    mgr.stage("batch_assignment", _batch_assignment)
 
-        assignment = mgr.stage("assignment", _assign)
-    else:
-        # 7 (delta mode). write ONLY the batch-sized pieces; the whole-corpus
-        # components/assignment views resolve through read_canonical (base
-        # relabeled through the map ∪ batch rows, nesting across the chain).
-        # A stale materialized components/assignment table from an earlier
-        # materialized-mode run of this workdir would SHADOW the delta
-        # resolution (read_canonical returns any existing table first), so
-        # delete them before the chain pointer lands.
-        for stale in ("components", "assignment"):
-            if mgr.store.exists(spark, stale):
-                mgr.store.delete(spark, stale)
-            stale_meta = os.path.join(workdir, f"{stale}.meta.json")
-            if os.path.exists(stale_meta):
-                os.remove(stale_meta)
-        mgr.stage("relabel_map", lambda: _merge()[1])
-        mgr.stage(
-            "batch_components",
-            lambda: _merge()[0].join(
-                new_rep_ids.select(F.col("file_id").alias("id")), "id", "left_semi"
-            ),
-        )
-        mgr.stage("batch_assignment", lambda: _batch_members(_merge()[0]))
-
-    # 8. chain pointer: the bulky index tables (features/raw_blocks/
-    # exact_groups) are NOT re-written — the batch delta stage tables above
-    # plus this pointer let read_canonical resolve them as union-over-chain,
-    # keeping each append's I/O O(batch). components/assignment are
-    # materialized above in the default mode (array-free fixed-width
-    # relabels) and delta-chained in materialize_assignment=False mode.
-    import json
-
-    with open(_chain_path(workdir), "w") as f:
-        json.dump({"base": os.path.abspath(base_workdir)}, f)
+    # 8. chain pointer: with the batch delta stage tables above it lets
+    # read_canonical resolve every canonical table over the chain, keeping
+    # each append's I/O O(batch + touched)
+    write_chain_base(workdir, base_workdir)
 
     out: dict[str, DataFrame] = {
         # batch-scoped artifacts
@@ -528,26 +442,15 @@ def run_er_incremental(
         "pairs": pairs,
         "scores": scores,
         "edges": edges,
-        # canonical (whole-corpus) views — chain-resolved where delta-stored
-        "exact_groups": read_canonical(spark, workdir, "exact_groups", store, store_factory),
-        "features": read_canonical(spark, workdir, "features", store, store_factory),
-        "raw_blocks": read_canonical(spark, workdir, "raw_blocks", store, store_factory),
     }
-    if materialize_assignment:
-        out["components"] = comps
-        out["assignment"] = assignment
-    else:
-        out["components"] = read_canonical(
-            spark, workdir, "components", store, store_factory
-        )
-        out["assignment"] = assignment = read_canonical(
-            spark, workdir, "assignment", store, store_factory
-        )
+    # canonical (whole-corpus) views, resolved over the chain
+    for name in CANONICAL_STAGES:
+        out[name] = read_canonical(spark, workdir, name, store_factory)
     if labeled_pairs is not None:
         out["metrics"] = mgr.stage(
             "metrics",
             lambda: evaluate_against_labeled_pairs(
-                assignment, labeled_pairs, id_col="id", cluster_col="component"
+                out["assignment"], labeled_pairs, id_col="id", cluster_col="component"
             ),
             collect_lineage=False,
         )
