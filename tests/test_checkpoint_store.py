@@ -74,3 +74,29 @@ def test_er_resume_key_covers_input_identity(spark, tmp_path):
     f2 = _input_fingerprint(spark.read.parquet(p2))
     assert f1 != f2
     assert f1 == _input_fingerprint(spark.read.parquet(p1))
+
+
+def test_lineage_stage_counts_rows_from_its_lineage(spark, tmp_path, monkeypatch):
+    """A stage that collects partition lineage takes ``rows_out`` from the
+    lineage rows: one bookkeeping pass, no separate ``count()``; a stage
+    without lineage still counts."""
+    frame = type(spark.range(1))  # the concrete DataFrame class in use
+    counts = []
+    real_count = frame.count
+
+    def counting(self):
+        counts.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(frame, "count", counting)
+    mgr = StageManager(spark, str(tmp_path / "run"), {"p": 1})
+    mgr.stage("s1", lambda: spark.range(0, 37, 1, 3))
+    meta = mgr.counters["s1"]
+    assert counts == []
+    assert meta["rows_out"] == 37
+    assert meta["rows_out"] == sum(p["rows"] for p in meta["partitions"])
+
+    mgr.stage("s2", lambda: spark.range(5), collect_lineage=False)
+    assert len(counts) == 1
+    assert mgr.counters["s2"]["rows_out"] == 5
+    assert mgr.counters["s2"]["partitions"] == []

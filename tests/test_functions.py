@@ -23,6 +23,7 @@ from wiki_entity_linker_spark.functions.similarity import (
 )
 from wiki_entity_linker_spark.functions.text import (
     lang_id,
+    ngrams,
     normalize_content,
     shingles,
     token_count,
@@ -138,6 +139,30 @@ def test_ngrams_keeps_multiplicity_shingles_distinct(spark):
     assert sorted(rows[0]["s"]) == ["a b", "b a"]
     assert rows[1]["g"] == ["x"] and rows[1]["s"] == ["x"]  # short doc
     assert rows[2]["g"] == [""]  # empty doc degenerates, never raises
+
+
+def _copies(df, needle):
+    """Occurrences of ``needle`` in the analyzed plan of ``df``."""
+    return df._jdf.queryExecution().analyzed().toString().count(needle)
+
+
+def test_token_expression_bound_once_per_row(spark):
+    """Higher-order functions run interpreted, without common-subexpression
+    elimination, so every copy of ``tokenize(c)`` in a plan runs on every
+    row. ngrams and lang_id bind their token array once; build_features
+    normalizes content once for ``hsh`` and once for ``tf``."""
+    from wiki_entity_linker_spark.plans.er_pipeline import ERConfig, build_features
+
+    df = spark.createDataFrame([("a b c",)], "c string")
+    one = "regexp_replace(c"
+    assert _copies(df.select(shingles(tokenize("c"), 3).alias("x")), one) == 1
+    assert _copies(df.select(ngrams(tokenize("c"), 5).alias("x")), one) == 1
+    assert _copies(df.select(lang_id("c").alias("x")), one) == 1
+    reps = spark.createDataFrame(
+        [(1, "a/b.py", "python", "def f(x):\n    return x")],
+        "file_id long, path string, lang string, content string",
+    )
+    assert _copies(build_features(reps, ERConfig()), "regexp_replace(content") == 2
 
 
 def test_redact_pii_and_counts(spark):

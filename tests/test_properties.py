@@ -1,8 +1,9 @@
 """Property-based tests (hypothesis) for the pure-Python/numpy kernels —
 the code whose subtle index math a handful of fixed examples can miss.
 
-No SparkSession needed: these drive the kernels directly, so hundreds of
-examples run in seconds.
+Most need no SparkSession: they drive the kernels directly, so hundreds of
+examples run in seconds. The column-expression property batches many
+generated inputs into one DataFrame per example.
 """
 
 import numpy as np
@@ -65,3 +66,41 @@ def test_greedy_claim_matches_independent_reference(spans):
         assert e1 <= s2
     for s, e in {(s, s + l) for s, l in spans} - got:
         assert any(not (e <= ts or s >= te) for ts, te in got)
+
+
+def _ngrams_py(tokens, k):
+    """Pure-Python reference for functions.text.ngrams: Spark ``concat``
+    semantics (a gram with a null token is null) for n >= k, otherwise one
+    whole-document gram joined with ``concat_ws`` semantics (nulls
+    skipped); an empty or null list yields ``[""]``."""
+    if tokens is None or len(tokens) < k:
+        return [" ".join(t for t in tokens or [] if t is not None)]
+    return [
+        None if None in tokens[i : i + k] else " ".join(tokens[i : i + k])
+        for i in range(len(tokens) - k + 1)
+    ]
+
+
+_TOKENS = st.one_of(
+    st.none(),
+    st.lists(
+        st.one_of(st.none(), st.text(alphabet="ab ", min_size=0, max_size=3)),
+        min_size=0,
+        max_size=9,
+    ),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_TOKENS, min_size=1, max_size=20))
+def test_ngrams_matches_python_reference(spark, docs):
+    """ngrams for k = 1..5 over random token lists (empty, null, with null
+    tokens, shorter and longer than k) equals the pure-Python reference."""
+    from wiki_entity_linker_spark.functions.text import ngrams
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(docs)], "i int, t array<string>")
+    ks = range(1, 6)
+    rows = df.select("i", *[ngrams("t", k).alias(f"g{k}") for k in ks]).collect()
+    for r in rows:
+        for k in ks:
+            assert r[f"g{k}"] == _ngrams_py(docs[r["i"]], k), (docs[r["i"]], k)

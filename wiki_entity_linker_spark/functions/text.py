@@ -46,6 +46,18 @@ def tokenize(col: Column | str, lowercase: bool = True) -> Column:
     return F.filter(toks, lambda t: t != "")
 
 
+def _bind(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Higher-order functions fall back to interpreted evaluation, where
+    codegen's common-subexpression elimination never runs, so a row
+    expression referenced n times inside (or beside) a HOF is computed n
+    times. Wrapping it as the sole element of a one-element array and
+    mapping ``body`` over that binds it as a lambda variable instead.
+    """
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def ngrams(tokens: Column | str, k: int = 5) -> Column:
     """k-token grams (space-joined) WITH multiplicity, in document order.
 
@@ -54,19 +66,25 @@ def ngrams(tokens: Column | str, k: int = 5) -> Column:
     interpreted HOF lambdas re-evaluate any captured row expression per
     element, so the transform form re-tokenizes the document once per
     shingle (O(n²) and catastrophic on real documents). The zip form
-    evaluates the token expression exactly k times per row.
+    still refers to the token array 2k+1 times, and HOFs run interpreted,
+    without common-subexpression elimination, so the token expression is
+    bound once per row through :func:`_bind` and the body sees only the
+    lambda variable.
     """
-    t = _c(tokens)
-    n = F.size(t)
-    m = F.greatest(n - F.lit(k - 1), F.lit(0))  # gram count when n >= k
-    acc = F.slice(t, 1, m)
-    for i in range(1, k):
-        acc = F.zip_with(
-            acc, F.slice(t, i + 1, m), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    # degenerate doc shorter than k tokens → single whole-doc gram
-    short = F.array(F.concat_ws(" ", t))
-    return F.when(n >= k, acc).otherwise(short)
+
+    def grams(t: Column) -> Column:
+        n = F.size(t)
+        m = F.greatest(n - F.lit(k - 1), F.lit(0))  # gram count when n >= k
+        acc = F.slice(t, 1, m)
+        for i in range(1, k):
+            acc = F.zip_with(
+                acc, F.slice(t, i + 1, m), lambda a, b: F.concat(a, F.lit(" "), b)
+            )
+        # degenerate doc shorter than k tokens → single whole-doc gram
+        short = F.array(F.concat_ws(" ", t))
+        return F.when(n >= k, acc).otherwise(short)
+
+    return _bind(_c(tokens), grams)
 
 
 def shingles(tokens: Column | str, k: int = 5) -> Column:
@@ -156,23 +174,32 @@ _LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
+def _marker_hits(distinct_tokens: Column, lang: str) -> Column:
+    markers = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
+    return F.size(F.array_intersect(distinct_tokens, markers))
+
+
 def lang_marker_hits(col: Column | str, lang: str) -> Column:
     """Count of marker-word hits for one language (token-set intersection)."""
-    toks = F.array_distinct(tokenize(col))
-    markers = F.array(*[F.lit(m) for m in _LANG_MARKERS[lang]])
-    return F.size(F.array_intersect(toks, markers))
+    return _marker_hits(F.array_distinct(tokenize(col)), lang)
 
 
 def lang_id(col: Column | str) -> Column:
     """Deterministic language-ID heuristic: argmax marker hits, ties broken
-    by language code ascending; 'und' when nothing matches."""
-    pairs = [(lang, lang_marker_hits(col, lang)) for lang in sorted(_LANG_MARKERS)]
-    best_score = F.greatest(*[s for _, s in pairs])
-    out = F.lit("und")
-    # reverse order so earlier (ascending) language wins ties
-    for lang, score in reversed(pairs):
-        out = F.when((score > 0) & (score == best_score), F.lit(lang)).otherwise(out)
-    return out
+    by language code ascending; 'und' when nothing matches. The distinct
+    token set is bound once per row (:func:`_bind`) and shared by all four
+    marker counts."""
+
+    def pick(toks: Column) -> Column:
+        pairs = [(lang, _marker_hits(toks, lang)) for lang in sorted(_LANG_MARKERS)]
+        best_score = F.greatest(*[s for _, s in pairs])
+        out = F.lit("und")
+        # reverse order so earlier (ascending) language wins ties
+        for lang, score in reversed(pairs):
+            out = F.when((score > 0) & (score == best_score), F.lit(lang)).otherwise(out)
+        return out
+
+    return _bind(F.array_distinct(tokenize(col)), pick)
 
 
 def token_count(col: Column | str) -> Column:

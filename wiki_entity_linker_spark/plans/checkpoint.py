@@ -250,11 +250,14 @@ class StageManager:
         # stage resumed (a resumed stage never executes the nested calls)
         self.chain_hash = stage_hash
         out = self.store.write(self.spark, name, df)
+        # one bookkeeping pass over the stage table: the lineage rows
+        # already sum to the row count, so count() runs only without them
+        lineage = partition_lineage(out) if collect_lineage else []
         meta = {
             "stage": name,
             "params_hash": stage_hash,
-            "rows_out": out.count(),
-            "partitions": partition_lineage(out) if collect_lineage else [],
+            "rows_out": sum(p["rows"] for p in lineage) if collect_lineage else out.count(),
+            "partitions": lineage,
         }
         write_json_atomic(meta_path, meta)
         self.counters[name] = meta | {"resumed": False}

@@ -303,11 +303,12 @@ def run_er_pipeline(
 
     # Metadata + invariants ONLY (ingest_projection). Do NOT fold the
     # feature expressions in here: one giant projection exceeds the
-    # whole-stage-codegen method limit, Spark falls back to INTERPRETED
-    # expression eval, and the higher-order shingle lambdas then re-evaluate
-    # tokenize(content) per array element — observed as a single task
-    # pinning a core for 10+ minutes (codegen's common-subexpression
-    # elimination is what makes the inlined HOF form safe).
+    # whole-stage-codegen method limit and Spark falls back to INTERPRETED
+    # expression eval — observed as a single task pinning a core for 10+
+    # minutes. Higher-order functions always run interpreted, so codegen's
+    # common-subexpression elimination never dedupes a row expression
+    # inside them; text.ngrams binds its token array as a lambda variable
+    # (text._bind) so tokenize(content) runs once per row either way.
     ingested = mgr.stage("ingest", lambda: ingest_projection(raw))
 
     # 2. exact-duplicate groups; representatives carry all downstream cost.
