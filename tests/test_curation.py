@@ -39,6 +39,31 @@ def test_verdict_parity_with_registered_query(spark, tmp_path):
     assert mine == reg
 
 
+def test_verdict_table_nested_stages_resume(spark, tmp_path):
+    # with a StageManager the verdict table's cuts are durable nested
+    # stages in a fixed order (their hashes chain); a fresh manager over
+    # the same root and params resumes every one with the same verdicts
+    from wiki_entity_linker_spark.plans.checkpoint import StageManager
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter("doc_id < 60")
+    nested = [
+        "exact_hashes", "verdict_toks", "exact_substring_grams",
+        "segment_dedup_seg",
+    ]
+
+    def run(mgr=None):
+        v = dedup_verdict_table(docs, CurationConfig(), mgr=mgr)
+        return sorted(map(tuple, v.collect()))
+
+    mgr = StageManager(spark, str(tmp_path / "nested"), {"op": "v"})
+    first = run(mgr)
+    assert list(mgr.counters) == nested
+    assert not any(m["resumed"] for m in mgr.counters.values())
+    mgr2 = StageManager(spark, str(tmp_path / "nested"), {"op": "v"})
+    assert run(mgr2) == first == run()
+    assert all(mgr2.counters[n]["resumed"] for n in nested)
+
+
 def test_stage_invariants(curation_out):
     out, _, docs = curation_out
     n_train = docs.filter(F.col("doc_id") % 50 != 0).count()

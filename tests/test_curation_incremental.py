@@ -83,14 +83,11 @@ def test_two_level_chain(spark, replay):
     )
     assert _rows(full["verdicts"]) == _rows(inc2["verdicts"])
     assert _rows(full["sample"]) == _rows(inc2["sample"])
-    # chained gram index resolves to the full run's grams
-    full_grams = read_chained_index(
-        spark, str(root / "full"), "exact_substring_grams"
-    )
-    chained = read_chained_index(
-        spark, str(root / "inc2"), "exact_substring_grams"
-    )
-    assert full_grams.count() == chained.count()
+    # each chained index resolves to the full run's rows
+    for name in ["exact_hashes", "exact_substring_grams", "segment_dedup_seg"]:
+        full_rows = read_chained_index(spark, str(root / "full"), name)
+        chained = read_chained_index(spark, str(root / "inc2"), name)
+        assert _rows(full_rows) == _rows(chained, full_rows.columns), name
 
 
 def test_guards(spark, replay):

@@ -278,9 +278,8 @@ def test_minhash_incremental_equals_oneshot(spark, monkeypatch):
     assert got[12] == got[13] != got[1]  # batch-internal family
 
 
-def test_segment_dedup_first_writer_wins(spark, tmp_path):
+def test_segment_dedup_first_writer_wins(spark):
     from wiki_entity_linker_spark.operators.dedup import segment_dedup_stats
-    from wiki_entity_linker_spark.plans.checkpoint import StageManager
 
     df = spark.createDataFrame(
         [
@@ -295,25 +294,18 @@ def test_segment_dedup_first_writer_wins(spark, tmp_path):
         2: (3, 2, 1, 1, 2),
     }
 
-    def rows(mgr=None):
-        return {
-            r["doc_id"]: (
-                r["n_tokens"], r["n_segments"], r["n_kept"],
-                r["kept_tokens"], r["dup_tokens"],
-            )
-            for r in segment_dedup_stats(df, seg_len=2, mgr=mgr).collect()
-        }
-
-    assert rows() == want
-    # the durable-stage path is plan-identical and lands the cut on disk
-    mgr = StageManager(spark, str(tmp_path / "segdedup_stages"), {"op": "sd"})
-    assert rows(mgr) == want
-    assert mgr.store.exists(spark, "segment_dedup_seg")
+    got = {
+        r["doc_id"]: (
+            r["n_tokens"], r["n_segments"], r["n_kept"],
+            r["kept_tokens"], r["dup_tokens"],
+        )
+        for r in segment_dedup_stats(df, seg_len=2).collect()
+    }
+    assert got == want
 
 
-def test_exact_substring_coverage_planted(spark, tmp_path):
+def test_exact_substring_coverage_planted(spark):
     from wiki_entity_linker_spark.operators.dedup import exact_substring_coverage
-    from wiki_entity_linker_spark.plans.checkpoint import StageManager
 
     df = spark.createDataFrame(
         [
@@ -333,25 +325,14 @@ def test_exact_substring_coverage_planted(spark, tmp_path):
         4: (2, 0, 0, 0.0),
     }
 
-    def rows(mgr=None):
-        return {
-            r["doc_id"]: (
-                r["n_tokens"], r["dup_starts"],
-                r["covered_tokens"], r["covered_frac"],
-            )
-            for r in exact_substring_coverage(df, k=3, mgr=mgr).collect()
-        }
-
-    assert rows() == want
-    root = str(tmp_path / "exsub_stages")
-    mgr = StageManager(spark, root, {"op": "es"})
-    assert rows(mgr) == want
-    assert not any(m["resumed"] for m in mgr.counters.values())
-    assert mgr.store.exists(spark, "exact_substring_grams")
-    # fresh manager, same root + params → every nested cut resumes from disk
-    mgr2 = StageManager(spark, root, {"op": "es"})
-    assert rows(mgr2) == want
-    assert mgr2.counters and all(m["resumed"] for m in mgr2.counters.values())
+    got = {
+        r["doc_id"]: (
+            r["n_tokens"], r["dup_starts"],
+            r["covered_tokens"], r["covered_frac"],
+        )
+        for r in exact_substring_coverage(df, k=3).collect()
+    }
+    assert got == want
 
 
 def test_winnowing_guarantee_and_caps(spark):

@@ -287,30 +287,25 @@ def test_locally_dominant_matching_string_ids(spark, distributed_matching):
     assert len(nodes) == len(set(nodes))
 
 
-def test_matching_disabled_manager_cuts_lineage(
-    spark, distributed_matching, tmp_path
-):
-    """A passthrough StageManager (``enabled=False``) must cut the rounds'
-    lineage exactly like ``mgr=None``: its stages are lazy persists, so
-    routing the nested cuts through it kept every round in the plan (a
-    6-edge chain once exhausted a 3 GB driver heap)."""
+def test_matching_disabled_manager_cuts_lineage(spark, distributed_matching):
+    """Every round's lineage is cut: the result plan holds one checkpointed
+    leg per round, never the rounds' joins (routing the cuts through a
+    passthrough StageManager once kept them, and a 6-edge chain exhausted
+    a 3 GB driver heap)."""
     from wiki_entity_linker_spark.operators.graph import locally_dominant_matching
-    from wiki_entity_linker_spark.plans.checkpoint import StageManager
 
     chain = spark.createDataFrame(
         [(1, 2, 0.9), (2, 3, 0.8), (3, 4, 0.7)],
         "id_a long, id_b long, score double",
     )
-
-    def plan_nodes(mgr):
-        out = locally_dominant_matching(chain, mgr=mgr)
-        assert sorted((r["id_a"], r["id_b"]) for r in out.collect()) == [
-            (1, 2), (3, 4),
-        ]
-        return len(out._jdf.queryExecution().analyzed().treeString().splitlines())
-
-    passthrough = StageManager(spark, str(tmp_path / "off"), enabled=False)
-    assert plan_nodes(passthrough) == plan_nodes(None)
+    out = locally_dominant_matching(chain)
+    assert sorted((r["id_a"], r["id_b"]) for r in out.collect()) == [
+        (1, 2), (3, 4),
+    ]
+    plan = out._jdf.queryExecution().analyzed().treeString()
+    # two rounds: output projection, union, and one LogicalRDD leg per round
+    assert len(plan.splitlines()) == 5
+    assert plan.count("LogicalRDD") == 2
 
 
 def test_locally_dominant_matching_empty_and_bound(spark, distributed_matching):

@@ -7,6 +7,7 @@
 """
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -210,6 +211,11 @@ def test_one_to_one_matching_stage(spark, tiny_corpus_dir, tmp_path):
             taken.update((ea, eb))
             ref.append((ea, eb, s))
     assert got == sorted(ref)
+    # the matching's round cuts are local checkpoints: the only durable
+    # table it writes is the `matching` stage itself
+    assert not [
+        f for f in os.listdir(tmp_path / "oto") if f.startswith("ldm_")
+    ]
 
 
 def test_snm_blocking_union(spark, tiny_corpus_dir, tmp_path):

@@ -221,6 +221,24 @@ def pairs_from_blocks(
     )
 
 
+def cross_block_pairs(
+    new_blocks: DataFrame, old_blocks: DataFrame, id_col: str
+) -> DataFrame:
+    """The cross leg of an append's candidate pairs: batch block members
+    joined to base members of the same ``block_key`` → canonical
+    ``(id_a, id_b)`` pairs (``id_a < id_b``, NOT deduped). ``old_blocks``
+    is the base block table already probed down to the batch's keys."""
+    return (
+        new_blocks.select("block_key", F.col(id_col).alias("__n"))
+        .join(old_blocks.select("block_key", F.col(id_col).alias("__b")), "block_key")
+        .select(
+            F.least("__n", "__b").alias("id_a"),
+            F.greatest("__n", "__b").alias("id_b"),
+        )
+        .filter(F.col("id_a") != F.col("id_b"))
+    )
+
+
 def sorted_neighborhood_pairs(
     df: DataFrame,
     key_col: str,

@@ -21,27 +21,12 @@ from wiki_entity_linker_spark.functions.text import (
 )
 from wiki_entity_linker_spark.functions.vectors import cosine_prenorm, norm
 from wiki_entity_linker_spark.operators.blocking import (
+    cross_block_pairs,
     lsh_band_blocks,
     minhash_from_shingles,
-    minhash_signatures,
     pairs_from_blocks,
 )
 from wiki_entity_linker_spark.operators.skew import spread_small_input
-
-
-def _cut(df: DataFrame, mgr, name: str) -> DataFrame:
-    """Materialize a multiply-consumed intermediate exactly once.
-
-    With an enabled
-    :class:`~wiki_entity_linker_spark.plans.checkpoint.StageManager` the cut
-    is a durable stage table: executor failure replays from the stage
-    table, and re-runs resume it. Otherwise (``mgr=None`` or a passthrough
-    manager) it is ``localCheckpoint(eager=True)`` — executor-volatile, but
-    it truncates lineage, which a passthrough stage (a lazy ``persist``)
-    would not. Downstream consumers see one materialized scan either way."""
-    if mgr is None or not mgr.enabled:
-        return df.localCheckpoint(eager=True)
-    return mgr.stage(name, lambda: df)
 
 
 def exact_dedup(
@@ -93,7 +78,16 @@ def minhash_neardup_pairs(
     blocks = lsh_band_blocks(sigs, id_col, bands, n_hashes).localCheckpoint(
         eager=True
     )
-    pairs = pairs_from_blocks(blocks, id_col)
+    return _verify_shingle_pairs(
+        pairs_from_blocks(blocks, id_col), toks, id_col, jaccard_threshold
+    )
+
+
+def _verify_shingle_pairs(
+    pairs: DataFrame, toks: DataFrame, id_col: str, jaccard_threshold: float
+) -> DataFrame:
+    """Exact shingle-Jaccard verify of candidate ``(id_a, id_b)`` pairs
+    against ``(id_col, sh)`` shingle sets → ``(id_a, id_b, jaccard)``."""
     # shuffle_hash on the shingle-array sides: sort-merge would SORT the
     # pair×array intermediate (pairs carrying sh_a into the second join —
     # multi-GB at the sf1 bench) and the array side itself; hashing the
@@ -174,20 +168,9 @@ def minhash_neardup_clusters_incremental(
     ).localCheckpoint(eager=True)
 
     def _verify(pairs: DataFrame, toks: DataFrame) -> DataFrame:
-        # shuffle_hash: see minhash_neardup_pairs — avoids sorting the
-        # pair×shingle-array intermediate
-        a = toks.select(
-            F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")
-        ).hint("shuffle_hash")
-        b = toks.select(
-            F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")
-        ).hint("shuffle_hash")
-        return (
-            pairs.join(a, "id_a")
-            .join(b, "id_b")
-            .filter(F.round(set_jaccard("sh_a", "sh_b"), 6) >= jaccard_threshold)
-            .select("id_a", "id_b")
-        )
+        return _verify_shingle_pairs(
+            pairs, toks, id_col, jaccard_threshold
+        ).select("id_a", "id_b")
 
     base_comps = components_with_singletons(
         base.select(F.col(id_col).alias("file_id")),
@@ -199,17 +182,9 @@ def minhash_neardup_clusters_incremental(
     # the base side O(touched)), plus the batch-internal pairs
     new_keys = blocks_n.select("block_key").dropDuplicates(["block_key"])
     probe_b = blocks_b.join(F.broadcast(new_keys), "block_key", "left_semi")
-    cross = (
-        blocks_n.select("block_key", F.col(id_col).alias("__n"))
-        .join(probe_b.select("block_key", F.col(id_col).alias("__b")), "block_key")
-        .select(
-            F.least("__n", "__b").alias("id_a"),
-            F.greatest("__n", "__b").alias("id_b"),
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
     pairs = (
-        cross.unionByName(pairs_from_blocks(blocks_n, id_col))
+        cross_block_pairs(blocks_n, probe_b, id_col)
+        .unionByName(pairs_from_blocks(blocks_n, id_col))
         .dropDuplicates(["id_a", "id_b"])
     )
     touched = (
@@ -551,14 +526,7 @@ def embedding_neardup_lsh_pairs(
     )
 
 
-def segment_dedup_stats(
-    docs: DataFrame,
-    seg_len: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mgr=None,
-    tokenized: DataFrame | None = None,
-) -> DataFrame:
+def segment_dedup_stats(docs: DataFrame, seg_len: int = 8) -> DataFrame:
     """Corpus-wide segment-level exact dedup, CCNet-style (Wenzek et al.
     2020 §4.1 deduplicates hashed paragraphs across the whole snapshot;
     the synthetic corpus has no paragraph breaks, so the unit here is a
@@ -582,75 +550,67 @@ def segment_dedup_stats(
     """
     if seg_len < 1:
         raise ValueError(f"seg_len must be >= 1, got {seg_len}")
-    # ``tokenized``: optional pre-tokenized ``(id, t)`` frame so a verdict
-    # composition tokenizes the corpus ONCE across tiers (same rule:
-    # text.tokenize(text_col))
-    toks = (
-        tokenized
-        if tokenized is not None
-        else docs.select(id_col, tokenize(text_col).alias("t"))
-    ).filter(F.size("t") > 0)
+    # the segment rows are consumed twice (winner agg + join back) — cut
+    # them once so the corpus is scanned and tokenized a single time
+    seg = segment_rows(
+        docs.select("doc_id", tokenize("text").alias("t")), seg_len
+    ).localCheckpoint(eager=True)
+    return segment_stats(seg, seg)
+
+
+def segment_rows(toks: DataFrame, seg_len: int) -> DataFrame:
+    """``segment_dedup_seg`` index rows ``(doc_id, n_tokens, seg_idx,
+    seg_tokens, h)`` from a ``(doc_id, t)`` token frame: one row per
+    ``seg_len``-token segment of every non-empty document, ``h`` = h64 of
+    the space-joined segment. The full run and the curation append
+    (plans/curation_incremental.py) both build their segment index here."""
+    toks = toks.filter(F.size("t") > 0)
     nseg = F.floor((F.size("t") + (seg_len - 1)) / seg_len).cast("long")
     segs = toks.select(
-        id_col,
+        "doc_id",
         F.size("t").cast("long").alias("n_tokens"),
         F.explode(F.sequence(F.lit(0).cast("long"), nseg - 1)).alias("seg_idx"),
         "t",
     ).select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "seg_idx",
         F.expr(f"slice(t, CAST(seg_idx * {seg_len} + 1 AS INT), {seg_len})").alias("seg"),
     )
-    # the segment frame is consumed twice (winner agg + join back) — cut it
-    # once so the corpus is scanned and tokenized a single time (_cut:
-    # localCheckpoint locally, durable stage table with a StageManager)
-    seg = _cut(
-        segs.select(
-            id_col,
-            "n_tokens",
-            "seg_idx",
-            F.size("seg").cast("long").alias("seg_tokens"),
-            h64(F.concat_ws(" ", "seg")).alias("h"),
-        ),
-        mgr,
-        "segment_dedup_seg",
+    return segs.select(
+        "doc_id",
+        "n_tokens",
+        "seg_idx",
+        F.size("seg").cast("long").alias("seg_tokens"),
+        h64(F.concat_ws(" ", "seg")).alias("h"),
     )
-    winners = seg.groupBy("h").agg(
-        F.min(F.struct(F.col(id_col), F.col("seg_idx"))).alias("w")
+
+
+def segment_stats(segs: DataFrame, evidence: DataFrame) -> DataFrame:
+    """Per-document rollup of :func:`segment_dedup_stats` over
+    :func:`segment_rows` output ``segs``. A segment is kept iff it is the
+    least ``(doc_id, seg_idx)`` holding its hash in ``evidence`` (rows with
+    ``doc_id, seg_idx, h``): a full run passes ``segs`` itself; the
+    curation append passes its batch rows plus the chained rows that share
+    their hashes."""
+    winners = evidence.groupBy("h").agg(
+        F.min(F.struct(F.col("doc_id"), F.col("seg_idx"))).alias("w")
     )
-    kept = seg.join(winners, "h").withColumn(
+    kept = segs.join(winners, "h").withColumn(
         "is_kept",
-        (F.col(id_col) == F.col(f"w.{id_col}")) & (F.col("seg_idx") == F.col("w.seg_idx")),
+        (F.col("doc_id") == F.col("w.doc_id")) & (F.col("seg_idx") == F.col("w.seg_idx")),
     )
-    return segment_stats_from_flags(kept, id_col=id_col)
-
-
-def segment_stats_from_flags(kept: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Per-document rollup of :func:`segment_dedup_stats`, factored out so
-    the incremental curation path can roll up a BATCH's flagged segments
-    against chained winner evidence. ``kept`` = one row per segment with
-    (id, n_tokens, seg_tokens, is_kept)."""
-    return kept.groupBy(id_col).agg(
+    kept_tokens = F.sum(F.when(F.col("is_kept"), F.col("seg_tokens")).otherwise(0))
+    return kept.groupBy("doc_id").agg(
         F.first("n_tokens").alias("n_tokens"),
         F.count("*").alias("n_segments"),
         F.sum(F.col("is_kept").cast("long")).alias("n_kept"),
-        F.sum(F.when(F.col("is_kept"), F.col("seg_tokens")).otherwise(0)).alias("kept_tokens"),
-        (
-            F.first("n_tokens")
-            - F.sum(F.when(F.col("is_kept"), F.col("seg_tokens")).otherwise(0))
-        ).alias("dup_tokens"),
+        kept_tokens.alias("kept_tokens"),
+        (F.first("n_tokens") - kept_tokens).alias("dup_tokens"),
     )
 
 
-def exact_substring_coverage(
-    docs: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mgr=None,
-    tokenized: DataFrame | None = None,
-) -> DataFrame:
+def exact_substring_coverage(docs: DataFrame, k: int = 5) -> DataFrame:
     """Per-document exact-substring duplicate coverage — the distributed
     recast of suffix-array ExactSubstr dedup (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better"): a token position p is
@@ -666,46 +626,53 @@ def exact_substring_coverage(
     length.
 
     Scale shape (100 TB reading): the exploded gram stream is cut once
-    (_cut: localCheckpoint locally, durable stage table with a
-    StageManager) so the corpus is scanned/tokenized a single time, then
-    shuffled exactly twice, both times keyed by the gram — (1) a COUNT-ONLY
-    duplicate-gram aggregate, map-side partial combine so a boilerplate
-    gram repeated billions of times ships one partial row per map task, and
-    (2) a semi join keeping only duplicated positions, whose output is at
-    most its input — no pairwise blowup, which is what makes ExactSubstr
-    semantics tractable where an all-pairs formulation would not be.
-    Interval union is a per-document lead() window over only the duplicated
-    starts (tiny after the semi join). At cluster scale, key both shuffles
-    on xxhash64(gram) instead of the string to cut shuffle bytes
-    (collision-tolerant, as in the reference suffix-array's byte-offset
-    dedup); the string key here keeps the operator bit-equal to the DuckDB
-    oracle.
+    (``localCheckpoint``; the curation verdict stage cuts the same rows as
+    a durable stage table) so the grams are built a single time (the
+    per-document lengths tokenize the text again here; the verdict stage
+    reads them from its cut token frame), then shuffled exactly twice,
+    both times keyed by the gram — (1) a COUNT-ONLY duplicate-gram
+    aggregate, map-side partial combine so a boilerplate gram repeated
+    billions of times ships one partial row per map task, and (2) a semi
+    join keeping only duplicated positions, whose output is at most its
+    input — no pairwise blowup, which is what makes ExactSubstr semantics
+    tractable where an all-pairs formulation would not be. Interval union is a per-document lead() window over only the
+    duplicated starts (tiny after the semi join). At cluster scale, key
+    both shuffles on xxhash64(gram) instead of the string to cut shuffle
+    bytes (collision-tolerant, as in the reference suffix-array's
+    byte-offset dedup); the string key here keeps the operator bit-equal to
+    the DuckDB oracle.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    # ``tokenized``: optional pre-tokenized ``(id, t)`` frame (see
-    # segment_dedup_stats) — one corpus tokenization per verdict composition
-    base = (
-        tokenized
-        if tokenized is not None
-        else docs.select(F.col(id_col), tokenize(text_col).alias("t"))
-    ).select(id_col, F.size("t").cast("long").alias("n_tokens"), "t")
-    grams = _cut(
-        base.filter(F.col("n_tokens") >= k).select(
-            id_col, F.posexplode(ngrams("t", k)).alias("pos", "g")
-        ),
-        mgr,
-        "exact_substring_grams",
+    toks = docs.select("doc_id", tokenize("text").alias("t"))
+    grams = substring_gram_rows(toks, k).localCheckpoint(eager=True)
+    return substring_coverage(grams, toks, k)
+
+
+def substring_gram_rows(toks: DataFrame, k: int) -> DataFrame:
+    """``exact_substring_grams`` index rows ``(doc_id, pos, g)`` from a
+    ``(doc_id, t)`` token frame: every k-gram with its start position, for
+    documents of at least k tokens. The full run and the curation append
+    (plans/curation_incremental.py) both build their gram index here."""
+    return toks.filter(F.size("t") >= k).select(
+        "doc_id", F.posexplode(ngrams("t", k)).alias("pos", "g")
     )
+
+
+def substring_coverage(grams: DataFrame, toks: DataFrame, k: int) -> DataFrame:
+    """Coverage rollup of :func:`exact_substring_coverage` over
+    :func:`substring_gram_rows` output: a position is duplicated when its
+    gram occurs more than once in ``grams``; one row per ``toks`` doc."""
     dup = (
         grams.groupBy("g")
         .agg(F.count("*").alias("c"))
         .filter(F.col("c") > 1)
         .select("g")
     )
-    dup_pos = grams.join(dup, "g", "semi")
     return substring_coverage_from_positions(
-        dup_pos.select(id_col, "pos"), base.drop("t"), k, id_col=id_col
+        grams.join(dup, "g", "semi").select("doc_id", "pos"),
+        toks.select("doc_id", F.size("t").cast("long").alias("n_tokens")),
+        k,
     )
 
 

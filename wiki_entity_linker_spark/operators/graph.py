@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wiki_entity_linker_spark.operators.dedup import _cut
 
 # Matching tail-solve cut-over, in deduped edges: at or under this the
 # sequential greedy runs on the driver (one Arrow transfer + one sorted scan)
@@ -296,7 +295,6 @@ def locally_dominant_matching(
     id_b: str = "id_b",
     score_col: str = "score",
     max_rounds: int = 100,
-    mgr=None,
 ) -> DataFrame:
     """Distributed greedy one-to-one matching (Preis 1999 / locally
     dominant edges): the assignment step of cross-database record linkage
@@ -329,7 +327,7 @@ def locally_dominant_matching(
         .groupBy("ea", "eb")
         .agg(F.max("s").alias("s"))
     )
-    edges = _cut(edges, mgr, "ldm_edges_0")
+    edges = edges.localCheckpoint(eager=True)
     if edges.count() <= _MATCHING_LOCAL_SOLVE_EDGES:
         return _local_greedy_matching(
             scored_pairs.sparkSession, edges
@@ -357,7 +355,7 @@ def locally_dominant_matching(
             .select("node", "s", "ea", "eb")
         )
         # best feeds BOTH semi-joins: cut so the union+argmax runs once
-        best = _cut(best, mgr, f"ldm_best_{r}")
+        best = best.localCheckpoint(eager=True)
         won = (
             edges.join(
                 best.select(F.col("node").alias("ea"), "eb"), ["ea", "eb"],
@@ -368,7 +366,7 @@ def locally_dominant_matching(
                 "left_semi",
             )
         )
-        won = _cut(won, mgr, f"ldm_won_{r}")
+        won = won.localCheckpoint(eager=True)
         if won.isEmpty():
             # no locally dominant edge can only mean no edges remain;
             # guarded by the isEmpty() check above, but stay loud
@@ -381,7 +379,7 @@ def locally_dominant_matching(
             edges.join(taken.withColumnRenamed("node", "ea"), "ea", "left_anti")
             .join(taken.withColumnRenamed("node", "eb"), "eb", "left_anti")
         )
-        edges = _cut(edges, mgr, f"ldm_edges_{r}")
+        edges = edges.localCheckpoint(eager=True)
     # the bound is "LOUD past max_rounds", not at it: a graph that drains
     # exactly on the final round must succeed, so test emptiness once more
     # after the loop instead of relying on the next iteration's check

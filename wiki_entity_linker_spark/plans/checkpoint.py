@@ -244,8 +244,8 @@ class StageManager:
                 self.counters[name] = meta | {"resumed": True}
                 return self.store.read(self.spark, name)
         df = build()
-        # a build may itself run NESTED stages (operators thread mgr= into
-        # their internal cuts): restore this stage's hash afterwards so the
+        # a build may itself run NESTED stages (curation's
+        # dedup_verdict_table threads mgr= into its cuts): restore this stage's hash afterwards so the
         # chain seen downstream is identical whether the build ran or the
         # stage resumed (a resumed stage never executes the nested calls)
         self.chain_hash = stage_hash

@@ -40,9 +40,10 @@ from wiki_entity_linker_spark.functions.text import (
     tokenize,
 )
 from wiki_entity_linker_spark.operators.dedup import (
-    _cut,
-    exact_substring_coverage,
-    segment_dedup_stats,
+    segment_rows,
+    segment_stats,
+    substring_coverage,
+    substring_gram_rows,
 )
 from wiki_entity_linker_spark.plans.checkpoint import StageManager, write_json_atomic
 from wiki_entity_linker_spark.plans.er_pipeline import _input_fingerprint
@@ -93,17 +94,18 @@ def assemble_verdicts(
     """Final verdict assembly from the three tier frames — shared by the
     full run and the incremental append so both label identically.
     ``ex``: (doc_id, canonical_id); ``sub``: (doc_id, n_tokens,
-    substr_dup_frac); ``seg``: (doc_id, seg_dup) with seg_dup nullable."""
+    substr_dup_frac); ``seg``: segment stats rows (doc_id, dup_tokens, …),
+    absent for documents without tokens."""
     j = (
         sub.join(ex, "doc_id")
-        .join(seg, "doc_id", "left")
+        .join(seg.select("doc_id", "dup_tokens"), "doc_id", "left")
         .select(
             "doc_id",
             "n_tokens",
             "canonical_id",
             "substr_dup_frac",
             F.round(
-                F.coalesce("seg_dup", F.lit(0).cast("long"))
+                F.coalesce("dup_tokens", F.lit(0).cast("long"))
                 / F.greatest("n_tokens", F.lit(1).cast("long")),
                 6,
             ).alias("seg_dup_frac"),
@@ -119,17 +121,34 @@ def assemble_verdicts(
     )
 
 
+def _cut(df: DataFrame, mgr, name: str) -> DataFrame:
+    """Materialize a multiply-consumed intermediate exactly once.
+
+    With an enabled
+    :class:`~wiki_entity_linker_spark.plans.checkpoint.StageManager` the cut
+    is a durable stage table: executor failure replays from the stage
+    table, and re-runs resume it. Otherwise (``mgr=None`` or a passthrough
+    manager) it is ``localCheckpoint(eager=True)`` — executor-volatile, but
+    it truncates lineage, which a passthrough stage (a lazy ``persist``)
+    would not."""
+    if mgr is None or not mgr.enabled:
+        return df.localCheckpoint(eager=True)
+    return mgr.stage(name, lambda: df)
+
+
 def dedup_verdict_table(
     docs: DataFrame, cfg: CurationConfig, mgr=None
 ) -> DataFrame:
     """One verdict per document from the three exact-dedup tiers (the
-    registered ``dedup_verdicts`` query, parameterized and mgr-threaded):
+    registered ``dedup_verdicts`` query runs it with the defaults):
     'drop_exact_dup' for a later copy of an identical doc,
     'drop_boilerplate' above the duplicate-coverage threshold, else 'keep'.
 
-    With a StageManager the per-doc hash table is cut as the
-    ``exact_hashes`` stage — together with ``exact_substring_grams`` and
-    ``segment_dedup_seg`` it forms the probe index the incremental append
+    With a StageManager the per-doc hash table, the token frame and the
+    gram and segment rows are cut as the nested stages ``exact_hashes``,
+    ``verdict_toks``, ``exact_substring_grams`` and ``segment_dedup_seg``
+    (in that order: their stage hashes chain). The hash, gram and segment
+    tables form the probe index the incremental append
     (plans/curation_incremental.py) resolves against.
     """
     hashed = _cut(exact_hash_table(docs), mgr, "exact_hashes")
@@ -138,21 +157,40 @@ def dedup_verdict_table(
         "doc_id", F.min("doc_id").over(w).alias("canonical_id")
     )
     # one corpus tokenization shared by both token tiers (the sha tier
-    # hashes normalized text, not tokens); same rule both consumers apply
+    # hashes normalized text, not tokens)
     toks = _cut(
         docs.select("doc_id", tokenize("text").alias("t")), mgr, "verdict_toks"
     )
-    sub = exact_substring_coverage(
-        docs, k=cfg.substr_k, mgr=mgr, tokenized=toks
-    ).select(
+    grams = _cut(
+        substring_gram_rows(toks, cfg.substr_k), mgr, "exact_substring_grams"
+    )
+    segs = _cut(segment_rows(toks, cfg.seg_len), mgr, "segment_dedup_seg")
+    sub = substring_coverage(grams, toks, cfg.substr_k).select(
         "doc_id", "n_tokens", F.col("covered_frac").alias("substr_dup_frac")
     )
-    seg = segment_dedup_stats(
-        docs, seg_len=cfg.seg_len, mgr=mgr, tokenized=toks
-    ).select(
-        "doc_id", F.col("dup_tokens").alias("seg_dup")
+    return assemble_verdicts(
+        ex, sub, segment_stats(segs, segs), cfg.boilerplate_frac
     )
-    return assemble_verdicts(ex, sub, seg, cfg.boilerplate_frac)
+
+
+def kept_table(
+    verdicts: DataFrame, sources: DataFrame, contaminated: DataFrame | None
+) -> DataFrame:
+    """The kept corpus ``(doc_id, source, n_tokens)``: 'keep' verdicts with
+    their ``(doc_id, source)`` rows, minus documents flagged in
+    ``contaminated`` (none dropped when it is ``None``)."""
+    kept = (
+        verdicts.filter(F.col("verdict") == "keep")
+        .join(sources, "doc_id")
+        .select("doc_id", "source", "n_tokens")
+    )
+    if contaminated is None:
+        return kept
+    return (
+        kept.join(contaminated, "doc_id", "left")
+        .filter(~F.coalesce("is_contaminated", F.lit(False)))
+        .select("doc_id", "source", "n_tokens")
+    )
 
 
 def contamination_flags(
@@ -336,21 +374,12 @@ def run_curation_pipeline(
             lambda: contamination_flags(docs, benchmark, cfg.decontam_k),
         )
 
-    def _kept() -> DataFrame:
-        base = (
-            verdicts.filter(F.col("verdict") == "keep")
-            .join(docs.select("doc_id", "source"), "doc_id")
-            .select("doc_id", "source", "n_tokens")
-        )
-        if contaminated is None:
-            return base
-        return (
-            base.join(contaminated, "doc_id", "left")
-            .filter(~F.coalesce("is_contaminated", F.lit(False)))
-            .select("doc_id", "source", "n_tokens")
-        )
-
-    kept = mgr.stage("kept", _kept)
+    kept = mgr.stage(
+        "kept",
+        lambda: kept_table(
+            verdicts, docs.select("doc_id", "source"), contaminated
+        ),
+    )
 
     mixture = mgr.stage("mixture", lambda: mixture_table(kept, cfg))
     sample = mgr.stage("sample", lambda: budget_sample(kept, mixture))

@@ -57,11 +57,12 @@ from dataclasses import asdict
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wiki_entity_linker_spark.functions.hashing import h64
-from wiki_entity_linker_spark.functions.text import ngrams, tokenize
+from wiki_entity_linker_spark.functions.text import tokenize
 from wiki_entity_linker_spark.operators.dedup import (
-    segment_stats_from_flags,
+    segment_rows,
+    segment_stats,
     substring_coverage_from_positions,
+    substring_gram_rows,
 )
 from wiki_entity_linker_spark.plans.checkpoint import (
     ParquetStore,
@@ -72,9 +73,11 @@ from wiki_entity_linker_spark.plans.checkpoint import (
 )
 from wiki_entity_linker_spark.plans.curation import (
     CurationConfig,
+    assemble_verdicts,
     budget_sample,
     contamination_flags,
     exact_hash_table,
+    kept_table,
     mixture_table,
     stratified_eval_slice,
     verdict_expr,
@@ -174,41 +177,9 @@ def run_curation_increment(
     # --- batch-side index deltas (the only bulky writes) --------------------
     b_hashes = mgr.stage("batch_hashes", lambda: exact_hash_table(batch))
 
-    b_tok = batch.select(
-        "doc_id", tokenize("text").alias("t")
-    ).select("doc_id", F.size("t").cast("long").alias("n_tokens"), "t")
-
-    def _b_grams() -> DataFrame:
-        return b_tok.filter(F.col("n_tokens") >= k).select(
-            "doc_id", F.posexplode(ngrams("t", k)).alias("pos", "g")
-        )
-
-    b_grams = mgr.stage("batch_grams", _b_grams)
-
-    def _b_segs() -> DataFrame:
-        nseg = F.ceil(F.col("n_tokens") / seg_len).cast("long")
-        segs = b_tok.filter(F.col("n_tokens") > 0).select(
-            "doc_id",
-            "n_tokens",
-            F.explode(F.sequence(F.lit(0).cast("long"), nseg - 1)).alias("seg_idx"),
-            "t",
-        ).select(
-            "doc_id",
-            "n_tokens",
-            "seg_idx",
-            F.expr(
-                f"slice(t, CAST(seg_idx * {seg_len} + 1 AS INT), {seg_len})"
-            ).alias("seg"),
-        )
-        return segs.select(
-            "doc_id",
-            "n_tokens",
-            "seg_idx",
-            F.size("seg").cast("long").alias("seg_tokens"),
-            h64(F.concat_ws(" ", "seg")).alias("h"),
-        )
-
-    b_segs = mgr.stage("batch_segs", _b_segs)
+    b_tok = batch.select("doc_id", tokenize("text").alias("t"))
+    b_grams = mgr.stage("batch_grams", lambda: substring_gram_rows(b_tok, k))
+    b_segs = mgr.stage("batch_segs", lambda: segment_rows(b_tok, seg_len))
 
     # batch gram counts — reused by gram_counts AND the flip detection
     b_counts = mgr.stage(
@@ -285,7 +256,9 @@ def run_curation_increment(
         lengths = (
             old_verdicts.join(touched, "doc_id", "left_semi")
             .select("doc_id", "n_tokens")
-            .unionByName(b_tok.select("doc_id", "n_tokens"))
+            .unionByName(
+                b_tok.select("doc_id", F.size("t").cast("long").alias("n_tokens"))
+            )
         )
         return substring_coverage_from_positions(dup_pos, lengths, k).select(
             "doc_id", "n_tokens", F.col("covered_frac").alias("substr_dup_frac")
@@ -299,18 +272,9 @@ def run_curation_increment(
         old_match = old_segs.join(F.broadcast(bset), "h", "left_semi").select(
             "doc_id", "seg_idx", "h"
         )
-        winners = (
-            b_segs.select("doc_id", "seg_idx", "h")
-            .unionByName(old_match)
-            .groupBy("h")
-            .agg(F.min(F.struct("doc_id", "seg_idx")).alias("w"))
+        return segment_stats(
+            b_segs, b_segs.select("doc_id", "seg_idx", "h").unionByName(old_match)
         )
-        kept = b_segs.join(winners, "h").withColumn(
-            "is_kept",
-            (F.col("doc_id") == F.col("w.doc_id"))
-            & (F.col("seg_idx") == F.col("w.seg_idx")),
-        )
-        return segment_stats_from_flags(kept)
 
     batch_segstats = mgr.stage("batch_segstats", _segstats)
 
@@ -334,36 +298,11 @@ def run_curation_increment(
             )
         )
         # batch rows: all three tiers fresh
-        seg_frac = F.round(
-            F.coalesce("seg_dup", F.lit(0).cast("long"))
-            / F.greatest("n_tokens", F.lit(1).cast("long")),
-            6,
-        )
-        batch_rows = (
-            sub_cover.join(batch_ids, "doc_id", "left_semi")
-            .join(batch_exact, "doc_id")
-            .join(
-                batch_segstats.select(
-                    "doc_id", F.col("dup_tokens").alias("seg_dup")
-                ),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                "n_tokens",
-                "canonical_id",
-                "substr_dup_frac",
-                seg_frac.alias("seg_dup_frac"),
-            )
-            .select(
-                "doc_id",
-                "n_tokens",
-                "canonical_id",
-                "substr_dup_frac",
-                "seg_dup_frac",
-                verdict_expr(cfg.boilerplate_frac).alias("verdict"),
-            )
+        batch_rows = assemble_verdicts(
+            batch_exact,
+            sub_cover.join(batch_ids, "doc_id", "left_semi"),
+            batch_segstats,
+            cfg.boilerplate_frac,
         )
         changed = sub_cover.select("doc_id")
         return (
@@ -397,21 +336,9 @@ def run_curation_increment(
     sources = mgr.stage("doc_sources", _sources)
 
     # --- downstream summaries over the combined narrow tables --------------------
-    def _kept() -> DataFrame:
-        base = (
-            verdicts.filter(F.col("verdict") == "keep")
-            .join(sources, "doc_id")
-            .select("doc_id", "source", "n_tokens")
-        )
-        if contaminated is None:
-            return base
-        return (
-            base.join(contaminated, "doc_id", "left")
-            .filter(~F.coalesce("is_contaminated", F.lit(False)))
-            .select("doc_id", "source", "n_tokens")
-        )
-
-    kept = mgr.stage("kept", _kept)
+    kept = mgr.stage(
+        "kept", lambda: kept_table(verdicts, sources, contaminated)
+    )
     mixture = mgr.stage("mixture", lambda: mixture_table(kept, cfg))
     sample = mgr.stage("sample", lambda: budget_sample(kept, mixture))
     eval_slice = mgr.stage(

@@ -69,7 +69,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.eval.pairwise import evaluate_against_labeled_pairs
-from wiki_entity_linker_spark.operators.blocking import pairs_from_blocks, with_file_id
+from wiki_entity_linker_spark.operators.blocking import (
+    cross_block_pairs,
+    pairs_from_blocks,
+    with_file_id,
+)
 from wiki_entity_linker_spark.operators.closure import (
     merge_components,
     relabel_through_map,
@@ -342,15 +346,7 @@ def run_er_incremental(
         )
         probe_new = new_raw_blocks.join(F.broadcast(hot), "block_key", "left_anti")
         probe_old = old_probe.join(F.broadcast(hot), "block_key", "left_anti")
-        cross = (
-            probe_new.select("block_key", F.col("file_id").alias("__n"))
-            .join(probe_old.select("block_key", F.col("file_id").alias("__b")), "block_key")
-            .select(
-                F.least("__n", "__b").alias("id_a"),
-                F.greatest("__n", "__b").alias("id_b"),
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
+        cross = cross_block_pairs(probe_new, probe_old, "file_id")
         # batch-internal pairs come from probe_new (already anti-joined
         # against `hot`), so the stopword rule applies to COMBINED old+new
         # block sizes on this leg too — a block over the cap contributes

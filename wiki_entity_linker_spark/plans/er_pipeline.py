@@ -27,7 +27,7 @@ Every stage checkpoints through :class:`StageManager` (resume + lineage).
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,7 +118,6 @@ class ERConfig:
     # databases. Clusters/assignment are still produced; this is an extra
     # output stage, not a replacement.
     one_to_one: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def ingest_projection(raw: DataFrame) -> DataFrame:
@@ -456,7 +455,7 @@ def run_er_pipeline(
                     F.greatest("shingle_jaccard", "tf_cosine"), 9
                 ).alias("score"),
             )
-            return locally_dominant_matching(cand, mgr=mgr)
+            return locally_dominant_matching(cand)
 
         out["matching"] = mgr.stage("matching", _matching)
 

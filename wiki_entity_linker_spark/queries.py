@@ -2551,54 +2551,14 @@ def dedup_verdicts(spark, sf_dir):
     segment_dedup); this query pins their COMPOSITION. Scale shape =
     union of the components' (each documented at its definition); the
     final assembly is three doc_id equi-joins."""
-    from wiki_entity_linker_spark.operators.dedup import (
-        exact_dedup,
-        exact_substring_coverage,
-        segment_dedup_stats,
+    from wiki_entity_linker_spark.plans.curation import (
+        CurationConfig,
+        dedup_verdict_table,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    ex = exact_dedup(d, "doc_id", "text").select("doc_id", "canonical_id")
-    # one corpus tokenization for both token tiers (the sha tier hashes
-    # NORMALIZED TEXT, not tokens, so it keeps its own pass)
-    toks = d.select("doc_id", tokenize("text").alias("t")).localCheckpoint(
-        eager=True
-    )
-    sub = exact_substring_coverage(d, k=5, tokenized=toks).select(
-        "doc_id", "n_tokens", F.col("covered_frac").alias("substr_dup_frac")
-    )
-    seg = segment_dedup_stats(d, seg_len=8, tokenized=toks).select(
-        "doc_id", F.col("dup_tokens").alias("seg_dup")
-    )
-    j = (
-        sub.join(ex, "doc_id")
-        .join(seg, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            "canonical_id",
-            "substr_dup_frac",
-            F.round(
-                F.coalesce("seg_dup", F.lit(0).cast("long"))
-                / F.greatest("n_tokens", F.lit(1).cast("long")),
-                6,
-            ).alias("seg_dup_frac"),
-        )
-    )
-    return j.select(
-        "doc_id",
-        "n_tokens",
-        "canonical_id",
-        "substr_dup_frac",
-        "seg_dup_frac",
-        F.when(F.col("canonical_id") != F.col("doc_id"), "drop_exact_dup")
-        .when(
-            (F.col("substr_dup_frac") > 0.25) | (F.col("seg_dup_frac") > 0.25),
-            "drop_boilerplate",
-        )
-        .otherwise("keep")
-        .alias("verdict"),
-    )
+    # the curation pipeline's verdict stage: its defaults are this query's
+    # literals (k=5, seg_len=8, 0.25)
+    return dedup_verdict_table(_t(spark, sf_dir, "documents"), CurationConfig())
 
 
 @q(
@@ -4525,6 +4485,7 @@ def curation_kept(spark, sf_dir):
         CurationConfig,
         contamination_flags,
         dedup_verdict_table,
+        kept_table,
     )
 
     d = _t(spark, sf_dir, "documents")
@@ -4532,14 +4493,10 @@ def curation_kept(spark, sf_dir):
         "doc_id", "source", "text"
     )
     bench = d.filter(F.col("doc_id") % 50 == 0).select("doc_id", "text")
-    v = dedup_verdict_table(corpus, CurationConfig())
-    cont = contamination_flags(corpus, bench, 3)
-    return (
-        v.filter(F.col("verdict") == "keep")
-        .join(corpus.select("doc_id", "source"), "doc_id")
-        .join(cont, "doc_id", "left")
-        .filter(~F.coalesce("is_contaminated", F.lit(False)))
-        .select("doc_id", "source", "n_tokens")
+    return kept_table(
+        dedup_verdict_table(corpus, CurationConfig()),
+        corpus.select("doc_id", "source"),
+        contamination_flags(corpus, bench, 3),
     )
 
 
