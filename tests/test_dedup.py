@@ -335,6 +335,18 @@ def test_exact_substring_coverage_planted(spark):
     assert got == want
 
 
+def test_exact_substring_coverage_tokenizes_once(spark):
+    """The gram rows and the per-document lengths both read the cut token
+    frame, so no tokenize runs above the cut."""
+    from wiki_entity_linker_spark.operators.dedup import exact_substring_coverage
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "x a b c d e y")], "doc_id long, text string"
+    )
+    plan = exact_substring_coverage(df, 5)._jdf.queryExecution().analyzed()
+    assert plan.toString().count("regexp_replace(text") == 0
+
+
 def test_winnowing_guarantee_and_caps(spark):
     from wiki_entity_linker_spark.operators.dedup import (
         winnowing_candidate_pairs,

@@ -5,11 +5,7 @@ from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.operators.argmax import argmax_with_ties, top1_deterministic
 from wiki_entity_linker_spark.operators.blocking import pairs_from_blocks
-from wiki_entity_linker_spark.operators.skew import (
-    block_size_profile,
-    drop_stopword_blocks,
-    salt_large_blocks,
-)
+from wiki_entity_linker_spark.operators.skew import cap_and_salt_blocks
 
 
 def test_argmax_keeps_ties(spark):
@@ -54,8 +50,13 @@ def test_salt_large_blocks_caps_and_chains(spark, monkeypatch):
         [("hot", i) for i in ids] + [("cold", "f000"), ("cold", "f001")],
         "block_key string, file_id string",
     ).select("file_id", "block_key")
-    salted = salt_large_blocks(df, cap=16)
-    prof = {r["block_key"]: r["block_size"] for r in block_size_profile(salted).collect()}
+    salted = cap_and_salt_blocks(df, max_size=10_000, cap=16)
+    prof = {
+        r["block_key"]: r["block_size"]
+        for r in salted.groupBy("block_key")
+        .agg(F.count("*").alias("block_size"))
+        .collect()
+    }
     # no salted block exceeds cap+1 (chain member)
     assert max(prof.values()) <= 17
     assert prof["cold"] == 2
@@ -74,7 +75,7 @@ def test_salt_large_blocks_caps_and_chains(spark, monkeypatch):
 def test_drop_stopword_blocks(spark):
     rows = [("huge", f"f{i}") for i in range(50)] + [("ok", "a"), ("ok", "b")]
     df = spark.createDataFrame(rows, "block_key string, file_id string")
-    kept = drop_stopword_blocks(df, max_size=10)
+    kept = cap_and_salt_blocks(df, max_size=10, cap=10_000)
     assert {r["block_key"] for r in kept.select("block_key").distinct().collect()} == {"ok"}
 
 

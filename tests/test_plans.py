@@ -252,6 +252,18 @@ def test_collocation_lift_topk_plan(spark, sf001):
     assert "CartesianProduct" not in plan
 
 
+def test_fellegi_sunter_pairs_score_each_pair_once(spark, sf001):
+    """The Fellegi–Sunter pairs come from minhash_neardup_pairs at
+    threshold 0, which adds no Jaccard filter: Catalyst would push one
+    below the projection, and one plan node more would compute every
+    pair's Jaccard."""
+    from wiki_entity_linker_spark.queries import _fs_labeled_feature_pairs
+
+    plan = _fs_labeled_feature_pairs(spark, sf001)._jdf.queryExecution()
+    lines = plan.optimizedPlan().toString().splitlines()
+    assert sum(l.count("array_intersect") > 0 for l in lines) == 1
+
+
 def test_embedding_quantization_plan_shape(spark, sf001):
     """ONE aggregate pass computes the bounds (map-side partial → single
     final row), the bounds broadcast back, and the fact side is never

@@ -87,7 +87,8 @@ def _verify_shingle_pairs(
     pairs: DataFrame, toks: DataFrame, id_col: str, jaccard_threshold: float
 ) -> DataFrame:
     """Exact shingle-Jaccard verify of candidate ``(id_a, id_b)`` pairs
-    against ``(id_col, sh)`` shingle sets → ``(id_a, id_b, jaccard)``."""
+    against ``(id_col, sh)`` shingle sets → ``(id_a, id_b, jaccard)``.
+    A ``jaccard_threshold`` of 0 or less keeps every candidate pair."""
     # shuffle_hash on the shingle-array sides: sort-merge would SORT the
     # pair×array intermediate (pairs carrying sh_a into the second join —
     # multi-GB at the sf1 bench) and the array side itself; hashing the
@@ -100,7 +101,7 @@ def _verify_shingle_pairs(
     b = toks.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")).hint(
         "shuffle_hash"
     )
-    return (
+    scored = (
         pairs.join(a, "id_a")
         .join(b, "id_b")
         .select(
@@ -109,8 +110,14 @@ def _verify_shingle_pairs(
             # sh arrays are shingles() output → already distinct: set_jaccard
             F.round(set_jaccard("sh_a", "sh_b"), 6).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= jaccard_threshold)
     )
+    # no filter when it cannot drop a pair: Catalyst pushes the filter below
+    # the projection, which then computes the Jaccard a second time per pair
+    # (on 4 cores the Fellegi–Sunter scores over the 10x-replicated sf0.1
+    # documents took 29-32 s with it, 20-23 s without)
+    if jaccard_threshold <= 0:
+        return scored
+    return scored.filter(F.col("jaccard") >= jaccard_threshold)
 
 
 def minhash_neardup_clusters_incremental(
@@ -625,26 +632,28 @@ def exact_substring_coverage(docs: DataFrame, k: int = 5) -> DataFrame:
     no grams (coverage 0) — the suffix-array convention of a minimum match
     length.
 
-    Scale shape (100 TB reading): the exploded gram stream is cut once
-    (``localCheckpoint``; the curation verdict stage cuts the same rows as
-    a durable stage table) so the grams are built a single time (the
-    per-document lengths tokenize the text again here; the verdict stage
-    reads them from its cut token frame), then shuffled exactly twice,
-    both times keyed by the gram — (1) a COUNT-ONLY duplicate-gram
+    Scale shape (100 TB reading): the token frame and the exploded gram
+    stream are each cut once (``localCheckpoint``; the curation verdict
+    stage cuts the same rows as durable stage tables), so the corpus is
+    tokenized and the grams are built a single time — the per-document
+    lengths read the cut token frame. The grams are then shuffled exactly
+    twice, both times keyed by the gram — (1) a COUNT-ONLY duplicate-gram
     aggregate, map-side partial combine so a boilerplate gram repeated
     billions of times ships one partial row per map task, and (2) a semi
     join keeping only duplicated positions, whose output is at most its
     input — no pairwise blowup, which is what makes ExactSubstr semantics
-    tractable where an all-pairs formulation would not be. Interval union is a per-document lead() window over only the
-    duplicated starts (tiny after the semi join). At cluster scale, key
-    both shuffles on xxhash64(gram) instead of the string to cut shuffle
-    bytes (collision-tolerant, as in the reference suffix-array's
+    tractable where an all-pairs formulation would not be. Interval union
+    is a per-document lead() window over only the duplicated starts (tiny
+    after the semi join). At cluster scale, key both shuffles on
+    xxhash64(gram) instead of the string to cut shuffle bytes
+    (collision-tolerant, as in the reference suffix-array's
     byte-offset dedup); the string key here keeps the operator bit-equal to
     the DuckDB oracle.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     toks = docs.select("doc_id", tokenize("text").alias("t"))
+    toks = toks.localCheckpoint(eager=True)
     grams = substring_gram_rows(toks, k).localCheckpoint(eager=True)
     return substring_coverage(grams, toks, k)
 

@@ -3,39 +3,24 @@
 The reference's analogue of a hot key is a hyper-ambiguous alias (one alias →
 thousands of candidate entities) or the vendored-file block; its answer is an
 in-RAM dict so skew is invisible. At 10^12 files a single hot block key would
-produce O(n²) candidate pairs on one reducer. Three explicit tools, applied
+produce O(n²) candidate pairs on one reducer. The answer here is applied
 *before* the pair self-join (AQE skew-join splitting alone cannot fix a
 quadratic pair blow-up — it only rebalances, so we reshape the workload):
 
-* :func:`block_size_profile` — groupBy(block).count() diagnostics;
-* :func:`drop_stopword_blocks` — drop blocks over a hard cap (the reference
-  drops stopword aliases the same way, prefix_trie_linker.py:180-183);
-* :func:`salt_large_blocks` — deterministically split an oversized block into
-  ``ceil(n/cap)`` chained sub-blocks that overlap by one member, so transitive
-  clustering still connects the block while pair counts stay
-  O(n·cap) instead of O(n²).
+* :func:`cap_and_salt_blocks` — drop blocks over a hard cap (the reference
+  drops stopword aliases the same way, prefix_trie_linker.py:180-183), then
+  deterministically split each remaining oversized block into
+  ``ceil(n/cap)`` chained sub-blocks that overlap by one member, so
+  transitive clustering still connects the block while pair counts stay
+  O(n·cap) instead of O(n²);
+* :func:`skew_report` — the one-row diagnostic that decides whether a key
+  needs salting at all.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def block_size_profile(block_df: DataFrame, block_col: str = "block_key") -> DataFrame:
-    return (
-        block_df.groupBy(block_col)
-        .agg(F.count("*").alias("block_size"))
-        .orderBy(F.col("block_size").desc())
-    )
-
-
-def drop_stopword_blocks(
-    block_df: DataFrame, block_col: str = "block_key", max_size: int = 10000
-) -> DataFrame:
-    sizes = block_df.groupBy(block_col).agg(F.count("*").alias("__n"))
-    keep = sizes.filter(F.col("__n") <= max_size).select(block_col)
-    return block_df.join(F.broadcast(keep), block_col, "inner")
 
 
 def _salted_keys(id_col: str, block_col: str, cap: int):
@@ -53,28 +38,6 @@ def _salted_keys(id_col: str, block_col: str, cap: int):
     )
 
 
-def salt_large_blocks(
-    block_df: DataFrame,
-    id_col: str = "file_id",
-    block_col: str = "block_key",
-    cap: int = 64,
-) -> DataFrame:
-    """Rewrite block keys so no block exceeds ``cap + 1`` members.
-
-    Deterministic: pure function of (ids, cap). SINGLE-PASS: one windowed
-    projection + explode — a union-of-filters formulation evaluates the
-    (often expensive) upstream blocking subtree once per branch, which
-    showed up as ~3× redundant MinHash work in the ER pipeline.
-    """
-    w = Window.partitionBy(block_col).orderBy(id_col)
-    sized = block_df.withColumn("__rn", F.row_number().over(w) - 1).withColumn(
-        "__n", F.count("*").over(Window.partitionBy(block_col))
-    )
-    return sized.select(
-        id_col, F.explode(_salted_keys(id_col, block_col, cap)).alias(block_col)
-    )
-
-
 def cap_and_salt_blocks(
     block_df: DataFrame,
     id_col: str = "file_id",
@@ -82,14 +45,17 @@ def cap_and_salt_blocks(
     max_size: int = 10000,
     cap: int = 64,
 ) -> DataFrame:
-    """Stopword-drop + salting fused into ONE evaluation of the input.
+    """Drop blocks over ``max_size`` members, then rewrite the keys of the
+    survivors so no block exceeds ``cap + 1`` members (chained salting).
+    Deterministic: a pure function of (ids, max_size, cap).
 
-    Two windows over the same partition key (unordered count, then ordered
+    Stopword-drop and salting are fused into ONE evaluation of the input:
+    two windows over the same partition key (unordered count, then ordered
     row_number on survivors) share one exchange, so the upstream subtree —
     in the ER pipeline that subtree includes the full MinHash computation —
-    is scanned exactly once, instead of once per branch of the previous
-    drop→salt composition (measured 98 s → ~25 s for the blocks stage at 32
-    cores on the benchxl corpus).
+    is scanned exactly once, where a drop pass followed by a salt pass
+    scans it once per branch (measured 98 s → ~25 s for the blocks stage
+    at 32 cores on the benchxl corpus).
     """
     w_count = Window.partitionBy(block_col)
     w_rank = Window.partitionBy(block_col).orderBy(id_col)
@@ -124,7 +90,7 @@ def spread_small_input(
 def skew_report(df: DataFrame, key_col: str) -> DataFrame:
     """One-row skew diagnostic for a prospective join/agg key — the
     measurement that decides between plain shuffle, AQE skew-join, and
-    :func:`salt_large_blocks`: ``(n_rows, n_keys, max_per_key, p50_per_key,
+    :func:`cap_and_salt_blocks`: ``(n_rows, n_keys, max_per_key, p50_per_key,
     p99_per_key, skew_ratio, top_key, recommended_salt)``.
 
     ``recommended_salt`` = ceil(max_per_key / p99_per_key) in exact integer

@@ -116,11 +116,6 @@ class ParquetStore:
     def exists(self, spark: SparkSession, name: str) -> bool:
         return os.path.isdir(os.path.join(self.root, f"{name}.parquet"))
 
-    def delete(self, spark: SparkSession, name: str) -> None:
-        import shutil
-
-        shutil.rmtree(os.path.join(self.root, f"{name}.parquet"), ignore_errors=True)
-
 
 class IcebergStore:
     """Iceberg stage-table store: ``writeTo(...).createOrReplace()`` behind
@@ -172,9 +167,6 @@ class IcebergStore:
 
     def exists(self, spark: SparkSession, name: str) -> bool:
         return spark.catalog.tableExists(self.table(name))
-
-    def delete(self, spark: SparkSession, name: str) -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {self.table(name)}")
 
 
 class StageManager:

@@ -193,13 +193,15 @@ def kept_table(
     )
 
 
-def contamination_flags(
+def contamination_counts(
     docs: DataFrame, benchmark: DataFrame, k: int
 ) -> DataFrame:
-    """(doc_id, is_contaminated): does the document share any k-gram with
-    the benchmark? Benchmark grams are the BROADCAST side (eval suites are
-    tiny next to the corpus); corpus side is explode + broadcast semi-join
-    + per-doc any() — no corpus-vs-corpus shuffle."""
+    """(doc_id, n_ngrams, contaminated_ngrams): per document, its k-gram
+    count and how many of those grams occur in the benchmark (the
+    registered ``decontamination_flags`` query reports these counts).
+    Benchmark grams are the BROADCAST side (eval suites are tiny next to
+    the corpus); corpus side is explode + broadcast left join + per-doc
+    aggregation — no corpus-vs-corpus shuffle."""
     bench = (
         benchmark.select(F.explode(shingles(tokenize("text"), k)).alias("g"))
         .dropDuplicates(["g"])
@@ -211,15 +213,29 @@ def contamination_flags(
     return (
         grams.join(F.broadcast(bench), "g", "left")
         .groupBy("doc_id")
-        .agg((F.coalesce(F.sum("__hit"), F.lit(0)) > 0).alias("is_contaminated"))
+        .agg(
+            F.count("*").alias("n_ngrams"),
+            F.coalesce(F.sum("__hit"), F.lit(0)).alias("contaminated_ngrams"),
+        )
+    )
+
+
+def contamination_flags(
+    docs: DataFrame, benchmark: DataFrame, k: int
+) -> DataFrame:
+    """(doc_id, is_contaminated): does the document share any k-gram with
+    the benchmark? (:func:`contamination_counts` > 0)"""
+    return contamination_counts(docs, benchmark, k).select(
+        "doc_id", (F.col("contaminated_ngrams") > 0).alias("is_contaminated")
     )
 
 
 def mixture_table(kept: DataFrame, cfg: CurationConfig) -> DataFrame:
     """Temperature-weighted per-source token allocation with exact
     largest-remainder rounding over the KEPT corpus (the registered
-    ``mixture_allocation`` query, parameterized). All windows run over the
-    #sources-row summary frame — metadata-scale by construction."""
+    ``mixture_allocation`` query runs it over the whole corpus with the
+    defaults). All windows run over the #sources-row summary frame —
+    metadata-scale by construction."""
     budget = int(cfg.token_budget)
     per = kept.groupBy("source").agg(F.sum("n_tokens").alias("n_tokens"))
     w_all = Window.partitionBy()
@@ -228,6 +244,11 @@ def mixture_table(kept: DataFrame, cfg: CurationConfig) -> DataFrame:
     r = (
         t.withColumn("base", F.floor("target"))
         .withColumn(
+            # rank on the ROUNDED fractional part: the raw doubles come from
+            # independent Spark/DuckDB float pipelines, and a last-ulp
+            # difference between two near-tied sources would flip the rank
+            # (and the ±1 leftover token) between engines — rounding to 6dp
+            # collapses near-ties into exact ties broken by source name
             "rk",
             F.row_number().over(
                 Window.orderBy(
@@ -249,37 +270,46 @@ def mixture_table(kept: DataFrame, cfg: CurationConfig) -> DataFrame:
     )
 
 
-def budget_sample(kept: DataFrame, mixture: DataFrame) -> DataFrame:
-    """Realize the mixture: walk each source's kept documents in
+def budget_walk(rows: DataFrame, budget) -> DataFrame:
+    """Walk each source's ``(doc_id, source, n_tokens)`` rows in
     reproducible portable-hash order and keep documents while the source's
-    cumulative tokens stay within its ALLOCATED budget. One window
-    partitioned BY SOURCE (never a global funnel); the allocation joins in
-    broadcast (source-cardinality frame)."""
+    cumulative tokens stay within ``budget`` (a column) →
+    ``(doc_id, source, n_tokens, cum_tokens, kept)``. One window
+    partitioned BY SOURCE — the cumulative sum never funnels the corpus
+    through a single partition (the registered ``token_budget_sample``
+    query walks a flat budget)."""
     w = (
         Window.partitionBy("source")
-        .orderBy("key", "doc_id")
+        .orderBy(h64(F.col("doc_id").cast("string")), "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    d = kept.withColumn("key", h64(F.col("doc_id").cast("string")))
     cum = F.sum("n_tokens").over(w).cast("long")
-    return (
-        d.join(F.broadcast(mixture.select("source", "alloc_tokens")), "source")
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            cum.alias("cum_tokens"),
-            (cum <= F.col("alloc_tokens")).alias("kept"),
-        )
+    return rows.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        cum.alias("cum_tokens"),
+        (cum <= budget).alias("kept"),
+    )
+
+
+def budget_sample(kept: DataFrame, mixture: DataFrame) -> DataFrame:
+    """Realize the mixture: :func:`budget_walk` over the kept documents
+    against each source's ALLOCATED budget; the allocation joins in
+    broadcast (source-cardinality frame)."""
+    return budget_walk(
+        kept.join(F.broadcast(mixture.select("source", "alloc_tokens")), "source"),
+        F.col("alloc_tokens"),
     )
 
 
 def stratified_eval_slice(kept: DataFrame, per_stratum: int) -> DataFrame:
     """Stratified eval-set construction over the kept corpus:
     ``per_stratum`` docs per (source, length-quartile), picked in
-    reproducible portable-hash order. Quartile thresholds come from the
-    (source, length) histogram; the only corpus-wide window partitions by
-    (source, stratum)."""
+    reproducible portable-hash order (the registered ``stratified_sample``
+    query runs it over the whole corpus with 3 per stratum). Quartile
+    thresholds come from the (source, length) histogram; the only
+    corpus-wide window partitions by (source, stratum)."""
     hist = kept.groupBy("source", "n_tokens").agg(
         F.count("*").cast("long").alias("c")
     )

@@ -203,7 +203,12 @@ def raw_block_keys(
 
 def score_pairs(pairs: DataFrame, feats: DataFrame) -> DataFrame:
     """Similarity scores for candidate pairs over the per-doc int features;
-    Arrow UDFs only for the cosine (numpy) and name Jaro-Winkler."""
+    Arrow UDFs only for the cosine (numpy) and name Jaro-Winkler.
+
+    ``shingle_jaccard`` is ``set_jaccard`` over the xxhash64 ``hsh``
+    arrays, so it equals the Jaccard of the shingle sets only while no two
+    distinct shingles hash alike: a collision merges two shingles and
+    biases the score upward."""
     # shuffle_hash on the feature-array sides: sort-merge would sort the
     # pair×feature-array intermediate between the two joins (the arrays are
     # the payload); hashing the bounded per-doc side avoids both sorts

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from wiki_entity_linker_spark.functions.hashing import h64_sql, mh_family, mh_mix_sql
 from wiki_entity_linker_spark.functions.text import (
     lang_id,
-    lang_marker_hits,
     normalize_content,
     quality_score,
     shingles,
@@ -60,6 +59,15 @@ def q(name: str, sql: str | None):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, source, n_tokens)`` over the whole corpus — the row
+    format the curation mixture, budget-walk and eval-slice builders
+    (plans/curation.py) take."""
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id", "source", token_count("text").cast("long").alias("n_tokens")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1570,35 +1578,21 @@ def decontamination_flags(spark, sf_dir):
     Scale shape: the eval set's distinct n-grams are a BROADCAST side (eval
     suites are tiny next to the corpus); the corpus side is one explode +
     broadcast LEFT join + per-doc aggregation — no shuffle of corpus grams
-    against each other, no all-pairs anything."""
-    from wiki_entity_linker_spark.functions.text import shingles, tokenize
+    against each other, no all-pairs anything. The counts come from the
+    curation pipeline's builder, plans/curation.contamination_counts."""
+    from wiki_entity_linker_spark.plans.curation import contamination_counts
 
     d = _t(spark, sf_dir, "documents")
-    grams = d.select(
-        "doc_id", F.explode(shingles(tokenize("text"), 3)).alias("g")
-    )
-    bench = (
-        grams.filter(F.col("doc_id") % 50 == 0)
-        .select("g").dropDuplicates(["g"])
-        .withColumn("__hit", F.lit(1))
-    )
-    train = grams.filter(F.col("doc_id") % 50 != 0)
-    return (
-        train.join(F.broadcast(bench), "g", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_ngrams"),
-            F.coalesce(F.sum("__hit"), F.lit(0)).alias("contaminated_ngrams"),
-        )
-        .select(
-            "doc_id",
-            "n_ngrams",
-            "contaminated_ngrams",
-            F.round(
-                F.col("contaminated_ngrams") / F.col("n_ngrams"), 6
-            ).alias("contamination_frac"),
-            (F.col("contaminated_ngrams") > 0).alias("is_contaminated"),
-        )
+    return contamination_counts(
+        d.filter(F.col("doc_id") % 50 != 0), d.filter(F.col("doc_id") % 50 == 0), 3
+    ).select(
+        "doc_id",
+        "n_ngrams",
+        "contaminated_ngrams",
+        F.round(F.col("contaminated_ngrams") / F.col("n_ngrams"), 6).alias(
+            "contamination_frac"
+        ),
+        (F.col("contaminated_ngrams") > 0).alias("is_contaminated"),
     )
 
 
@@ -1637,46 +1631,15 @@ def mixture_allocation(spark, sf_dir):
     Scale shape: ONE corpus-wide aggregation (per-source token sums); all
     windows afterwards run over the #sources-row summary — metadata-scale
     by construction, the same tiny-frame-window pattern as
-    operators/packing.py's bucket offsets."""
-    from wiki_entity_linker_spark.functions.text import token_count
+    operators/packing.py's bucket offsets. This is the curation pipeline's
+    builder, plans/curation.mixture_table: its default budget and
+    temperature are this query's literals."""
+    from wiki_entity_linker_spark.plans.curation import (
+        CurationConfig,
+        mixture_table,
+    )
 
-    budget = 1_000_000
-    d = _t(spark, sf_dir, "documents")
-    per = d.groupBy("source").agg(
-        F.sum(token_count("text").cast("long")).alias("n_tokens")
-    )
-    w_all = Window.partitionBy()
-    t = per.withColumn(
-        "target",
-        F.lit(budget) * F.sqrt("n_tokens") / F.sum(F.sqrt("n_tokens")).over(w_all),
-    )
-    r = (
-        t.withColumn("base", F.floor("target"))
-        .withColumn(
-            # rank on the ROUNDED fractional part: the raw doubles come from
-            # independent Spark/DuckDB float pipelines, and a last-ulp
-            # difference between two near-tied sources would flip the rank
-            # (and the ±1 leftover token) between engines — rounding to 6dp
-            # collapses near-ties into exact ties broken by source name
-            "rk",
-            F.row_number().over(
-                Window.orderBy(
-                    F.round(F.col("target") - F.floor("target"), 6).desc(),
-                    F.col("source"),
-                )
-            ),
-        )
-        .withColumn(
-            "leftover", F.lit(budget) - F.sum(F.floor("target")).over(w_all)
-        )
-    )
-    alloc = F.col("base") + F.when(F.col("rk") <= F.col("leftover"), 1).otherwise(0)
-    return r.select(
-        "source",
-        "n_tokens",
-        alloc.alias("alloc_tokens"),
-        F.round(alloc / F.col("n_tokens"), 6).alias("sampling_rate"),
-    )
+    return mixture_table(_doc_tokens(spark, sf_dir), CurationConfig())
 
 
 def _pii_aug_sql() -> str:
@@ -1875,28 +1838,11 @@ def token_budget_sample(spark, sf_dir):
     funnels the corpus through a single partition (contrast
     sequence_packing, whose global order needs the two-level prefix sum);
     skewed sources are bounded by the budget itself (order by the portable
-    h64 makes the kept set independent of physical row order)."""
-    from wiki_entity_linker_spark.functions.hashing import h64
+    h64 makes the kept set independent of physical row order). The walk is
+    the curation pipeline's sample builder, plans/curation.budget_walk."""
+    from wiki_entity_linker_spark.plans.curation import budget_walk
 
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        token_count("text").cast("long").alias("n_tokens"),
-        h64(F.col("doc_id").cast("string")).alias("key"),
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("key", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_tokens").over(w).cast("long")
-    return d.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        cum.alias("cum_tokens"),
-        (cum <= 2000).alias("kept"),
-    )
+    return budget_walk(_doc_tokens(spark, sf_dir), F.lit(2000))
 
 
 @q(
@@ -3039,48 +2985,11 @@ def stratified_sample(spark, sf_dir):
     combinable groupBy; threshold windows run on the summary frame);
     thresholds broadcast back (source-cardinality frame), stratum
     assignment is row-local, and the only corpus-wide window partitions
-    by (source, stratum) — no single-partition funnel anywhere."""
-    from wiki_entity_linker_spark.functions.hashing import h64
+    by (source, stratum) — no single-partition funnel anywhere. This is the
+    curation pipeline's builder, plans/curation.stratified_eval_slice."""
+    from wiki_entity_linker_spark.plans.curation import stratified_eval_slice
 
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", token_count("text").cast("long").alias("n")
-    )
-    hist = d.groupBy("source", "n").agg(F.count("*").cast("long").alias("c"))
-    ws = Window.partitionBy("source")
-    cum = hist.withColumn(
-        "cum",
-        F.sum("c").over(ws.orderBy("n").rowsBetween(Window.unboundedPreceding, 0)),
-    ).withColumn("n_docs", F.sum("c").over(ws))
-
-    def _p(q: float):
-        return F.min(
-            F.when(F.col("cum") >= F.ceil(F.lit(q) * F.col("n_docs")), F.col("n"))
-        ).cast("long")
-
-    thr = cum.groupBy("source").agg(
-        _p(0.25).alias("q25"), _p(0.50).alias("q50"), _p(0.75).alias("q75")
-    )
-    s = d.join(F.broadcast(thr), "source").select(
-        "doc_id",
-        "source",
-        "n",
-        F.when(F.col("n") <= F.col("q25"), 0)
-        .when(F.col("n") <= F.col("q50"), 1)
-        .when(F.col("n") <= F.col("q75"), 2)
-        .otherwise(3)
-        .cast("long")
-        .alias("stratum"),
-    )
-    rk = F.row_number().over(
-        Window.partitionBy("source", "stratum").orderBy(
-            h64(F.col("doc_id").cast("string")), "doc_id"
-        )
-    )
-    return (
-        s.withColumn("rk", rk.cast("long"))
-        .filter(F.col("rk") <= 3)
-        .select("source", "stratum", "doc_id", F.col("n").alias("n_tokens"), "rk")
-    )
+    return stratified_eval_slice(_doc_tokens(spark, sf_dir), 3)
 
 
 # ===========================================================================
@@ -3758,41 +3667,16 @@ def fellegi_sunter_model(spark, sf_dir):
 
 
 def _fs_labeled_feature_pairs(spark, sf_dir):
-    """Shared input of the two Fellegi–Sunter queries: band candidate
-    pairs pseudo-labeled by exact shingle Jaccard, with the three boolean
-    agreement features attached — one definition so the estimation and the
+    """Shared input of the Fellegi–Sunter queries: the MinHash band
+    candidate pairs of :func:`minhash_neardup_pairs` (unfiltered),
+    pseudo-labeled by exact shingle Jaccard (≥0.3 → match), with the three
+    boolean agreement features and the two 100-char length buckets the
+    multi-level model grades — one definition so the estimation and the
     scoring can never drift apart."""
-    from wiki_entity_linker_spark.functions.similarity import set_jaccard
-    from wiki_entity_linker_spark.operators.blocking import (
-        lsh_band_blocks,
-        minhash_from_shingles,
-        pairs_from_blocks,
-    )
-
     d = _t(spark, sf_dir, "documents")
-    # shingle arrays feed the signatures AND both verify sides: cut once
-    sh = d.select(
-        F.col("doc_id"), shingles(tokenize("text"), 3).alias("sh")
-    ).localCheckpoint(eager=True)
-    sigs = minhash_from_shingles(sh, "doc_id", "sh", 16)
-    cand = pairs_from_blocks(lsh_band_blocks(sigs, "doc_id", 8, 16), "doc_id")
-    # shuffle_hash: see minhash_neardup_pairs — avoids sorting the
-    # pair×shingle-array intermediate
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")).hint(
-        "shuffle_hash"
-    )
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")).hint(
-        "shuffle_hash"
-    )
-    labeled = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.round(set_jaccard("sh_a", "sh_b"), 6) >= 0.3).alias("is_match"),
-        )
-    )
+    labeled = minhash_neardup_pairs(
+        d, "doc_id", "text", k_shingle=3, jaccard_threshold=0.0
+    ).select("id_a", "id_b", (F.col("jaccard") >= 0.3).alias("is_match"))
     da = d.select(
         F.col("doc_id").alias("id_a"),
         F.col("source").alias("src_a"),
@@ -3815,6 +3699,8 @@ def _fs_labeled_feature_pairs(spark, sf_dir):
             (F.col("src_a") == F.col("src_b")).alias("f_source"),
             (F.col("lang_a") == F.col("lang_b")).alias("f_lang"),
             (F.col("len_a") == F.col("len_b")).alias("f_len"),
+            "len_a",
+            "len_b",
         )
     )
 
@@ -4227,36 +4113,14 @@ def fs_multilevel_model(spark, sf_dir):
         fs_multilevel_weights,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    base = _fs_labeled_feature_pairs(spark, sf_dir).select(
-        "id_a", "id_b", "is_match"
-    )
-    da = d.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("source").alias("src_a"),
-        F.col("lang").alias("lang_a"),
-        F.expr("n_chars div 100").alias("len_a"),
-    )
-    db = d.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("source").alias("src_b"),
-        F.col("lang").alias("lang_b"),
-        F.expr("n_chars div 100").alias("len_b"),
-    )
-    lv = (
-        base.join(da, "id_a")
-        .join(db, "id_b")
-        .select(
-            "is_match",
-            F.when(F.col("src_a") == F.col("src_b"), 0).otherwise(1)
-            .alias("l_source"),
-            F.when(F.col("lang_a") == F.col("lang_b"), 0).otherwise(1)
-            .alias("l_lang"),
-            F.when(F.col("len_a") == F.col("len_b"), 0)
-            .when(F.abs(F.col("len_a") - F.col("len_b")) <= 1, 1)
-            .otherwise(2)
-            .alias("l_len"),
-        )
+    lv = _fs_labeled_feature_pairs(spark, sf_dir).select(
+        "is_match",
+        F.when(F.col("f_source"), 0).otherwise(1).alias("l_source"),
+        F.when(F.col("f_lang"), 0).otherwise(1).alias("l_lang"),
+        F.when(F.col("f_len"), 0)
+        .when(F.abs(F.col("len_a") - F.col("len_b")) <= 1, 1)
+        .otherwise(2)
+        .alias("l_len"),
     )
     return fs_multilevel_weights(
         lv, {"l_source": 2, "l_lang": 2, "l_len": 3}
