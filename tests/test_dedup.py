@@ -52,7 +52,7 @@ def test_simhash_close_for_near_dups(spark):
     ham_ab = bin(fp["a"] ^ fp["b"]).count("1")
     ham_ac = bin(fp["a"] ^ fp["c"]).count("1")
     assert ham_ab < ham_ac
-    pairs = simhash_neardup_pairs(df, "id", bits=32, max_hamming=ham_ab, bands=ham_ab + 1)
+    pairs = simhash_neardup_pairs(df, "id", max_hamming=ham_ab, bands=ham_ab + 1)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert ("a", "b") in got
 
@@ -185,11 +185,11 @@ def test_embedding_neardup_hot_bucket_guard(spark):
     rows = [(i, [1.0] * 8) for i in range(n)]  # one identical family
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     unguarded = embedding_neardup_lsh_pairs(
-        df, dim=8, id_col="vec_id", threshold=0.9, n_planes=4, n_tables=2
+        df, dim=8, threshold=0.9, n_planes=4, n_tables=2
     ).count()
     assert unguarded == n * (n - 1) // 2  # quadratic blow-up
     guarded = embedding_neardup_lsh_pairs(
-        df, dim=8, id_col="vec_id", threshold=0.9, n_planes=4, n_tables=2,
+        df, dim=8, threshold=0.9, n_planes=4, n_tables=2,
         max_bucket=10,
     ).count()
     assert guarded == 0  # the oversized bucket is dropped in every table
@@ -201,7 +201,7 @@ def test_ivf_centroid_clamp_small_corpus(spark):
     from wiki_entity_linker_spark.operators.ann import train_ivf_centroids
 
     df = _vec_df(spark, n=5, dim=8)
-    cents = train_ivf_centroids(df, dim=8, n_centroids=16, id_col="vec_id")
+    cents = train_ivf_centroids(df, dim=8, n_centroids=16)
     assert 1 <= len(cents) <= 5
 
 
@@ -256,12 +256,12 @@ def test_minhash_incremental_equals_oneshot(spark, monkeypatch):
 
     inc = minhash_neardup_clusters_incremental(
         base, batch, "doc_id", "text",
-        k_shingle=3, n_hashes=16, bands=8, jaccard_threshold=0.3,
+        k_shingle=3, jaccard_threshold=0.3,
     ).collect()
 
     full_pairs = minhash_neardup_pairs(
         df, "doc_id", "text",
-        k_shingle=3, n_hashes=16, bands=8, jaccard_threshold=0.3,
+        k_shingle=3, jaccard_threshold=0.3,
     ).select("id_a", "id_b")
     # the incremental side took the driver tail-solve; solve the one-shot
     # reference with the distributed star-contraction loop
@@ -364,13 +364,13 @@ def test_winnowing_guarantee_and_caps(spark):
         ],
         "doc_id long, text string",
     )
-    fp = winnowing_fingerprints(df, k=4, w=4)
+    fp = winnowing_fingerprints(df)
     per = {r["doc_id"]: r["n"] for r in
            fp.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
     assert 4 not in per and per[5] == 1 and per[3] >= 1
 
     pairs = {(r["id_a"], r["id_b"]): r["n_shared"]
-             for r in winnowing_candidate_pairs(df, k=4, w=4, min_shared=1).collect()}
+             for r in winnowing_candidate_pairs(df, min_shared=1).collect()}
     assert (1, 2) in pairs and pairs[(1, 2)] >= 1
     assert all(p == (1, 2) for p in pairs)
 
@@ -379,10 +379,8 @@ def test_winnowing_guarantee_and_caps(spark):
         [(i, "c1 c2 c3 c4 c5 c6 c7 c8") for i in range(3)],
         "doc_id long, text string",
     )
-    assert winnowing_candidate_pairs(trip, k=4, w=4, min_shared=1,
-                                     max_postings=2).count() == 0
-    assert winnowing_candidate_pairs(trip, k=4, w=4, min_shared=1,
-                                     max_postings=3).count() == 3
+    assert winnowing_candidate_pairs(trip, min_shared=1, max_postings=2).count() == 0
+    assert winnowing_candidate_pairs(trip, min_shared=1, max_postings=3).count() == 3
 
 
 def test_allpairs_jaccard_exact_boundary(spark):

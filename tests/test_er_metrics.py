@@ -213,7 +213,7 @@ def test_kcore_convergence_rounds(spark, request, sf_fixture):
 
     emb = spark.read.parquet(f"{request.getfixturevalue(sf_fixture)}/embeddings.parquet")
     edges = embedding_neardup_lsh_pairs(
-        emb, dim=64, id_col="vec_id", vec_col="embedding", threshold=0.2,
+        emb, dim=64, threshold=0.2,
         n_planes=6, n_tables=3, max_bucket=256,
     ).select("id_a", "id_b")
     out = k_core(edges, k=2, max_rounds=8)
@@ -336,7 +336,7 @@ def test_matching_convergence_rounds(
 
     d = spark.read.parquet(f"{request.getfixturevalue(sf_fixture)}/documents.parquet")
     pairs = minhash_neardup_pairs(
-        d, "doc_id", "text", k_shingle=3, n_hashes=16, bands=8,
+        d, "doc_id", "text", k_shingle=3,
         jaccard_threshold=0.3,
     ).select("id_a", "id_b", _F.col("jaccard").alias("score"))
     out = locally_dominant_matching(pairs, max_rounds=5)

@@ -1,14 +1,11 @@
-"""Structured Streaming: windowed aggregation parity and incremental
-blocking via foreachBatch."""
+"""Structured Streaming: windowed aggregation parity and stateful
+first-seen dedup."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from wiki_entity_linker_spark.streaming.events import (
-    incremental_block_stream,
-    windowed_event_counts,
-)
+from wiki_entity_linker_spark.streaming.events import windowed_event_counts
 
 
 def test_windowed_counts_stream_equals_batch(spark, sf0001, tmp_path):
@@ -40,29 +37,6 @@ def test_windowed_counts_stream_equals_batch(spark, sf0001, tmp_path):
         for r in spark.sql("SELECT * FROM win_out").collect()
     }
     assert got == want and len(want) > 0
-
-
-def test_incremental_block_stream(spark, tiny_corpus_dir, tmp_path):
-    import shutil
-
-    src_dir = str(tmp_path / "drops")
-    os.makedirs(src_dir)
-    shutil.copy(
-        f"{tiny_corpus_dir}/source_files.parquet",
-        os.path.join(src_dir, "part-000.parquet"),
-    )
-    out_dir = str(tmp_path / "blocks")
-    ckpt = str(tmp_path / "ckpt")
-    q = incremental_block_stream(spark, src_dir, out_dir, ckpt)
-    q.awaitTermination(180)
-    blocks = spark.read.parquet(out_dir)
-    n_files = spark.read.parquet(src_dir).count()
-    assert blocks.select("file_id").distinct().count() == n_files
-    assert blocks.count() == n_files * 8  # 8 bands per file
-    # restart with no new data -> no duplicate appends (exactly-once)
-    q2 = incremental_block_stream(spark, src_dir, out_dir, ckpt)
-    q2.awaitTermination(60)
-    assert spark.read.parquet(out_dir).count() == n_files * 8
 
 
 def test_streaming_first_seen_stateful_dedup(spark, tmp_path):

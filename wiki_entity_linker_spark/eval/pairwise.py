@@ -51,10 +51,9 @@ def pair_predictions(
     )
 
 
-def pairwise_metrics(cases: DataFrame, slice_col: str | None = None) -> DataFrame:
-    """TP/FP/FN → P/R/F1, overall (slice='all') plus per-slice rollups —
-    the grouping-sets analogue of the reference's per-mention-type metric
-    families (A7)."""
+def pairwise_metrics(cases: DataFrame) -> DataFrame:
+    """TP/FP/FN → P/R/F1 over all cases, one row with ``slice='all'`` —
+    the reference's metric family shape (A7)."""
     def _lsum(c):
         return F.coalesce(F.sum(c.cast("long")), F.lit(0))
 
@@ -63,31 +62,21 @@ def pairwise_metrics(cases: DataFrame, slice_col: str | None = None) -> DataFram
     fn = _lsum(F.col("is_match") & ~F.col("predicted_match")).alias("fn")
     gt = _lsum(F.col("is_match")).alias("ground_truth")
 
-    def _finish(df: DataFrame) -> DataFrame:
-        p = F.when(F.col("tp") + F.col("fp") > 0,
-                   F.col("tp") / (F.col("tp") + F.col("fp"))).otherwise(F.lit(0.0))
-        r = F.when(F.col("tp") + F.col("fn") > 0,
-                   F.col("tp") / (F.col("tp") + F.col("fn"))).otherwise(F.lit(0.0))
-        f1 = F.when((F.col("precision") + F.col("recall")) > 0,
-                    2 * F.col("precision") * F.col("recall")
-                    / (F.col("precision") + F.col("recall"))).otherwise(F.lit(0.0))
-        return (
-            df.withColumn("precision", F.round(p, 6))
-            .withColumn("recall", F.round(r, 6))
-            .withColumn("f1", F.round(f1, 6))
-        )
-
-    overall = _finish(
-        cases.agg(tp, fp, fn, gt).select(
-            F.lit("all").alias("slice"), "tp", "fp", "fn", "ground_truth"
-        )
+    overall = cases.agg(tp, fp, fn, gt).select(
+        F.lit("all").alias("slice"), "tp", "fp", "fn", "ground_truth"
     )
-    if slice_col is None:
-        return overall
-    per = _finish(
-        cases.groupBy(F.col(slice_col).alias("slice")).agg(tp, fp, fn, gt)
+    p = F.when(F.col("tp") + F.col("fp") > 0,
+               F.col("tp") / (F.col("tp") + F.col("fp"))).otherwise(F.lit(0.0))
+    r = F.when(F.col("tp") + F.col("fn") > 0,
+               F.col("tp") / (F.col("tp") + F.col("fn"))).otherwise(F.lit(0.0))
+    f1 = F.when((F.col("precision") + F.col("recall")) > 0,
+                2 * F.col("precision") * F.col("recall")
+                / (F.col("precision") + F.col("recall"))).otherwise(F.lit(0.0))
+    return (
+        overall.withColumn("precision", F.round(p, 6))
+        .withColumn("recall", F.round(r, 6))
+        .withColumn("f1", F.round(f1, 6))
     )
-    return overall.unionByName(per.select(overall.columns))
 
 
 def evaluate_against_labeled_pairs(
@@ -95,7 +84,6 @@ def evaluate_against_labeled_pairs(
     labeled_pairs: DataFrame,
     id_col: str = "id",
     cluster_col: str = "component",
-    slice_col: str | None = None,
 ) -> DataFrame:
     cases = pair_predictions(assignment, labeled_pairs, id_col, cluster_col)
-    return pairwise_metrics(cases, slice_col)
+    return pairwise_metrics(cases)

@@ -103,11 +103,11 @@ def _jaro(s1: str, s2: str) -> float:
     return (matches / len1 + matches / len2 + (matches - t) / matches) / 3.0
 
 
-def jaro_winkler_py(s1: str, s2: str, boost_threshold: float = 0.7) -> float:
+def jaro_winkler_py(s1: str, s2: str) -> float:
     """Reference Python implementation (used inside the pandas UDF and by
     unit tests against DuckDB's ``jaro_winkler_similarity``)."""
     j = _jaro(s1, s2)
-    if j > boost_threshold:
+    if j > 0.7:
         prefix = 0
         for a, b in zip(s1[:4], s2[:4]):
             if a == b:

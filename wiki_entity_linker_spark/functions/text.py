@@ -36,13 +36,12 @@ def normalize_content(col: Column | str) -> Column:
     return F.lower(F.trim(F.regexp_replace(_c(col), "\\s+", " ")))
 
 
-def tokenize(col: Column | str, lowercase: bool = True) -> Column:
-    """``\\W+`` token array with empty tokens removed.
+def tokenize(col: Column | str) -> Column:
+    """``\\W+`` token array of the normalized text, empty tokens removed.
 
     Recast of count_unigrams.py:14,17 (``re.split(r"\\W+")``).
     """
-    c = normalize_content(col) if lowercase else _c(col)
-    toks = F.split(c, TOKEN_SPLIT_RE)
+    toks = F.split(normalize_content(col), TOKEN_SPLIT_RE)
     return F.filter(toks, lambda t: t != "")
 
 

@@ -18,44 +18,54 @@ from pyspark.sql import functions as F
 from wiki_entity_linker_spark.functions.vectors import cosine_prenorm, dot, norm
 
 
-def cosine_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """→ ``(query_id, vec_id, cos, rank)`` — exact top-k per query.
 
     Broadcast the query side (queries ≪ corpus at scale); ties broken by
     ascending corpus id for determinism (the reference's sorted-qid
     tie-break, prefix_trie_linker.py:254-255).
     """
-    # norms attached per VECTOR before the pair join (cosine_prenorm:
-    # bit-identical doubles, 1 higher-order aggregate per pair instead of 3)
+    return _exact_topk(vectors, queries, k, lambda v, q: v.crossJoin(F.broadcast(q)))
+
+
+def _exact_topk(vectors: DataFrame, queries: DataFrame, k: int, pair) -> DataFrame:
+    """Exact cosine top-k over the ``(v, q)`` pairs ``pair(v, q)`` returns.
+
+    ``v`` is ``(vec_id, vv, __nv)`` and ``q`` is ``(query_id, qv, __nq)``:
+    norms are attached per VECTOR before the pair join (cosine_prenorm:
+    bit-identical doubles, 1 higher-order aggregate per pair instead of 3).
+    """
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv"),
-        norm(query_vec_col).alias("__nq"),
+        F.col("query_id").alias("query_id"), F.col("embedding").alias("qv"),
+        norm("embedding").alias("__nq"),
     )
     v = vectors.select(
-        F.col(id_col), F.col(vec_col).alias("vv"), norm(vec_col).alias("__nv")
+        F.col("vec_id"), F.col("embedding").alias("vv"), norm("embedding").alias("__nv")
     )
     # Rank by the RAW cosine (rounding only in the output projection) so
     # top-k membership matches an oracle that orders by the unrounded value;
     # ranking the rounded score can flip neighbors within 1e-6 across engines.
-    scored = v.crossJoin(F.broadcast(q)).select(
-        "query_id", id_col,
+    scored = pair(v, q).select(
+        "query_id", "vec_id",
         cosine_prenorm("qv", "vv", "__nq", "__nv").alias("__cos_raw"),
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos_raw").desc(), F.col(id_col).asc()
+        F.col("__cos_raw").desc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.round("__cos_raw", 6).alias("cos"), "rank")
+        .select("query_id", "vec_id", F.round("__cos_raw", 6).alias("cos"), "rank")
+    )
+
+
+def _rerank(
+    cand: DataFrame, vectors: DataFrame, queries: DataFrame, k: int
+) -> DataFrame:
+    """Exact cosine top-k within candidate ``(query_id, vec_id)`` pairs."""
+    return _exact_topk(
+        vectors, queries, k,
+        lambda v, q: cand.join(v, "vec_id").join(F.broadcast(q), "query_id"),
     )
 
 
@@ -71,15 +81,16 @@ def rhp_lsh_buckets(
     df: DataFrame,
     dim: int,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
-    seed: int = 42,
     table: int = 0,
 ) -> DataFrame:
-    """→ ``(id, bucket)`` — sign pattern of ``n_planes`` random projections."""
+    """→ ``(id, bucket)`` — sign pattern of ``n_planes`` random projections
+    of ``embedding``."""
     bucket = None
-    for i, plane in enumerate(_plane_literals(dim, n_planes, seed * 1000 + table)):
-        bit = F.when(dot(F.col(vec_col), plane) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+    for i, plane in enumerate(_plane_literals(dim, n_planes, 42 * 1000 + table)):
+        bit = F.when(dot(F.col("embedding"), plane) >= 0, F.lit(1 << i)).otherwise(
+            F.lit(0)
+        )
         bucket = bit if bucket is None else bucket + bit
     return df.select(
         F.col(id_col),
@@ -92,48 +103,22 @@ def lsh_topk(
     queries: DataFrame,
     dim: int,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: union of ``n_tables`` independent LSH tables;
     exact cosine re-rank within candidate buckets only."""
     cand = None
     for t in range(n_tables):
-        vb = rhp_lsh_buckets(vectors, dim, id_col, vec_col, n_planes, seed, t)
+        vb = rhp_lsh_buckets(vectors, dim, "vec_id", n_planes, t)
+        # the same-name rename only adds a Project; it keeps the analyzed
+        # plan byte-identical to the one the plan-digest invariant records
         qb = rhp_lsh_buckets(
-            queries, dim, query_id_col, query_vec_col, n_planes, seed, t
-        ).withColumnRenamed(query_id_col, "query_id")
-        c = vb.join(qb, "bucket").select("query_id", id_col)
+            queries, dim, "query_id", n_planes, t
+        ).withColumnRenamed("query_id", "query_id")
+        c = vb.join(qb, "bucket").select("query_id", "vec_id")
         cand = c if cand is None else cand.unionByName(c)
-    cand = cand.dropDuplicates(["query_id", id_col])
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv"),
-        norm(query_vec_col).alias("__nq"),
-    )
-    v = vectors.select(
-        F.col(id_col), F.col(vec_col).alias("vv"), norm(vec_col).alias("__nv")
-    )
-    scored = (
-        cand.join(v, id_col)
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id", id_col,
-            cosine_prenorm("qv", "vv", "__nq", "__nv").alias("__cos_raw"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos_raw").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.round("__cos_raw", 6).alias("cos"), "rank")
-    )
+    return _rerank(cand.dropDuplicates(["query_id", "vec_id"]), vectors, queries, k)
 
 
 def seeded_centroids(dim: int, n_centroids: int, seed: int = 42) -> list[list[float]]:
@@ -153,10 +138,7 @@ def train_ivf_centroids(
     df: DataFrame,
     dim: int,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_limit: int = 1024,
-    n_iter: int = 5,
     seed: int = 42,
 ) -> list[list[float]]:
     """Deterministic Lloyd k-means on a bounded driver-side training slice.
@@ -164,9 +146,10 @@ def train_ivf_centroids(
     IVF coarse-quantizer training is an offline, sampled step even at 10⁹
     vectors (the index ASSIGNMENT below is the distributed part); the slice
     is ``ORDER BY id LIMIT train_limit`` so the result is reproducible, and
-    the numpy loop is exact Lloyd with empty-cluster carry-over.
+    the numpy loop is exact Lloyd (5 iterations) with empty-cluster
+    carry-over.
     """
-    rows = df.orderBy(id_col).limit(train_limit).select(vec_col).collect()
+    rows = df.orderBy("vec_id").limit(train_limit).select("embedding").collect()
     X = np.array([list(r[0]) for r in rows], dtype=np.float64)
     if len(X) == 0:
         raise ValueError("train_ivf_centroids: training slice is empty")
@@ -174,7 +157,7 @@ def train_ivf_centroids(
     n_centroids = min(n_centroids, len(X))
     rng = np.random.RandomState(seed)
     C = X[rng.choice(len(X), size=n_centroids, replace=False)].copy()
-    for _ in range(n_iter):
+    for _ in range(5):
         d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
         a = d2.argmin(1)
         for j in range(n_centroids):
@@ -183,30 +166,26 @@ def train_ivf_centroids(
     return [[float(x) for x in row] for row in C]
 
 
-def _cell_structs(vec_col: str, centroids: list[list[float]]) -> list:
-    """(squared-L2-distance, centroid-index) structs, all JVM-side column
-    math: ``|v|² - 2·v·c + |c|²`` with |c|² folded to a literal."""
-    vnorm = dot(F.col(vec_col), F.col(vec_col))
+def _cell_structs(centroids: list[list[float]]) -> list:
+    """(squared-L2-distance, centroid-index) structs of ``embedding``, all
+    JVM-side column math: ``|v|² - 2·v·c + |c|²`` with |c|² folded to a
+    literal."""
+    vnorm = dot(F.col("embedding"), F.col("embedding"))
     out = []
     for j, c in enumerate(centroids):
         clit = F.array(*[F.lit(x) for x in c])
         cn = float(sum(x * x for x in c))
-        d = vnorm - 2 * dot(F.col(vec_col), clit) + F.lit(cn)
+        d = vnorm - 2 * dot(F.col("embedding"), clit) + F.lit(cn)
         out.append(F.struct(d.alias("d"), F.lit(j).alias("j")))
     return out
 
 
-def ivf_assign(
-    df: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """→ ``(id, cell)`` — each vector's nearest centroid (struct array_min:
+def ivf_assign(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """→ ``(vec_id, cell)`` — each vector's nearest centroid (struct array_min:
     ties break to the lowest centroid index, deterministically)."""
-    cells = _cell_structs(vec_col, centroids)
+    cells = _cell_structs(centroids)
     return df.select(
-        F.col(id_col), F.array_min(F.array(*cells))["j"].alias("cell")
+        F.col("vec_id"), F.array_min(F.array(*cells))["j"].alias("cell")
     )
 
 
@@ -216,10 +195,6 @@ def ivf_topk(
     centroids: list[list[float]],
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
     max_cell: int | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: probe each query's ``nprobe`` nearest cells,
@@ -237,57 +212,27 @@ def ivf_topk(
     trade recall for a bounded join, the same stopword trade as the LSH
     dedup guard).
     """
-    va = ivf_assign(vectors, centroids, id_col, vec_col)
+    va = ivf_assign(vectors, centroids)
     if max_cell is not None:
-        wcell = Window.partitionBy("cell").orderBy(id_col)
+        wcell = Window.partitionBy("cell").orderBy("vec_id")
         va = (
             va.withColumn("__rn", F.row_number().over(wcell))
             .filter(F.col("__rn") <= max_cell)
             .drop("__rn")
         )
-    qcells = _cell_structs(query_vec_col, centroids)
+    qcells = _cell_structs(centroids)
     qa = queries.select(
-        F.col(query_id_col).alias("query_id"),
+        F.col("query_id").alias("query_id"),
         F.explode(
             F.slice(F.array_sort(F.array(*qcells)), 1, nprobe)
         ).alias("probe"),
     ).select("query_id", F.col("probe.j").alias("cell"))
     # each vector lives in exactly one cell → the probe join cannot duplicate
-    cand = va.join(qa, "cell").select("query_id", id_col)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv"),
-        norm(query_vec_col).alias("__nq"),
-    )
-    v = vectors.select(
-        F.col(id_col), F.col(vec_col).alias("vv"), norm(vec_col).alias("__nv")
-    )
-    scored = (
-        cand.join(v, id_col)
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id", id_col,
-            cosine_prenorm("qv", "vv", "__nq", "__nv").alias("__cos_raw"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos_raw").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.round("__cos_raw", 6).alias("cos"), "rank")
-    )
+    cand = va.join(qa, "cell").select("query_id", "vec_id")
+    return _rerank(cand, vectors, queries, k)
 
 
-def kmeans_lattice_assign(
-    df: DataFrame,
-    k: int = 4,
-    n_iter: int = 2,
-    grid: int = 1000,
-    shift: float = 1.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_lattice_assign(df: DataFrame, k: int = 4, n_iter: int = 2) -> DataFrame:
     """Distributed integer-lattice Lloyd k-means → ``(id, cell)``.
 
     The fully distributed complement to :func:`train_ivf_centroids` (which
@@ -295,9 +240,9 @@ def kmeans_lattice_assign(
     it survives corpora where no representative slice fits one machine.
     Made bit-portable the same way pagerank_fixed_point is — all arithmetic
     on int64: vectors land on a positive integer grid
-    (``round((x + shift) * grid)``, shift-invariant for L2), centroids are
+    (``round((x + 1) * 1000)``, shift-invariant for L2), centroids are
     FLOORED back to the grid each M-step (quantized Lloyd; grid error
-    ~1/grid per dim), distances are exact integer sums, and argmin ties
+    ~1/1000 per dim), distances are exact integer sums, and argmin ties
     break to the lowest cell index. Init = the ``k`` vectors with the
     smallest (portable-hash, id) key, cells numbered in that order; an
     emptied cell carries its previous centroid over.
@@ -314,16 +259,16 @@ def kmeans_lattice_assign(
     from wiki_entity_linker_spark.functions.hashing import h64
 
     q = df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.transform(
-            vec_col,
-            lambda x: F.round((x + F.lit(float(shift))) * grid, 0).cast("long"),
+            "embedding",
+            lambda x: F.round((x + F.lit(1.0)) * 1000, 0).cast("long"),
         ).alias("v"),
     ).localCheckpoint(eager=True)
 
-    key = h64(F.col(id_col).cast("string"))
-    cand = q.orderBy(key, id_col).limit(k)
-    w0 = Window.orderBy(h64(F.col(id_col).cast("string")), id_col)
+    key = h64(F.col("vec_id").cast("string"))
+    cand = q.orderBy(key, "vec_id").limit(k)
+    w0 = Window.orderBy(h64(F.col("vec_id").cast("string")), "vec_id")
     cents = cand.select(
         (F.row_number().over(w0) - 1).cast("long").alias("cell"),
         F.col("v").alias("c"),
@@ -338,13 +283,13 @@ def kmeans_lattice_assign(
         )
         assign = (
             q.crossJoin(F.broadcast(cents))
-            .select(id_col, "v", "cell", d.alias("d"))
-            .groupBy(id_col)
+            .select("vec_id", "v", "cell", d.alias("d"))
+            .groupBy("vec_id")
             .agg(
                 F.min(F.struct("d", "cell")).alias("m"),
                 F.first("v").alias("v"),
             )
-            .select(id_col, F.col("m.cell").alias("cell"), "v")
+            .select("vec_id", F.col("m.cell").alias("cell"), "v")
         )
         if it == n_iter:
             break
@@ -367,4 +312,4 @@ def kmeans_lattice_assign(
         )
         carried = cents.join(upd.select("cell"), "cell", "left_anti")
         cents = upd.unionByName(carried).localCheckpoint(eager=True)
-    return assign.select(id_col, "cell")
+    return assign.select("vec_id", "cell")

@@ -42,7 +42,6 @@ def asof_join(
     right_tie: str,
     payload: dict[str, str],
     tolerance_seconds: float | None = None,
-    matched_ts_col: str = "matched_ts",
 ) -> DataFrame:
     """Left rows + nearest-preceding right payload.
 
@@ -50,7 +49,7 @@ def asof_join(
     output column name → right column carried from the matched row.
     ``right_tie``: right-side column ordering equal-timestamp rights (the
     largest value wins). Returns every ``left`` column plus ``payload``
-    keys and ``matched_ts_col`` (all null when no right row precedes).
+    keys and ``matched_ts`` (all null when no right row precedes).
     """
     out_cols = list(payload.keys())
     left_extra = [c for c in left.columns if c not in on and c != left_ts]
@@ -111,7 +110,7 @@ def asof_join(
         *on,
         F.col("__ts").alias(left_ts),
         *[F.col(f"__l.{c}").alias(c) for c in left_extra],
-        F.when(in_window, F.col("__m.__rts")).alias(matched_ts_col),
+        F.when(in_window, F.col("__m.__rts")).alias("matched_ts"),
         *[
             F.when(in_window, F.col(f"__m.__p_{dst}")).alias(dst)
             for dst in out_cols

@@ -49,30 +49,24 @@ def minhash_signatures(
     sh = df.repartition(num_partitions, id_col).select(
         F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
     )
-    return minhash_from_shingles(sh, id_col, "sh", n_hashes)
+    return minhash_from_shingles(sh, id_col, n_hashes)
 
 
 def minhash_from_shingles(
     df: DataFrame,
     id_col: str = "file_id",
-    shingle_col: str = "sh",
     n_hashes: int = DEFAULT_N_HASHES,
 ) -> DataFrame:
     """MinHash signatures from a precomputed shingle-array column (lets the
     pipeline reuse its checkpointed ``features`` stage instead of
     re-shingling)."""
-    ex = df.select(F.col(id_col), F.explode(shingle_col).alias("shingle")).select(
+    ex = df.select(F.col(id_col), F.explode("sh").alias("shingle")).select(
         id_col, h64("shingle").alias("hs")
     )
     return _minhash_from_hash_rows(ex, id_col, n_hashes)
 
 
-def minhash_from_hashes(
-    df: DataFrame,
-    id_col: str = "file_id",
-    hash_array_col: str = "hsh",
-    n_hashes: int = DEFAULT_N_HASHES,
-) -> DataFrame:
+def minhash_from_hashes(df: DataFrame, n_hashes: int = DEFAULT_N_HASHES) -> DataFrame:
     """MinHash signatures from a precomputed int64 shingle-HASH array.
 
     The ER pipeline hashes each doc's shingles exactly once (xxhash64, no
@@ -81,13 +75,13 @@ def minhash_from_hashes(
     from those hashes directly. (Oracle-checked queries keep the portable
     md5-based ``h64`` path in :func:`minhash_from_shingles`.)
     """
-    ex = df.select(F.col(id_col), F.explode(F.col(hash_array_col)).alias("h0")).select(
-        id_col,
+    ex = df.select(F.col("file_id"), F.explode(F.col("hsh")).alias("h0")).select(
+        "file_id",
         # keep the family arithmetic in non-negative 60-bit space like h64;
         # mask rather than abs (abs(Long.MIN_VALUE) stays negative on the JVM)
         F.col("h0").bitwiseAND(F.lit(0x0FFFFFFFFFFFFFFF)).alias("hs"),
     )
-    return _minhash_from_hash_rows(ex, id_col, n_hashes)
+    return _minhash_from_hash_rows(ex, "file_id", n_hashes)
 
 
 def _minhash_from_hash_rows(ex: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
@@ -122,29 +116,28 @@ def lsh_band_blocks(
     return sig_df.select(F.col(id_col), F.explode(band_keys).alias("block_key"))
 
 
-def path_stem_key(path_col: str = "path") -> "F.Column":
-    """Normalized filename stem (no extension, no -/_, lowercased)."""
+def path_stem_key() -> "F.Column":
+    """Normalized filename stem of ``path`` (no extension, no -/_,
+    lowercased)."""
     stem = F.regexp_replace(
-        F.element_at(F.split(F.col(path_col), "/"), -1), "\\.[a-z]+$", ""
+        F.element_at(F.split(F.col("path"), "/"), -1), "\\.[a-z]+$", ""
     )
     return F.lower(F.regexp_replace(stem, "[-_]", ""))
 
 
-def def_name_keys(content_col: str = "content") -> "F.Column":
-    """Distinct top-level defined names (the link-anchor analogue)."""
+def def_name_keys() -> "F.Column":
+    """Distinct top-level defined names in ``content`` (the link-anchor
+    analogue)."""
     return F.array_distinct(
         F.expr(
-            f"regexp_extract_all({content_col}, "
+            "regexp_extract_all(content, "
             r"'(?m)^(?:def|func|function|class|int|void|public) "
             r"([A-Za-z_][A-Za-z0-9_]*)\\(', 1)"
         )
     )
 
 
-def alias_blocks(
-    df: DataFrame, id_col: str = "file_id", content_col: str = "content",
-    path_col: str = "path",
-) -> DataFrame:
+def alias_blocks(df: DataFrame) -> DataFrame:
     """(id, block_key) from alias keys — the dictionary-blocking recast.
 
     Two alias sources, mirroring the reference's union of name/alias/synonym
@@ -154,37 +147,27 @@ def alias_blocks(
       extracted with ``regexp_extract_all`` — the link-anchor analogue.
     """
     feats = df.select(
-        F.col(id_col),
-        path_stem_key(path_col).alias("stem"),
-        def_name_keys(content_col).alias("defs"),
+        F.col("file_id"),
+        path_stem_key().alias("stem"),
+        def_name_keys().alias("defs"),
     )
-    return alias_blocks_from_features(feats, id_col)
+    return alias_blocks_from_features(feats)
 
 
-def alias_blocks_from_features(
-    feats: DataFrame,
-    id_col: str = "file_id",
-    stem_col: str = "stem",
-    defs_col: str = "defs",
-) -> DataFrame:
+def alias_blocks_from_features(feats: DataFrame) -> DataFrame:
     """alias_blocks from precomputed (stem, defs) feature columns — lets the
     ER pipeline derive ALL blocking keys from the one compact per-doc
     feature table instead of re-reading raw content."""
     stems = feats.select(
-        F.col(id_col), F.concat(F.lit("stem:"), F.col(stem_col)).alias("block_key")
+        F.col("file_id"), F.concat(F.lit("stem:"), F.col("stem")).alias("block_key")
     )
-    defs = feats.select(F.col(id_col), F.explode(defs_col).alias("name")).select(
-        id_col, F.concat(F.lit("def:"), F.lower(F.col("name"))).alias("block_key")
+    defs = feats.select(F.col("file_id"), F.explode("defs").alias("name")).select(
+        "file_id", F.concat(F.lit("def:"), F.lower(F.col("name"))).alias("block_key")
     )
     return stems.unionByName(defs)
 
 
-def alias_dict_blocks(
-    df: DataFrame,
-    alias_dict: DataFrame,
-    id_col: str = "file_id",
-    content_col: str = "content",
-) -> DataFrame:
+def alias_dict_blocks(df: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """(id, block_key) from an external alias dictionary — the direct recast
     of J2 candidate generation: file tokens broadcast-joined against the
     ``(alias, entity_id, freq)`` table; every file sharing an alias's entity
@@ -193,28 +176,26 @@ def alias_dict_blocks(
     ``get_candidates`` returning a set (entity_database.py:85-100).
     """
     toks = df.select(
-        F.col(id_col), F.explode(F.array_distinct(tokenize(content_col))).alias("tok")
+        F.col("file_id"), F.explode(F.array_distinct(tokenize("content"))).alias("tok")
     )
     dic = alias_dict.select(
         F.lower(F.col("alias")).alias("tok"),
         F.concat(F.lit("dict:"), F.col("entity_id")).alias("block_key"),
     ).dropDuplicates(["tok", "block_key"])
-    return toks.join(F.broadcast(dic), "tok").select(id_col, "block_key")
+    return toks.join(F.broadcast(dic), "tok").select("file_id", "block_key")
 
 
-def pairs_from_blocks(
-    block_df: DataFrame, id_col: str = "file_id", block_col: str = "block_key"
-) -> DataFrame:
+def pairs_from_blocks(block_df: DataFrame, id_col: str = "file_id") -> DataFrame:
     """Self-join within block key → canonical candidate pairs
     (``id_a < id_b``, deduped across blocks).
 
     Callers must cap/salt oversized blocks first (operators/skew.py) — a
     block of n members contributes n·(n-1)/2 pairs.
     """
-    a = block_df.select(F.col(block_col), F.col(id_col).alias("id_a"))
-    b = block_df.select(F.col(block_col), F.col(id_col).alias("id_b"))
+    a = block_df.select(F.col("block_key"), F.col(id_col).alias("id_a"))
+    b = block_df.select(F.col("block_key"), F.col(id_col).alias("id_b"))
     return (
-        a.join(b, block_col)
+        a.join(b, "block_key")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
@@ -244,7 +225,6 @@ def sorted_neighborhood_pairs(
     key_col: str,
     id_col: str,
     window: int = 4,
-    bucket_chars: int = 1,
 ) -> DataFrame:
     """Sorted-neighborhood blocking (Hernández & Stolfo 1995): sort the
     corpus by ``key_col`` (ties broken by ``id_col`` — a strict total
@@ -257,7 +237,7 @@ def sorted_neighborhood_pairs(
     Scale shape: the global sort position is computed WITHOUT a
     single-partition corpus window, by the packing-operator discipline
     (operators/packing.global_prefix_sum, recast for string keys): rows
-    bucket by the first ``bucket_chars`` characters of the key — ranges
+    bucket by the first character of the key — ranges
     CONTIGUOUS in lexicographic order, so bucket order = key order —
     bucket counts aggregate map-side into a bucket-cardinality summary
     frame whose offset window is the only single-partition step; each
@@ -271,7 +251,7 @@ def sorted_neighborhood_pairs(
         raise ValueError(f"window must be >= 2, got {window}")
     keyed = df.select(
         F.col(id_col), F.col(key_col).alias("__k")
-    ).withColumn("__bkt", F.substring("__k", 1, bucket_chars))
+    ).withColumn("__bkt", F.substring("__k", 1, 1))
     counts = keyed.groupBy("__bkt").agg(F.count("*").cast("long").alias("__n"))
     # offset window runs over the bucket-cardinality frame only (tiny)
     off = counts.withColumn(
@@ -308,7 +288,6 @@ def meta_block_prune(
     blocks: DataFrame,
     id_col: str = "id",
     block_col: str = "block_key",
-    scale: int = 10**6,
 ) -> DataFrame:
     """Meta-blocking with weight-edge pruning (Papadakis et al.,
     "Meta-Blocking: Taking Entity Resolution to the Next Level", TKDE
@@ -324,7 +303,7 @@ def meta_block_prune(
 
     * ``cbs``  — common-block scheme: number of blocks the pair co-occurs
       in;
-    * ``js_w`` — Jaccard scheme, ``floor(scale·cbs / (nb_a+nb_b−cbs))``
+    * ``js_w`` — Jaccard scheme, ``floor(10⁶·cbs / (nb_a+nb_b−cbs))``
       over the pair's block-set sizes, computed in EXACT integer
       arithmetic (bit-portable: the DuckDB oracle reproduces it with
       integer division — no float mean-threshold boundary flips);
@@ -364,7 +343,7 @@ def meta_block_prune(
         )
         .withColumn(
             "js_w",
-            F.expr(f"({scale} * cbs) div (nb_a + nb_b - cbs)").cast("long"),
+            F.expr("(1000000 * cbs) div (nb_a + nb_b - cbs)").cast("long"),
         )
     )
     w = w.localCheckpoint(eager=True)

@@ -27,6 +27,11 @@ from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.functions.hashing import mh_family, mh_mix
 
+# filter size in bits (4096 int64 words, a 32 KB broadcast) and the number
+# of bit positions set per key
+_M_BITS = 1 << 18
+_K = 3
+
 
 def bloom_base_hash(key: Column | str) -> Column:
     """The filter's base digest: xxhash64 masked to a non-negative 60-bit
@@ -37,32 +42,26 @@ def bloom_base_hash(key: Column | str) -> Column:
     return F.xxhash64(key).bitwiseAND(F.lit((1 << 60) - 1))
 
 
-def _positions(base: Column, m_bits: int, k: int) -> list[Column]:
+def _positions(base: Column) -> list[Column]:
     """k bit positions from one 60-bit base hash via arithmetic mixes."""
-    return [mh_mix(base, a, b) % m_bits for a, b in mh_family(k)]
+    return [mh_mix(base, a, b) % _M_BITS for a, b in mh_family(_K)]
 
 
-def bloom_bitmap(
-    keys: DataFrame, key_col: str, m_bits: int = 1 << 18, k: int = 3
-) -> DataFrame:
+def bloom_bitmap(keys: DataFrame, key_col: str) -> DataFrame:
     """Build the filter: → ONE row ``(bitmap array<long>)`` of ``m_bits/64``
     words with bit ``h_i(key) mod m_bits`` set for every key and every
-    ``i < k``.
+    ``i < k`` (``m_bits`` = ``_M_BITS`` = 2^18, ``k`` = ``_K`` = 3).
 
     Scale shape: the only key-sized work is one digest per key plus a
     map-side-combinable ``groupBy(word)`` over k·|keys| (word, bit) rows;
     the dense-array assembly (collect + transform over ``sequence``) runs
-    on the word-cardinality summary frame (≤ m_bits/64 rows — 4096 words
-    for the default 2^18 bits, a 32 KB broadcast).
+    on the word-cardinality summary frame (≤ m_bits/64 = 4096 rows, a
+    32 KB broadcast).
     """
-    if m_bits % 64 != 0 or m_bits <= 0:
-        raise ValueError(f"m_bits must be a positive multiple of 64, got {m_bits}")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    n_words = m_bits // 64
+    n_words = _M_BITS // 64
     hashed = keys.select(bloom_base_hash(key_col).alias("__h"))
     pos = hashed.select(
-        F.explode(F.array(*_positions(F.col("__h"), m_bits, k))).alias("pos")
+        F.explode(F.array(*_positions(F.col("__h")))).alias("pos")
     )
     words = pos.select(
         F.expr("pos div 64").alias("word"),
@@ -87,9 +86,7 @@ def bloom_bitmap(
     )
 
 
-def bloom_contains_hashed(
-    base: Column | str, bitmap: Column | str, m_bits: int = 1 << 18, k: int = 3
-) -> Column:
+def bloom_contains_hashed(base: Column | str, bitmap: Column | str) -> Column:
     """Row-local membership test for a PRE-HASHED key (``h64`` of it) —
     the form to use inside higher-order-function lambdas: project
     ``transform(grams, g -> h64(g))`` into its own column first so the
@@ -99,7 +96,7 @@ def bloom_contains_hashed(
     base = F.col(base) if isinstance(base, str) else base
     bm = F.col(bitmap) if isinstance(bitmap, str) else bitmap
     cond = F.lit(True)
-    for pos in _positions(base, m_bits, k):
+    for pos in _positions(base):
         bit = (pos % 64).cast("int")
         # pos < m_bits <= 2^53, so the double division is exact
         word = ((pos - (pos % 64)) / 64).cast("int")
@@ -112,9 +109,7 @@ def bloom_contains_hashed(
     return cond
 
 
-def bloom_contains(
-    key: Column | str, bitmap: Column | str, m_bits: int = 1 << 18, k: int = 3
-) -> Column:
+def bloom_contains(key: Column | str, bitmap: Column | str) -> Column:
     """Membership test for a raw string key (digests it once). Join the
     1-row bitmap in with ``crossJoin(F.broadcast(...))`` first. True for
     every inserted key (no false negatives); false positives at the usual
@@ -122,4 +117,4 @@ def bloom_contains(
     the real key set, touching only this pre-filtered sliver.
     """
     key = F.col(key) if isinstance(key, str) else key
-    return bloom_contains_hashed(bloom_base_hash(key), bitmap, m_bits=m_bits, k=k)
+    return bloom_contains_hashed(bloom_base_hash(key), bitmap)

@@ -124,12 +124,7 @@ def _local_union_find(spark, e: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, out_schema)  # Arrow path back up
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """→ ``(id, component)`` where component = min node id of the component.
 
     Nodes appearing only as isolated vertices must be handled by the caller
@@ -160,7 +155,7 @@ def connected_components(
 
     spark = edges.sparkSession
     converged = False
-    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
+    e = _canonical_edges(edges, "id_a", "id_b").localCheckpoint(eager=True)
     prev = _stats(e)
     if prev[0] <= _CC_LOCAL_SOLVE_EDGES:
         return _local_union_find(spark, e)
@@ -192,11 +187,10 @@ def connected_components(
 
 
 def components_with_singletons(
-    nodes: DataFrame, edges: DataFrame, id_col: str = "file_id",
-    src: str = "id_a", dst: str = "id_b", max_iter: int = 20,
+    nodes: DataFrame, edges: DataFrame, id_col: str = "file_id", max_iter: int = 20,
 ) -> DataFrame:
     """All nodes labeled: edge components + singletons as their own id."""
-    comp = connected_components(edges, src, dst, max_iter)
+    comp = connected_components(edges, max_iter=max_iter)
     return (
         nodes.select(F.col(id_col).alias("id"))
         .dropDuplicates(["id"])
@@ -251,12 +245,7 @@ def _local_closure(
     return spark.createDataFrame(out, out_schema)
 
 
-def transitive_closure(
-    edges: DataFrame,
-    src: str = "child",
-    dst: str = "parent",
-    max_depth: int = 20,
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, max_depth: int = 20) -> DataFrame:
     """All (src, ancestor) pairs reachable via directed edges — the Spark
     recast of create_all_types_mapping.py:20-49 (depth-capped, cycle-safe).
 
@@ -277,7 +266,7 @@ def transitive_closure(
     import math
 
     base = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("child").alias("a"), F.col("parent").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
         .localCheckpoint(eager=True)
@@ -292,7 +281,7 @@ def transitive_closure(
         out = _local_closure(
             edges.sparkSession, base, 2 ** (rounds - 1), rounds, max_depth
         )
-        return out.select(F.col("a").alias(src), F.col("b").alias(dst))
+        return out.select(F.col("a").alias("child"), F.col("b").alias("parent"))
     converged = False
     for _ in range(rounds):
         doubled = (
@@ -320,15 +309,10 @@ def transitive_closure(
             f"than max_depth. Raise max_depth (rounds grow only "
             f"logarithmically) or break cycles upstream."
         )
-    return closure.select(F.col("a").alias(src), F.col("b").alias(dst))
+    return closure.select(F.col("a").alias("child"), F.col("b").alias("parent"))
 
 
-def relabel_through_map(
-    df: DataFrame,
-    relabel_map: DataFrame,
-    id_col: str = "id",
-    comp_col: str = "component",
-) -> DataFrame:
+def relabel_through_map(df: DataFrame, relabel_map: DataFrame) -> DataFrame:
     """Apply a ``(__old_c, __new_c)`` relabel map to an ``(id, component)``
     table: rows whose component appears in the map take the new label,
     everything else passes through verbatim. The single relabel shape shared
@@ -336,10 +320,10 @@ def relabel_through_map(
     pass ``relabel_map`` through :func:`broadcast_if_small` (or rely on
     Catalyst's size stats for parquet-backed maps) per call site."""
     return df.join(
-        relabel_map, df[comp_col] == relabel_map["__old_c"], "left"
+        relabel_map, df["component"] == relabel_map["__old_c"], "left"
     ).select(
-        df[id_col].alias("id"),
-        F.coalesce(relabel_map["__new_c"], df[comp_col]).alias("component"),
+        df["id"].alias("id"),
+        F.coalesce(relabel_map["__new_c"], df["component"]).alias("component"),
     )
 
 
@@ -358,10 +342,6 @@ def merge_components(
     old_comps: DataFrame,
     edges: DataFrame,
     new_nodes: DataFrame,
-    id_col: str = "id",
-    comp_col: str = "component",
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iter: int = 20,
     return_map: bool = False,
 ) -> DataFrame:
@@ -394,12 +374,12 @@ def merge_components(
       cluster IS its min member, so min over the mini graph's nodes equals
       min over the underlying members).
     """
-    e = edges.select(F.col(src).alias("id_a"), F.col(dst).alias("id_b"))
+    e = edges.select("id_a", "id_b")
     for side in ("id_a", "id_b"):
         e = (
             e.join(
                 old_comps.select(
-                    F.col(id_col).alias(side), F.col(comp_col).alias("__c")
+                    F.col("id").alias(side), F.col("component").alias("__c")
                 ),
                 side,
                 "left",
@@ -423,7 +403,7 @@ def merge_components(
     # every contracted endpoint, so touched old labels appear in the output
     # of the mini solve and feed the relabel map below
     nodes = (
-        new_nodes.select(F.col(id_col).alias("id"))
+        new_nodes.select(F.col("id").alias("id"))
         .unionByName(e.select(F.col("id_a").alias("id")))
         .unionByName(e.select(F.col("id_b").alias("id")))
     )
@@ -436,7 +416,7 @@ def merge_components(
     # touched-cluster relabel map: rows of the mini solve whose node id IS an
     # old component label; batch-sized by construction → broadcast when it
     # actually fits (broadcast_if_small)
-    old_labels = old_comps.select(F.col(comp_col).alias("id")).dropDuplicates(["id"])
+    old_labels = old_comps.select(F.col("component").alias("id")).dropDuplicates(["id"])
     merge_map = (
         mini.join(old_labels, "id", "left_semi")
         .select(F.col("id").alias("__old_c"), F.col("component").alias("__new_c"))
@@ -446,10 +426,10 @@ def merge_components(
         .localCheckpoint(eager=True)
     )
     relabeled_old = relabel_through_map(
-        old_comps, broadcast_if_small(merge_map), id_col=id_col, comp_col=comp_col
+        old_comps, broadcast_if_small(merge_map)
     )
     new_assign = mini.join(
-        new_nodes.select(F.col(id_col).alias("id")), "id", "left_semi"
+        new_nodes.select(F.col("id").alias("id")), "id", "left_semi"
     ).select("id", "component")
     out = relabeled_old.unionByName(new_assign)
     if return_map:

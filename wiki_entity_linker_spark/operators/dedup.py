@@ -28,19 +28,20 @@ from wiki_entity_linker_spark.operators.blocking import (
 )
 from wiki_entity_linker_spark.operators.skew import spread_small_input
 
+# winnowing gram length (tokens) and window length (gram hashes)
+_WINNOW_K = 4
+_WINNOW_W = 4
 
-def exact_dedup(
-    df: DataFrame, id_col: str, content_col: str = "content", normalized: bool = True
-) -> DataFrame:
+
+def exact_dedup(df: DataFrame, id_col: str, content_col: str = "content") -> DataFrame:
     """→ ``(id, canonical_id, content_hash, group_size)``.
 
     Hash-groupBy exact dedup: canonical member = min id per content hash
     (deterministic; the reference's first-writer-wins dedup
     create_abstracts_mapping.py:28-38 made deterministic).
     """
-    c = normalize_content(content_col) if normalized else F.col(content_col)
     hashed = spread_small_input(df).select(
-        F.col(id_col), F.sha2(c, 256).alias("content_hash")
+        F.col(id_col), F.sha2(normalize_content(content_col), 256).alias("content_hash")
     )
     w = Window.partitionBy("content_hash")
     return hashed.select(
@@ -56,14 +57,12 @@ def minhash_neardup_pairs(
     id_col: str,
     content_col: str = "content",
     k_shingle: int = 5,
-    n_hashes: int = 16,
-    bands: int = 8,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """LSH candidate pairs verified with exact shingle Jaccard.
 
-    shingle → minhash → band → bucket self-join → exact-Jaccard filter:
-    → ``(id_a, id_b, jaccard)``.
+    shingle → minhash (16 hashes) → band (8 bands of 2 rows) → bucket
+    self-join → exact-Jaccard filter: → ``(id_a, id_b, jaccard)``.
     """
     df = spread_small_input(df)
     # ONE tokenize/shingle pass: the shingle arrays feed the signature
@@ -72,12 +71,10 @@ def minhash_neardup_pairs(
     toks = df.select(
         F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
     ).localCheckpoint(eager=True)
-    sigs = minhash_from_shingles(toks, id_col, "sh", n_hashes)
+    sigs = minhash_from_shingles(toks, id_col)
     # blocks feed both sides of the pair self-join: cut here too so the
     # minhash aggregation itself runs once
-    blocks = lsh_band_blocks(sigs, id_col, bands, n_hashes).localCheckpoint(
-        eager=True
-    )
+    blocks = lsh_band_blocks(sigs, id_col).localCheckpoint(eager=True)
     return _verify_shingle_pairs(
         pairs_from_blocks(blocks, id_col), toks, id_col, jaccard_threshold
     )
@@ -126,8 +123,6 @@ def minhash_neardup_clusters_incremental(
     id_col: str,
     content_col: str = "content",
     k_shingle: int = 5,
-    n_hashes: int = 16,
-    bands: int = 8,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """Cluster ``base_df``, then absorb ``new_df`` incrementally —
@@ -166,12 +161,10 @@ def minhash_neardup_clusters_incremental(
         F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
     ).localCheckpoint(eager=True)
     blocks_b = lsh_band_blocks(
-        minhash_from_shingles(toks_b, id_col, "sh", n_hashes),
-        id_col, bands, n_hashes,
+        minhash_from_shingles(toks_b, id_col), id_col
     ).localCheckpoint(eager=True)
     blocks_n = lsh_band_blocks(
-        minhash_from_shingles(toks_n, id_col, "sh", n_hashes),
-        id_col, bands, n_hashes,
+        minhash_from_shingles(toks_n, id_col), id_col
     ).localCheckpoint(eager=True)
 
     def _verify(pairs: DataFrame, toks: DataFrame) -> DataFrame:
@@ -245,16 +238,14 @@ def simhash(
 def simhash_neardup_pairs(
     df: DataFrame,
     id_col: str,
-    content_col: str = "content",
-    bits: int = 32,
     max_hamming: int = 3,
     bands: int = 4,
 ) -> DataFrame:
     """SimHash near-dup: band the fingerprint (pigeonhole: ≤``max_hamming``
     differing bits with ``bands > max_hamming`` bands guarantees one equal
     band), self-join per band, verify Hamming distance ≤ ``max_hamming``."""
-    sh = simhash(df, id_col, content_col, bits)
-    width = bits // bands
+    sh = simhash(df, id_col)
+    width = 32 // bands
     mask = (1 << width) - 1
     band_keys = F.array(
         *[
@@ -418,12 +409,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
+def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup: all pairs with cosine ≥ threshold.
 
     Brute-force O(n²) cross join — correct baseline; the scale path blocks
@@ -432,12 +418,12 @@ def embedding_neardup_pairs(
     """
     # norms per vector, not per pair (cosine_prenorm: bit-identical, 5×)
     a = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        norm(vec_col).alias("na"),
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
+        norm("embedding").alias("na"),
     )
     b = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        norm(vec_col).alias("nb"),
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
+        norm("embedding").alias("nb"),
     )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -452,12 +438,9 @@ def embedding_neardup_pairs(
 def embedding_neardup_lsh_pairs(
     df: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 42,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup, scale path: random-hyperplane LSH
@@ -492,7 +475,7 @@ def embedding_neardup_lsh_pairs(
     # unchanged (same buckets, same per-table cap semantics).
     bk = None
     for t in range(n_tables):
-        b_t = rhp_lsh_buckets(df, dim, id_col, vec_col, n_planes, seed, t)
+        b_t = rhp_lsh_buckets(df, dim, "vec_id", n_planes, t)
         bk = b_t if bk is None else bk.unionByName(b_t)
     if max_bucket is not None:
         w = Window.partitionBy("bucket")
@@ -504,8 +487,8 @@ def embedding_neardup_lsh_pairs(
     # cut: both self-join sides consume bk — without it the bucket window
     # (and the n_tables projection union) is evaluated twice
     bk = bk.localCheckpoint(eager=True)
-    a = bk.select(F.col(id_col).alias("id_a"), "bucket")
-    b = bk.select(F.col(id_col).alias("id_b"), "bucket")
+    a = bk.select(F.col("vec_id").alias("id_a"), "bucket")
+    b = bk.select(F.col("vec_id").alias("id_b"), "bucket")
     cand = (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -515,12 +498,12 @@ def embedding_neardup_lsh_pairs(
     # norms per vector, not per pair (cosine_prenorm: bit-identical; the
     # sf1 verify stage measured 7.2s -> 1.4s)
     va = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        norm(vec_col).alias("na"),
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
+        norm("embedding").alias("na"),
     ).hint("shuffle_hash")
     vb = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        norm(vec_col).alias("nb"),
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
+        norm("embedding").alias("nb"),
     ).hint("shuffle_hash")
     return (
         cand.join(va, "id_a")
@@ -689,7 +672,6 @@ def substring_coverage_from_positions(
     dup_pos: DataFrame,
     lengths: DataFrame,
     k: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Interval-union rollup of :func:`exact_substring_coverage`, factored
     out so the incremental curation path (plans/curation_incremental.py)
@@ -697,14 +679,14 @@ def substring_coverage_from_positions(
     gram starts. ``dup_pos`` = (id, pos) duplicated k-gram start positions;
     ``lengths`` = (id, n_tokens) one row per doc to report (zero-coverage
     docs included via left join)."""
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     contrib = F.least(
         F.lit(k),
         F.coalesce(F.lead("pos").over(w) - F.col("pos"), F.lit(k)),
     )
     cov = (
-        dup_pos.select(id_col, contrib.alias("contrib"))
-        .groupBy(id_col)
+        dup_pos.select("doc_id", contrib.alias("contrib"))
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("dup_starts"),
             F.sum("contrib").cast("long").alias("covered_tokens"),
@@ -712,9 +694,9 @@ def substring_coverage_from_positions(
     )
     covered = F.coalesce("covered_tokens", F.lit(0).cast("long"))
     return (
-        lengths.join(cov, id_col, "left")
+        lengths.join(cov, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.coalesce("dup_starts", F.lit(0).cast("long")).alias("dup_starts"),
             covered.alias("covered_tokens"),
@@ -727,16 +709,10 @@ def substring_coverage_from_positions(
     )
 
 
-def winnowing_fingerprints(
-    docs: DataFrame,
-    k: int = 4,
-    w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """→ distinct ``(id, fp)`` winnowing fingerprints per document
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
+    """→ distinct ``(doc_id, fp)`` winnowing fingerprints per document
     (Schleimer, Wilkerson & Aiken 2003 — the MOSS algorithm): hash every
-    k-gram, slide a window of w consecutive gram hashes, select each
+    k-gram (k = 4 tokens), slide a window of w = 4 consecutive gram hashes, select each
     window's MINIMUM hash breaking ties by the RIGHTMOST position (robust
     winnowing), and keep the distinct selected hashes. Guarantees any
     shared run of >= k + w - 1 tokens yields a shared fingerprint, at an
@@ -752,32 +728,26 @@ def winnowing_fingerprints(
     tokens carry no fingerprints; 0 < m < w degenerates to one whole-list
     window (at least one fingerprint per tokenizable doc).
     """
-    if k < 1 or w < 1:
-        raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-    base = docs.select(F.col(id_col), tokenize(text_col).alias("t")).filter(
-        F.size("t") >= k
+    base = docs.select(F.col("doc_id"), tokenize("text").alias("t")).filter(
+        F.size("t") >= _WINNOW_K
     )
     # project the hash array into its own column FIRST: interpreted HOF
     # lambdas re-evaluate captured row EXPRESSIONS per element (the
     # ngrams() pitfall) — a plain column reference is evaluated once
     hashed = base.select(
-        id_col, F.transform(ngrams("t", k), lambda g: h64(g)).alias("hs")
+        "doc_id", F.transform(ngrams("t", _WINNOW_K), lambda g: h64(g)).alias("hs")
     )
     m = F.size("hs")
-    nwin = F.greatest(m - F.lit(w - 1), F.lit(1))
-    window_min = lambda i: F.array_min(F.slice("hs", i, w))  # noqa: E731
+    nwin = F.greatest(m - F.lit(_WINNOW_W - 1), F.lit(1))
+    window_min = lambda i: F.array_min(F.slice("hs", i, _WINNOW_W))  # noqa: E731
     fps = F.array_distinct(F.transform(F.sequence(F.lit(1), nwin), window_min))
-    return hashed.select(id_col, F.explode(fps).alias("fp"))
+    return hashed.select("doc_id", F.explode(fps).alias("fp"))
 
 
 def winnowing_candidate_pairs(
     docs: DataFrame,
-    k: int = 4,
-    w: int = 4,
     min_shared: int = 2,
     max_postings: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """→ ``(id_a, id_b, n_shared)`` document pairs sharing at least
     ``min_shared`` winnowing fingerprints — MOSS-style verbatim-passage
@@ -792,10 +762,10 @@ def winnowing_candidate_pairs(
     (bounded blowup) into one map-side-combinable pair count. Nothing is
     ever corpus × corpus.
     """
-    fp = winnowing_fingerprints(docs, k=k, w=w, id_col=id_col, text_col=text_col)
+    fp = winnowing_fingerprints(docs)
     postings = (
         fp.groupBy("fp")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ds"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= max_postings))
     )
     return (
@@ -812,8 +782,6 @@ def allpairs_jaccard_join(
     docs: DataFrame,
     threshold: str = "0.3",
     k_shingle: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """EXACT all-pairs set-similarity join via prefix filtering (Bayardo,
     Ma & Srikant 2007; Chaudhuri et al. 2006) — every pair of documents
@@ -850,32 +818,32 @@ def allpairs_jaccard_join(
     num, den = frac.numerator, frac.denominator
     if not 0 < frac <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    toks = docs.select(F.col(id_col), tokenize(text_col).alias("tk")).filter(
+    toks = docs.select(F.col("doc_id"), tokenize("text").alias("tk")).filter(
         F.size("tk") > 0
     )
     sets = toks.select(
-        id_col,
+        "doc_id",
         shingles("tk", k_shingle).alias("s"),
         F.size(shingles("tk", k_shingle)).cast("long").alias("sz"),
     ).localCheckpoint(eager=True)
-    ex = sets.select(id_col, "sz", F.explode("s").alias("sh"))
+    ex = sets.select("doc_id", "sz", F.explode("s").alias("sh"))
     dfreq = ex.groupBy("sh").agg(F.count("*").cast("long").alias("df"))
     # prefix length p = sz - ceil(t*sz) + 1, ceil in exact integers
     p = F.col("sz") - F.expr(f"({num} * sz + {den} - 1) div {den}") + F.lit(1)
     rn = F.row_number().over(
-        Window.partitionBy(id_col).orderBy(F.col("df").asc(), F.col("sh").asc())
+        Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("sh").asc())
     )
     prefix = (
         ex.join(dfreq, "sh")
         .withColumn("rn", rn)
         .filter(F.col("rn") <= p)
-        .select(id_col, "sz", "sh")
+        .select("doc_id", "sz", "sh")
     )
     a = prefix.select(
-        F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"), "sh"
+        F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"), "sh"
     )
     b = prefix.select(
-        F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"), "sh"
+        F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"), "sh"
     )
     # Candidate reduction: instead of dedup-then-verify, COUNT each pair's
     # matched prefix tokens (same shuffle as the distinct) and apply the
@@ -917,10 +885,10 @@ def allpairs_jaccard_join(
     )
     # shuffle_hash: see minhash_neardup_pairs — avoids sorting the
     # pair×shingle-set intermediate in the verify joins
-    sa = sets.select(F.col(id_col).alias("id_a"), F.col("s").alias("s_a")).hint(
+    sa = sets.select(F.col("doc_id").alias("id_a"), F.col("s").alias("s_a")).hint(
         "shuffle_hash"
     )
-    sb = sets.select(F.col(id_col).alias("id_b"), F.col("s").alias("s_b")).hint(
+    sb = sets.select(F.col("doc_id").alias("id_b"), F.col("s").alias("s_b")).hint(
         "shuffle_hash"
     )
     inter = F.size(F.array_intersect("s_a", "s_b")).cast("long")

@@ -29,13 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# decimal places every published metric, probability and weight rounds to
+_DIGITS = 6
 
-def bcubed(
-    items: DataFrame,
-    sys_col: str,
-    gold_col: str,
-    precision_digits: int = 6,
-) -> DataFrame:
+
+def bcubed(items: DataFrame, sys_col: str, gold_col: str) -> DataFrame:
     """B-cubed precision / recall / F1 of a system clustering vs a gold one.
 
     ``items``: one row per item carrying ``sys_col`` (system cluster label)
@@ -71,18 +69,13 @@ def bcubed(
     r = F.col("__sr") / F.col("n_items")
     return agg.select(
         "n_items",
-        F.round(p, precision_digits).alias("bcubed_precision"),
-        F.round(r, precision_digits).alias("bcubed_recall"),
-        F.round(2 * p * r / (p + r), precision_digits).alias("bcubed_f1"),
+        F.round(p, _DIGITS).alias("bcubed_precision"),
+        F.round(r, _DIGITS).alias("bcubed_recall"),
+        F.round(2 * p * r / (p + r), _DIGITS).alias("bcubed_f1"),
     )
 
 
-def pairwise_clustering(
-    items: DataFrame,
-    sys_col: str,
-    gold_col: str,
-    precision_digits: int = 6,
-) -> DataFrame:
+def pairwise_clustering(items: DataFrame, sys_col: str, gold_col: str) -> DataFrame:
     """Pairwise precision / recall / F1 of a system clustering vs gold —
     the ER-literature companion to :func:`bcubed` (B-cubed weights items,
     pairwise weights co-reference DECISIONS, so the two disagree exactly
@@ -127,9 +120,9 @@ def pairwise_clustering(
         "tp",
         "sys_pairs",
         "gold_pairs",
-        F.round(p, precision_digits).alias("pair_precision"),
-        F.round(r, precision_digits).alias("pair_recall"),
-        F.round(2 * p * r / (p + r), precision_digits).alias("pair_f1"),
+        F.round(p, _DIGITS).alias("pair_precision"),
+        F.round(r, _DIGITS).alias("pair_recall"),
+        F.round(2 * p * r / (p + r), _DIGITS).alias("pair_f1"),
     )
 
 
@@ -137,7 +130,6 @@ def blocking_quality(
     candidate_pairs: DataFrame,
     truth_pairs: DataFrame,
     n_items: int,
-    precision_digits: int = 6,
 ) -> DataFrame:
     """Pairs completeness + reduction ratio of a blocking scheme.
 
@@ -179,12 +171,12 @@ def blocking_quality(
             "n_covered",
             F.round(
                 F.col("n_covered").cast("double") / F.col("n_truth"),
-                precision_digits,
+                _DIGITS,
             ).alias("pairs_completeness"),
             F.round(
                 F.lit(1.0)
                 - F.col("n_candidates").cast("double") / F.lit(float(total_pairs)),
-                precision_digits,
+                _DIGITS,
             ).alias("reduction_ratio"),
         )
     )
@@ -193,8 +185,6 @@ def blocking_quality(
 def fellegi_sunter_weights(
     labeled_pairs: DataFrame,
     feature_cols: list[str],
-    match_col: str = "is_match",
-    precision_digits: int = 6,
 ) -> DataFrame:
     """Fellegi–Sunter (1969) match/non-match weights per agreement feature
     — THE classical probabilistic record-linkage scoring model: for each
@@ -204,7 +194,7 @@ def fellegi_sunter_weights(
     from a labeled (or pseudo-labeled) pair table.
 
     ``labeled_pairs``: one row per candidate pair with boolean
-    ``feature_cols`` (agreement indicators) and boolean ``match_col``.
+    ``feature_cols`` (agreement indicators) and boolean ``is_match``.
     Returns one row per feature with counts, Laplace-smoothed m/u
     probabilities ((a+1)/(n+2) — never 0 or 1, so the log weights are
     always finite) and the agree/disagree log2 weights.
@@ -214,7 +204,7 @@ def fellegi_sunter_weights(
     many pairs were labeled; nothing pair-sized survives the aggregation.
     """
     stacked = labeled_pairs.select(
-        F.col(match_col).alias("__m"),
+        F.col("is_match").alias("__m"),
         F.explode(
             F.array(
                 *[
@@ -247,10 +237,10 @@ def fellegi_sunter_weights(
         "n_match",
         "n_unmatch_agree",
         "n_unmatch",
-        F.round(m, precision_digits).alias("m_prob"),
-        F.round(u, precision_digits).alias("u_prob"),
-        F.round(F.log2(m / u), precision_digits).alias("agree_weight"),
-        F.round(F.log2((1 - m) / (1 - u)), precision_digits).alias(
+        F.round(m, _DIGITS).alias("m_prob"),
+        F.round(u, _DIGITS).alias("u_prob"),
+        F.round(F.log2(m / u), _DIGITS).alias("agree_weight"),
+        F.round(F.log2((1 - m) / (1 - u)), _DIGITS).alias(
             "disagree_weight"
         ),
     )
@@ -261,7 +251,6 @@ def fellegi_sunter_score(
     weights: DataFrame,
     feature_cols: list[str],
     pair_cols: list[str],
-    precision_digits: int = 6,
 ) -> DataFrame:
     """Apply estimated Fellegi–Sunter weights to candidate pairs: each
     pair's score is the sum over features of the agree weight when the
@@ -307,7 +296,7 @@ def fellegi_sunter_score(
         pairs.crossJoin(wrow)
         .select(
             *pair_cols,
-            F.round(score, precision_digits).alias("fs_score"),
+            F.round(score, _DIGITS).alias("fs_score"),
         )
         .select(
             *pair_cols,
@@ -321,17 +310,14 @@ def fs_em_estimate(
     pairs: DataFrame,
     feature_cols: list[str],
     n_iter: int = 2,
-    lam0: float = 0.5,
-    m0: float = 0.8,
-    u0: float = 0.2,
-    precision_digits: int = 6,
     cut_every: int = 1,
 ) -> DataFrame:
     """UNSUPERVISED Fellegi–Sunter parameter estimation via EM (the
     Splink-style path — real deployments rarely have labeled pairs):
-    starting from fixed literals (λ, m, u), each iteration computes every
-    pair's match responsibility w = λ·Πm / (λ·Πm + (1−λ)·Πu) (E-step, pure
-    row-local math against a broadcast 1-row parameter frame) and
+    starting from fixed literals (λ, m, u) = (0.5, 0.8, 0.2), each
+    iteration computes every pair's match responsibility
+    w = λ·Πm / (λ·Πm + (1−λ)·Πu) (E-step, pure row-local math against a
+    broadcast 1-row parameter frame) and
     re-estimates m_i = Σ w·aᵢ / Σ w, u_i = Σ (1−w)·aᵢ / Σ (1−w),
     λ = Σ w / n (M-step, ONE combinable aggregation). No labels touched.
 
@@ -347,9 +333,9 @@ def fs_em_estimate(
     """
     spark = pairs.sparkSession
     params = spark.range(1).select(
-        F.lit(float(lam0)).alias("lam"),
-        *[F.lit(float(m0)).alias(f"m_{f}") for f in feature_cols],
-        *[F.lit(float(u0)).alias(f"u_{f}") for f in feature_cols],
+        F.lit(0.5).alias("lam"),
+        *[F.lit(0.8).alias(f"m_{f}") for f in feature_cols],
+        *[F.lit(0.2).alias(f"u_{f}") for f in feature_cols],
     )
     for it in range(1, n_iter + 1):
         j = pairs.crossJoin(F.broadcast(params))
@@ -388,9 +374,9 @@ def fs_em_estimate(
                 *[
                     F.struct(
                         F.lit(f).alias("feature"),
-                        F.round(F.col(f"m_{f}"), precision_digits).alias("m_prob"),
-                        F.round(F.col(f"u_{f}"), precision_digits).alias("u_prob"),
-                        F.round(F.col("lam"), precision_digits).alias(
+                        F.round(F.col(f"m_{f}"), _DIGITS).alias("m_prob"),
+                        F.round(F.col(f"u_{f}"), _DIGITS).alias("u_prob"),
+                        F.round(F.col("lam"), _DIGITS).alias(
                             "match_prior"
                         ),
                     )
@@ -401,12 +387,7 @@ def fs_em_estimate(
     ).select("p.feature", "p.m_prob", "p.u_prob", "p.match_prior")
 
 
-def fs_multilevel_weights(
-    pairs: DataFrame,
-    level_cols: dict[str, int],
-    match_col: str = "is_match",
-    precision_digits: int = 6,
-) -> DataFrame:
+def fs_multilevel_weights(pairs: DataFrame, level_cols: dict[str, int]) -> DataFrame:
     """Splink-style MULTI-LEVEL Fellegi–Sunter weights: comparisons are
     categorical levels (exact / close / else), not booleans — m_l =
     P(level | match) and u_l = P(level | unmatch) per (feature, level),
@@ -422,7 +403,7 @@ def fs_multilevel_weights(
     """
     spark = pairs.sparkSession
     stacked = pairs.select(
-        F.col(match_col).alias("__m"),
+        F.col("is_match").alias("__m"),
         F.explode(
             F.array(
                 *[
@@ -452,10 +433,10 @@ def fs_multilevel_weights(
         "feature string, level long, n_levels long",
     )
     tot = pairs.agg(
-        F.sum(F.when(F.col(match_col), 1).otherwise(0))
+        F.sum(F.when(F.col("is_match"), 1).otherwise(0))
         .cast("long")
         .alias("nm"),
-        F.sum(F.when(~F.col(match_col), 1).otherwise(0))
+        F.sum(F.when(~F.col("is_match"), 1).otherwise(0))
         .cast("long")
         .alias("nu"),
     )
@@ -477,7 +458,7 @@ def fs_multilevel_weights(
         F.col("nm").alias("n_match"),
         F.coalesce(F.col("n_u"), F.lit(0)).cast("long").alias("n_unmatch_level"),
         F.col("nu").alias("n_unmatch"),
-        F.round(m, precision_digits).alias("m_prob"),
-        F.round(u, precision_digits).alias("u_prob"),
-        F.round(F.log2(m / u), precision_digits).alias("level_weight"),
+        F.round(m, _DIGITS).alias("m_prob"),
+        F.round(u, _DIGITS).alias("u_prob"),
+        F.round(F.log2(m / u), _DIGITS).alias("level_weight"),
     )

@@ -19,27 +19,26 @@ from pyspark.sql import functions as F
 # instead of O(log) barrier rounds. Sized like closure._CC_LOCAL_SOLVE_EDGES.
 _MATCHING_LOCAL_SOLVE_EDGES = 500_000
 
+# PageRank fixed-point unit: scores are int64 multiples of 1/_PR_SCALE
+_PR_SCALE = 10**12
+
 
 def pagerank_fixed_point(
     edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     n_iter: int = 3,
-    scale: int = 10**12,
-    damp_num: int = 85,
-    damp_den: int = 100,
     checkpoint_every: int = 8,
 ) -> DataFrame:
     """PageRank on the UNDIRECTED graph of ``edges`` in fixed-point integer
     arithmetic — ``(node, degree, pr_fp, pr)`` after ``n_iter`` power
-    iterations with damping ``damp_num/damp_den`` over the nodes that
-    appear in the edge set.
+    iterations with damping 85/100 over the nodes that appear in the edge
+    set.
 
     Why fixed-point: float PageRank sums neighbor contributions in
     partition order, so two runs (or two engines) disagree in the last
     ulps and no bit-exact oracle exists. Here scores are int64 multiples
-    of ``1/scale``: contributions are integral divisions ``pr div deg``,
-    the update is ``((den-num)·(scale div N)) div den + (num·Σ) div den``
+    of ``1/scale`` (``scale`` = ``_PR_SCALE`` = 10¹²): contributions are
+    integral divisions ``pr div deg``, the update is
+    ``(15·(scale div N)) div 100 + (85·Σ) div 100``
     — order-independent integer sums, bit-identical on any partitioning,
     any engine. Mass lost to flooring is deterministic and bounded by one
     unit per node per term. Total mass ≤ scale=1e12 keeps every
@@ -58,8 +57,8 @@ def pagerank_fixed_point(
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
     und = (
-        edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .localCheckpoint(eager=True)
     )
     deg = (
@@ -68,7 +67,7 @@ def pagerank_fixed_point(
         .localCheckpoint(eager=True)
     )
     n_nodes = deg.select(F.count("*").alias("n"))  # 1 row, broadcast below
-    base = F.expr(f"{scale} div n")
+    base = F.expr(f"{_PR_SCALE} div n")
     pr = deg.crossJoin(F.broadcast(n_nodes)).select(
         "src", "deg", "n", base.alias("pr")
     )
@@ -86,10 +85,8 @@ def pagerank_fixed_point(
                 "deg",
                 "n",
                 (
-                    F.expr(f"({damp_den - damp_num} * ({scale} div n)) div {damp_den}")
-                    + F.expr(
-                        f"({damp_num} * coalesce(s, CAST(0 AS BIGINT))) div {damp_den}"
-                    )
+                    F.expr(f"(15 * ({_PR_SCALE} div n)) div 100")
+                    + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")
                 ).alias("pr"),
             )
         )
@@ -99,29 +96,25 @@ def pagerank_fixed_point(
         F.col("src").alias("node"),
         F.col("deg").alias("degree"),
         F.col("pr").alias("pr_fp"),
-        F.round(F.col("pr") / F.lit(float(scale)), 6).alias("pr"),
+        F.round(F.col("pr") / F.lit(float(_PR_SCALE)), 6).alias("pr"),
     )
 
 
-def _undirected(edges, id_a: str, id_b: str):
+def _undirected(edges):
     """Both orientations of the edge list, deduplicated AFTER the union —
     an input that already carries (a,b) AND (b,a) must not double-count
     degrees (per-side dedup would let both survive)."""
     return (
-        edges.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .unionByName(
-            edges.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
+            edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
         )
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
 
 
-def triangle_counts(
-    edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation + local clustering coefficient over
     the undirected graph of canonical (``id_a < id_b``) edges — the cluster
     cohesion diagnostic for a dup/kNN graph (a near-dup cluster whose nodes
@@ -137,7 +130,7 @@ def triangle_counts(
     list. Returns ``(node, degree, triangles, clustering_coeff)`` for every
     node in the edge set, coefficient = 2T / (d·(d−1)) (0.0 when d < 2).
     """
-    und = _undirected(edges, id_a, id_b).localCheckpoint(eager=True)
+    und = _undirected(edges).localCheckpoint(eager=True)
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
     # orient u→v iff (deg_u, u) < (deg_v, v): joins deg twice (node-sized
     # dimension; AQE broadcasts it when small, shuffles when not)
@@ -185,13 +178,7 @@ def triangle_counts(
     )
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 200,
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int, max_rounds: int = 200) -> DataFrame:
     """Nodes of the k-core (maximal subgraph with min induced degree ≥ k)
     of the undirected graph of canonical edges, with their in-core degree —
     the density primitive that separates a cluster's cohesive core from
@@ -216,7 +203,7 @@ def k_core(
     shrink steps.)
     """
     n_part = max(edges.sparkSession.sparkContext.defaultParallelism, 1)
-    und = _undirected(edges, id_a, id_b).localCheckpoint(eager=True)
+    und = _undirected(edges).localCheckpoint(eager=True)
     alive = und.select(F.col("u").alias("id")).distinct()
     alive = alive.localCheckpoint(eager=True)
     n_alive = alive.count()
@@ -291,9 +278,6 @@ def _local_greedy_matching(spark, edges: DataFrame) -> DataFrame:
 
 def locally_dominant_matching(
     scored_pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    score_col: str = "score",
     max_rounds: int = 100,
 ) -> DataFrame:
     """Distributed greedy one-to-one matching (Preis 1999 / locally
@@ -317,8 +301,8 @@ def locally_dominant_matching(
     """
     edges = (
         scored_pairs.select(
-            F.col(id_a).alias("ea"), F.col(id_b).alias("eb"),
-            F.col(score_col).alias("s"),
+            F.col("id_a").alias("ea"), F.col("id_b").alias("eb"),
+            F.col("score").alias("s"),
         )
         .filter(F.col("ea") != F.col("eb"))
         # duplicate (ea, eb) rows keep their MAX score: dropDuplicates
@@ -332,8 +316,8 @@ def locally_dominant_matching(
         return _local_greedy_matching(
             scored_pairs.sparkSession, edges
         ).select(
-            F.col("ea").alias(id_a), F.col("eb").alias(id_b),
-            F.col("s").alias(score_col),
+            F.col("ea").alias("id_a"), F.col("eb").alias("id_b"),
+            F.col("s").alias("score"),
         )
     matched = None
     for r in range(1, max_rounds + 1):
@@ -390,9 +374,9 @@ def locally_dominant_matching(
         )
     if matched is None:
         return scored_pairs.select(
-            F.col(id_a), F.col(id_b), F.col(score_col)
+            F.col("id_a"), F.col("id_b"), F.col("score")
         ).limit(0)
     return matched.select(
-        F.col("ea").alias(id_a), F.col("eb").alias(id_b),
-        F.col("s").alias(score_col),
+        F.col("ea").alias("id_a"), F.col("eb").alias("id_b"),
+        F.col("s").alias("score"),
     )

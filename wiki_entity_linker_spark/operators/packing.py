@@ -108,7 +108,6 @@ def packed_sequences(
     id_col: str,
     token_count_col: str,
     window: int,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Assign each document its position in the concatenate-then-split
     packing: ``seq_start`` (global exclusive token prefix in ``id_col``
@@ -116,9 +115,7 @@ def packed_sequences(
     ``bin_offset`` inside that window. Documents longer than ``window``
     simply span multiple bins, exactly as the concatenation semantics
     dictate."""
-    out = global_prefix_sum(
-        df, id_col, token_count_col, out_col="seq_start", n_buckets=n_buckets
-    )
+    out = global_prefix_sum(df, id_col, token_count_col, out_col="seq_start")
     # integral div (not floor of a float quotient): double division loses
     # precision above 2^53 total tokens and can place seq_start in the
     # wrong bin while bin_offset (exact %) contradicts it

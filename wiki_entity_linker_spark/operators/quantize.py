@@ -20,6 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# uint8 code range: codes run 0.._LEVELS
+_LEVELS = 255
+
 
 def quantization_bounds(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     """1-row frame of per-dimension ``mn{i}`` / ``mx{i}`` (floats cast to
@@ -37,8 +40,6 @@ def quantize_embeddings(
     id_col: str,
     vec_col: str,
     dim: int,
-    levels: int = 255,
-    mse_digits: int = 9,
 ) -> DataFrame:
     """Per-row uint8 codes + reconstruction error for an embedding column.
 
@@ -60,7 +61,7 @@ def quantize_embeddings(
         v = F.col(vec_col).getItem(i).cast("double")
         mn, mx = F.col(f"mn{i}"), F.col(f"mx{i}")
         return F.when(mx == mn, F.lit(0).cast("long")).otherwise(
-            F.floor(((v - mn) / (mx - mn)) * float(levels) + F.lit(0.5))
+            F.floor(((v - mn) / (mx - mn)) * float(_LEVELS) + F.lit(0.5))
         )
 
     coded = src.select(
@@ -74,7 +75,7 @@ def quantize_embeddings(
     def err(i: int):
         v = F.col(vec_col).getItem(i).cast("double")
         mn, mx = F.col(f"mn{i}"), F.col(f"mx{i}")
-        recon = mn + ((F.col(f"c{i}").cast("double") * (mx - mn)) / float(levels))
+        recon = mn + ((F.col(f"c{i}").cast("double") * (mx - mn)) / float(_LEVELS))
         return (v - recon) * (v - recon)
 
     code_sum = F.col("c0")
@@ -86,5 +87,5 @@ def quantize_embeddings(
     return coded.select(
         F.col(id_col),
         code_sum.cast("long").alias("code_sum"),
-        F.round(err_sum / float(dim), mse_digits).alias("mse"),
+        F.round(err_sum / float(dim), 9).alias("mse"),
     )

@@ -23,25 +23,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _salted_keys(id_col: str, block_col: str, cap: int):
+def _salted_keys(cap: int):
     """Per-row array of output block keys given ``__rn``/``__n`` columns:
     small blocks keep their key; oversized blocks are cut into chunks of
     ``cap`` ordered by id, and each chunk's last member also joins the next
     chunk ("chain link") so connected components still merges the block
     while pair counts stay O(n·cap) instead of O(n²)."""
     chunk = (F.col("__rn") / cap).cast("long")
-    own = F.concat(F.col(block_col), F.lit("~s"), chunk)
+    own = F.concat(F.col("block_key"), F.lit("~s"), chunk)
     is_link = ((F.col("__rn") + 1) % cap == 0) & (F.col("__rn") + 1 < F.col("__n"))
-    link = F.concat(F.col(block_col), F.lit("~s"), chunk + 1)
-    return F.when(F.col("__n") <= cap, F.array(F.col(block_col))).otherwise(
+    link = F.concat(F.col("block_key"), F.lit("~s"), chunk + 1)
+    return F.when(F.col("__n") <= cap, F.array(F.col("block_key"))).otherwise(
         F.when(is_link, F.array(own, link)).otherwise(F.array(own))
     )
 
 
 def cap_and_salt_blocks(
     block_df: DataFrame,
-    id_col: str = "file_id",
-    block_col: str = "block_key",
     max_size: int = 10000,
     cap: int = 64,
 ) -> DataFrame:
@@ -57,14 +55,14 @@ def cap_and_salt_blocks(
     scans it once per branch (measured 98 s → ~25 s for the blocks stage
     at 32 cores on the benchxl corpus).
     """
-    w_count = Window.partitionBy(block_col)
-    w_rank = Window.partitionBy(block_col).orderBy(id_col)
+    w_count = Window.partitionBy("block_key")
+    w_rank = Window.partitionBy("block_key").orderBy("file_id")
     survivors = block_df.withColumn("__n", F.count("*").over(w_count)).filter(
         F.col("__n") <= max_size
     )
     sized = survivors.withColumn("__rn", F.row_number().over(w_rank) - 1)
     return sized.select(
-        id_col, F.explode(_salted_keys(id_col, block_col, cap)).alias(block_col)
+        "file_id", F.explode(_salted_keys(cap)).alias("block_key")
     )
 
 

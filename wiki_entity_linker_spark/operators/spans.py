@@ -22,12 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def suppress_overlaps(
-    df: DataFrame,
-    doc_col: str = "doc_id",
-    start_col: str = "start",
-    end_col: str = "end",
-) -> DataFrame:
+def suppress_overlaps(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
     """Keep a maximal set of non-overlapping spans, longest-first.
 
     Spans are half-open ``[start, end)``. Deterministic total order:
@@ -36,25 +31,23 @@ def suppress_overlaps(
     schema = df.schema
 
     def _claim(pdf: pd.DataFrame) -> pd.DataFrame:
-        return claim_longest_first(pdf, start_col, end_col)
+        return claim_longest_first(pdf)
 
     return df.groupBy(doc_col).applyInPandas(_claim, schema=schema)
 
 
-def claim_longest_first(
-    pdf: pd.DataFrame, start_col: str = "start", end_col: str = "end"
-) -> pd.DataFrame:
+def claim_longest_first(pdf: pd.DataFrame) -> pd.DataFrame:
     """Single-doc greedy kernel behind :func:`suppress_overlaps` (exposed so
     tests can property-check it directly against an independent reference)."""
     pdf = pdf.sort_values(
-        by=[start_col, end_col], kind="mergesort"
+        by=["start", "end"], kind="mergesort"
     )  # stable base order
-    pdf = pdf.assign(__len=pdf[end_col] - pdf[start_col]).sort_values(
-        by=["__len", start_col], ascending=[False, True], kind="mergesort"
+    pdf = pdf.assign(__len=pdf["end"] - pdf["start"]).sort_values(
+        by=["__len", "start"], ascending=[False, True], kind="mergesort"
     )
     taken: list[tuple[int, int]] = []
     keep = []
-    for s, e in zip(pdf[start_col], pdf[end_col]):
+    for s, e in zip(pdf["start"], pdf["end"]):
         ok = all(e <= ts or s >= te for ts, te in taken)
         keep.append(ok)
         if ok:
@@ -67,9 +60,6 @@ def bucketed_interval_join(
     points: DataFrame,
     intervals: DataFrame,
     doc_col: str = "doc_id",
-    pos_col: str = "pos",
-    start_col: str = "start",
-    end_col: str = "end",
     bucket: int = 256,
 ) -> DataFrame:
     """Equi-join points to covering half-open intervals via position buckets.
@@ -79,18 +69,18 @@ def bucketed_interval_join(
     then a plain shuffle equi-join on ``(doc, bucket)`` that scales linearly,
     not the O(|points|·|intervals|) nested loop a raw range join would pick.
     """
-    p = points.withColumn("__bkt", (F.col(pos_col) / bucket).cast("long"))
+    p = points.withColumn("__bkt", (F.col("pos") / bucket).cast("long"))
     iv = intervals.withColumn(
         "__bkt",
         F.explode(
             F.sequence(
-                (F.col(start_col) / bucket).cast("long"),
-                (F.greatest(F.col(end_col) - 1, F.col(start_col)) / bucket).cast("long"),
+                (F.col("start") / bucket).cast("long"),
+                (F.greatest(F.col("end") - 1, F.col("start")) / bucket).cast("long"),
             )
         ),
     )
     return (
         p.join(iv, [doc_col, "__bkt"])
-        .filter((F.col(pos_col) >= F.col(start_col)) & (F.col(pos_col) < F.col(end_col)))
+        .filter((F.col("pos") >= F.col("start")) & (F.col("pos") < F.col("end")))
         .drop("__bkt")
     )

@@ -116,20 +116,17 @@ def add_coref_links(
     predictions: DataFrame,
     entity_types: DataFrame,
     kinds: tuple = ("person", "thing", "group", "nominal"),
-    max_distance: int | None = None,
-    nominal_unique: bool = True,
 ) -> DataFrame:
     """predictions ∪ resolved coref mentions.
 
     ``predictions``: (article_id, start, end, entity_id, ...)
     ``entity_types``: (entity_id, types) pipe-joined whitelist QIDs.
     ``kinds``: which mention kinds to link.
-    ``max_distance``: drop a coref whose antecedent is further than this
-    many characters back (precision guard).
-    ``nominal_unique``: link a ``the <noun>`` nominal only when exactly ONE
-    distinct type-compatible antecedent precedes it — ambiguity is the
-    dominant nominal error source (measured on wiki-fair-v2: unrestricted
-    nominals cost net F1, uniqueness-gated nominals add it).
+
+    A ``the <noun>`` nominal links only when exactly ONE distinct
+    type-compatible antecedent precedes it — ambiguity is the dominant
+    nominal error source (measured on wiki-fair-v2: unrestricted nominals
+    cost net F1, uniqueness-gated nominals add it).
     """
     mentions = scan_coref_mentions(articles).filter(F.col("kind").isin(*kinds))
 
@@ -173,16 +170,9 @@ def add_coref_links(
          .orderBy("pos", "is_mention")
          .rowsBetween(Window.unboundedPreceding, -1))
     resolved = (
-        ants.withColumn("person_pos",
-                        F.when(F.col("person_ent").isNotNull(), F.col("pos")))
-        .withColumn("thing_pos",
-                    F.when(F.col("thing_ent").isNotNull(), F.col("pos")))
-        .unionByName(ments.withColumn("person_pos", F.lit(None).cast("long"))
-                     .withColumn("thing_pos", F.lit(None).cast("long")))
+        ants.unionByName(ments)
         .withColumn("prev_person", F.last("person_ent", True).over(w))
         .withColumn("prev_thing", F.last("thing_ent", True).over(w))
-        .withColumn("prev_person_pos", F.last("person_pos", True).over(w))
-        .withColumn("prev_thing_pos", F.last("thing_pos", True).over(w))
         .filter(F.col("is_mention") == 1)
     )
     is_person_kind = F.col("kind") == "person"
@@ -192,12 +182,7 @@ def add_coref_links(
         F.col("m_end").alias("end"),
         F.when(is_person_kind, F.col("prev_person"))
         .otherwise(F.col("prev_thing")).alias("entity_id"),
-        (F.col("pos") - F.when(is_person_kind, F.col("prev_person_pos"))
-         .otherwise(F.col("prev_thing_pos"))).alias("distance"),
     ).filter(F.col("entity_id").isNotNull())
-    if max_distance is not None:
-        pron = pron.filter(F.col("distance") <= max_distance)
-    pron = pron.drop("distance")
 
     # nominals: nearest preceding antecedent whose types include the noun's
     # type — resolved per (article, noun) with the same window trick
@@ -220,19 +205,15 @@ def add_coref_links(
           .rowsBetween(Window.unboundedPreceding, -1))
     nom = (
         ant_noun.withColumn("m_end", F.lit(None).cast("long"))
-        .withColumn("cand_pos",
-                    F.when(F.col("cand_ent").isNotNull(), F.col("pos")))
-        .unionByName(ment_noun.withColumn("cand_pos",
-                                          F.lit(None).cast("long")))
+        .unionByName(ment_noun)
         .withColumn("prev_cand", F.last("cand_ent", True).over(wn))
-        .withColumn("prev_cand_pos", F.last("cand_pos", True).over(wn))
         .withColumn("n_cand", F.size(F.collect_set("cand_ent").over(wn)))
-        .filter((F.col("is_mention") == 1) & F.col("prev_cand").isNotNull())
+        .filter(
+            (F.col("is_mention") == 1)
+            & F.col("prev_cand").isNotNull()
+            & (F.col("n_cand") == 1)
+        )
     )
-    if nominal_unique:
-        nom = nom.filter(F.col("n_cand") == 1)
-    if max_distance is not None:
-        nom = nom.filter(F.col("pos") - F.col("prev_cand_pos") <= max_distance)
     nom = nom.select("article_id",
                      F.col("pos").alias("start"),
                      F.col("m_end").alias("end"),

@@ -61,15 +61,13 @@ class CurationConfig:
     extra: dict = field(default_factory=dict)
 
 
-def exact_hash_table(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_hash_table(docs: DataFrame) -> DataFrame:
     """(id, content_hash) — sha256 of whitespace-normalized content, the
     exact-dup identity shared by the full run and the incremental append
     (its chained probe index)."""
     return docs.select(
-        F.col(id_col),
-        F.sha2(normalize_content(text_col), 256).alias("content_hash"),
+        F.col("doc_id"),
+        F.sha2(normalize_content("text"), 256).alias("content_hash"),
     )
 
 

@@ -391,8 +391,6 @@ def run_er_incremental(
                     old_comps,
                     edges,
                     new_rep_nodes,
-                    id_col="id",
-                    comp_col="component",
                     max_iter=cfg.max_cc_iter,
                     # the batch-sized relabel map is stored verbatim as the
                     # relabel_map delta — re-deriving it from the merged

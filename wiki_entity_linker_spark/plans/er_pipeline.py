@@ -152,8 +152,8 @@ def build_features(rep_rows: DataFrame, cfg: ERConfig) -> DataFrame:
         rep_rows.select(
             "file_id",
             F.element_at(F.split("path", "/"), -1).alias("fname"),
-            path_stem_key("path").alias("stem"),
-            def_name_keys("content").alias("defs"),
+            path_stem_key().alias("stem"),
+            def_name_keys().alias("defs"),
             F.transform(
                 shingles(tokenize("content"), cfg.k_shingle), lambda s: F.xxhash64(s)
             ).alias("hsh"),
@@ -193,7 +193,7 @@ def raw_block_keys(
     member must see every old member of a shared block, so the probe join
     works on raw keys and applies the stopword cap on combined sizes)."""
     ab = alias_blocks_from_features(feats)
-    sigs = minhash_from_hashes(feats, "file_id", "hsh", cfg.n_hashes)
+    sigs = minhash_from_hashes(feats, cfg.n_hashes)
     lb = lsh_band_blocks(sigs, "file_id", cfg.bands, cfg.n_hashes)
     blocks = ab.unionByName(lb)
     if alias_dict is not None and reps is not None:

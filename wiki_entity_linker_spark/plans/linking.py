@@ -69,18 +69,16 @@ def link_articles(
     articles: DataFrame,
     alias_dict: DataFrame,
     max_ngram: int = 3,
-    lowercase_aliases: bool = True,
 ) -> DataFrame:
     """-> (article_id, start, end, surface, entity_id) linked mentions.
 
     ``alias_dict``: (alias, entity_id, freq) — the
-    link-text->most-popular-candidates table (create_databases.py:103-122).
+    link-text->most-popular-candidates table (create_databases.py:103-122),
+    matched case-insensitively.
     """
     cands = mention_candidates(articles, max_ngram)
-    key = F.lower(F.col("surface")) if lowercase_aliases else F.col("surface")
-    alias_key = F.lower(F.col("alias")) if lowercase_aliases else F.col("alias")
-    matched = cands.withColumn("__k", key).join(
-        F.broadcast(alias_dict.withColumn("__k", alias_key)), "__k"
+    matched = cands.withColumn("__k", F.lower(F.col("surface"))).join(
+        F.broadcast(alias_dict.withColumn("__k", F.lower(F.col("alias")))), "__k"
     )
     # J3 popularity argmax: per (article, span) the most frequent entity,
     # ties broken by ascending entity id (deterministic re-runs)

@@ -393,7 +393,7 @@ def interval_join_events(spark, sf_dir):
     # the 256 default by >10x on this dense synthetic key space (the
     # operator result is bucket-invariant; the oracle doesn't bucket)
     joined = bucketed_interval_join(
-        e, o, doc_col="doc", pos_col="pos", start_col="start", end_col="end", bucket=16
+        e, o, doc_col="doc", bucket=16
     )
     return joined.groupBy("o_custkey").agg(F.count("*").alias("n_events"))
 
@@ -423,7 +423,7 @@ def closure_query(spark, sf_dir):
     )
     # a few-hundred-edge graph: transitive_closure finishes it (and its
     # depth-overflow bound) on the driver, result-identically
-    out = transitive_closure(edges, "child", "parent")
+    out = transitive_closure(edges)
     return out.select(F.col("child").cast("long"), F.col("parent").cast("long").alias("ancestor"))
 
 
@@ -818,7 +818,7 @@ def date_parse_filter(spark, sf_dir):
 def sha_exact_dedup(spark, sf_dir):
     """Exact dedup by normalized-content sha256 (hash-groupBy)."""
     d = _t(spark, sf_dir, "documents")
-    hashed = exact_dedup(d, "doc_id", "text", normalized=True)
+    hashed = exact_dedup(d, "doc_id", "text")
     return hashed.groupBy("content_hash").agg(
         F.min("doc_id").alias("canonical_id"), F.count("*").alias("group_size")
     )
@@ -884,8 +884,6 @@ def minhash_neardup(spark, sf_dir):
         "doc_id",
         "text",
         k_shingle=3,
-        n_hashes=16,
-        bands=8,
         jaccard_threshold=0.3,
     )
 
@@ -966,7 +964,7 @@ def embedding_cosine_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = cosine_topk(emb, queries, k=5, query_id_col="query_id")
+    out = cosine_topk(emb, queries, k=5)
     return out.select("query_id", "vec_id", "cos", F.col("rank").alias("rnk"))
 
 
@@ -1025,8 +1023,6 @@ def embedding_neardup(spark, sf_dir):
     return embedding_neardup_lsh_pairs(
         _t(spark, sf_dir, "embeddings"),
         dim=64,
-        id_col="vec_id",
-        vec_col="embedding",
         threshold=0.4,
         n_planes=6,
         n_tables=3,
@@ -1155,7 +1151,7 @@ def suppress_overlaps_spans(spark, sf_dir):
         (F.col("event_id") % 97).alias("start"),
         (F.col("event_id") % 97 + (F.col("event_id") % 7) + 1).alias("end"),
     )
-    return suppress_overlaps(spans_df, "doc_id", "start", "end")
+    return suppress_overlaps(spans_df, "doc_id")
 
 
 def _lsh_oracle(dim: int, k: int, n_planes: int, n_tables: int, seed: int = 42) -> str:
@@ -1310,7 +1306,7 @@ def er_cluster_documents(spark, sf_dir):
     are replicated in DuckDB (recursive CTE)."""
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_neardup_pairs(
-        d, "doc_id", "text", k_shingle=3, n_hashes=16, bands=8, jaccard_threshold=0.3
+        d, "doc_id", "text", k_shingle=3, jaccard_threshold=0.3
     ).select("id_a", "id_b")
     nodes = d.select(F.col("doc_id").alias("file_id"))
     # the flagship mirrors the ER pipeline's scale path: CC-MR hybrid
@@ -1336,7 +1332,7 @@ def er_incremental_documents(spark, sf_dir):
     batch = d.filter(F.col("doc_id") % 10 == 9)
     return minhash_neardup_clusters_incremental(
         base, batch, "doc_id", "text",
-        k_shingle=3, n_hashes=16, bands=8, jaccard_threshold=0.3,
+        k_shingle=3, jaccard_threshold=0.3,
     )
 
 
@@ -2105,7 +2101,7 @@ def winnowing_pairs(spark, sf_dir):
     from wiki_entity_linker_spark.operators.dedup import winnowing_candidate_pairs
 
     return winnowing_candidate_pairs(
-        _t(spark, sf_dir, "documents"), k=4, w=4, min_shared=2
+        _t(spark, sf_dir, "documents"), min_shared=2
     )
 
 
@@ -2170,7 +2166,7 @@ def dup_graph_pagerank(spark, sf_dir):
     from wiki_entity_linker_spark.operators.graph import pagerank_fixed_point
 
     edges = winnowing_candidate_pairs(
-        _t(spark, sf_dir, "documents"), k=4, w=4, min_shared=2
+        _t(spark, sf_dir, "documents"), min_shared=2
     ).select("id_a", "id_b")
     return pagerank_fixed_point(edges, n_iter=3)
 
@@ -3026,14 +3022,8 @@ def _flagship_gold_items(spark, sf_dir):
     LSH clustering joined to the deterministic attribute gold
     (source × 100-char length bucket) — one definition so a banding or
     bucketing tweak can never skew one metric and not the other."""
-    d = _t(spark, sf_dir, "documents")
-    pairs = minhash_neardup_pairs(
-        d, "doc_id", "text", k_shingle=3, n_hashes=16, bands=8,
-        jaccard_threshold=0.3,
-    ).select("id_a", "id_b")
-    nodes = d.select(F.col("doc_id").alias("file_id"))
-    comp = components_with_singletons(nodes, pairs, id_col="file_id")
-    gold = d.select(
+    comp = er_cluster_documents(spark, sf_dir)
+    gold = _t(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat_ws(
             "|", F.col("source"), F.expr("CAST(n_chars div 100 AS STRING)")
@@ -3168,7 +3158,7 @@ def blocking_quality_documents(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     sh = d.select(F.col("doc_id"), shingles(tokenize("text"), 3).alias("sh"))
-    sigs = minhash_from_shingles(sh, "doc_id", "sh", 16)
+    sigs = minhash_from_shingles(sh, "doc_id", 16)
     cand = pairs_from_blocks(lsh_band_blocks(sigs, "doc_id", 8, 16), "doc_id")
     # EXACT truth via the prefix-filtered AllPairs join instead of the
     # uncapped inverted-index pair count (Σ df² — quadratic in corpus size;
@@ -3338,7 +3328,7 @@ def triangle_clustering(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     edges = embedding_neardup_lsh_pairs(
-        emb, dim=64, id_col="vec_id", vec_col="embedding", threshold=0.2,
+        emb, dim=64, threshold=0.2,
         n_planes=6, n_tables=3, max_bucket=256,
     ).select("id_a", "id_b")
     return triangle_counts(edges)
@@ -3526,7 +3516,7 @@ def kcore_dense(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     edges = embedding_neardup_lsh_pairs(
-        emb, dim=64, id_col="vec_id", vec_col="embedding", threshold=0.2,
+        emb, dim=64, threshold=0.2,
         n_planes=6, n_tables=3, max_bucket=256,
     ).select("id_a", "id_b")
     return k_core(edges, k=2)
@@ -3835,7 +3825,7 @@ def onetoone_matching(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_neardup_pairs(
-        d, "doc_id", "text", k_shingle=3, n_hashes=16, bands=8,
+        d, "doc_id", "text", k_shingle=3,
         jaccard_threshold=0.3,
     ).select("id_a", "id_b", F.col("jaccard").alias("score"))
     # sequential-greedy tail-solve under the matching's cut-over (same

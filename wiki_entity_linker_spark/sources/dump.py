@@ -33,10 +33,10 @@ def read_dump_pages(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def extract_redirects(pages: DataFrame, page_col: str = "page") -> DataFrame:
+def extract_redirects(pages: DataFrame) -> DataFrame:
     """→ ``(title, target)`` for every redirect page
     (extract_redirects.py:28-51 recast)."""
-    c = F.col(page_col)
+    c = F.col("page")
     return (
         pages.select(
             F.regexp_extract(c, _TITLE_RE, 1).alias("title"),

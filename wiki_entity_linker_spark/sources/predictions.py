@@ -56,8 +56,9 @@ MENTION_SCHEMA = T.StructType(
 )
 
 
-def with_line_index(df: DataFrame, idx_col: str = "article_idx") -> DataFrame:
-    """J9 zip-by-index: attach each row's 0-based input order.
+def with_line_index(df: DataFrame) -> DataFrame:
+    """J9 zip-by-index: attach each row's 0-based input order as
+    ``article_idx``.
 
     ``zipWithIndex`` is the only order-faithful distributed indexing
     primitive (``monotonically_increasing_id`` leaves gaps between
@@ -67,7 +68,9 @@ def with_line_index(df: DataFrame, idx_col: str = "article_idx") -> DataFrame:
     """
     # build a fresh StructType — StructType.add mutates the DataFrame's
     # cached schema in place (DataFrame.schema is a cached_property in 4.x)
-    schema = T.StructType(list(df.schema.fields) + [T.StructField(idx_col, T.LongType())])
+    schema = T.StructType(
+        list(df.schema.fields) + [T.StructField("article_idx", T.LongType())]
+    )
     rdd = df.rdd.zipWithIndex().map(lambda t: tuple(t[0]) + (t[1],))
     return df.sparkSession.createDataFrame(rdd, schema)
 
@@ -254,7 +257,7 @@ def _read_nif(spark: SparkSession, path: str) -> DataFrame:
     subject = F.regexp_extract("value", r"<([^>]+)>", 1)
     is_context = F.col("value").rlike(r"(nif:isString|nif-core#isString|a\s+nif:Context|nif-core#Context>)")
     contexts = with_line_index(
-        blocks.filter(is_context).select(subject.alias("ctx_uri")), "article_idx"
+        blocks.filter(is_context).select(subject.alias("ctx_uri"))
     )
     mentions = blocks.filter(
         F.col("value").rlike(r"(itsrdf:taIdentRef|its/rdf#taIdentRef)")

@@ -121,18 +121,13 @@ def read_articles_jsonl(spark: SparkSession, path: str) -> DataFrame:
 # TSV (S5 source / S8 sink)
 # ---------------------------------------------------------------------------
 
-def read_tsv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    header: bool = False,
-) -> DataFrame:
-    """Explicit-schema TSV source (S5) — the reference's SPARQL-export and
-    dictionary interchange format (Makefile:280-295,
+def read_tsv(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
+    """Explicit-schema, headerless TSV source (S5) — the reference's
+    SPARQL-export and dictionary interchange format (Makefile:280-295,
     scripts/create_databases.py:58). No inference: a schema is mandatory."""
     return (
         spark.read.option("sep", "\t")
-        .option("header", str(header).lower())
+        .option("header", "false")
         .schema(schema)
         .csv(path)
     )
@@ -142,12 +137,12 @@ _WD_ENTITY_URL = r"<http://www\.wikidata\.org/entity/(Q[0-9]+)>"
 _XSD_INT = r'^"([0-9][0-9]*)"\^\^<http://www\.w3\.org/2001/XMLSchema#int>$'
 
 
-def normalize_sparql_values(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def normalize_sparql_values(df: DataFrame) -> DataFrame:
     """Column-wise recast of the reference's sed normalization chain for raw
     SPARQL TSV exports (Makefile:283-291): entity URLs → bare QIDs,
     ``"literal"@en`` → literal, ``"n"^^xsd:int`` → n, ``<url>`` → url.
-    Applied to every string column unless ``cols`` narrows it."""
-    targets = cols or [f.name for f in df.schema.fields if f.dataType == T.StringType()]
+    Applied to every string column."""
+    targets = [f.name for f in df.schema.fields if f.dataType == T.StringType()]
     out = df
     for c in targets:
         v = F.regexp_replace(F.col(c), _WD_ENTITY_URL, r"$1")
@@ -164,18 +159,13 @@ def filter_qid_rows(df: DataFrame, qid_col: str) -> DataFrame:
     return df.filter(F.col(qid_col).rlike("^Q[0-9]+$"))
 
 
-def write_jsonl(df: DataFrame, path: str, single_file: bool = False) -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSONL sink (S7) — the reference's article interchange output
     (link_text.py:59-70 writes one JSON per line). Spark's json writer emits
-    exactly one object per line; ``single_file`` mirrors the reference's
-    one-file outputs for small result sets."""
-    w = df.coalesce(1) if single_file else df
-    w.write.mode("overwrite").json(path)
+    exactly one object per line, one file per partition."""
+    df.write.mode("overwrite").json(path)
 
 
-def write_tsv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """TSV sink (S8). ``single_file`` mirrors the reference's sorted
-    one-file outputs — only for small dimension tables; large tables keep
-    one file per partition."""
-    w = df.coalesce(1) if single_file else df
-    w.write.mode("overwrite").option("sep", "\t").option("header", "true").csv(path)
+def write_tsv(df: DataFrame, path: str) -> None:
+    """TSV sink (S8) with a header row, one file per partition."""
+    df.write.mode("overwrite").option("sep", "\t").option("header", "true").csv(path)

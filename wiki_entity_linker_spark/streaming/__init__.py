@@ -1,7 +1,4 @@
-from wiki_entity_linker_spark.streaming.events import (  # noqa: F401
-    incremental_block_stream,
-    windowed_event_counts,
-)
+from wiki_entity_linker_spark.streaming.events import windowed_event_counts  # noqa: F401
 from wiki_entity_linker_spark.streaming.appends import (  # noqa: F401
     streaming_curation_append,
     streaming_er_append,

@@ -4,37 +4,31 @@ The reference is batch-only (SURVEY.md §2.9) — its "incremental" story is
 resumable Make targets. The rebuild adds genuine streaming equivalents for
 the two shapes a continuously-ingesting corpus needs:
 
-* :func:`windowed_event_counts` — watermarked sliding-window aggregation over
-  the ``events`` table shape (late data handled by the watermark);
-* :func:`incremental_block_stream` — streaming ingest of new source files →
-  per-microbatch blocking keys via ``foreachBatch`` into a parquet/Iceberg
-  stage table, i.e. the streaming front half of the ER pipeline (candidate
-  generation is incremental; clustering remains a periodic batch job, which
-  is the standard lambda split for transitive closure).
+* :func:`windowed_event_counts` / :func:`session_event_counts` —
+  watermarked window aggregations over the ``events`` table shape (late data
+  handled by the watermark);
+* :func:`streaming_first_seen` — a stateful first-seen filter, the streaming
+  form of exact dedup.
+
+The streaming ER path is ``streaming/appends.streaming_er_append``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked windowed counts/sums per event_type (works on both batch
-    and streaming DataFrames with the same plan)."""
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Counts/sums per event_type in 5-minute tumbling windows under a
+    10-minute watermark (works on both batch and streaming DataFrames with
+    the same plan)."""
     # watermarks require TIMESTAMP (ltz); parquet often yields TIMESTAMP_NTZ.
     # The session timezone is pinned UTC so the cast is value-preserving.
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(win, "event_type")
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "5 minutes"), "event_type")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("window.start").alias("win_start"),
@@ -46,22 +40,18 @@ def windowed_event_counts(
     )
 
 
-def session_event_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def session_event_counts(events: DataFrame) -> DataFrame:
     """Per-user SESSION windows (gap-based, not fixed-width): Spark's
     native ``session_window`` merges events into a session while gaps stay
-    under ``gap`` — the streaming-capable form of the batch ``sessionize``
-    query (lag + cumulative-gap window), and the state the engine keeps is
-    per-OPEN-session, bounded by the watermark, not per-event. Works on
-    batch and streaming frames with the same plan.
+    under 30 minutes (1-hour watermark) — the streaming-capable form of the
+    batch ``sessionize`` query (lag + cumulative-gap window), and the state
+    the engine keeps is per-OPEN-session, bounded by the watermark, not
+    per-event. Works on batch and streaming frames with the same plan.
     """
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("session_window.start").alias("session_start"),
@@ -73,52 +63,7 @@ def session_event_counts(
     )
 
 
-def incremental_block_stream(
-    spark: SparkSession,
-    source_glob: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    k_shingle: int = 3,
-    n_hashes: int = 16,
-    bands: int = 8,
-) -> StreamingQuery:
-    """Stream new source-file parquet drops → append blocking keys.
-
-    ``foreachBatch`` gives exactly-once appends to the stage table; each
-    micro-batch runs the same JVM-side minhash/banding used by the batch
-    pipeline (no separate streaming codepath to drift).
-    """
-    from wiki_entity_linker_spark.operators.blocking import (
-        lsh_band_blocks,
-        minhash_signatures,
-        with_file_id,
-    )
-
-    schema = (
-        "repo string, path string, commit string, lang string, content string"
-    )
-    stream = spark.readStream.schema(schema).parquet(source_glob)
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        sigs = minhash_signatures(
-            with_file_id(batch_df), "file_id", "content", k_shingle, n_hashes
-        )
-        blocks = lsh_band_blocks(sigs, "file_id", bands, n_hashes)
-        blocks.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_first_seen(
-    files: DataFrame,
-    key_col: str = "content_hash",
-    id_col: str = "file_id",
-) -> DataFrame:
+def streaming_first_seen(files: DataFrame) -> DataFrame:
     """Custom stateful operator: per-key FIRST-SEEN filter over a stream
     (``applyInPandasWithState``) — the streaming form of exact dedup (the
     reference's batch first-writer-wins mapping,
@@ -127,7 +72,7 @@ def streaming_first_seen(
 
     Each key (content hash) keeps one long of state: how many rows it has
     absorbed. The first micro-batch that carries a key emits that key's
-    deterministic representative (min ``id_col`` within the batch — the
+    deterministic representative (min ``file_id`` within the batch — the
     same first-writer-wins tie-break as the batch ``exact_dedup``); every
     later occurrence is suppressed but counted, so the emitted
     ``n_dupes_prior`` records how much duplicate volume the stream had
@@ -143,8 +88,8 @@ def streaming_first_seen(
 
     out_schema = T.StructType(
         [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(id_col, T.StringType()),
+            T.StructField("content_hash", T.StringType()),
+            T.StructField("file_id", T.StringType()),
             T.StructField("n_dupes_prior", T.LongType()),
         ]
     )
@@ -157,7 +102,7 @@ def streaming_first_seen(
             if not len(pdf):
                 continue  # an empty chunk would yield a NaN min
             n += len(pdf)
-            m = pdf[id_col].min()
+            m = pdf["file_id"].min()
             if best is None or m < best:
                 best = m
         if best is None:
@@ -170,12 +115,16 @@ def streaming_first_seen(
         return iter(
             (
                 pd.DataFrame(
-                    {key_col: [key[0]], id_col: [best], "n_dupes_prior": [n - 1]}
+                    {
+                        "content_hash": [key[0]],
+                        "file_id": [best],
+                        "n_dupes_prior": [n - 1],
+                    }
                 ),
             )
         )
 
-    return files.groupBy(key_col).applyInPandasWithState(
+    return files.groupBy("content_hash").applyInPandasWithState(
         first_seen,
         out_schema,
         state_schema,
