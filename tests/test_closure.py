@@ -55,7 +55,7 @@ def test_cc_long_chain(spark, distributed):
     n = 200
     edges = [(f"n{i:04d}", f"n{i+1:04d}") for i in range(n - 1)]
     df = spark.createDataFrame(edges, "id_a string, id_b string")
-    out = connected_components(df, max_iter=20).collect()
+    out = connected_components(df).collect()
     assert len(out) == n
     assert {r["component"] for r in out} == {"n0000"}
 

@@ -6,8 +6,8 @@ stage build)."""
 import pytest
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.plans import curation
 from wiki_entity_linker_spark.plans.curation import (
-    CurationConfig,
     dedup_verdict_table,
     run_curation_pipeline,
 )
@@ -28,12 +28,12 @@ def curation_out(spark, tmp_path_factory):
 
 def test_verdict_parity_with_registered_query(spark, tmp_path):
     # the pipeline's verdict stage IS the oracle-checked dedup_verdicts
-    # query (same defaults), so their outputs must match row-for-row
+    # query (same constants), so their outputs must match row-for-row
     from wiki_entity_linker_spark import queries as q
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     mine = sorted(
-        map(tuple, dedup_verdict_table(docs, CurationConfig()).collect())
+        map(tuple, dedup_verdict_table(docs).collect())
     )
     reg = sorted(map(tuple, q.queries()["dedup_verdicts"](spark, SF).collect()))
     assert mine == reg
@@ -52,7 +52,7 @@ def test_verdict_table_nested_stages_resume(spark, tmp_path):
     ]
 
     def run(mgr=None):
-        v = dedup_verdict_table(docs, CurationConfig(), mgr=mgr)
+        v = dedup_verdict_table(docs, mgr=mgr)
         return sorted(map(tuple, v.collect()))
 
     mgr = StageManager(spark, str(tmp_path / "nested"), {"op": "v"})
@@ -96,11 +96,11 @@ def test_stage_invariants(curation_out):
         assert s <= alloc[src], (src, s, alloc[src])
 
     # mixture: largest-remainder rounding is exact
-    assert sum(alloc.values()) == CurationConfig().token_budget
+    assert sum(alloc.values()) == curation.TOKEN_BUDGET
 
     # eval slice: at most per_stratum docs per (source, stratum), all kept
     per = out["eval_slice"].groupBy("source", "stratum").count().collect()
-    assert all(r["count"] <= CurationConfig().eval_per_stratum for r in per)
+    assert all(r["count"] <= curation.EVAL_PER_STRATUM for r in per)
     eval_ids = {r["doc_id"] for r in out["eval_slice"].collect()}
     assert eval_ids <= kept_ids
 
@@ -111,7 +111,7 @@ def test_stage_invariants(curation_out):
     ) == n_train
 
 
-def test_resume_and_invalidation(spark, curation_out, tmp_path):
+def test_resume_and_invalidation(spark, curation_out, tmp_path, monkeypatch):
     out, wd, docs = curation_out
     train = docs.filter(F.col("doc_id") % 50 != 0)
     bench = docs.filter(F.col("doc_id") % 50 == 0).select("doc_id", "text")
@@ -124,12 +124,10 @@ def test_resume_and_invalidation(spark, curation_out, tmp_path):
         assert again["_counters"][name]["resumed"], name
     assert again["sample"].count() == out["sample"].count()
 
-    # config change: recompute (fresh workdir keys off the cfg hash too,
-    # but the contract under test is same-workdir invalidation)
-    changed = run_curation_pipeline(
-        spark, train, wd, cfg=CurationConfig(boilerplate_frac=0.9),
-        benchmark=bench,
-    )
+    # edited constant: recompute (a fresh workdir keys off the constants
+    # too, but the contract under test is same-workdir invalidation)
+    monkeypatch.setattr(curation, "BOILERPLATE_FRAC", 0.9)
+    changed = run_curation_pipeline(spark, train, wd, benchmark=bench)
     assert not changed["_counters"]["verdicts"]["resumed"]
 
 

@@ -5,10 +5,8 @@ guards (id monotonicity, config drift)."""
 import pytest
 from pyspark.sql import functions as F
 
-from wiki_entity_linker_spark.plans.curation import (
-    CurationConfig,
-    run_curation_pipeline,
-)
+from wiki_entity_linker_spark.plans import curation
+from wiki_entity_linker_spark.plans.curation import run_curation_pipeline
 from wiki_entity_linker_spark.plans.checkpoint import (
     ParquetStore,
     chain_base,
@@ -90,7 +88,7 @@ def test_two_level_chain(spark, replay):
         assert _rows(full_rows) == _rows(chained, full_rows.columns), name
 
 
-def test_guards(spark, replay):
+def test_guards(spark, replay, monkeypatch):
     _, _, _, root, train, batch, bench = replay
     # id-monotonicity: re-appending already-seen ids must raise
     with pytest.raises(ValueError, match="id-monotonic"):
@@ -98,11 +96,13 @@ def test_guards(spark, replay):
             spark, str(root / "base"), train.limit(5), str(root / "bad1"),
             benchmark=bench,
         )
-    # config drift: different thresholds must raise, not silently diverge
+    # config drift: a base built under other constants must raise, not
+    # silently diverge
+    monkeypatch.setattr(curation, "BOILERPLATE_FRAC", 0.5)
     with pytest.raises(ValueError, match="config differs"):
         run_curation_increment(
             spark, str(root / "base"), batch, str(root / "bad2"),
-            cfg=CurationConfig(boilerplate_frac=0.5), benchmark=bench,
+            benchmark=bench,
         )
 
 

@@ -318,17 +318,19 @@ def test_compact_chain_then_append(spark, tiny_corpus_dir, tmp_path):
     inc1["_cleanup"](), inc2["_cleanup"](), full["_cleanup"]()
 
 
-def test_incremental_combined_stopword_cap_on_intra_pairs(spark, tmp_path):
+def test_incremental_combined_stopword_cap_on_intra_pairs(
+    spark, tmp_path, monkeypatch
+):
     """The stopword cap must gate batch-internal pairs on COMBINED old+new
     block sizes, not batch-only sizes: a block over the cap contributes no
     pairs at all in a full recompute, so the incremental append must not
     mint batch-internal pairs from its batch slice either (over-merge).
 
     Fixture: three files sharing only a path-stem/fname block (pairwise
-    disjoint token sets, distinct def names). jaccard_threshold=0 turns ANY
+    disjoint token sets, distinct def names). JACCARD_THRESHOLD=0 turns ANY
     generated pair into an edge, so the partitions diverge iff the cap leaks.
     """
-    from wiki_entity_linker_spark.plans.er_pipeline import ERConfig
+    from wiki_entity_linker_spark.plans import er_pipeline
 
     rows = [
         ("r1", "a/util.py", "c1", "python",
@@ -342,20 +344,22 @@ def test_incremental_combined_stopword_cap_on_intra_pairs(spark, tmp_path):
     src = spark.createDataFrame(rows, schema)
     base = src.filter(F.col("repo") == "r1")
     batch = src.filter(F.col("repo") != "r1")
-    cfg = ERConfig(jaccard_threshold=0.0, stopword_block_max=2, salt_cap=2)
+    monkeypatch.setattr(er_pipeline, "JACCARD_THRESHOLD", 0.0)
+    monkeypatch.setattr(er_pipeline, "STOPWORD_BLOCK_MAX", 2)
+    monkeypatch.setattr(er_pipeline, "SALT_CAP", 2)
 
-    full = run_er_pipeline(spark, src, None, str(tmp_path / "full"), cfg=cfg)
+    full = run_er_pipeline(spark, src, None, str(tmp_path / "full"))
     want = _normalized(_assign_map(full["assignment"]))
     # the shared stem/fname blocks hold all 3 files (over the cap of 2) and
     # are the ONLY shared blocks, so the full run keeps everything singleton
     assert len(set(want.values())) == 3
 
-    run_er_pipeline(spark, base, None, str(tmp_path / "base"), cfg=cfg)
+    run_er_pipeline(spark, base, None, str(tmp_path / "base"))
     inc = run_er_incremental(
-        spark, str(tmp_path / "base"), batch, str(tmp_path / "inc"), cfg=cfg
+        spark, str(tmp_path / "base"), batch, str(tmp_path / "inc")
     )
     # pre-fix: the batch slice of the stem block (2 files ≤ cap) minted an
-    # intra pair and jaccard_threshold=0 merged r2/r3 — an over-merge no
+    # intra pair and JACCARD_THRESHOLD=0 merged r2/r3 — an over-merge no
     # full recompute produces
     assert inc["pairs"].count() == 0
     assert _normalized(_assign_map(inc["assignment"])) == want

@@ -1,17 +1,25 @@
-"""Every defaulted parameter of a product function is set by some call.
+"""Every defaulted option of a product function or dataclass is set by some call.
 
-A parameter that no call in the repository passes with a value other than
-its default is a constant dressed as an option: it doubles the
-configurations the tests should cover and guards branches nothing runs.
-This is a pure-AST check (no Spark session). It reads every call in the
-package, ``bench.py``, ``bench_extra.py``, ``__spark_entry__.py``,
-``scripts/``, ``perfbench/`` and ``tests/``, and fails on a defaulted
-parameter of a package function (``queries.py`` excepted: its functions
-are the registered queries and their oracle SQL generators) that every call
-leaves at its default. Names defined more than once in the package are
-skipped, since a call cannot be told apart by name. ``from m import f as
-g`` aliases resolve to ``f``. A call that splats ``*args``/``**kwargs`` counts
-as setting every parameter.
+An option that no call in the repository sets to a value other than its
+default is a constant dressed as an option: it doubles the configurations
+the tests should cover and guards branches nothing runs. This is a pure-AST
+check (no Spark session). It reads every call in the package, ``bench.py``,
+``bench_extra.py``, ``__spark_entry__.py``, ``scripts/``, ``perfbench/`` and
+``tests/``, and fails on
+
+* a defaulted parameter of a package function (``queries.py`` excepted: its
+  functions are the registered queries and their oracle SQL generators)
+  that every call leaves at its default;
+* a field of a package dataclass with a literal default that no
+  constructor call (keyword or positional) and no attribute assignment
+  sets to another value.
+
+Names defined more than once in the package are skipped, since a call
+cannot be told apart by name. ``from m import f as g`` aliases resolve to
+``f``. A call that splats ``*args``/``**kwargs`` counts as setting every
+parameter. Module-level constants of the package fold to their values
+before a passed value is compared with the default, so passing
+``DEFAULT_N_HASHES`` where the default is ``16`` leaves it at the default.
 """
 
 import ast
@@ -20,12 +28,16 @@ import os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "wiki_entity_linker_spark"
 
-# Pipeline entry points take their run settings from the caller.
-ENTRY_PREFIXES = ("run_", "compact_")
-# Deployment settings and the benchmark's own call contract.
 ALLOWED = {
+    # deployment settings: where stage tables live and how often a stream
+    # compacts its chain
     ("*", "store"),
     ("*", "store_factory"),
+    ("*", "compact_every"),
+    # data inputs: a pipeline runs with or without them
+    ("*", "alias_dict"),
+    ("*", "labeled_pairs"),
+    ("*", "benchmark"),
     ("cluster_conf_profile", "*"),
     # perfbench/worker.py names these two, and perfbench/ is benchmark code
     ("evaluate_against_labeled_pairs", "id_col"),
@@ -45,29 +57,108 @@ def _sources():
 
 
 def _exempt(rel: str, fn: str, param: str) -> bool:
-    if rel.startswith(f"{PKG}/fixtures/") or fn.startswith(ENTRY_PREFIXES):
-        return True
-    if fn.startswith("streaming_") and fn.endswith("_append"):
+    if rel.startswith(f"{PKG}/fixtures/"):
         return True
     return bool({(fn, param), ("*", param), (fn, "*")} & ALLOWED)
 
 
-def _unset_params() -> list[str]:
+_NOT_LITERAL = object()
+
+
+def _literal(node: ast.AST):
+    """The value of a literal expression, else ``_NOT_LITERAL``."""
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return _NOT_LITERAL
+
+
+def _module_constants(pkg_trees) -> dict:
+    """name -> value of every module-level ``NAME = <literal>`` in the
+    package; a name bound to two different values is left out."""
+    seen: dict = {}
+    for tree in pkg_trees:
+        for node in tree.body:
+            if (
+                isinstance(node, ast.Assign)
+                and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)
+            ):
+                v = _literal(node.value)
+                if v is not _NOT_LITERAL:
+                    seen.setdefault(node.targets[0].id, []).append(v)
+    return {k: vs[0] for k, vs in seen.items() if all(v == vs[0] for v in vs)}
+
+
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    for d in cls.decorator_list:
+        d = d.func if isinstance(d, ast.Call) else d
+        if getattr(d, "id", None) == "dataclass" or getattr(d, "attr", None) == "dataclass":
+            return True
+    return False
+
+
+def _unset_options() -> list[str]:
     trees = {}
     for path in _sources():
         with open(path) as fh:
             trees[os.path.relpath(path, ROOT)] = ast.parse(fh.read(), path)
+    consts = _module_constants(
+        t for rel, t in trees.items() if rel.startswith(f"{PKG}/")
+    )
+
+    def value(node: ast.AST):
+        """A comparable form of an expression: its literal value (module
+        constants folded), else its AST text."""
+        name = node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
+        if isinstance(node, (ast.Name, ast.Attribute)) and name in consts:
+            v = consts[name]
+        else:
+            v = _literal(node)
+        return ("ast", ast.dump(node)) if v is _NOT_LITERAL else (type(v), v)
+
     n_defs: dict[str, int] = {}
-    defs = {}
+    # name -> (rel, is_dataclass, [(option, positional index or None,
+    # default node)])
+    options: dict[str, tuple[str, bool, list]] = {}
     for rel, tree in trees.items():
         if not rel.startswith(f"{PKG}/"):
             continue
         for node in ast.walk(tree):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 n_defs[node.name] = n_defs.get(node.name, 0) + 1
-                if rel != f"{PKG}/queries.py":
-                    defs[node.name] = (rel, node)
+                if rel == f"{PKG}/queries.py":
+                    continue
+                a = node.args
+                pos = a.posonlyargs + a.args
+                skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+                defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+                options[node.name] = (rel, False, [
+                    (p.arg, i - skip, d)
+                    for i, (p, d) in enumerate(zip(pos, defaults))
+                    if d is not None
+                ] + [
+                    (p.arg, None, d)
+                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                ])
+            elif isinstance(node, ast.ClassDef):
+                n_defs[node.name] = n_defs.get(node.name, 0) + 1
+                if not _is_dataclass(node):
+                    continue
+                fields = [
+                    s for s in node.body
+                    if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)
+                ]
+                options[node.name] = (rel, True, [
+                    (s.target.id, i, s.value)
+                    for i, s in enumerate(fields)
+                    if s.value is not None and _literal(s.value) is not _NOT_LITERAL
+                ])
+
     calls: dict[str, list[ast.Call]] = {}
+    # attribute name -> values assigned to ``<expr>.<name>`` anywhere
+    assigned: dict[str, list] = {}
     for tree in trees.values():
         alias = {
             a.asname: a.name
@@ -77,55 +168,49 @@ def _unset_params() -> list[str]:
             if a.asname
         }
         for node in ast.walk(tree):
-            if not isinstance(node, ast.Call):
-                continue
-            f = node.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            if name is not None:
-                calls.setdefault(alias.get(name, name), []).append(node)
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name is not None:
+                    calls.setdefault(alias.get(name, name), []).append(node)
+            elif isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    if isinstance(t, ast.Attribute) and node.value is not None:
+                        assigned.setdefault(t.attr, []).append(node.value)
+
     unset = []
-    for name, (rel, fn) in sorted(defs.items()):
+    for name, (rel, is_dc, opts) in sorted(options.items()):
         if n_defs[name] > 1:
             continue
-        a = fn.args
-        pos = a.posonlyargs + a.args
-        skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
-        defaulted = [
-            (p.arg, i - skip, d)
-            for i, (p, d) in enumerate(
-                zip(pos, [None] * (len(pos) - len(a.defaults)) + a.defaults)
-            )
-            if d is not None
-        ] + [
-            (p.arg, None, d)
-            for p, d in zip(a.kwonlyargs, a.kw_defaults)
-            if d is not None
-        ]
-        for param, idx, default in defaulted:
-            if _exempt(rel, name, param):
+        for opt, idx, default in opts:
+            if _exempt(rel, name, opt):
                 continue
-            want = ast.dump(default)
+            want = value(default)
 
             def sets(c: ast.Call) -> bool:
                 if any(isinstance(x, ast.Starred) for x in c.args):
                     return True
                 for k in c.keywords:
-                    if k.arg is None or (k.arg == param and ast.dump(k.value) != want):
+                    if k.arg is None or (k.arg == opt and value(k.value) != want):
                         return True
                 return (
                     idx is not None
                     and 0 <= idx < len(c.args)
-                    and ast.dump(c.args[idx]) != want
+                    and value(c.args[idx]) != want
                 )
 
-            if not any(sets(c) for c in calls.get(name, [])):
-                unset.append(f"{rel}: {name}({param}={ast.unparse(default)})")
+            if any(sets(c) for c in calls.get(name, [])):
+                continue
+            if is_dc and any(value(v) != want for v in assigned.get(opt, [])):
+                continue
+            unset.append(f"{rel}: {name}({opt}={ast.unparse(default)})")
     return unset
 
 
 def test_every_defaulted_parameter_is_set_by_some_call():
-    unset = _unset_params()
+    unset = _unset_options()
     assert not unset, (
-        f"{len(unset)} parameter(s) that no call sets to a non-default "
+        f"{len(unset)} option(s) that no call sets to a non-default "
         "value; make each a constant:\n" + "\n".join(unset)
     )

@@ -7,14 +7,14 @@
 """
 
 import hashlib
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.eval.pairwise import evaluate_against_labeled_pairs
 from wiki_entity_linker_spark.operators.blocking import with_file_id
-from wiki_entity_linker_spark.plans.er_pipeline import ERConfig, run_er_pipeline
+from wiki_entity_linker_spark.plans import er_pipeline
+from wiki_entity_linker_spark.plans.er_pipeline import run_er_pipeline
 
 
 @pytest.fixture(scope="module")
@@ -64,17 +64,21 @@ def test_oracle_self_check(spark, tiny_corpus_dir):
     assert (m["precision"], m["recall"], m["f1"]) == (1.0, 1.0, 1.0)
 
 
-def test_resume_and_invalidation(spark, tiny_corpus_dir, pipeline_out, tmp_path):
+def test_resume_and_invalidation(
+    spark, tiny_corpus_dir, pipeline_out, tmp_path, monkeypatch
+):
     out, wd, sf, lp = pipeline_out
     again = run_er_pipeline(spark, sf, lp, wd)
     assert all(v.get("resumed") for k, v in again["_counters"].items())
-    # changed params must recompute — on a COPY of the workdir, because the
-    # recompute overwrites stage parquet that other tests' lazy DFs reference
+    # an edited constant must recompute — on a COPY of the workdir, because
+    # the recompute overwrites stage parquet that other tests' lazy DFs
+    # reference
     import shutil
 
     wd2 = str(tmp_path / "er_run_copy")
     shutil.copytree(wd, wd2)
-    changed = run_er_pipeline(spark, sf, lp, wd2, ERConfig(jaccard_threshold=0.9))
+    monkeypatch.setattr(er_pipeline, "JACCARD_THRESHOLD", 0.9)
+    changed = run_er_pipeline(spark, sf, lp, wd2)
     assert not any(v.get("resumed") for v in changed["_counters"].values())
 
 
@@ -124,10 +128,6 @@ def test_pathological_exact_dup_group_no_giant_rows(spark, tmp_path):
     """VERDICT r1 #3: one 10^5-member exact-dup group (think empty files /
     LICENSE boilerplate at 10^12-file scale) must flow through the pipeline
     as flat joins — no row may ever carry a group-sized array."""
-    from pyspark.sql import functions as F
-
-    from wiki_entity_linker_spark.plans.er_pipeline import ERConfig, run_er_pipeline
-
     n_dup = 100_000
     dup = spark.range(n_dup).select(
         F.lit("r0").alias("repo"),
@@ -150,7 +150,6 @@ def test_pathological_exact_dup_group_no_giant_rows(spark, tmp_path):
         dup.unionByName(distinct),
         None,
         workdir=str(tmp_path / "wd"),
-        cfg=ERConfig(),
         checkpoint=False,
     )
     # no array-typed column anywhere in the exact-group/assignment path
@@ -173,71 +172,3 @@ def test_pathological_exact_dup_group_no_giant_rows(spark, tmp_path):
         .count()
     )
     assert n_comp_dup == 1
-
-
-def test_one_to_one_matching_stage(spark, tiny_corpus_dir, tmp_path):
-    """cfg.one_to_one adds out["matching"]: a greedy locally-dominant
-    matching over the above-threshold scored representative pairs, running
-    on the pipeline's sha256 STRING ids and equal to the sequential greedy
-    (score desc, id_a asc, id_b asc) over the same candidate edges."""
-    sf = spark.read.parquet(f"{tiny_corpus_dir}/source_files.parquet")
-    lp = spark.read.parquet(f"{tiny_corpus_dir}/labeled_pairs.parquet")
-    cfg = ERConfig(one_to_one=True)
-    out = run_er_pipeline(spark, sf, lp, str(tmp_path / "oto"), cfg=cfg)
-
-    got = sorted(
-        (r["id_a"], r["id_b"], r["score"])
-        for r in out["matching"].collect()
-    )
-    assert got, "matching stage produced no pairs on the fixture"
-    assert all(isinstance(ea, str) and isinstance(eb, str) for ea, eb, _ in got)
-    nodes = [n for ea, eb, _ in got for n in (ea, eb)]
-    assert len(nodes) == len(set(nodes)), "matching is not one-to-one"
-
-    # sequential greedy reference over the SAME candidate edge set
-    edges = [
-        (r["id_a"], r["id_b"],
-         round(max(r["shingle_jaccard"], r["tf_cosine"]), 9))
-        for r in out["scores"].collect()
-        if r["shingle_jaccard"] >= cfg.jaccard_threshold
-        or r["tf_cosine"] >= cfg.cosine_threshold
-    ]
-    best = {}
-    for ea, eb, s in edges:  # max-score dedup of duplicate pairs
-        best[(ea, eb)] = max(s, best.get((ea, eb), -1.0))
-    taken, ref = set(), []
-    for (ea, eb), s in sorted(best.items(), key=lambda e: (-e[1], e[0])):
-        if ea != eb and ea not in taken and eb not in taken:
-            taken.update((ea, eb))
-            ref.append((ea, eb, s))
-    assert got == sorted(ref)
-    # the matching's round cuts are local checkpoints: the only durable
-    # table it writes is the `matching` stage itself
-    assert not [
-        f for f in os.listdir(tmp_path / "oto") if f.startswith("ldm_")
-    ]
-
-
-def test_snm_blocking_union(spark, tiny_corpus_dir, tmp_path):
-    """cfg.snm_window unions sorted-neighborhood stem pairs into the
-    candidate set: candidates grow (near-miss stems that never collide on
-    an exact key), scoring still rejects non-matches (F1 stays 1.0), and
-    the incremental path refuses the flag instead of silently diverging."""
-    from wiki_entity_linker_spark.plans.er_incremental import run_er_incremental
-
-    sf = spark.read.parquet(f"{tiny_corpus_dir}/source_files.parquet")
-    lp = spark.read.parquet(f"{tiny_corpus_dir}/labeled_pairs.parquet")
-    base = run_er_pipeline(spark, sf, lp, str(tmp_path / "plain"))
-    snm = run_er_pipeline(
-        spark, sf, lp, str(tmp_path / "snm"), cfg=ERConfig(snm_window=4)
-    )
-    n_base, n_snm = base["pairs"].count(), snm["pairs"].count()
-    assert n_snm > n_base, (n_base, n_snm)
-    m = {r["slice"]: r.asDict() for r in snm["metrics"].collect()}
-    assert m["all"]["f1"] >= 0.99, m
-
-    with pytest.raises(ValueError, match="snm_window"):
-        run_er_incremental(
-            spark, str(tmp_path / "snm"), sf.limit(1),
-            str(tmp_path / "append"), cfg=ERConfig(snm_window=4),
-        )

@@ -239,6 +239,20 @@ def test_jsonl_sink_roundtrip(spark, tmp_path):
     assert back.select(F.explode("labels")).count() == 20
 
 
+def test_tsv_sink_roundtrip(spark, tmp_path):
+    """S8: rows written with write_tsv re-read exactly through read_tsv —
+    the sink writes no header row for the headerless reader to take as
+    data, in any of its part files."""
+    from wiki_entity_linker_spark.sources.tables import write_tsv
+
+    rows = [("Q1", 3), ("Q2", 5), ("Q3", 7)]
+    df = spark.createDataFrame(rows, "qid string, n int").repartition(3)
+    out = str(tmp_path / "out_tsv")
+    write_tsv(df, out)
+    back = read_tsv(spark, out, "qid string, n int")
+    assert sorted(map(tuple, back.collect())) == rows
+
+
 def test_nif_prediction_reader(spark):
     """NIF turtle → MENTION_SCHEMA: context blocks define article order,
     mentions join via referenceContext, QIDs extracted from taIdentRef."""

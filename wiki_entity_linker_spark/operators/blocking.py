@@ -66,7 +66,7 @@ def minhash_from_shingles(
     return _minhash_from_hash_rows(ex, id_col, n_hashes)
 
 
-def minhash_from_hashes(df: DataFrame, n_hashes: int = DEFAULT_N_HASHES) -> DataFrame:
+def minhash_from_hashes(df: DataFrame) -> DataFrame:
     """MinHash signatures from a precomputed int64 shingle-HASH array.
 
     The ER pipeline hashes each doc's shingles exactly once (xxhash64, no
@@ -81,7 +81,7 @@ def minhash_from_hashes(df: DataFrame, n_hashes: int = DEFAULT_N_HASHES) -> Data
         # mask rather than abs (abs(Long.MIN_VALUE) stays negative on the JVM)
         F.col("h0").bitwiseAND(F.lit(0x0FFFFFFFFFFFFFFF)).alias("hs"),
     )
-    return _minhash_from_hash_rows(ex, "file_id", n_hashes)
+    return _minhash_from_hash_rows(ex, "file_id", DEFAULT_N_HASHES)
 
 
 def _minhash_from_hash_rows(ex: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
@@ -95,14 +95,11 @@ def _minhash_from_hash_rows(ex: DataFrame, id_col: str, n_hashes: int) -> DataFr
     )
 
 
-def lsh_band_blocks(
-    sig_df: DataFrame,
-    id_col: str = "file_id",
-    bands: int = DEFAULT_BANDS,
-    n_hashes: int = DEFAULT_N_HASHES,
-) -> DataFrame:
-    """(id, block_key) — one row per band; identical band slice → same key."""
-    rows = n_hashes // bands
+def lsh_band_blocks(sig_df: DataFrame, id_col: str = "file_id") -> DataFrame:
+    """(id, block_key) — one row per band over ``DEFAULT_N_HASHES``-long
+    signatures; identical band slice → same key."""
+    bands = DEFAULT_BANDS
+    rows = DEFAULT_N_HASHES // bands
     band_keys = F.array(
         *[
             F.concat_ws(
@@ -137,27 +134,17 @@ def def_name_keys() -> "F.Column":
     )
 
 
-def alias_blocks(df: DataFrame) -> DataFrame:
-    """(id, block_key) from alias keys — the dictionary-blocking recast.
+def alias_blocks_from_features(feats: DataFrame) -> DataFrame:
+    """(file_id, block_key) from alias keys — the dictionary-blocking recast.
 
     Two alias sources, mirroring the reference's union of name/alias/synonym
-    dictionaries (entity_database.py:85-100):
-    * the path stem (filename without extension, normalized), and
-    * defined top-level names (first identifier after a definition keyword),
-      extracted with ``regexp_extract_all`` — the link-anchor analogue.
+    dictionaries (entity_database.py:85-100), read from precomputed feature
+    columns so the ER pipeline derives ALL blocking keys from its one
+    compact per-doc feature table instead of re-reading raw content:
+    * ``stem``: the path stem (:func:`path_stem_key`), and
+    * ``defs``: defined top-level names (:func:`def_name_keys`) — the
+      link-anchor analogue.
     """
-    feats = df.select(
-        F.col("file_id"),
-        path_stem_key().alias("stem"),
-        def_name_keys().alias("defs"),
-    )
-    return alias_blocks_from_features(feats)
-
-
-def alias_blocks_from_features(feats: DataFrame) -> DataFrame:
-    """alias_blocks from precomputed (stem, defs) feature columns — lets the
-    ER pipeline derive ALL blocking keys from the one compact per-doc
-    feature table instead of re-reading raw content."""
     stems = feats.select(
         F.col("file_id"), F.concat(F.lit("stem:"), F.col("stem")).alias("block_key")
     )

@@ -37,6 +37,9 @@ _CLOSURE_LOCAL_SOLVE_EDGES = 4_096
 # Relabel maps at or under this many rows are broadcast (see
 # :func:`broadcast_if_small`): ~150 B/row driver-side for sha256 labels.
 _BROADCAST_MAP_ROWS = 500_000
+# Star-contraction rounds before connected components gives up and raises;
+# rounds needed ≈ log2(graph diameter).
+_CC_MAX_ITER = 20
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -124,7 +127,7 @@ def _local_union_find(spark, e: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, out_schema)  # Arrow path back up
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """→ ``(id, component)`` where component = min node id of the component.
 
     Nodes appearing only as isolated vertices must be handled by the caller
@@ -159,7 +162,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     prev = _stats(e)
     if prev[0] <= _CC_LOCAL_SOLVE_EDGES:
         return _local_union_find(spark, e)
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ITER):
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         cur = _stats(e)
         if cur[0] <= _CC_LOCAL_SOLVE_EDGES:
@@ -173,8 +176,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         # (id, component) rows; the dropDuplicates below would pick one
         # arbitrarily and return silently-wrong labels. Fail loudly instead.
         raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; raise max_iter (rounds needed ≈ log2(graph diameter))."
+            f"connected_components did not converge within {_CC_MAX_ITER} "
+            "rounds; raise _CC_MAX_ITER (rounds needed ≈ log2(graph diameter))."
         )
     # e is now (member, root≈min); close the one remaining level of
     # indirection (star edges may still point at a non-root after the last
@@ -187,10 +190,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 
 
 def components_with_singletons(
-    nodes: DataFrame, edges: DataFrame, id_col: str = "file_id", max_iter: int = 20,
+    nodes: DataFrame, edges: DataFrame, id_col: str = "file_id"
 ) -> DataFrame:
     """All nodes labeled: edge components + singletons as their own id."""
-    comp = connected_components(edges, max_iter=max_iter)
+    comp = connected_components(edges)
     return (
         nodes.select(F.col(id_col).alias("id"))
         .dropDuplicates(["id"])
@@ -342,7 +345,6 @@ def merge_components(
     old_comps: DataFrame,
     edges: DataFrame,
     new_nodes: DataFrame,
-    max_iter: int = 20,
     return_map: bool = False,
 ) -> DataFrame:
     """Absorb a batch of new nodes into an existing components labeling
@@ -407,12 +409,8 @@ def merge_components(
         .unionByName(e.select(F.col("id_a").alias("id")))
         .unionByName(e.select(F.col("id_b").alias("id")))
     )
-    mini = components_with_singletons(
-        nodes,
-        e,
-        id_col="id",
-        max_iter=max_iter,
-    ).localCheckpoint(eager=True)  # consumed 3×: merge map, relabel, new rows
+    # consumed 3×: merge map, relabel, new rows
+    mini = components_with_singletons(nodes, e, id_col="id").localCheckpoint(eager=True)
     # touched-cluster relabel map: rows of the mini solve whose node id IS an
     # old component label; batch-sized by construction → broadcast when it
     # actually fits (broadcast_if_small)

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.operators.argmax import top1_deterministic
-from wiki_entity_linker_spark.plans.linking import evaluate_linking, link_articles
+from wiki_entity_linker_spark.plans.coref import add_coref_links
+from wiki_entity_linker_spark.plans.linking import link_articles
 from wiki_entity_linker_spark.sources.tables import read_articles_jsonl
 
 BENCHMARK = "/root/reference/benchmarks/wiki-fair-v2.benchmark.jsonl"
@@ -37,6 +38,8 @@ GOLDEN = (
     "/root/reference/evaluation-results/baseline/"
     "baseline.wiki-fair-v2.eval_results.json"
 )
+#: longest mention n-gram the demo's linker proposes
+MAX_NGRAM = 5
 
 
 def hyperlink_alias_dict(
@@ -95,8 +98,6 @@ def hyperlink_alias_dict(
 def run_benchmark_demo(
     spark: SparkSession,
     benchmark_path: str = BENCHMARK,
-    max_ngram: int = 5,
-    with_coref: bool = True,
     alias_source: str = "anchors+names",
 ) -> dict:
     """→ eval_results-shaped dict (ELEVANT semantics, both modes) with the
@@ -115,15 +116,13 @@ def run_benchmark_demo(
     alias_dict = hyperlink_alias_dict(
         articles, include_label_names=alias_source == "anchors+names"
     )
-    preds = link_articles(articles, alias_dict, max_ngram=max_ngram)
-    if with_coref:
-        from wiki_entity_linker_spark.plans.coref import add_coref_links
-        # measured sweep on wiki-fair-v2: all-kinds 0.6242, person-only
-        # 0.6493, person + uniqueness-gated nominals 0.6521 — the enabled
-        # configuration; thing/group pronouns remain available but cost
-        # net F1 here
-        preds = add_coref_links(articles, preds, entity_types(articles),
-                                kinds=("person", "nominal"))
+    preds = link_articles(articles, alias_dict, max_ngram=MAX_NGRAM)
+    # measured sweep on wiki-fair-v2: all-kinds 0.6242, person-only
+    # 0.6493, person + uniqueness-gated nominals 0.6521 — the enabled
+    # configuration; thing/group pronouns remain available but cost
+    # net F1 here
+    preds = add_coref_links(articles, preds, entity_types(articles),
+                            kinds=("person", "nominal"))
     res = results_dict(
         evaluate_cases(articles, preds.select(
             "article_id", "start", "end", "entity_id")))

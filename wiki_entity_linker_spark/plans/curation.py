@@ -14,7 +14,7 @@ the chain a pretraining-data team actually runs over a crawl snapshot:
 
 Every stage is a checkpointed stage table with lineage counters (the
 er_pipeline.py discipline: re-running the same workdir resumes instantly,
-changing any CurationConfig field or the input invalidates downstream).
+editing any curation constant or the input invalidates downstream).
 Each component keeps its documented scale shape — nothing here adds a
 shuffle beyond what the operators already do; the assembly is doc_id /
 source equi-joins and broadcast summary frames.
@@ -25,8 +25,6 @@ resumable Spark stage tables over a documents corpus.
 """
 
 from __future__ import annotations
-
-from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -49,16 +47,31 @@ from wiki_entity_linker_spark.plans.checkpoint import StageManager, write_json_a
 from wiki_entity_linker_spark.plans.er_pipeline import _input_fingerprint
 
 
-@dataclass
-class CurationConfig:
-    substr_k: int = 5           # ExactSubstr minimum-match gram length
-    seg_len: int = 8            # CCNet-style segment length (tokens)
-    boilerplate_frac: float = 0.25   # drop docs above this dup coverage
-    decontam_k: int = 3         # benchmark-overlap n-gram length
-    token_budget: int = 1_000_000    # total training-token budget
-    temperature: float = 0.5    # mixture weight ∝ tokens^temperature (α<1)
-    eval_per_stratum: int = 3   # eval docs per (source, length-quartile)
-    extra: dict = field(default_factory=dict)
+#: the pipeline's thresholds and budgets. Every stage reads these, and
+#: :func:`resume_params` folds them into the resume key and into
+#: ``curation_meta.json``, so editing one invalidates an old workdir and
+#: makes an append onto it raise.
+SUBSTR_K = 5  # ExactSubstr minimum-match gram length
+SEG_LEN = 8  # CCNet-style segment length (tokens)
+BOILERPLATE_FRAC = 0.25  # drop docs above this dup coverage
+DECONTAM_K = 3  # benchmark-overlap n-gram length
+TOKEN_BUDGET = 1_000_000  # total training-token budget
+TEMPERATURE = 0.5  # mixture weight ∝ tokens^temperature (α<1)
+EVAL_PER_STRATUM = 3  # eval docs per (source, length-quartile)
+
+
+def resume_params() -> dict:
+    """The constants above as the StageManager params of a full run and of
+    an append (plans/curation_incremental.py)."""
+    return {
+        "substr_k": SUBSTR_K,
+        "seg_len": SEG_LEN,
+        "boilerplate_frac": BOILERPLATE_FRAC,
+        "decontam_k": DECONTAM_K,
+        "token_budget": TOKEN_BUDGET,
+        "temperature": TEMPERATURE,
+        "eval_per_stratum": EVAL_PER_STRATUM,
+    }
 
 
 def exact_hash_table(docs: DataFrame) -> DataFrame:
@@ -71,24 +84,22 @@ def exact_hash_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def verdict_expr(boilerplate_frac: float):
+def verdict_expr():
     """The verdict decision column over (doc_id, canonical_id,
     substr_dup_frac, seg_dup_frac) — shared by the full run and the
     incremental append so both label identically."""
-    thr = float(boilerplate_frac)
     return (
         F.when(F.col("canonical_id") != F.col("doc_id"), "drop_exact_dup")
         .when(
-            (F.col("substr_dup_frac") > thr) | (F.col("seg_dup_frac") > thr),
+            (F.col("substr_dup_frac") > BOILERPLATE_FRAC)
+            | (F.col("seg_dup_frac") > BOILERPLATE_FRAC),
             "drop_boilerplate",
         )
         .otherwise("keep")
     )
 
 
-def assemble_verdicts(
-    ex: DataFrame, sub: DataFrame, seg: DataFrame, boilerplate_frac: float
-) -> DataFrame:
+def assemble_verdicts(ex: DataFrame, sub: DataFrame, seg: DataFrame) -> DataFrame:
     """Final verdict assembly from the three tier frames — shared by the
     full run and the incremental append so both label identically.
     ``ex``: (doc_id, canonical_id); ``sub``: (doc_id, n_tokens,
@@ -115,30 +126,26 @@ def assemble_verdicts(
         "canonical_id",
         "substr_dup_frac",
         "seg_dup_frac",
-        verdict_expr(boilerplate_frac).alias("verdict"),
+        verdict_expr().alias("verdict"),
     )
 
 
 def _cut(df: DataFrame, mgr, name: str) -> DataFrame:
     """Materialize a multiply-consumed intermediate exactly once.
 
-    With an enabled
-    :class:`~wiki_entity_linker_spark.plans.checkpoint.StageManager` the cut
-    is a durable stage table: executor failure replays from the stage
-    table, and re-runs resume it. Otherwise (``mgr=None`` or a passthrough
-    manager) it is ``localCheckpoint(eager=True)`` — executor-volatile, but
-    it truncates lineage, which a passthrough stage (a lazy ``persist``)
-    would not."""
-    if mgr is None or not mgr.enabled:
+    With a :class:`~wiki_entity_linker_spark.plans.checkpoint.StageManager`
+    the cut is a durable stage table: executor failure replays from the
+    stage table, and re-runs resume it. With ``mgr=None`` it is
+    ``localCheckpoint(eager=True)`` — executor-volatile, but it truncates
+    lineage."""
+    if mgr is None:
         return df.localCheckpoint(eager=True)
     return mgr.stage(name, lambda: df)
 
 
-def dedup_verdict_table(
-    docs: DataFrame, cfg: CurationConfig, mgr=None
-) -> DataFrame:
+def dedup_verdict_table(docs: DataFrame, mgr=None) -> DataFrame:
     """One verdict per document from the three exact-dedup tiers (the
-    registered ``dedup_verdicts`` query runs it with the defaults):
+    registered ``dedup_verdicts`` query runs it too):
     'drop_exact_dup' for a later copy of an identical doc,
     'drop_boilerplate' above the duplicate-coverage threshold, else 'keep'.
 
@@ -160,15 +167,13 @@ def dedup_verdict_table(
         docs.select("doc_id", tokenize("text").alias("t")), mgr, "verdict_toks"
     )
     grams = _cut(
-        substring_gram_rows(toks, cfg.substr_k), mgr, "exact_substring_grams"
+        substring_gram_rows(toks, SUBSTR_K), mgr, "exact_substring_grams"
     )
-    segs = _cut(segment_rows(toks, cfg.seg_len), mgr, "segment_dedup_seg")
-    sub = substring_coverage(grams, toks, cfg.substr_k).select(
+    segs = _cut(segment_rows(toks, SEG_LEN), mgr, "segment_dedup_seg")
+    sub = substring_coverage(grams, toks, SUBSTR_K).select(
         "doc_id", "n_tokens", F.col("covered_frac").alias("substr_dup_frac")
     )
-    return assemble_verdicts(
-        ex, sub, segment_stats(segs, segs), cfg.boilerplate_frac
-    )
+    return assemble_verdicts(ex, sub, segment_stats(segs, segs))
 
 
 def kept_table(
@@ -228,17 +233,16 @@ def contamination_flags(
     )
 
 
-def mixture_table(kept: DataFrame, cfg: CurationConfig) -> DataFrame:
+def mixture_table(kept: DataFrame) -> DataFrame:
     """Temperature-weighted per-source token allocation with exact
     largest-remainder rounding over the KEPT corpus (the registered
-    ``mixture_allocation`` query runs it over the whole corpus with the
-    defaults). All windows run over the #sources-row summary frame —
-    metadata-scale by construction."""
-    budget = int(cfg.token_budget)
+    ``mixture_allocation`` query runs it over the whole corpus). All
+    windows run over the #sources-row summary frame — metadata-scale by
+    construction."""
     per = kept.groupBy("source").agg(F.sum("n_tokens").alias("n_tokens"))
     w_all = Window.partitionBy()
-    wt = F.pow(F.col("n_tokens").cast("double"), float(cfg.temperature))
-    t = per.withColumn("target", F.lit(budget) * wt / F.sum(wt).over(w_all))
+    wt = F.pow(F.col("n_tokens").cast("double"), TEMPERATURE)
+    t = per.withColumn("target", F.lit(TOKEN_BUDGET) * wt / F.sum(wt).over(w_all))
     r = (
         t.withColumn("base", F.floor("target"))
         .withColumn(
@@ -256,7 +260,7 @@ def mixture_table(kept: DataFrame, cfg: CurationConfig) -> DataFrame:
             ),
         )
         .withColumn(
-            "leftover", F.lit(budget) - F.sum(F.floor("target")).over(w_all)
+            "leftover", F.lit(TOKEN_BUDGET) - F.sum(F.floor("target")).over(w_all)
         )
     )
     alloc = F.col("base") + F.when(F.col("rk") <= F.col("leftover"), 1).otherwise(0)
@@ -357,9 +361,7 @@ def run_curation_pipeline(
     spark: SparkSession,
     documents: DataFrame,
     workdir: str,
-    cfg: CurationConfig | None = None,
     benchmark: DataFrame | None = None,
-    checkpoint: bool = True,
     store=None,
 ) -> dict[str, DataFrame]:
     """End-to-end curation over a ``(doc_id, source, text)`` corpus.
@@ -368,38 +370,36 @@ def run_curation_pipeline(
     is given), ``kept``, ``mixture``, ``sample``, ``eval_slice``,
     ``report`` (per-source accounting), plus ``_counters`` with per-stage
     lineage (rows_out, partitions, resumed) — the same resume/invalidate
-    contract as run_er_pipeline: identical workdir + config + input resumes
-    every stage; changing any of them recomputes from the changed stage on.
+    contract as run_er_pipeline: identical workdir + constants + input
+    resumes every stage; changing any of them recomputes from the changed
+    stage on.
     """
-    cfg = cfg or CurationConfig()
     mgr = StageManager(
         spark,
         workdir,
-        asdict(cfg)
+        resume_params()
         | {
             "input": _input_fingerprint(documents),
             "benchmark": None if benchmark is None else _input_fingerprint(benchmark),
         },
-        enabled=checkpoint,
         store=store,
     )
-    if checkpoint:
-        # the incremental append validates its cfg against the base run's
-        write_json_atomic(
-            os.path.join(workdir, "curation_meta.json"), {"cfg": asdict(cfg)}
-        )
+    # the incremental append checks its constants against the base run's
+    write_json_atomic(
+        os.path.join(workdir, "curation_meta.json"), {"cfg": resume_params()}
+    )
 
     docs = documents.select("doc_id", "source", "text")
 
     verdicts = mgr.stage(
-        "verdicts", lambda: dedup_verdict_table(docs, cfg, mgr=mgr)
+        "verdicts", lambda: dedup_verdict_table(docs, mgr=mgr)
     )
 
     contaminated = None
     if benchmark is not None:
         contaminated = mgr.stage(
             "contamination",
-            lambda: contamination_flags(docs, benchmark, cfg.decontam_k),
+            lambda: contamination_flags(docs, benchmark, DECONTAM_K),
         )
 
     kept = mgr.stage(
@@ -409,11 +409,11 @@ def run_curation_pipeline(
         ),
     )
 
-    mixture = mgr.stage("mixture", lambda: mixture_table(kept, cfg))
+    mixture = mgr.stage("mixture", lambda: mixture_table(kept))
     sample = mgr.stage("sample", lambda: budget_sample(kept, mixture))
     eval_slice = mgr.stage(
         "eval_slice",
-        lambda: stratified_eval_slice(kept, cfg.eval_per_stratum),
+        lambda: stratified_eval_slice(kept, EVAL_PER_STRATUM),
     )
 
     def _report() -> DataFrame:

@@ -52,7 +52,6 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -71,14 +70,17 @@ from wiki_entity_linker_spark.plans.checkpoint import (
     write_chain_base,
     write_json_atomic,
 )
+# the curation constants are read as cur.<NAME> at call time, so a patched
+# constant reaches the full run and the append alike
+from wiki_entity_linker_spark.plans import curation as cur
 from wiki_entity_linker_spark.plans.curation import (
-    CurationConfig,
     assemble_verdicts,
     budget_sample,
     contamination_flags,
     exact_hash_table,
     kept_table,
     mixture_table,
+    resume_params,
     stratified_eval_slice,
     verdict_expr,
 )
@@ -120,7 +122,6 @@ def run_curation_increment(
     base_workdir: str,
     new_docs: DataFrame,
     out_workdir: str,
-    cfg: CurationConfig | None = None,
     benchmark: DataFrame | None = None,
     store_factory=ParquetStore,
 ) -> dict[str, DataFrame]:
@@ -130,19 +131,19 @@ def run_curation_increment(
     tests/test_curation_incremental.py). See the module docstring for the
     per-tier reasoning and cost model. ``store_factory(workdir) -> store``
     picks the store of ``out_workdir`` and of every base chain level."""
-    cfg = cfg or CurationConfig()
+    params = resume_params()
     base_cfg = _load_cfg(base_workdir)
-    if base_cfg != asdict(cfg):
+    if base_cfg != params:
         raise ValueError(
             "curation increment config differs from the base run's — a "
             "chained append with different thresholds silently diverges "
-            f"from full-recompute parity (base={base_cfg}, got={asdict(cfg)})"
+            f"from full-recompute parity (base={base_cfg}, got={params})"
         )
 
     mgr = StageManager(
         spark,
         out_workdir,
-        asdict(cfg)
+        params
         | {
             "base": base_workdir,
             "batch": _input_fingerprint(new_docs),
@@ -172,7 +173,7 @@ def run_curation_increment(
             "canonical ids / segment winners would be unstable)"
         )
 
-    k, seg_len = cfg.substr_k, cfg.seg_len
+    k, seg_len = cur.SUBSTR_K, cur.SEG_LEN
 
     # --- batch-side index deltas (the only bulky writes) --------------------
     b_hashes = mgr.stage("batch_hashes", lambda: exact_hash_table(batch))
@@ -294,7 +295,7 @@ def run_curation_increment(
                 "canonical_id",
                 "substr_dup_frac",
                 "seg_dup_frac",
-                verdict_expr(cfg.boilerplate_frac).alias("verdict"),
+                verdict_expr().alias("verdict"),
             )
         )
         # batch rows: all three tiers fresh
@@ -302,7 +303,6 @@ def run_curation_increment(
             batch_exact,
             sub_cover.join(batch_ids, "doc_id", "left_semi"),
             batch_segstats,
-            cfg.boilerplate_frac,
         )
         changed = sub_cover.select("doc_id")
         return (
@@ -319,7 +319,7 @@ def run_curation_increment(
         def _cont() -> DataFrame:
             old_cont = old_store.read(spark, "contamination")
             return old_cont.unionByName(
-                contamination_flags(batch, benchmark, cfg.decontam_k)
+                contamination_flags(batch, benchmark, cur.DECONTAM_K)
             )
 
         contaminated = mgr.stage("contamination", _cont)
@@ -339,14 +339,14 @@ def run_curation_increment(
     kept = mgr.stage(
         "kept", lambda: kept_table(verdicts, sources, contaminated)
     )
-    mixture = mgr.stage("mixture", lambda: mixture_table(kept, cfg))
+    mixture = mgr.stage("mixture", lambda: mixture_table(kept))
     sample = mgr.stage("sample", lambda: budget_sample(kept, mixture))
     eval_slice = mgr.stage(
-        "eval_slice", lambda: stratified_eval_slice(kept, cfg.eval_per_stratum)
+        "eval_slice", lambda: stratified_eval_slice(kept, cur.EVAL_PER_STRATUM)
     )
 
     write_chain_base(out_workdir, base_workdir)
-    write_json_atomic(_meta_path(out_workdir), {"cfg": asdict(cfg)})
+    write_json_atomic(_meta_path(out_workdir), {"cfg": params})
 
     out: dict[str, DataFrame] = {
         "verdicts": verdicts,

@@ -51,9 +51,9 @@ Reads over a long chain pay one union (or map join) per level;
 :func:`compact_chain` rewrites the resolved view into a self-contained
 workdir and bounds the depth.
 
-Fidelity note: inside blocks larger than ``cfg.salt_cap`` the full run salts
-into chained sub-blocks (operators/skew.py), scoring only chunk-local pairs
-and relying on transitive closure; the incremental probe scores a new member
+Fidelity note: inside blocks larger than ``er_pipeline.SALT_CAP`` the full
+run salts into chained sub-blocks (operators/skew.py), scoring only
+chunk-local pairs and relying on transitive closure; the incremental probe scores a new member
 against ALL old members of the block. The incremental candidate set is
 therefore a connectivity SUPERSET of the full run's inside salted blocks —
 clusters are never less complete, and are identical whenever blocks stay
@@ -63,7 +63,6 @@ under the cap (pinned by tests/test_incremental.py against a 90/10 replay).
 from __future__ import annotations
 
 import os
-from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,13 +87,16 @@ from wiki_entity_linker_spark.plans.checkpoint import (
     chain_base,
     write_chain_base,
 )
+# the decision-rule constants are read as er.<NAME> at call time, so a
+# patched constant reaches the full run and the append alike
+from wiki_entity_linker_spark.plans import er_pipeline as er
 from wiki_entity_linker_spark.plans.er_pipeline import (
-    ERConfig,
     _input_fingerprint,
     build_features,
     ingest_projection,
     match_edges,
     raw_block_keys,
+    resume_params,
     score_pairs,
 )
 
@@ -195,7 +197,6 @@ def run_er_incremental(
     base_workdir: str,
     new_files: DataFrame,
     workdir: str,
-    cfg: ERConfig | None = None,
     labeled_pairs: DataFrame | None = None,
     alias_dict: DataFrame | None = None,
     store_factory=ParquetStore,
@@ -218,15 +219,6 @@ def run_er_incremental(
     :func:`read_canonical` resolves from them (one map-side join per chain
     level — :func:`compact_chain` bounds the depth).
     """
-    cfg = cfg or ERConfig()
-    if cfg.snm_window:
-        raise ValueError(
-            "run_er_incremental: cfg.snm_window is full-recompute-only — "
-            "sorted-neighborhood positions shift with every append, so an "
-            "incremental SNM union would silently diverge from the full "
-            "run's candidate set. Re-cluster with run_er_pipeline (or "
-            "compact_chain) when SNM blocking is on."
-        )
     if os.path.abspath(workdir) == os.path.abspath(base_workdir):
         raise ValueError(
             "run_er_incremental: workdir must differ from base_workdir "
@@ -248,7 +240,7 @@ def run_er_incremental(
     mgr = StageManager(
         spark,
         workdir,
-        asdict(cfg)
+        resume_params()
         | {
             "base": os.path.abspath(base_workdir),
             "input": _input_fingerprint(new_files),
@@ -319,11 +311,11 @@ def run_er_incremental(
         .repartition(n_part, "file_id")
     )
     new_feats = mgr.stage(
-        "batch_features", lambda: build_features(new_rep_rows, cfg)
+        "batch_features", lambda: build_features(new_rep_rows)
     ).persist()
     new_raw_blocks = mgr.stage(
         "batch_raw_blocks",
-        lambda: raw_block_keys(new_feats, cfg, reps=new_rep_rows, alias_dict=alias_dict),
+        lambda: raw_block_keys(new_feats, reps=new_rep_rows, alias_dict=alias_dict),
     )
 
     # 4. candidate pairs: probe base blocks with batch keys + batch-internal
@@ -340,7 +332,7 @@ def run_er_incremental(
             n_sizes.join(o_sizes, "block_key", "left")
             .filter(
                 F.col("__nn") + F.coalesce(F.col("__on"), F.lit(0))
-                > cfg.stopword_block_max
+                > er.STOPWORD_BLOCK_MAX
             )
             .select("block_key")
         )
@@ -353,7 +345,7 @@ def run_er_incremental(
         # neither cross nor intra pairs, exactly as a full recompute drops it
         intra = pairs_from_blocks(
             cap_and_salt_blocks(
-                probe_new, max_size=cfg.stopword_block_max, cap=cfg.salt_cap
+                probe_new, max_size=er.STOPWORD_BLOCK_MAX, cap=er.SALT_CAP
             )
         )
         return cross.unionByName(intra).dropDuplicates(["id_a", "id_b"])
@@ -374,7 +366,7 @@ def run_er_incremental(
         return score_pairs(pairs, feats_all)
 
     scores = mgr.stage("batch_scores", _scores)
-    edges = mgr.stage("batch_edges", lambda: match_edges(scores, cfg))
+    edges = mgr.stage("batch_edges", lambda: match_edges(scores))
 
     # 6. merge into the existing labeling (batch-sized mini graph). Lazy AND
     # memoized: on a fully-resumed re-run every consumer stage below loads
@@ -391,7 +383,6 @@ def run_er_incremental(
                     old_comps,
                     edges,
                     new_rep_nodes,
-                    max_iter=cfg.max_cc_iter,
                     # the batch-sized relabel map is stored verbatim as the
                     # relabel_map delta — re-deriving it from the merged
                     # output would cost a corpus-scale semi-join

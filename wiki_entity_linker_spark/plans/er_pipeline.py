@@ -27,8 +27,6 @@ Every stage checkpoints through :class:`StageManager` (resume + lineage).
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +40,8 @@ from wiki_entity_linker_spark.functions.similarity import (
 )
 from wiki_entity_linker_spark.functions.text import normalize_content, shingles, tokenize
 from wiki_entity_linker_spark.operators.blocking import (
+    DEFAULT_BANDS,
+    DEFAULT_N_HASHES,
     alias_blocks_from_features,
     alias_dict_blocks,
     def_name_keys,
@@ -51,7 +51,10 @@ from wiki_entity_linker_spark.operators.blocking import (
     path_stem_key,
     with_file_id,
 )
-from wiki_entity_linker_spark.operators.closure import components_with_singletons
+from wiki_entity_linker_spark.operators.closure import (
+    _CC_MAX_ITER,
+    components_with_singletons,
+)
 from wiki_entity_linker_spark.operators.skew import cap_and_salt_blocks, spread_small_input
 from wiki_entity_linker_spark.plans.checkpoint import StageManager
 
@@ -92,32 +95,30 @@ def _input_fingerprint(df: DataFrame) -> str:
     return params_hash(ident)
 
 
-@dataclass
-class ERConfig:
-    k_shingle: int = 3
-    n_hashes: int = 16
-    bands: int = 8
-    jaccard_threshold: float = 0.16
-    cosine_threshold: float = 0.996
-    stopword_block_max: int = 20000
-    salt_cap: int = 64
-    max_cc_iter: int = 20
-    # sorted-neighborhood blocking over path stems (Hernandez-Stolfo): >= 2
-    # unions every pair within this many consecutive rows of the stem-sorted
-    # corpus into the candidate set — catches near-miss stems that never
-    # collide on an exact block key. 0 (default) = off. FULL-RECOMPUTE-ONLY:
-    # global sort positions shift with every append, so the incremental
-    # path refuses it (run_er_incremental raises) rather than silently
-    # diverging from the full run.
-    snm_window: int = 0
-    # one-to-one assignment (cross-database record linkage semantics):
-    # additionally emit out["matching"], a locally-dominant greedy matching
-    # (Preis 1999) over the above-threshold scored representative pairs, so
-    # each representative links to at most ONE partner — the alternative to
-    # transitive clustering when the two sides are known-deduplicated
-    # databases. Clusters/assignment are still produced; this is an extra
-    # output stage, not a replacement.
-    one_to_one: bool = False
+#: the pipeline's decision rule. Every stage reads these, and
+#: :func:`resume_params` folds them into the resume key, so editing one
+#: invalidates an old workdir.
+K_SHINGLE = 3
+JACCARD_THRESHOLD = 0.16
+COSINE_THRESHOLD = 0.996
+STOPWORD_BLOCK_MAX = 20000
+SALT_CAP = 64
+
+
+def resume_params() -> dict:
+    """The constants above, with the LSH shape and the components round cap
+    the operators own, as the StageManager params of a full run and of an
+    append (plans/er_incremental.py)."""
+    return {
+        "k_shingle": K_SHINGLE,
+        "n_hashes": DEFAULT_N_HASHES,
+        "bands": DEFAULT_BANDS,
+        "jaccard_threshold": JACCARD_THRESHOLD,
+        "cosine_threshold": COSINE_THRESHOLD,
+        "stopword_block_max": STOPWORD_BLOCK_MAX,
+        "salt_cap": SALT_CAP,
+        "max_cc_iter": _CC_MAX_ITER,
+    }
 
 
 def ingest_projection(raw: DataFrame) -> DataFrame:
@@ -136,7 +137,7 @@ def ingest_projection(raw: DataFrame) -> DataFrame:
     )
 
 
-def build_features(rep_rows: DataFrame, cfg: ERConfig) -> DataFrame:
+def build_features(rep_rows: DataFrame) -> DataFrame:
     """Per-doc feature table from ``(file_id, path, lang, content)`` rows —
     ONE pass over content, shared by blocking and scoring:
 
@@ -155,7 +156,7 @@ def build_features(rep_rows: DataFrame, cfg: ERConfig) -> DataFrame:
             path_stem_key().alias("stem"),
             def_name_keys().alias("defs"),
             F.transform(
-                shingles(tokenize("content"), cfg.k_shingle), lambda s: F.xxhash64(s)
+                shingles(tokenize("content"), K_SHINGLE), lambda s: F.xxhash64(s)
             ).alias("hsh"),
             tf_compress_udf(hashed_tokens(tokenize("content"))).alias("tf"),
         )
@@ -183,7 +184,6 @@ def build_features(rep_rows: DataFrame, cfg: ERConfig) -> DataFrame:
 
 def raw_block_keys(
     feats: DataFrame,
-    cfg: ERConfig,
     reps: DataFrame | None = None,
     alias_dict: DataFrame | None = None,
 ) -> DataFrame:
@@ -193,8 +193,7 @@ def raw_block_keys(
     member must see every old member of a shared block, so the probe join
     works on raw keys and applies the stopword cap on combined sizes)."""
     ab = alias_blocks_from_features(feats)
-    sigs = minhash_from_hashes(feats, cfg.n_hashes)
-    lb = lsh_band_blocks(sigs, "file_id", cfg.bands, cfg.n_hashes)
+    lb = lsh_band_blocks(minhash_from_hashes(feats))
     blocks = ab.unionByName(lb)
     if alias_dict is not None and reps is not None:
         blocks = blocks.unionByName(alias_dict_blocks(reps, alias_dict))
@@ -254,12 +253,12 @@ def score_pairs(pairs: DataFrame, feats: DataFrame) -> DataFrame:
     )
 
 
-def match_edges(scores: DataFrame, cfg: ERConfig) -> DataFrame:
+def match_edges(scores: DataFrame) -> DataFrame:
     """Deterministic decision rule → match edges. Content-only on purpose:
     name_jw is reported for analysis but does not gate (a renamed exact
     near-copy must still match)."""
-    is_match = (F.col("shingle_jaccard") >= cfg.jaccard_threshold) | (
-        F.col("tf_cosine") >= cfg.cosine_threshold
+    is_match = (F.col("shingle_jaccard") >= JACCARD_THRESHOLD) | (
+        F.col("tf_cosine") >= COSINE_THRESHOLD
     )
     return scores.filter(is_match).select("id_a", "id_b")
 
@@ -269,19 +268,17 @@ def run_er_pipeline(
     source_files: DataFrame,
     labeled_pairs: DataFrame | None,
     workdir: str,
-    cfg: ERConfig | None = None,
     checkpoint: bool = True,
     alias_dict: DataFrame | None = None,
     store=None,
 ) -> dict[str, DataFrame]:
-    cfg = cfg or ERConfig()
-    # The resume key must identify the INPUT, not just the config: the same
+    # The resume key must identify the INPUT, not just the constants: the same
     # workdir re-run against different source files (or with alias_dict
     # toggled) must invalidate, not silently resume stale stage tables.
     mgr = StageManager(
         spark,
         workdir,
-        asdict(cfg)
+        resume_params()
         | {
             "input": _input_fingerprint(source_files),
             "alias_dict": None if alias_dict is None else _input_fingerprint(alias_dict),
@@ -344,7 +341,7 @@ def run_er_pipeline(
     # since round 4: the incremental append path (plans/er_incremental.py)
     # reads it back to score new-vs-old candidate pairs without touching old
     # content — the stage-table cost is the price of O(batch) appends.
-    feats = mgr.stage("features", lambda: build_features(reps, cfg))
+    feats = mgr.stage("features", lambda: build_features(reps))
     if checkpoint:
         # stage tables are parquet-backed; keep the hot copy in memory too
         # (blocking + scoring both traverse it)
@@ -361,45 +358,25 @@ def run_er_pipeline(
     # is the incremental append's probe index (plans/er_incremental.py)
     raw_blocks = mgr.stage(
         "raw_blocks",
-        lambda: raw_block_keys(feats, cfg, reps=reps, alias_dict=alias_dict),
+        lambda: raw_block_keys(feats, reps=reps, alias_dict=alias_dict),
         cache=False,
     )
     blocks = mgr.stage(
         "blocks",
         lambda: cap_and_salt_blocks(
-            raw_blocks, max_size=cfg.stopword_block_max, cap=cfg.salt_cap
+            raw_blocks, max_size=STOPWORD_BLOCK_MAX, cap=SALT_CAP
         ),
     )
 
-    # 4. candidate pairs (canonical order, deduped across block types);
-    # optional sorted-neighborhood union (cfg.snm_window) — SNM emits
-    # sort-order pairs, so they are re-canonicalized (least/greatest) and
-    # the union deduped against the block pairs
-    def _pairs() -> DataFrame:
-        p = pairs_from_blocks(blocks)
-        if cfg.snm_window >= 2:
-            from wiki_entity_linker_spark.operators.blocking import (
-                sorted_neighborhood_pairs,
-            )
-
-            snm = sorted_neighborhood_pairs(
-                feats.select("file_id", "stem"), "stem", "file_id",
-                window=cfg.snm_window,
-            ).select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-            )
-            p = p.unionByName(snm).dropDuplicates(["id_a", "id_b"])
-        return p
-
-    pairs = mgr.stage("pairs", _pairs)
+    # 4. candidate pairs (canonical order, deduped across block types)
+    pairs = mgr.stage("pairs", lambda: pairs_from_blocks(blocks))
 
     # 5. scoring over the per-doc int features (score_pairs); Arrow UDF only
     # for the cosine (numpy) and name Jaro-Winkler (vectorized kernel).
     scores = mgr.stage("scores", lambda: score_pairs(pairs, feats))
 
     # 6. decision rule → edges (deterministic thresholds)
-    edges = mgr.stage("edges", lambda: match_edges(scores, cfg))
+    edges = mgr.stage("edges", lambda: match_edges(scores))
 
     # 7. large-star/small-star connected components over representatives
     # (node set from the small cached exact_groups table, not raw rows)
@@ -409,7 +386,6 @@ def run_er_pipeline(
             exact_groups.select(F.col("rep_id").alias("file_id")),
             edges,
             id_col="file_id",
-            max_iter=cfg.max_cc_iter,
         ),
     )
 
@@ -439,30 +415,6 @@ def run_er_pipeline(
         "components": comps,
         "assignment": assignment,
     }
-
-    # 8b. optional one-to-one assignment: greedy locally-dominant matching
-    # over the above-threshold scored representative pairs (string sha256
-    # ids — the matching's tie-break is order-based, not numeric). Ranked
-    # by the same similarity the decision rule gates on.
-    if cfg.one_to_one:
-        def _matching() -> DataFrame:
-            from wiki_entity_linker_spark.operators.graph import (
-                locally_dominant_matching,
-            )
-
-            is_match = (
-                F.col("shingle_jaccard") >= cfg.jaccard_threshold
-            ) | (F.col("tf_cosine") >= cfg.cosine_threshold)
-            cand = scores.filter(is_match).select(
-                "id_a",
-                "id_b",
-                F.round(
-                    F.greatest("shingle_jaccard", "tf_cosine"), 9
-                ).alias("score"),
-            )
-            return locally_dominant_matching(cand)
-
-        out["matching"] = mgr.stage("matching", _matching)
 
     # 9. evaluation vs labeled pairs (optional at inference time)
     if labeled_pairs is not None:

@@ -1628,14 +1628,11 @@ def mixture_allocation(spark, sf_dir):
     windows afterwards run over the #sources-row summary — metadata-scale
     by construction, the same tiny-frame-window pattern as
     operators/packing.py's bucket offsets. This is the curation pipeline's
-    builder, plans/curation.mixture_table: its default budget and
-    temperature are this query's literals."""
-    from wiki_entity_linker_spark.plans.curation import (
-        CurationConfig,
-        mixture_table,
-    )
+    builder, plans/curation.mixture_table: its budget and temperature
+    constants are this query's literals."""
+    from wiki_entity_linker_spark.plans.curation import mixture_table
 
-    return mixture_table(_doc_tokens(spark, sf_dir), CurationConfig())
+    return mixture_table(_doc_tokens(spark, sf_dir))
 
 
 def _pii_aug_sql() -> str:
@@ -2493,14 +2490,11 @@ def dedup_verdicts(spark, sf_dir):
     segment_dedup); this query pins their COMPOSITION. Scale shape =
     union of the components' (each documented at its definition); the
     final assembly is three doc_id equi-joins."""
-    from wiki_entity_linker_spark.plans.curation import (
-        CurationConfig,
-        dedup_verdict_table,
-    )
+    from wiki_entity_linker_spark.plans.curation import dedup_verdict_table
 
-    # the curation pipeline's verdict stage: its defaults are this query's
+    # the curation pipeline's verdict stage: its constants are this query's
     # literals (k=5, seg_len=8, 0.25)
-    return dedup_verdict_table(_t(spark, sf_dir, "documents"), CurationConfig())
+    return dedup_verdict_table(_t(spark, sf_dir, "documents"))
 
 
 @q(
@@ -3159,7 +3153,7 @@ def blocking_quality_documents(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     sh = d.select(F.col("doc_id"), shingles(tokenize("text"), 3).alias("sh"))
     sigs = minhash_from_shingles(sh, "doc_id", 16)
-    cand = pairs_from_blocks(lsh_band_blocks(sigs, "doc_id", 8, 16), "doc_id")
+    cand = pairs_from_blocks(lsh_band_blocks(sigs, "doc_id"), "doc_id")
     # EXACT truth via the prefix-filtered AllPairs join instead of the
     # uncapped inverted-index pair count (Σ df² — quadratic in corpus size;
     # 90 s at the 10× fixture vs ~10 s for this shape). Same result set:
@@ -4336,7 +4330,6 @@ def curation_kept(spark, sf_dir):
     registration); the assembly adds one doc_id equi-join and one
     broadcast anti-join."""
     from wiki_entity_linker_spark.plans.curation import (
-        CurationConfig,
         contamination_flags,
         dedup_verdict_table,
         kept_table,
@@ -4348,7 +4341,7 @@ def curation_kept(spark, sf_dir):
     )
     bench = d.filter(F.col("doc_id") % 50 == 0).select("doc_id", "text")
     return kept_table(
-        dedup_verdict_table(corpus, CurationConfig()),
+        dedup_verdict_table(corpus),
         corpus.select("doc_id", "source"),
         contamination_flags(corpus, bench, 3),
     )

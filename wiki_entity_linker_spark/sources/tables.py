@@ -167,5 +167,6 @@ def write_jsonl(df: DataFrame, path: str) -> None:
 
 
 def write_tsv(df: DataFrame, path: str) -> None:
-    """TSV sink (S8) with a header row, one file per partition."""
-    df.write.mode("overwrite").option("sep", "\t").option("header", "true").csv(path)
+    """Headerless TSV sink (S8), one file per partition — the format
+    :func:`read_tsv` reads back."""
+    df.write.mode("overwrite").option("sep", "\t").csv(path)

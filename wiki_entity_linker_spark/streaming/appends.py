@@ -107,7 +107,6 @@ def streaming_er_append(
     base_workdir: str,
     chain_root: str,
     checkpoint_dir: str,
-    cfg=None,
     compact_every: int | None = 8,
 ) -> StreamingQuery:
     """Stream parquet drops of new source files into the clustering rooted
@@ -128,7 +127,7 @@ def streaming_er_append(
     )
 
     def _absorb(session, base, batch, wd) -> bool:
-        run_er_incremental(session, base, batch, wd, cfg=cfg)["_cleanup"]()
+        run_er_incremental(session, base, batch, wd)["_cleanup"]()
         return True
 
     return _stream_appends(
@@ -143,7 +142,6 @@ def streaming_curation_append(
     base_workdir: str,
     chain_root: str,
     checkpoint_dir: str,
-    cfg=None,
     benchmark: DataFrame | None = None,
     compact_every: int | None = 8,
 ) -> StreamingQuery:
@@ -166,9 +164,7 @@ def streaming_curation_append(
         ).localCheckpoint(eager=True)
         if not fresh.take(1):
             return False
-        run_curation_increment(
-            session, base, fresh, wd, cfg=cfg, benchmark=benchmark
-        )
+        run_curation_increment(session, base, fresh, wd, benchmark=benchmark)
         return True
 
     return _stream_appends(
