@@ -150,7 +150,7 @@ def test_token_expression_bound_once_per_row(spark):
     """Higher-order functions run interpreted, without common-subexpression
     elimination, so every copy of ``tokenize(c)`` in a plan runs on every
     row. ngrams and lang_id bind their token array once; build_features
-    normalizes content once for ``hsh`` and once for ``tf``."""
+    tokenizes content once for both ``hsh`` and ``tf``."""
     from wiki_entity_linker_spark.plans.er_pipeline import build_features
 
     df = spark.createDataFrame([("a b c",)], "c string")
@@ -162,7 +162,7 @@ def test_token_expression_bound_once_per_row(spark):
         [(1, "a/b.py", "python", "def f(x):\n    return x")],
         "file_id long, path string, lang string, content string",
     )
-    assert _copies(build_features(reps), "regexp_replace(content") == 2
+    assert _copies(build_features(reps), "regexp_replace(content") == 1
 
 
 def test_redact_pii_and_counts(spark):

@@ -264,6 +264,18 @@ def test_fellegi_sunter_pairs_score_each_pair_once(spark, sf001):
     assert sum(l.count("array_intersect") > 0 for l in lines) == 1
 
 
+def test_minhash_neardup_scores_each_pair_once(spark, sf001):
+    """Above threshold 0 the Jaccard verify keeps its threshold out of
+    Catalyst's reach (no Filter to push below the projection) and binds the
+    intersection size once inside the interpreted filter: one
+    ``array_intersect`` in the whole optimized plan, where a pushed-down
+    Filter would add a second plan node computing the Jaccard."""
+    from wiki_entity_linker_spark.queries import minhash_neardup
+
+    plan = minhash_neardup(spark, sf001)._jdf.queryExecution().optimizedPlan()
+    assert plan.toString().count("array_intersect") == 1
+
+
 def test_embedding_quantization_plan_shape(spark, sf001):
     """ONE aggregate pass computes the bounds (map-side partial → single
     final row), the bounds broadcast back, and the fact side is never

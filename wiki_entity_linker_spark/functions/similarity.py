@@ -60,8 +60,14 @@ def set_jaccard(set_a: Column | str, set_b: Column | str) -> Column:
     verify join (~10⁶ candidate pairs × ~300-element arrays at the sf1
     bench) those passes were 2/3 of the whole verify stage's wall time."""
     ta, tb = _c(set_a), _c(set_b)
-    inter = F.size(F.array_intersect(ta, tb)).cast("double")
-    union = (F.size(ta) + F.size(tb)).cast("double") - inter
+    return overlap_jaccard(F.size(F.array_intersect(ta, tb)).cast("double"), ta, tb)
+
+
+def overlap_jaccard(inter: Column, set_a: Column | str, set_b: Column | str) -> Column:
+    """:func:`set_jaccard` given the (double) intersection size ``inter``,
+    which the expression references twice: bind it once (``text._bind``)
+    wherever the expression runs interpreted."""
+    union = (F.size(_c(set_a)) + F.size(_c(set_b))).cast("double") - inter
     return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
 
 

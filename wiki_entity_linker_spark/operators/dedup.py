@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.functions.hashing import h64
-from wiki_entity_linker_spark.functions.similarity import set_jaccard
+from wiki_entity_linker_spark.functions.similarity import overlap_jaccard, set_jaccard
 from wiki_entity_linker_spark.functions.text import (
+    _bind,
     ngrams,
     normalize_content,
     shingles,
@@ -98,23 +99,29 @@ def _verify_shingle_pairs(
     b = toks.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")).hint(
         "shuffle_hash"
     )
-    scored = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # sh arrays are shingles() output → already distinct: set_jaccard
-            F.round(set_jaccard("sh_a", "sh_b"), 6).alias("jaccard"),
-        )
-    )
-    # no filter when it cannot drop a pair: Catalyst pushes the filter below
-    # the projection, which then computes the Jaccard a second time per pair
-    # (on 4 cores the Fellegi–Sunter scores over the 10x-replicated sf0.1
-    # documents took 29-32 s with it, 20-23 s without)
+    joined = pairs.join(a, "id_a").join(b, "id_b")
+    # sh arrays are shingles() output → already distinct: set_jaccard
     if jaccard_threshold <= 0:
-        return scored
-    return scored.filter(F.col("jaccard") >= jaccard_threshold)
+        return joined.select(
+            "id_a", "id_b", F.round(set_jaccard("sh_a", "sh_b"), 6).alias("jaccard")
+        )
+    # a Filter on the jaccard column would be pushed below the projection
+    # that computes it, computing it twice per pair (on 4 cores the
+    # Fellegi–Sunter scores over the 10x-replicated sf0.1 documents took
+    # 29-32 s with such a filter, 20-23 s without). Exploding the one-element
+    # array that keeps it only above the threshold leaves Catalyst nothing to
+    # push; the interpreted HOF gets the intersection size bound once.
+    jaccard = _bind(
+        F.size(F.array_intersect("sh_a", "sh_b")).cast("double"),
+        lambda inter: F.round(overlap_jaccard(inter, "sh_a", "sh_b"), 6),
+    )
+    return joined.select(
+        "id_a",
+        "id_b",
+        F.explode(F.filter(F.array(jaccard), lambda j: j >= jaccard_threshold)).alias(
+            "jaccard"
+        ),
+    )
 
 
 def minhash_neardup_clusters_incremental(

@@ -7,9 +7,11 @@ first-class dataflow: every pipeline stage writes a stage table through a
 swappable store — :class:`ParquetStore` (default) or :class:`IcebergStore`
 (``writeTo(...).createOrReplace()`` when an Iceberg catalog is configured) —
 together with a manifest recording ``params_hash``, total and
-per-partition row counts. Re-running with identical params skips straight to
-the stored table; changing any upstream param invalidates every downstream
-stage (hash chaining).
+per-partition row counts. The per-partition lineage is the row count of
+each written part file, read from the parquet footers on the driver, so a
+checkpointed stage runs no Spark job after its write. Re-running with
+identical params skips straight to the stored table; changing any upstream
+param invalidates every downstream stage (hash chaining).
 
 The module also owns the on-disk format of append chains (plans/
 er_incremental.py, plans/curation_incremental.py, streaming/appends.py): each
@@ -25,6 +27,7 @@ import json
 import os
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,16 +92,6 @@ def advance_head(chain_root: str, head: str, epoch_id: int, depth: int) -> None:
     )
 
 
-def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-partition row counters (X4 telemetry analogue, link_text.py:100-107)."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows"))
-        .collect()
-    )
-    return [{"partition_id": r["partition_id"], "rows": r["rows"]} for r in rows]
-
-
 class ParquetStore:
     """Default stage-table store: one parquet directory per stage."""
 
@@ -108,7 +101,23 @@ class ParquetStore:
     def write(self, spark: SparkSession, name: str, df: DataFrame) -> DataFrame:
         path = os.path.join(self.root, f"{name}.parquet")
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        # the schema just written: inferring it would scan a footer in a job
+        # of its own (file sources read every column as nullable either way)
+        return spark.read.schema(df.schema).parquet(path)
+
+    def lineage(self, spark: SparkSession, name: str) -> list[dict]:
+        """Per-partition row counters (X4 telemetry analogue,
+        link_text.py:100-107): the row count of each written part file, from
+        its parquet footer on the driver. Files without rows are skipped."""
+        path = os.path.join(self.root, f"{name}.parquet")
+        lineage = []
+        for f in sorted(os.listdir(path)):
+            if not f.startswith("part-"):
+                continue
+            rows = pq.read_metadata(os.path.join(path, f)).num_rows
+            if rows:
+                lineage.append({"partition_id": int(f.split("-")[1]), "rows": rows})
+        return lineage
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(os.path.join(self.root, f"{name}.parquet"))
@@ -165,12 +174,30 @@ class IcebergStore:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.table(self.table(name))
 
+    def lineage(self, spark: SparkSession, name: str) -> list[dict]:
+        """Per-partition row counters of the stage table, from one scan (the
+        rows per scan partition)."""
+        rows = (
+            self.read(spark, name)
+            .groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(F.count("*").alias("rows"))
+            .collect()
+        )
+        return [{"partition_id": r["partition_id"], "rows": r["rows"]} for r in rows]
+
     def exists(self, spark: SparkSession, name: str) -> bool:
         return spark.catalog.tableExists(self.table(name))
 
 
 class StageManager:
     """Skip-if-complete stage runner.
+
+    A computed stage costs its write and nothing more: the store reads the
+    table back with the schema it wrote, and the manifest's ``rows_out`` and
+    ``partitions`` come from :meth:`ParquetStore.lineage`, the row count per
+    written part file from the parquet footers, so no Spark job runs after
+    the write. Manifests written before that hold one entry per scan
+    partition instead; they resume all the same.
 
     >>> mgr = StageManager(spark, "/tmp/er_run", {"threshold": 0.4})
     >>> edges = mgr.stage("edges", lambda: build_edges(...))
@@ -208,7 +235,6 @@ class StageManager:
         self,
         name: str,
         build: Callable[[], DataFrame],
-        collect_lineage: bool = True,
         cache: bool = True,
     ) -> DataFrame:
         """Run (or resume) one stage; chain the params hash downstream.
@@ -242,13 +268,11 @@ class StageManager:
         # stage resumed (a resumed stage never executes the nested calls)
         self.chain_hash = stage_hash
         out = self.store.write(self.spark, name, df)
-        # one bookkeeping pass over the stage table: the lineage rows
-        # already sum to the row count, so count() runs only without them
-        lineage = partition_lineage(out) if collect_lineage else []
+        lineage = self.store.lineage(self.spark, name)
         meta = {
             "stage": name,
             "params_hash": stage_hash,
-            "rows_out": sum(p["rows"] for p in lineage) if collect_lineage else out.count(),
+            "rows_out": sum(p["rows"] for p in lineage),
             "partitions": lineage,
         }
         write_json_atomic(meta_path, meta)

@@ -435,7 +435,7 @@ def run_curation_pipeline(
             .orderBy("source")
         )
 
-    report = mgr.stage("report", _report, collect_lineage=False)
+    report = mgr.stage("report", _report)
 
     out: dict[str, DataFrame] = {
         "verdicts": verdicts,

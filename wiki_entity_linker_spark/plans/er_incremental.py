@@ -437,7 +437,6 @@ def run_er_incremental(
             lambda: evaluate_against_labeled_pairs(
                 out["assignment"], labeled_pairs, id_col="id", cluster_col="component"
             ),
-            collect_lineage=False,
         )
     out["_counters"] = mgr.counters  # type: ignore[assignment]
     out["_cleanup"] = lambda: new_feats.unpersist()  # type: ignore[assignment]

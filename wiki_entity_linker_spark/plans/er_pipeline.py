@@ -150,15 +150,23 @@ def build_features(rep_rows: DataFrame) -> DataFrame:
     arrays; raw content is never cached or shuffled anywhere.
     """
     return (
+        # tokens in a projection of their own: referenced twice above it,
+        # they stay there (Catalyst collapses no projection that would copy
+        # a non-trivial expression) and content is tokenized once per doc
         rep_rows.select(
             "file_id",
             F.element_at(F.split("path", "/"), -1).alias("fname"),
             path_stem_key().alias("stem"),
             def_name_keys().alias("defs"),
-            F.transform(
-                shingles(tokenize("content"), K_SHINGLE), lambda s: F.xxhash64(s)
-            ).alias("hsh"),
-            tf_compress_udf(hashed_tokens(tokenize("content"))).alias("tf"),
+            tokenize("content").alias("toks"),
+        )
+        .select(
+            "file_id",
+            "fname",
+            "stem",
+            "defs",
+            F.transform(shingles("toks", K_SHINGLE), lambda s: F.xxhash64(s)).alias("hsh"),
+            tf_compress_udf(hashed_tokens("toks")).alias("tf"),
         )
         .select(
             "file_id",
@@ -423,7 +431,6 @@ def run_er_pipeline(
             lambda: evaluate_against_labeled_pairs(
                 assignment, labeled_pairs, id_col="id", cluster_col="component"
             ),
-            collect_lineage=False,
         )
     out["_counters"] = mgr.counters  # type: ignore[assignment]
     # feats is the pipeline's one deliberate bulk cache; hand the caller a
