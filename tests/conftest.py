@@ -13,7 +13,7 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 def spark():
     from wiki_entity_linker_spark.session import get_spark
 
-    s = get_spark("wiki-entity-linker-tests", cores=8, shuffle_partitions=8)
+    s = get_spark("wiki-entity-linker-tests", cores=8)
     yield s
     s.stop()
 

@@ -4,6 +4,7 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.operators import asof
 from wiki_entity_linker_spark.operators.asof import asof_join
 
 
@@ -11,13 +12,12 @@ def _ts(s):
     return datetime(2024, 1, 1, 0, 0, s)
 
 
-def _run(spark, left_rows, right_rows, tolerance=None):
+def _run(spark, left_rows, right_rows):
     left = spark.createDataFrame(left_rows, ["k", "lts", "lid"])
     right = spark.createDataFrame(right_rows, ["k", "rts", "rid", "val"])
     out = asof_join(
         left, right, on=["k"], left_ts="lts", right_ts="rts",
         right_tie="rid", payload={"m_rid": "rid", "m_val": "val"},
-        tolerance_seconds=tolerance,
     )
     return {r["lid"]: (r["m_rid"], r["m_val"], r["matched_ts"]) for r in out.collect()}
 
@@ -46,12 +46,12 @@ def test_asof_equal_ts_rights_tiebreak_max(spark):
     assert got[100] == (12, 0.2, _ts(9))
 
 
-def test_asof_tolerance_nulls_stale_match(spark):
+def test_asof_tolerance_nulls_stale_match(spark, monkeypatch):
+    monkeypatch.setattr(asof, "TOLERANCE_SECONDS", 20)
     got = _run(
         spark,
         [(1, _ts(30), 100), (1, _ts(31), 101)],
         [(1, _ts(10), 5, 0.9)],
-        tolerance=20,
     )
     # t=30 is exactly 20s after the right row → inside the bound (<=)
     assert got[100] == (5, 0.9, _ts(10))
@@ -113,14 +113,14 @@ def test_asof_matched_row_with_null_payload_stays_whole(spark):
     assert out["m_val"] is None  # NOT 0.9 from the older row
 
 
-def test_asof_fractional_tolerance_parses(spark):
+def test_asof_fractional_tolerance_parses(spark, monkeypatch):
     # small float tolerances must not render as scientific notation in the
     # INTERVAL literal
+    monkeypatch.setattr(asof, "TOLERANCE_SECONDS", 1e-05)
     got = _run(
         spark,
         [(1, _ts(10), 100)],
         [(1, _ts(9), 5, 0.5)],
-        tolerance=1e-05,
     )
     assert got[100] == (None, None, None)  # 1s gap > 10µs tolerance
 

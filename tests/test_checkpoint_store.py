@@ -114,3 +114,21 @@ def test_stage_costs_only_its_write(spark, tmp_path, monkeypatch):
     mgr.stage("empty", lambda: spark.range(0))
     assert mgr.counters["empty"]["rows_out"] == 0
     assert mgr.counters["empty"]["partitions"] == []
+
+    # resuming reads the schema from the part files' footers: no job runs
+    # before the first action, for a written and for an empty stage alike
+    group = f"stage-resume-{tmp_path.name}"
+    again = StageManager(spark, str(tmp_path / "run"), {"p": 1})
+    sc.setJobGroup(group, "stage resume")
+    try:
+        s1 = again.stage("s1", lambda: spark.range(99))
+        empty = again.stage("empty", lambda: spark.range(99))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert again.counters["s1"]["resumed"] and again.counters["empty"]["resumed"]
+    # the footer schema is the one inference reads
+    inferred = spark.read.parquet(str(tmp_path / "run" / "s1.parquet")).schema
+    assert s1.schema == inferred and empty.schema == inferred

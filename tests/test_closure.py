@@ -111,54 +111,60 @@ def test_cc_local_solve_matches_distributed(spark, monkeypatch):
             assert mid == dist
 
 
-def test_transitive_closure_raises_on_depth_overflow(spark, distributed):
-    """VERDICT r3 #3: a graph deeper than max_depth must fail loudly, not
-    return a silently partial closure; a sufficient max_depth succeeds."""
+def test_transitive_closure_raises_on_depth_overflow(spark, distributed, monkeypatch):
+    """VERDICT r3 #3: a graph deeper than the depth bound must fail loudly,
+    not return a silently partial closure; a sufficient bound succeeds."""
     edges = [(f"n{i}", f"n{i+1}") for i in range(60)]  # 60-deep chain
     df = spark.createDataFrame(edges, "child string, parent string")
     with pytest.raises(RuntimeError, match="did not converge"):
-        transitive_closure(df, max_depth=20)
-    got = transitive_closure(df, max_depth=64)
+        transitive_closure(df)
+    monkeypatch.setattr(closure, "_CLOSURE_MAX_DEPTH", 64)
+    got = transitive_closure(df)
     assert got.count() == 61 * 60 // 2  # full reachability of the chain
 
 
 def test_transitive_closure_local_solve_matches_distributed(spark, monkeypatch):
     """r7: the driver-side BFS tail-solve must be row-identical to the
     doubling loop, including the depth-overflow raise (its cap is the
-    loop's convergence bound, not max_depth itself)."""
+    loop's convergence bound, not _CLOSURE_MAX_DEPTH itself)."""
     # branching DAG with a diamond + a cycle: a->b->c->a, c->d, b->d, d->e
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("b", "d"),
              ("d", "e")] + [(f"m{i}", f"m{i+1}") for i in range(9)]
     df = spark.createDataFrame(edges, "child string, parent string")
     monkeypatch.setattr(closure, "_CLOSURE_LOCAL_SOLVE_EDGES", 0)
     dist = {(r["child"], r["parent"])
-            for r in transitive_closure(df, max_depth=20).collect()}
+            for r in transitive_closure(df).collect()}
     monkeypatch.setattr(closure, "_CLOSURE_LOCAL_SOLVE_EDGES", 10_000)
     loc = {(r["child"], r["parent"])
-           for r in transitive_closure(df, max_depth=20).collect()}
+           for r in transitive_closure(df).collect()}
     assert loc == dist
     # overflow parity: 60-deep chain raises under the same bound
     deep = spark.createDataFrame(
         [(f"n{i}", f"n{i+1}") for i in range(60)], "child string, parent string"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        transitive_closure(deep, max_depth=20)
-    ok = transitive_closure(deep, max_depth=64)
+        transitive_closure(deep)
+    monkeypatch.setattr(closure, "_CLOSURE_MAX_DEPTH", 64)
+    ok = transitive_closure(deep)
     assert ok.count() == 61 * 60 // 2
 
 
-def test_transitive_closure_plan_does_not_grow_with_rounds(spark, distributed):
+def test_transitive_closure_plan_does_not_grow_with_rounds(
+    spark, distributed, monkeypatch
+):
     """Each doubling round references the closure three times, so an uncut
     loop's plan triples per round (a 60-edge chain once grew the driver to
     15 GB). With the per-round cut the
     returned frame's analyzed plan has the same node count whether the loop
     ran two rounds or six."""
+    monkeypatch.setattr(closure, "_CLOSURE_MAX_DEPTH", 32)
+
     def plan_nodes(depth):
         df = spark.createDataFrame(
             [(f"n{i}", f"n{i+1}") for i in range(depth)],
             "child string, parent string",
         )
-        out = transitive_closure(df, max_depth=32)
+        out = transitive_closure(df)
         assert out.count() == (depth + 1) * depth // 2
         return len(out._jdf.queryExecution().analyzed().treeString().splitlines())
 
@@ -275,7 +281,8 @@ def test_merge_components_shuffle_fallback_matches_broadcast(
     assert set(outs[0].values()) == {"hub"}
 
 
-def test_pagerank_fixed_point_path_graph(spark):
+def test_pagerank_fixed_point_path_graph(spark, monkeypatch):
+    from wiki_entity_linker_spark.operators import graph
     from wiki_entity_linker_spark.operators.graph import pagerank_fixed_point
 
     edges = spark.createDataFrame(
@@ -283,18 +290,18 @@ def test_pagerank_fixed_point_path_graph(spark):
     )
     # N=3, base=333333333333; contribs it1: 1->2 full, 2->{1,3} half, 3->2
     # new = (15*base)//100 + (85*s)//100
+    monkeypatch.setattr(graph, "_PR_ITERS", 1)
     got = {r["node"]: (r["degree"], r["pr_fp"])
-           for r in pagerank_fixed_point(edges, n_iter=1).collect()}
+           for r in pagerank_fixed_point(edges).collect()}
     assert got == {
         1: (1, 191_666_666_665),
         2: (2, 616_666_666_665),
         3: (1, 191_666_666_665),
     }
     # lineage-cut path is value-identical, and mass stays ~conserved
-    a = {r["node"]: r["pr_fp"]
-         for r in pagerank_fixed_point(edges, n_iter=3).collect()}
-    b = {r["node"]: r["pr_fp"]
-         for r in pagerank_fixed_point(edges, n_iter=3,
-                                       checkpoint_every=1).collect()}
+    monkeypatch.setattr(graph, "_PR_ITERS", 3)
+    a = {r["node"]: r["pr_fp"] for r in pagerank_fixed_point(edges).collect()}
+    monkeypatch.setattr(graph, "_PR_CUT_EVERY", 1)
+    b = {r["node"]: r["pr_fp"] for r in pagerank_fixed_point(edges).collect()}
     assert a == b
     assert 0 <= 10**12 - sum(a.values()) < 3 * 10  # flooring loss only

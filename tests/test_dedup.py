@@ -4,6 +4,7 @@ vectors."""
 import numpy as np
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.operators import ann, dedup
 from wiki_entity_linker_spark.operators.ann import cosine_topk, lsh_topk
 from wiki_entity_linker_spark.operators.blocking import with_file_id
 from wiki_entity_linker_spark.operators.dedup import (
@@ -12,7 +13,6 @@ from wiki_entity_linker_spark.operators.dedup import (
     minhash_neardup_pairs,
     ngram_jaccard_pairs,
     simhash,
-    simhash_neardup_pairs,
 )
 
 
@@ -29,8 +29,9 @@ def test_exact_dedup_groups(spark):
 def test_minhash_neardup_finds_planted_dups(spark, tiny_corpus_dir):
     sf = with_file_id(spark.read.parquet(f"{tiny_corpus_dir}/source_files.parquet"))
     gold = with_file_id(spark.read.parquet(f"{tiny_corpus_dir}/gold_clusters.parquet"))
-    pairs = minhash_neardup_pairs(sf, "file_id", "content", k_shingle=3,
-                                  jaccard_threshold=0.16)
+    pairs = minhash_neardup_pairs(
+        sf.withColumnRenamed("content", "text"), "file_id", jaccard_threshold=0.16
+    )
     ga = gold.select(F.col("file_id").alias("id_a"), F.col("entity_id").alias("ea"))
     gb = gold.select(F.col("file_id").alias("id_b"), F.col("entity_id").alias("eb"))
     tagged = pairs.join(ga, "id_a").join(gb, "id_b")
@@ -41,39 +42,41 @@ def test_minhash_neardup_finds_planted_dups(spark, tiny_corpus_dir):
     assert n_same == n_pairs
 
 
-def test_simhash_close_for_near_dups(spark):
+def test_simhash_close_for_near_dups(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "_SIMHASH_BITS", 32)
     base = "the quick brown fox jumps over the lazy dog " * 10
     edited = base.replace("lazy", "sleepy", 3)
     other = "completely unrelated words about spark catalyst optimizers " * 10
     df = spark.createDataFrame(
-        [("a", base), ("b", edited), ("c", other)], "id string, content string"
+        [("a", base), ("b", edited), ("c", other)], "id string, text string"
     )
-    fp = {r["id"]: r["simhash"] for r in simhash(df, "id", bits=32).collect()}
+    fp = {r["id"]: r["simhash"] for r in simhash(df, "id").collect()}
     ham_ab = bin(fp["a"] ^ fp["b"]).count("1")
     ham_ac = bin(fp["a"] ^ fp["c"]).count("1")
     assert ham_ab < ham_ac
-    pairs = simhash_neardup_pairs(df, "id", max_hamming=ham_ab, bands=ham_ab + 1)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert ("a", "b") in got
 
 
-def test_ngram_jaccard_pairs(spark):
+def test_ngram_jaccard_pairs(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "_NGRAM_N", 2)
+    monkeypatch.setattr(dedup, "_NGRAM_JACCARD", 0.3)
     df = spark.createDataFrame(
         [("a", "one two three four five six"),
          ("b", "one two three four five seven"),
          ("c", "alpha beta gamma delta")],
-        "id string, content string",
+        "id string, text string",
     )
-    pairs = ngram_jaccard_pairs(df, "id", n=2, threshold=0.3).collect()
+    pairs = ngram_jaccard_pairs(df, "id").collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {("a", "b")}
 
 
-def test_ngram_jaccard_packed_key_matches_unpacked(spark):
+def test_ngram_jaccard_packed_key_matches_unpacked(spark, monkeypatch):
     """The packed-int64 pair-key fast path (taken for non-negative int ids)
     must produce exactly the string-id (unpacked) result. Pins the
     shiftleft-on-IntegerType pitfall: Spark masks the shift amount to the
     input width, so ``int_col << 32`` is a no-op unless cast to long first —
     a collision bug this test would catch as merged pair counts."""
+    monkeypatch.setattr(dedup, "_NGRAM_N", 2)
+    monkeypatch.setattr(dedup, "_NGRAM_JACCARD", 0.1)
     texts = [
         "one two three four five six",
         "one two three four five seven",
@@ -82,18 +85,18 @@ def test_ngram_jaccard_packed_key_matches_unpacked(spark):
         "unrelated words entirely here now",
     ]
     ints = spark.createDataFrame(
-        list(enumerate(texts)), "id int, content string"
+        list(enumerate(texts)), "id int, text string"
     )
     strs = spark.createDataFrame(
-        [(str(i), t) for i, t in enumerate(texts)], "id string, content string"
+        [(str(i), t) for i, t in enumerate(texts)], "id string, text string"
     )
     got_int = {
         (str(r["id_a"]), str(r["id_b"]), r["jaccard"])
-        for r in ngram_jaccard_pairs(ints, "id", n=2, threshold=0.1).collect()
+        for r in ngram_jaccard_pairs(ints, "id").collect()
     }
     got_str = {
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(strs, "id", n=2, threshold=0.1).collect()
+        for r in ngram_jaccard_pairs(strs, "id").collect()
     }
     assert got_int == got_str and len(got_int) >= 2
 
@@ -113,13 +116,16 @@ def test_embedding_neardup(spark):
     assert (0, 1) in got
 
 
-def test_lsh_topk_recall_vs_exact(spark):
+def test_lsh_topk_recall_vs_exact(spark, monkeypatch):
+    monkeypatch.setattr(ann, "_TOPK", 3)
+    monkeypatch.setattr(ann, "LSH_PLANES", 4)
+    monkeypatch.setattr(ann, "LSH_TABLES", 6)
     df = _vec_df(spark, n=120)
     queries = df.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    exact = cosine_topk(df, queries, k=3)
-    approx = lsh_topk(df, queries, dim=8, k=3, n_planes=4, n_tables=6)
+    exact = cosine_topk(df, queries)
+    approx = lsh_topk(df, queries, dim=8)
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     # every query finds itself, and recall is non-trivial
@@ -127,38 +133,39 @@ def test_lsh_topk_recall_vs_exact(spark):
     assert len(e & a) / len(e) >= 0.5
 
 
-def test_embedding_neardup_lsh_parity_vs_brute_force(spark):
+def test_embedding_neardup_lsh_parity_vs_brute_force(spark, monkeypatch):
     """The LSH-blocked scale path must be a subset of the brute-force
     baseline (identical verify ⇒ precision 1.0) with high recall at this
     plane/table setting, and must find the planted near-dup (θ≈0 pairs
     collide in every table)."""
     from wiki_entity_linker_spark.operators.dedup import embedding_neardup_lsh_pairs
 
+    monkeypatch.setattr(ann, "LSH_PLANES", 4)
+    monkeypatch.setattr(ann, "LSH_TABLES", 6)
     df = _vec_df(spark, n=80, dim=8)
     brute = {(r["id_a"], r["id_b"]) for r in
              embedding_neardup_pairs(df, threshold=0.6).collect()}
     lsh = {(r["id_a"], r["id_b"]) for r in
-           embedding_neardup_lsh_pairs(
-               df, dim=8, threshold=0.6, n_planes=4, n_tables=6
-           ).collect()}
+           embedding_neardup_lsh_pairs(df, dim=8, threshold=0.6).collect()}
     assert lsh <= brute  # exact verify ⇒ no false positives
     assert (0, 1) in lsh  # planted near-identical pair always collides
     assert len(lsh) / max(len(brute), 1) >= 0.6  # recall at 4 planes × 6 tables
 
 
-def test_ivf_topk_trained_centroids_recall(spark):
-    """IVF with Lloyd-trained centroids: cells partition the corpus exactly
-    once, every query finds itself, and probing nprobe cells recovers most
-    of the exact top-k (the production path; the registered query uses
-    seeded centroids only so its oracle stays static)."""
+def test_ivf_topk_trained_centroids_recall(spark, monkeypatch):
+    """IVF over seeded centroids (the registered query's quantizer): cells
+    partition the corpus exactly once, every query finds itself, and
+    probing 3 of 6 cells recovers most of the exact top-k."""
     from wiki_entity_linker_spark.operators.ann import (
         ivf_assign,
         ivf_topk,
-        train_ivf_centroids,
+        seeded_centroids,
     )
 
+    monkeypatch.setattr(ann, "_TOPK", 3)
+    monkeypatch.setattr(ann, "_IVF_NPROBE", 3)
     df = _vec_df(spark, n=120, dim=8)
-    cent = train_ivf_centroids(df, dim=8, n_centroids=6, train_limit=120, seed=5)
+    cent = seeded_centroids(8, 6, seed=5)
     assert len(cent) == 6 and all(len(c) == 8 for c in cent)
     # assignment is a partition: one cell per vector
     assign = ivf_assign(df, cent)
@@ -167,62 +174,32 @@ def test_ivf_topk_trained_centroids_recall(spark):
     queries = df.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    exact = cosine_topk(df, queries, k=3)
-    approx = ivf_topk(df, queries, cent, k=3, nprobe=3)
+    exact = cosine_topk(df, queries)
+    approx = ivf_topk(df, queries, cent)
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     assert all((q, q) in a for q in range(8))
     assert len(e & a) / len(e) >= 0.5
 
 
-def test_embedding_neardup_hot_bucket_guard(spark):
+def test_embedding_neardup_hot_bucket_guard(spark, monkeypatch):
     """VERDICT r3 #4: a planted hot bucket (identical vectors all colliding
-    in every table) is dropped by max_bucket, bounding candidate pairs;
-    without the guard the same corpus produces the full quadratic set."""
+    in every table) is dropped by the bucket cap, bounding candidate pairs;
+    with a cap above the bucket the same corpus produces the full quadratic
+    set."""
     from wiki_entity_linker_spark.operators.dedup import embedding_neardup_lsh_pairs
 
+    monkeypatch.setattr(ann, "LSH_PLANES", 4)
+    monkeypatch.setattr(ann, "LSH_TABLES", 2)
     n = 40
     rows = [(i, [1.0] * 8) for i in range(n)]  # one identical family
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    unguarded = embedding_neardup_lsh_pairs(
-        df, dim=8, threshold=0.9, n_planes=4, n_tables=2
-    ).count()
+    monkeypatch.setattr(dedup, "_LSH_MAX_BUCKET", n)
+    unguarded = embedding_neardup_lsh_pairs(df, dim=8, threshold=0.9).count()
     assert unguarded == n * (n - 1) // 2  # quadratic blow-up
-    guarded = embedding_neardup_lsh_pairs(
-        df, dim=8, threshold=0.9, n_planes=4, n_tables=2,
-        max_bucket=10,
-    ).count()
+    monkeypatch.setattr(dedup, "_LSH_MAX_BUCKET", 10)
+    guarded = embedding_neardup_lsh_pairs(df, dim=8, threshold=0.9).count()
     assert guarded == 0  # the oversized bucket is dropped in every table
-
-
-def test_ivf_centroid_clamp_small_corpus(spark):
-    """ADVICE r3: fewer training rows than requested centroids must clamp,
-    not raise from rng.choice."""
-    from wiki_entity_linker_spark.operators.ann import train_ivf_centroids
-
-    df = _vec_df(spark, n=5, dim=8)
-    cents = train_ivf_centroids(df, dim=8, n_centroids=16)
-    assert 1 <= len(cents) <= 5
-
-
-def test_ivf_hot_cell_guard(spark):
-    """max_cell bounds a pathological IVF cell deterministically: identical
-    vectors all land in one cell; the guard truncates the candidate index
-    to the lowest max_cell ids while queries still find those survivors."""
-    from wiki_entity_linker_spark.operators.ann import ivf_topk
-
-    n = 30
-    rows = [(i, [1.0] * 4) for i in range(n)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    cents = [[1.0, 1.0, 1.0, 1.0], [-1.0, -1.0, -1.0, -1.0]]
-    full = ivf_topk(df, queries, cents, k=50, nprobe=1)
-    assert full.count() == 2 * n  # everything is a candidate
-    guarded = ivf_topk(df, queries, cents, k=50, nprobe=1, max_cell=5)
-    got = {r["vec_id"] for r in guarded.collect()}
-    assert guarded.count() == 2 * 5
-    assert got == {0, 1, 2, 3, 4}  # lowest-id survivors, deterministic
 
 
 def test_minhash_incremental_equals_oneshot(spark, monkeypatch):
@@ -254,15 +231,11 @@ def test_minhash_incremental_equals_oneshot(spark, monkeypatch):
     base = df.filter(F.col("doc_id") < 10)
     batch = df.filter(F.col("doc_id") >= 10)
 
-    inc = minhash_neardup_clusters_incremental(
-        base, batch, "doc_id", "text",
-        k_shingle=3, jaccard_threshold=0.3,
-    ).collect()
+    inc = minhash_neardup_clusters_incremental(base, batch, "doc_id").collect()
 
-    full_pairs = minhash_neardup_pairs(
-        df, "doc_id", "text",
-        k_shingle=3, jaccard_threshold=0.3,
-    ).select("id_a", "id_b")
+    full_pairs = minhash_neardup_pairs(df, "doc_id", jaccard_threshold=0.3).select(
+        "id_a", "id_b"
+    )
     # the incremental side took the driver tail-solve; solve the one-shot
     # reference with the distributed star-contraction loop
     monkeypatch.setattr(closure, "_CC_LOCAL_SOLVE_EDGES", 0)
@@ -278,9 +251,10 @@ def test_minhash_incremental_equals_oneshot(spark, monkeypatch):
     assert got[12] == got[13] != got[1]  # batch-internal family
 
 
-def test_segment_dedup_first_writer_wins(spark):
+def test_segment_dedup_first_writer_wins(spark, monkeypatch):
     from wiki_entity_linker_spark.operators.dedup import segment_dedup_stats
 
+    monkeypatch.setattr(dedup, "SEG_LEN", 2)
     df = spark.createDataFrame(
         [
             (1, "a b c d a b"),  # [a b][c d][a b]: idx2 duplicates idx0
@@ -299,14 +273,15 @@ def test_segment_dedup_first_writer_wins(spark):
             r["n_tokens"], r["n_segments"], r["n_kept"],
             r["kept_tokens"], r["dup_tokens"],
         )
-        for r in segment_dedup_stats(df, seg_len=2).collect()
+        for r in segment_dedup_stats(df).collect()
     }
     assert got == want
 
 
-def test_exact_substring_coverage_planted(spark):
+def test_exact_substring_coverage_planted(spark, monkeypatch):
     from wiki_entity_linker_spark.operators.dedup import exact_substring_coverage
 
+    monkeypatch.setattr(dedup, "SUBSTR_K", 3)
     df = spark.createDataFrame(
         [
             (1, "a b c d e f"),  # grams "a b c"@0, "b c d"@1 shared with doc2
@@ -330,7 +305,7 @@ def test_exact_substring_coverage_planted(spark):
             r["n_tokens"], r["dup_starts"],
             r["covered_tokens"], r["covered_frac"],
         )
-        for r in exact_substring_coverage(df, k=3).collect()
+        for r in exact_substring_coverage(df).collect()
     }
     assert got == want
 
@@ -343,16 +318,17 @@ def test_exact_substring_coverage_tokenizes_once(spark):
     df = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "x a b c d e y")], "doc_id long, text string"
     )
-    plan = exact_substring_coverage(df, 5)._jdf.queryExecution().analyzed()
+    plan = exact_substring_coverage(df)._jdf.queryExecution().analyzed()
     assert plan.toString().count("regexp_replace(text") == 0
 
 
-def test_winnowing_guarantee_and_caps(spark):
+def test_winnowing_guarantee_and_caps(spark, monkeypatch):
     from wiki_entity_linker_spark.operators.dedup import (
         winnowing_candidate_pairs,
         winnowing_fingerprints,
     )
 
+    monkeypatch.setattr(dedup, "_WINNOW_MIN_SHARED", 1)
     df = spark.createDataFrame(
         [
             # k=4, w=4: any shared run of k+w-1=7 tokens MUST share a print
@@ -370,7 +346,7 @@ def test_winnowing_guarantee_and_caps(spark):
     assert 4 not in per and per[5] == 1 and per[3] >= 1
 
     pairs = {(r["id_a"], r["id_b"]): r["n_shared"]
-             for r in winnowing_candidate_pairs(df, min_shared=1).collect()}
+             for r in winnowing_candidate_pairs(df).collect()}
     assert (1, 2) in pairs and pairs[(1, 2)] >= 1
     assert all(p == (1, 2) for p in pairs)
 
@@ -379,13 +355,16 @@ def test_winnowing_guarantee_and_caps(spark):
         [(i, "c1 c2 c3 c4 c5 c6 c7 c8") for i in range(3)],
         "doc_id long, text string",
     )
-    assert winnowing_candidate_pairs(trip, min_shared=1, max_postings=2).count() == 0
-    assert winnowing_candidate_pairs(trip, min_shared=1, max_postings=3).count() == 3
+    monkeypatch.setattr(dedup, "_WINNOW_MAX_POSTINGS", 2)
+    assert winnowing_candidate_pairs(trip).count() == 0
+    monkeypatch.setattr(dedup, "_WINNOW_MAX_POSTINGS", 3)
+    assert winnowing_candidate_pairs(trip).count() == 3
 
 
-def test_allpairs_jaccard_exact_boundary(spark):
+def test_allpairs_jaccard_exact_boundary(spark, monkeypatch):
     from wiki_entity_linker_spark.operators.dedup import allpairs_jaccard_join
 
+    monkeypatch.setattr(dedup, "_ALLPAIRS_K", 1)
     df = spark.createDataFrame(
         [
             (1, "a b c d"),
@@ -397,8 +376,7 @@ def test_allpairs_jaccard_exact_boundary(spark):
         "doc_id long, text string",
     )
     got = {(r["id_a"], r["id_b"]): (r["inter"], r["union_sz"], r["jaccard"])
-           for r in allpairs_jaccard_join(df, threshold="0.5",
-                                          k_shingle=1).collect()}
+           for r in allpairs_jaccard_join(df, threshold="0.5").collect()}
     # J=0.5 pairs sit EXACTLY on the threshold: the integer-rational
     # acceptance (inter*den >= num*union) must include them
     assert got == {

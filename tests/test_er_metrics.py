@@ -193,30 +193,33 @@ def test_kcore_hand_graphs(spark):
     assert k_core(k5df, k=5).count() == 0
 
 
-def test_kcore_nonconvergence_raises(spark):
+def test_kcore_nonconvergence_raises(spark, monkeypatch):
     import pytest as _pytest
 
+    from wiki_entity_linker_spark.operators import graph
     from wiki_entity_linker_spark.operators.graph import k_core
 
+    monkeypatch.setattr(graph, "_KCORE_MAX_ROUNDS", 2)
     path = [(i, i + 1) for i in range(12)]
     with _pytest.raises(RuntimeError, match="did not converge"):
-        k_core(spark.createDataFrame(path, ["id_a", "id_b"]), k=2, max_rounds=2)
+        k_core(spark.createDataFrame(path, ["id_a", "id_b"]), k=2)
 
 
 @pytest.mark.parametrize("sf_fixture", ["sf0001", "sf001"])
-def test_kcore_convergence_rounds(spark, request, sf_fixture):
+def test_kcore_convergence_rounds(spark, request, sf_fixture, monkeypatch):
     # the oracle unrolls 8 peel rounds; pin that the registered graph
     # converges inside that at BOTH the test SF and the driver's sf0.01,
     # so the unroll bound can never silently under-peel where it counts
+    from wiki_entity_linker_spark.operators import graph
     from wiki_entity_linker_spark.operators.graph import k_core
     from wiki_entity_linker_spark.operators.dedup import embedding_neardup_lsh_pairs
 
     emb = spark.read.parquet(f"{request.getfixturevalue(sf_fixture)}/embeddings.parquet")
-    edges = embedding_neardup_lsh_pairs(
-        emb, dim=64, threshold=0.2,
-        n_planes=6, n_tables=3, max_bucket=256,
-    ).select("id_a", "id_b")
-    out = k_core(edges, k=2, max_rounds=8)
+    edges = embedding_neardup_lsh_pairs(emb, dim=64, threshold=0.2).select(
+        "id_a", "id_b"
+    )
+    monkeypatch.setattr(graph, "_KCORE_MAX_ROUNDS", 8)
+    out = k_core(edges, k=2)
     assert out.count() > 0  # non-trivial core, converged within the bound
 
 
@@ -308,9 +311,12 @@ def test_matching_disabled_manager_cuts_lineage(spark, distributed_matching):
     assert plan.count("LogicalRDD") == 2
 
 
-def test_locally_dominant_matching_empty_and_bound(spark, distributed_matching):
+def test_locally_dominant_matching_empty_and_bound(
+    spark, distributed_matching, monkeypatch
+):
     import pytest as _pytest
 
+    from wiki_entity_linker_spark.operators import graph
     from wiki_entity_linker_spark.operators.graph import locally_dominant_matching
 
     empty = spark.createDataFrame([], "id_a long, id_b long, score double")
@@ -320,26 +326,28 @@ def test_locally_dominant_matching_empty_and_bound(spark, distributed_matching):
         [(i, i + 1, 1.0 - i / 100) for i in range(10)],
         ["id_a", "id_b", "score"],
     )
+    monkeypatch.setattr(graph, "_MATCHING_MAX_ROUNDS", 1)
     with _pytest.raises(RuntimeError, match="did not drain"):
-        locally_dominant_matching(chain, max_rounds=1)
+        locally_dominant_matching(chain)
 
 
 @pytest.mark.parametrize("sf_fixture", ["sf0001", "sf001"])
 def test_matching_convergence_rounds(
-    spark, request, sf_fixture, distributed_matching
+    spark, request, sf_fixture, distributed_matching, monkeypatch
 ):
     # the onetoone_matching oracle unrolls 5 rounds; pin that the pair
     # graph drains within that bound at BOTH the test SF and the driver's
+    from wiki_entity_linker_spark.operators import graph
     from wiki_entity_linker_spark.operators.dedup import minhash_neardup_pairs
     from wiki_entity_linker_spark.operators.graph import locally_dominant_matching
     from pyspark.sql import functions as _F
 
     d = spark.read.parquet(f"{request.getfixturevalue(sf_fixture)}/documents.parquet")
-    pairs = minhash_neardup_pairs(
-        d, "doc_id", "text", k_shingle=3,
-        jaccard_threshold=0.3,
-    ).select("id_a", "id_b", _F.col("jaccard").alias("score"))
-    out = locally_dominant_matching(pairs, max_rounds=5)
+    pairs = minhash_neardup_pairs(d, "doc_id", jaccard_threshold=0.3).select(
+        "id_a", "id_b", _F.col("jaccard").alias("score")
+    )
+    monkeypatch.setattr(graph, "_MATCHING_MAX_ROUNDS", 5)
+    out = locally_dominant_matching(pairs)
     assert out.count() > 0
 
 
@@ -355,14 +363,16 @@ def test_graph_ops_accept_symmetrized_edge_lists(spark):
 
 
 def test_matching_drains_exactly_at_bound_and_max_score_dedup(
-    spark, distributed_matching
+    spark, distributed_matching, monkeypatch
 ):
+    from wiki_entity_linker_spark.operators import graph
     from wiki_entity_linker_spark.operators.graph import locally_dominant_matching
 
-    # drains in exactly 1 round with max_rounds=1: must SUCCEED (the bound
-    # is loud PAST max_rounds, not at it)
+    # drains in exactly 1 round with a 1-round bound: must SUCCEED (the
+    # bound is loud PAST _MATCHING_MAX_ROUNDS, not at it)
+    monkeypatch.setattr(graph, "_MATCHING_MAX_ROUNDS", 1)
     one = spark.createDataFrame([(0, 1, 1.0)], ["id_a", "id_b", "score"])
-    assert locally_dominant_matching(one, max_rounds=1).count() == 1
+    assert locally_dominant_matching(one).count() == 1
 
     # duplicate pair rows with different scores: the MAX must win so the
     # greedy equivalence holds regardless of partitioning
@@ -376,12 +386,13 @@ def test_matching_drains_exactly_at_bound_and_max_score_dedup(
     assert got == [(0, 1, 0.9)]
 
 
-def test_fs_em_cut_parity_and_deep_iterations(spark):
-    """cut_every materializes the 1-row parameter frame between EM
+def test_fs_em_cut_parity_and_deep_iterations(spark, monkeypatch):
+    """_EM_CUT_EVERY materializes the 1-row parameter frame between EM
     iterations: values are identical to the fully lazy composition, and a
-    Splink-typical n_iter=12 run keeps a bounded plan (the lazy form's
+    Splink-typical 12-iteration run keeps a bounded plan (the lazy form's
     plan deepens per iteration and re-executes every prior E-step per
     broadcast)."""
+    from wiki_entity_linker_spark.operators import er_metrics
     from wiki_entity_linker_spark.operators.er_metrics import fs_em_estimate
 
     rows = []
@@ -394,18 +405,18 @@ def test_fs_em_cut_parity_and_deep_iterations(spark):
         ))
     pairs = spark.createDataFrame(rows, ["pid", "f1", "f2"])
 
-    lazy = sorted(
-        map(tuple, fs_em_estimate(pairs, ["f1", "f2"], n_iter=3,
-                                  cut_every=0).collect())
-    )
-    cut = sorted(
-        map(tuple, fs_em_estimate(pairs, ["f1", "f2"], n_iter=3,
-                                  cut_every=1).collect())
-    )
+    monkeypatch.setattr(er_metrics, "_EM_ITERS", 3)
+    # a cut every 3 iterations never fires before the third, last one
+    monkeypatch.setattr(er_metrics, "_EM_CUT_EVERY", 3)
+    lazy = sorted(map(tuple, fs_em_estimate(pairs, ["f1", "f2"]).collect()))
+    monkeypatch.setattr(er_metrics, "_EM_CUT_EVERY", 1)
+    cut = sorted(map(tuple, fs_em_estimate(pairs, ["f1", "f2"]).collect()))
     assert lazy == cut
 
-    deep = fs_em_estimate(pairs, ["f1", "f2"], n_iter=12)
-    shallow = fs_em_estimate(pairs, ["f1", "f2"], n_iter=2)
+    monkeypatch.setattr(er_metrics, "_EM_ITERS", 12)
+    deep = fs_em_estimate(pairs, ["f1", "f2"])
+    monkeypatch.setattr(er_metrics, "_EM_ITERS", 2)
+    shallow = fs_em_estimate(pairs, ["f1", "f2"])
     assert deep.count() == 2
     # lineage is truncated at the last cut, so plan size must NOT grow
     # with iteration count

@@ -330,6 +330,7 @@ def test_incremental_combined_stopword_cap_on_intra_pairs(
     disjoint token sets, distinct def names). JACCARD_THRESHOLD=0 turns ANY
     generated pair into an edge, so the partitions diverge iff the cap leaks.
     """
+    from wiki_entity_linker_spark.operators import skew
     from wiki_entity_linker_spark.plans import er_pipeline
 
     rows = [
@@ -345,8 +346,8 @@ def test_incremental_combined_stopword_cap_on_intra_pairs(
     base = src.filter(F.col("repo") == "r1")
     batch = src.filter(F.col("repo") != "r1")
     monkeypatch.setattr(er_pipeline, "JACCARD_THRESHOLD", 0.0)
-    monkeypatch.setattr(er_pipeline, "STOPWORD_BLOCK_MAX", 2)
-    monkeypatch.setattr(er_pipeline, "SALT_CAP", 2)
+    monkeypatch.setattr(skew, "STOPWORD_BLOCK_MAX", 2)
+    monkeypatch.setattr(skew, "SALT_CAP", 2)
 
     full = run_er_pipeline(spark, src, None, str(tmp_path / "full"))
     want = _normalized(_assign_map(full["assignment"]))

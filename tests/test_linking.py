@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.fixtures.benchmark import generate_benchmark
+from wiki_entity_linker_spark.plans import linking
 from wiki_entity_linker_spark.plans.linking import (
     evaluate_linking,
     link_articles,
@@ -54,7 +55,8 @@ def _py_link(articles_pd, alias_pd, max_ngram=3):
     return set(out)
 
 
-def test_linking_matches_python_reference(spark, bench):
+def test_linking_matches_python_reference(spark, bench, monkeypatch):
+    monkeypatch.setattr(linking, "MAX_NGRAM", 3)
     linked = link_articles(bench["articles"], bench["alias"])
     got = {
         (r["article_id"], r["start"], r["end"], r["entity_id"])
@@ -64,8 +66,9 @@ def test_linking_matches_python_reference(spark, bench):
     assert got == want and len(want) > 0
 
 
-def test_mention_candidates_spans_are_valid(spark, bench):
-    cands = mention_candidates(bench["articles"], max_ngram=2)
+def test_mention_candidates_spans_are_valid(spark, bench, monkeypatch):
+    monkeypatch.setattr(linking, "MAX_NGRAM", 2)
+    cands = mention_candidates(bench["articles"])
     arts = {r["id"]: r["text"] for r in bench["articles"].collect()}
     for r in cands.limit(200).collect():
         assert arts[r["article_id"]][r["start"]:r["end"]] == r["surface"]
@@ -79,11 +82,12 @@ def test_eval_oracle_self_check(spark, bench):
     assert m["fp"] == 0 and m["fn"] == 0
 
 
-def test_end_to_end_linking_quality(spark, bench):
+def test_end_to_end_linking_quality(spark, bench, monkeypatch):
     """The popularity-argmax baseline must find nearly all planted mentions
     (recall); ambiguous 'delta' resolves to the more popular entity so the
     Q6-'delta'-alias gold spans cost precision exactly as the reference's
     baseline does."""
+    monkeypatch.setattr(linking, "MAX_NGRAM", 3)
     linked = link_articles(bench["articles"], bench["alias"])
     m = evaluate_linking(linked, bench["gold"]).collect()[0]
     assert m["recall"] >= 0.7

@@ -3,6 +3,7 @@
 
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.operators import blocking, skew
 from wiki_entity_linker_spark.operators.argmax import argmax_with_ties, top1_deterministic
 from wiki_entity_linker_spark.operators.blocking import pairs_from_blocks
 from wiki_entity_linker_spark.operators.skew import cap_and_salt_blocks
@@ -50,7 +51,9 @@ def test_salt_large_blocks_caps_and_chains(spark, monkeypatch):
         [("hot", i) for i in ids] + [("cold", "f000"), ("cold", "f001")],
         "block_key string, file_id string",
     ).select("file_id", "block_key")
-    salted = cap_and_salt_blocks(df, max_size=10_000, cap=16)
+    monkeypatch.setattr(skew, "STOPWORD_BLOCK_MAX", 10_000)
+    monkeypatch.setattr(skew, "SALT_CAP", 16)
+    salted = cap_and_salt_blocks(df)
     prof = {
         r["block_key"]: r["block_size"]
         for r in salted.groupBy("block_key")
@@ -72,25 +75,28 @@ def test_salt_large_blocks_caps_and_chains(spark, monkeypatch):
     assert comp.count() == 100
 
 
-def test_drop_stopword_blocks(spark):
+def test_drop_stopword_blocks(spark, monkeypatch):
+    monkeypatch.setattr(skew, "STOPWORD_BLOCK_MAX", 10)
+    monkeypatch.setattr(skew, "SALT_CAP", 10_000)
     rows = [("huge", f"f{i}") for i in range(50)] + [("ok", "a"), ("ok", "b")]
     df = spark.createDataFrame(rows, "block_key string, file_id string")
-    kept = cap_and_salt_blocks(df, max_size=10, cap=10_000)
+    kept = cap_and_salt_blocks(df)
     assert {r["block_key"] for r in kept.select("block_key").distinct().collect()} == {"ok"}
 
 
-def test_global_prefix_sum_matches_naive_window(spark):
+def test_global_prefix_sum_matches_naive_window(spark, monkeypatch):
     """The two-level prefix sum (explicit range buckets + bounded windows)
     must be bit-equal to the naive single-partition global window, including
     on sparse/gappy id spaces and across bucket counts."""
     from pyspark.sql import Window
 
+    from wiki_entity_linker_spark.operators import packing
     from wiki_entity_linker_spark.operators.packing import global_prefix_sum
 
     rows = [(i * 37 + (i % 5), (i * 13) % 97 + 1) for i in range(500)]
     df = spark.createDataFrame(rows, "id long, v long")
     naive = df.withColumn(
-        "prefix",
+        "seq_start",
         F.coalesce(
             F.sum("v").over(
                 Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
@@ -98,30 +104,36 @@ def test_global_prefix_sum_matches_naive_window(spark):
             F.lit(0),
         ),
     )
-    want = {r["id"]: r["prefix"] for r in naive.collect()}
+    want = {r["id"]: r["seq_start"] for r in naive.collect()}
+    # exactly nb buckets: none per core, at least nb
+    monkeypatch.setattr(packing, "_BUCKETS_PER_CORE", 0)
     for nb in (1, 7, 64, 10_000):
+        monkeypatch.setattr(packing, "_MIN_BUCKETS", nb)
         got = {
-            r["id"]: r["prefix"]
-            for r in global_prefix_sum(df, "id", "v", n_buckets=nb).collect()
+            r["id"]: r["seq_start"]
+            for r in global_prefix_sum(df, "id", "v").collect()
         }
         assert got == want, f"n_buckets={nb}"
     # empty input: column exists, no rows
     empty = global_prefix_sum(
         spark.createDataFrame([], "id long, v long"), "id", "v"
     )
-    assert empty.count() == 0 and "prefix" in empty.columns
+    assert empty.count() == 0 and "seq_start" in empty.columns
 
 
-def test_global_prefix_sum_plan_has_no_global_data_window(spark):
+def test_global_prefix_sum_plan_has_no_global_data_window(spark, monkeypatch):
     """The scale contract: the only window with an empty partition spec runs
     over the n_buckets-row totals frame; every window over the DATA is
     partitioned by the bucket column."""
+    from wiki_entity_linker_spark.operators import packing
     from wiki_entity_linker_spark.operators.packing import global_prefix_sum
 
+    monkeypatch.setattr(packing, "_BUCKETS_PER_CORE", 0)
+    monkeypatch.setattr(packing, "_MIN_BUCKETS", 32)
     df = spark.range(0, 10_000).select(
         F.col("id"), (F.col("id") % 11 + 1).alias("v")
     )
-    out = global_prefix_sum(df, "id", "v", n_buckets=32)
+    out = global_prefix_sum(df, "id", "v")
     plan = out._jdf.queryExecution().executedPlan().toString()
     windows = [l for l in plan.splitlines() if "windowspecdefinition(" in l]
     assert len(windows) == 2, plan
@@ -187,7 +199,7 @@ def test_skew_report_planted_hot_key(spark):
     assert r["recommended_salt"] == 100
 
 
-def test_sorted_neighborhood_spans_bucket_boundaries(spark):
+def test_sorted_neighborhood_spans_bucket_boundaries(spark, monkeypatch):
     from wiki_entity_linker_spark.operators.blocking import (
         sorted_neighborhood_pairs,
     )
@@ -197,24 +209,25 @@ def test_sorted_neighborhood_spans_bucket_boundaries(spark):
         [(1, "apple"), (2, "banana"), (3, "cherry"), (4, "date")],
         "doc_id long, k string",
     )
+    monkeypatch.setattr(blocking, "_SNM_WINDOW", 3)
     got = {(r["id_a"], r["id_b"]): r["dist"]
-           for r in sorted_neighborhood_pairs(df, "k", "doc_id",
-                                              window=3).collect()}
+           for r in sorted_neighborhood_pairs(df, "k", "doc_id").collect()}
     assert got == {(1, 2): 1, (2, 3): 1, (3, 4): 1, (1, 3): 2, (2, 4): 2}
     # ties on the key break by id: strict total order
     tie = spark.createDataFrame(
         [(9, "same"), (7, "same"), (8, "same")], "doc_id long, k string"
     )
+    monkeypatch.setattr(blocking, "_SNM_WINDOW", 2)
     got2 = {(r["id_a"], r["id_b"]): r["dist"]
-            for r in sorted_neighborhood_pairs(tie, "k", "doc_id",
-                                               window=2).collect()}
+            for r in sorted_neighborhood_pairs(tie, "k", "doc_id").collect()}
     assert got2 == {(7, 8): 1, (8, 9): 1}
 
 
 def test_bloom_bitmap_no_false_negatives(spark):
     from wiki_entity_linker_spark.operators.bloom import (
+        bloom_base_hash,
         bloom_bitmap,
-        bloom_contains,
+        bloom_contains_hashed,
     )
 
     keys = spark.createDataFrame(
@@ -229,7 +242,7 @@ def test_bloom_bitmap_no_false_negatives(spark):
     def hits(df):
         return (
             df.crossJoin(F.broadcast(bm))
-            .filter(bloom_contains("k", "bitmap"))
+            .filter(bloom_contains_hashed(bloom_base_hash("k"), "bitmap"))
             .count()
         )
 
@@ -318,7 +331,7 @@ def test_meta_block_prune_hand_example(spark):
         (4, "b4"), (5, "b4"),
         (4, "b4"),  # duplicate posting must not inflate cbs
     ]
-    blocks = spark.createDataFrame(rows, ["id", "block_key"])
+    blocks = spark.createDataFrame(rows, ["doc_id", "g"])
     got = {
         (r["id_a"], r["id_b"]): (r["cbs"], r["js_w"], r["kept"])
         for r in meta_block_prune(blocks).collect()
@@ -333,27 +346,32 @@ def test_meta_block_prune_hand_example(spark):
     }
 
 
-def test_kmeans_lattice_two_obvious_clusters(spark):
+def test_kmeans_lattice_two_obvious_clusters(spark, monkeypatch):
+    from wiki_entity_linker_spark.operators import ann
     from wiki_entity_linker_spark.operators.ann import kmeans_lattice_assign
 
+    monkeypatch.setattr(ann, "_KMEANS_K", 2)
+    monkeypatch.setattr(ann, "_KMEANS_ITERS", 3)
     # two tight blobs far apart: after 2 iterations every member of a blob
     # shares a cell regardless of which seeds initialized
     lo = [(i, [0.01 * i, 0.0, 0.0, 0.0]) for i in range(10)]
     hi = [(100 + i, [0.9 + 0.01 * i, 1.0, 1.0, 1.0]) for i in range(10)]
     df = spark.createDataFrame(lo + hi, ["vec_id", "embedding"])
-    out = {r["vec_id"]: r["cell"] for r in kmeans_lattice_assign(
-        df, k=2, n_iter=3).collect()}
+    out = {r["vec_id"]: r["cell"] for r in kmeans_lattice_assign(df).collect()}
     assert len(out) == 20
     assert len({out[i] for i in range(10)}) == 1
     assert len({out[100 + i] for i in range(10)}) == 1
     assert out[0] != out[100]
 
 
-def test_kmeans_lattice_deep_iterations_bounded(spark):
-    # localCheckpoint between iterations: n_iter=8 must not blow the plan
+def test_kmeans_lattice_deep_iterations_bounded(spark, monkeypatch):
+    # localCheckpoint between iterations: 8 iterations must not blow the plan
+    from wiki_entity_linker_spark.operators import ann
     from wiki_entity_linker_spark.operators.ann import kmeans_lattice_assign
 
+    monkeypatch.setattr(ann, "_KMEANS_K", 3)
+    monkeypatch.setattr(ann, "_KMEANS_ITERS", 8)
     rows = [(i, [float(i % 7) / 7, float(i % 3) / 3]) for i in range(40)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = kmeans_lattice_assign(df, k=3, n_iter=8)
+    out = kmeans_lattice_assign(df)
     assert out.count() == 40

@@ -1,25 +1,30 @@
-"""Every defaulted option of a product function or dataclass is set by some call.
+"""Every defaulted option of a product function or dataclass takes two values.
 
-An option that no call in the repository sets to a value other than its
-default is a constant dressed as an option: it doubles the configurations
-the tests should cover and guards branches nothing runs. This is a pure-AST
-check (no Spark session). It reads every call in the package, ``bench.py``,
-``bench_extra.py``, ``__spark_entry__.py``, ``scripts/``, ``perfbench/`` and
-``tests/``, and fails on
+An option that the product always passes the same value is a constant
+dressed as an option: it doubles the configurations the tests should cover
+and guards branches nothing runs. This is a pure-AST check (no Spark
+session). It reads every call in the package, ``bench.py``,
+``bench_extra.py``, ``__spark_entry__.py``, ``scripts/`` and ``perfbench/``.
+Calls under ``tests/`` do not count: a value only a test passes is a test
+configuration, which the test sets by monkeypatching a module constant.
+The check fails on
 
 * a defaulted parameter of a package function (``queries.py`` excepted: its
   functions are the registered queries and their oracle SQL generators)
-  that every call leaves at its default;
-* a field of a package dataclass with a literal default that no
-  constructor call (keyword or positional) and no attribute assignment
-  sets to another value.
+  that every call passes one value, the default included when a call
+  leaves it out;
+* a field of a package dataclass with a literal default that every
+  constructor call (keyword or positional) and every attribute assignment
+  sets to one value.
 
 Names defined more than once in the package are skipped, since a call
 cannot be told apart by name. ``from m import f as g`` aliases resolve to
-``f``. A call that splats ``*args``/``**kwargs`` counts as setting every
-parameter. Module-level constants of the package fold to their values
-before a passed value is compared with the default, so passing
-``DEFAULT_N_HASHES`` where the default is ``16`` leaves it at the default.
+``f``. A call that splats ``*args``/``**kwargs`` counts as passing every
+parameter a value of its own, and so does a forwarded name
+(``n_planes=n_planes``): it carries whatever its own caller passed. Other
+values compare as literals: module-level constants of the package fold to
+their values, so passing ``DEFAULT_N_HASHES`` where the default is ``16``
+is the default, and any other expression compares by its source text.
 """
 
 import ast
@@ -42,11 +47,18 @@ ALLOWED = {
     # perfbench/worker.py names these two, and perfbench/ is benchmark code
     ("evaluate_against_labeled_pairs", "id_col"),
     ("evaluate_against_labeled_pairs", "cluster_col"),
+    # the reference benchmark file the linking demo reads
+    ("run_benchmark_demo", "benchmark_path"),
+    # the dictionary-circularity ablation that BASELINE.md publishes
+    ("run_benchmark_demo", "alias_source"),
+    ("hyperlink_alias_dict", "include_label_names"),
+    # the brute-force reference the LSH near-dup parity test compares with
+    ("embedding_neardup_pairs", "threshold"),
 }
 
 
 def _sources():
-    for base in (PKG, "tests", "scripts", "perfbench"):
+    for base in (PKG, "scripts", "perfbench"):
         for d, _, files in os.walk(os.path.join(ROOT, base)):
             for f in sorted(files):
                 if f.endswith(".py"):
@@ -108,8 +120,11 @@ def _unset_options() -> list[str]:
     )
 
     def value(node: ast.AST):
-        """A comparable form of an expression: its literal value (module
-        constants folded), else its AST text."""
+        """A comparable form of a passed expression: ``None`` for a
+        forwarded name (it varies with its own caller), else its literal
+        value (module constants folded), else its AST text."""
+        if isinstance(node, ast.Name) and node.id not in consts:
+            return None
         name = node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
         if isinstance(node, (ast.Name, ast.Attribute)) and name in consts:
             v = consts[name]
@@ -186,23 +201,25 @@ def _unset_options() -> list[str]:
         for opt, idx, default in opts:
             if _exempt(rel, name, opt):
                 continue
-            want = value(default)
+            # a default naming a non-constant is still one fixed value
+            want = value(default) or ("ast", ast.dump(default))
 
-            def sets(c: ast.Call) -> bool:
+            def passed(c: ast.Call):
                 if any(isinstance(x, ast.Starred) for x in c.args):
-                    return True
+                    return None
                 for k in c.keywords:
-                    if k.arg is None or (k.arg == opt and value(k.value) != want):
-                        return True
-                return (
-                    idx is not None
-                    and 0 <= idx < len(c.args)
-                    and value(c.args[idx]) != want
-                )
+                    if k.arg is None:
+                        return None
+                    if k.arg == opt:
+                        return value(k.value)
+                if idx is not None and 0 <= idx < len(c.args):
+                    return value(c.args[idx])
+                return want
 
-            if any(sets(c) for c in calls.get(name, [])):
-                continue
-            if is_dc and any(value(v) != want for v in assigned.get(opt, [])):
+            seen = {passed(c) for c in calls.get(name, [])}
+            if is_dc:
+                seen |= {value(v) for v in assigned.get(opt, [])}
+            if None in seen or len(seen) > 1:
                 continue
             unset.append(f"{rel}: {name}({opt}={ast.unparse(default)})")
     return unset
@@ -211,6 +228,6 @@ def _unset_options() -> list[str]:
 def test_every_defaulted_parameter_is_set_by_some_call():
     unset = _unset_options()
     assert not unset, (
-        f"{len(unset)} option(s) that no call sets to a non-default "
+        f"{len(unset)} option(s) that every non-test call passes one "
         "value; make each a constant:\n" + "\n".join(unset)
     )

@@ -69,7 +69,7 @@ def test_minhash_single_shuffle(spark, sf001):
     from wiki_entity_linker_spark.operators.blocking import minhash_signatures
 
     docs = spark.read.parquet(f"{sf001}/documents.parquet")
-    sigs = minhash_signatures(docs, "doc_id", "text", 3, 8, num_partitions=8)
+    sigs = minhash_signatures(docs)
     plan = _plan(sigs)
     # one repartition exchange (explicit spread) + one hash agg exchange
     assert plan.count("Exchange") <= 2

@@ -34,8 +34,13 @@ _gprop = settings(
     ),
     tol=st.one_of(st.none(), st.integers(1, 30)),
 )
-def test_asof_join_matches_pandas_merge_asof(spark, left, right, tol):
+def test_asof_join_matches_pandas_merge_asof(spark, monkeypatch, left, right, tol):
+    from wiki_entity_linker_spark.operators import asof
     from wiki_entity_linker_spark.operators.asof import asof_join
+
+    # no tolerance: the product's 48 h bound, which no gap in these
+    # 50-second streams reaches
+    monkeypatch.setattr(asof, "TOLERANCE_SECONDS", 48 * 3600 if tol is None else tol)
 
     lrows = [(k, _ts(t), i) for i, (k, t) in enumerate(left)]
     rrows = [(k, _ts(t), 100 + i, float(i)) for i, (k, t) in enumerate(right)]
@@ -46,7 +51,6 @@ def test_asof_join_matches_pandas_merge_asof(spark, left, right, tol):
     out = asof_join(
         ldf, rdf, on=["k"], left_ts="lts", right_ts="rts", right_tie="rid",
         payload={"m_rid": "rid", "m_val": "val"},
-        tolerance_seconds=tol,
     )
     got = {r["lid"]: (r["m_rid"], r["m_val"]) for r in out.collect()}
 

@@ -3,6 +3,7 @@ micro-fixtures, FIXTURES.md §6)."""
 
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.operators import spans
 from wiki_entity_linker_spark.operators.spans import (
     bucketed_interval_join,
     suppress_overlaps,
@@ -39,19 +40,20 @@ def test_suppress_overlaps_per_doc_independent(spark):
     assert got == {("a", 0, 10), ("b", 0, 10), ("b", 20, 21)}
 
 
-def test_bucketed_interval_join_equals_naive(spark):
+def test_bucketed_interval_join_equals_naive(spark, monkeypatch):
+    monkeypatch.setattr(spans, "_INTERVAL_BUCKET", 64)
     points = spark.createDataFrame(
-        [("d", i) for i in range(0, 1000, 7)], "doc_id string, pos long"
+        [("d", i) for i in range(0, 1000, 7)], "doc string, pos long"
     )
     intervals = spark.createDataFrame(
         [("d", 0, 50, "m1"), ("d", 45, 400, "m2"), ("d", 900, 901, "m3"),
          ("d", 990, 2000, "m4")],
-        "doc_id string, start long, end long, mention string",
+        "doc string, start long, end long, mention string",
     )
-    fast = bucketed_interval_join(points, intervals, bucket=64)
+    fast = bucketed_interval_join(points, intervals)
     naive = points.join(
         intervals,
-        (points.doc_id == intervals.doc_id)
+        (points.doc == intervals.doc)
         & (points.pos >= intervals.start)
         & (points.pos < intervals.end),
     )

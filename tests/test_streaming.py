@@ -218,7 +218,6 @@ def test_streaming_asof_enrichment_equals_batch(spark, sf0001, tmp_path):
             on=["user_id"], left_ts="ts", right_ts="ts",
             right_tie="event_id",
             payload={"view_event_id": "event_id"},
-            tolerance_seconds=48 * 3600,
         )
 
     batch_out = enrich(ev.filter(F.col("event_type") == "purchase"))

@@ -17,19 +17,31 @@ from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.functions.vectors import cosine_prenorm, dot, norm
 
+# neighbors kept per query by every top-k search here
+_TOPK = 5
+# random-hyperplane LSH shape: sign bits per bucket key, independent tables
+# (shared with the embedding near-dup blocking, operators/dedup.py)
+LSH_PLANES = 6
+LSH_TABLES = 3
+# IVF cells each query probes
+_IVF_NPROBE = 4
+# integer-lattice k-means: cells and Lloyd iterations
+_KMEANS_K = 4
+_KMEANS_ITERS = 2
 
-def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """→ ``(query_id, vec_id, cos, rank)`` — exact top-k per query.
+
+def cosine_topk(vectors: DataFrame, queries: DataFrame) -> DataFrame:
+    """→ ``(query_id, vec_id, cos, rank)`` — exact top-``_TOPK`` per query.
 
     Broadcast the query side (queries ≪ corpus at scale); ties broken by
     ascending corpus id for determinism (the reference's sorted-qid
     tie-break, prefix_trie_linker.py:254-255).
     """
-    return _exact_topk(vectors, queries, k, lambda v, q: v.crossJoin(F.broadcast(q)))
+    return _exact_topk(vectors, queries, lambda v, q: v.crossJoin(F.broadcast(q)))
 
 
-def _exact_topk(vectors: DataFrame, queries: DataFrame, k: int, pair) -> DataFrame:
-    """Exact cosine top-k over the ``(v, q)`` pairs ``pair(v, q)`` returns.
+def _exact_topk(vectors: DataFrame, queries: DataFrame, pair) -> DataFrame:
+    """Exact cosine top-``_TOPK`` over the ``(v, q)`` pairs ``pair(v, q)`` returns.
 
     ``v`` is ``(vec_id, vv, __nv)`` and ``q`` is ``(query_id, qv, __nq)``:
     norms are attached per VECTOR before the pair join (cosine_prenorm:
@@ -54,17 +66,15 @@ def _exact_topk(vectors: DataFrame, queries: DataFrame, k: int, pair) -> DataFra
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TOPK)
         .select("query_id", "vec_id", F.round("__cos_raw", 6).alias("cos"), "rank")
     )
 
 
-def _rerank(
-    cand: DataFrame, vectors: DataFrame, queries: DataFrame, k: int
-) -> DataFrame:
+def _rerank(cand: DataFrame, vectors: DataFrame, queries: DataFrame) -> DataFrame:
     """Exact cosine top-k within candidate ``(query_id, vec_id)`` pairs."""
     return _exact_topk(
-        vectors, queries, k,
+        vectors, queries,
         lambda v, q: cand.join(v, "vec_id").join(F.broadcast(q), "query_id"),
     )
 
@@ -77,17 +87,11 @@ def _plane_literals(dim: int, n_planes: int, seed: int) -> list:
     ]
 
 
-def rhp_lsh_buckets(
-    df: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    n_planes: int = 8,
-    table: int = 0,
-) -> DataFrame:
-    """→ ``(id, bucket)`` — sign pattern of ``n_planes`` random projections
-    of ``embedding``."""
+def rhp_lsh_buckets(df: DataFrame, dim: int, id_col: str, table: int) -> DataFrame:
+    """→ ``(id, bucket)`` — sign pattern of ``LSH_PLANES`` random
+    projections of ``embedding``, drawn for LSH table ``table``."""
     bucket = None
-    for i, plane in enumerate(_plane_literals(dim, n_planes, 42 * 1000 + table)):
+    for i, plane in enumerate(_plane_literals(dim, LSH_PLANES, 42 * 1000 + table)):
         bit = F.when(dot(F.col("embedding"), plane) >= 0, F.lit(1 << i)).otherwise(
             F.lit(0)
         )
@@ -98,27 +102,20 @@ def rhp_lsh_buckets(
     )
 
 
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 8,
-    n_tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k: union of ``n_tables`` independent LSH tables;
+def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
+    """Approximate top-k: union of ``LSH_TABLES`` independent LSH tables;
     exact cosine re-rank within candidate buckets only."""
     cand = None
-    for t in range(n_tables):
-        vb = rhp_lsh_buckets(vectors, dim, "vec_id", n_planes, t)
+    for t in range(LSH_TABLES):
+        vb = rhp_lsh_buckets(vectors, dim, "vec_id", t)
         # the same-name rename only adds a Project; it keeps the analyzed
         # plan byte-identical to the one the plan-digest invariant records
         qb = rhp_lsh_buckets(
-            queries, dim, "query_id", n_planes, t
+            queries, dim, "query_id", t
         ).withColumnRenamed("query_id", "query_id")
         c = vb.join(qb, "bucket").select("query_id", "vec_id")
         cand = c if cand is None else cand.unionByName(c)
-    return _rerank(cand.dropDuplicates(["query_id", "vec_id"]), vectors, queries, k)
+    return _rerank(cand.dropDuplicates(["query_id", "vec_id"]), vectors, queries)
 
 
 def seeded_centroids(dim: int, n_centroids: int, seed: int = 42) -> list[list[float]]:
@@ -132,38 +129,6 @@ def seeded_centroids(dim: int, n_centroids: int, seed: int = 42) -> list[list[fl
     """
     rng = np.random.RandomState(seed)
     return [[float(x) for x in row] for row in rng.standard_normal((n_centroids, dim))]
-
-
-def train_ivf_centroids(
-    df: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    train_limit: int = 1024,
-    seed: int = 42,
-) -> list[list[float]]:
-    """Deterministic Lloyd k-means on a bounded driver-side training slice.
-
-    IVF coarse-quantizer training is an offline, sampled step even at 10⁹
-    vectors (the index ASSIGNMENT below is the distributed part); the slice
-    is ``ORDER BY id LIMIT train_limit`` so the result is reproducible, and
-    the numpy loop is exact Lloyd (5 iterations) with empty-cluster
-    carry-over.
-    """
-    rows = df.orderBy("vec_id").limit(train_limit).select("embedding").collect()
-    X = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    if len(X) == 0:
-        raise ValueError("train_ivf_centroids: training slice is empty")
-    # small corpora / heavy filters: fewer rows than requested centroids
-    n_centroids = min(n_centroids, len(X))
-    rng = np.random.RandomState(seed)
-    C = X[rng.choice(len(X), size=n_centroids, replace=False)].copy()
-    for _ in range(5):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        a = d2.argmin(1)
-        for j in range(n_centroids):
-            if (a == j).any():
-                C[j] = X[a == j].mean(0)
-    return [[float(x) for x in row] for row in C]
 
 
 def _cell_structs(centroids: list[list[float]]) -> list:
@@ -190,65 +155,49 @@ def ivf_assign(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
 
 
 def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 2,
-    max_cell: int | None = None,
+    vectors: DataFrame, queries: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
-    """IVF approximate top-k: probe each query's ``nprobe`` nearest cells,
-    exact-cosine re-rank only the vectors indexed there.
+    """IVF approximate top-k: probe each query's ``_IVF_NPROBE`` nearest
+    cells, exact-cosine re-rank only the vectors indexed there.
 
     Scale shape: assignment is one JVM-side pass over the corpus (shuffle on
     ``cell`` only at the candidate join); each cell holds ~n/n_centroids
     vectors, so per-query work drops by ``n_centroids / nprobe`` vs brute
-    force. Skewed cells (seeded random centroids don't balance like trained
-    ones) are the operator's known weakness — train with
-    :func:`train_ivf_centroids` in production. ``max_cell`` is the wired-in
-    guard for the pathological case: a cell holding more than ``max_cell``
-    vectors keeps only its ``max_cell`` lowest-id members in the candidate
-    index (deterministic truncation; queries probing a truncated hot cell
-    trade recall for a bounded join, the same stopword trade as the LSH
-    dedup guard).
+    force. Skewed cells are the operator's known weakness: seeded random
+    centroids (:func:`seeded_centroids`) don't balance the way k-means
+    centers do, and a hot cell joins every vector it holds against every
+    query probing it.
     """
     va = ivf_assign(vectors, centroids)
-    if max_cell is not None:
-        wcell = Window.partitionBy("cell").orderBy("vec_id")
-        va = (
-            va.withColumn("__rn", F.row_number().over(wcell))
-            .filter(F.col("__rn") <= max_cell)
-            .drop("__rn")
-        )
     qcells = _cell_structs(centroids)
     qa = queries.select(
         F.col("query_id").alias("query_id"),
         F.explode(
-            F.slice(F.array_sort(F.array(*qcells)), 1, nprobe)
+            F.slice(F.array_sort(F.array(*qcells)), 1, _IVF_NPROBE)
         ).alias("probe"),
     ).select("query_id", F.col("probe.j").alias("cell"))
     # each vector lives in exactly one cell → the probe join cannot duplicate
     cand = va.join(qa, "cell").select("query_id", "vec_id")
-    return _rerank(cand, vectors, queries, k)
+    return _rerank(cand, vectors, queries)
 
 
-def kmeans_lattice_assign(df: DataFrame, k: int = 4, n_iter: int = 2) -> DataFrame:
-    """Distributed integer-lattice Lloyd k-means → ``(id, cell)``.
+def kmeans_lattice_assign(df: DataFrame) -> DataFrame:
+    """Distributed integer-lattice Lloyd k-means → ``(id, cell)`` with
+    ``_KMEANS_K`` cells after ``_KMEANS_ITERS`` iterations.
 
-    The fully distributed complement to :func:`train_ivf_centroids` (which
-    trains on a bounded driver-side slice): every step is DataFrame ops, so
-    it survives corpora where no representative slice fits one machine.
+    Every step is DataFrame ops with no driver-side training slice, so it
+    survives corpora where no representative sample fits one machine.
     Made bit-portable the same way pagerank_fixed_point is — all arithmetic
     on int64: vectors land on a positive integer grid
     (``round((x + 1) * 1000)``, shift-invariant for L2), centroids are
     FLOORED back to the grid each M-step (quantized Lloyd; grid error
     ~1/1000 per dim), distances are exact integer sums, and argmin ties
-    break to the lowest cell index. Init = the ``k`` vectors with the
+    break to the lowest cell index. Init = the ``_KMEANS_K`` vectors with the
     smallest (portable-hash, id) key, cells numbered in that order; an
     emptied cell carries its previous centroid over.
 
     One iteration = assign + update; the returned frame is the assignment
-    of iteration ``n_iter`` (computed against the (n_iter−1)-th update).
+    of the last iteration (computed against the update before it).
 
     Scale shape: the centroid frame is k rows and BROADCASTS into the
     assignment crossJoin (k·N intermediate, one groupBy-argmin); the
@@ -267,7 +216,7 @@ def kmeans_lattice_assign(df: DataFrame, k: int = 4, n_iter: int = 2) -> DataFra
     ).localCheckpoint(eager=True)
 
     key = h64(F.col("vec_id").cast("string"))
-    cand = q.orderBy(key, "vec_id").limit(k)
+    cand = q.orderBy(key, "vec_id").limit(_KMEANS_K)
     w0 = Window.orderBy(h64(F.col("vec_id").cast("string")), "vec_id")
     cents = cand.select(
         (F.row_number().over(w0) - 1).cast("long").alias("cell"),
@@ -275,7 +224,7 @@ def kmeans_lattice_assign(df: DataFrame, k: int = 4, n_iter: int = 2) -> DataFra
     ).localCheckpoint(eager=True)
 
     assign = None
-    for it in range(1, n_iter + 1):
+    for it in range(1, _KMEANS_ITERS + 1):
         d = F.aggregate(
             F.zip_with("v", "c", lambda a, b: (a - b) * (a - b)),
             F.lit(0).cast("long"),
@@ -291,7 +240,7 @@ def kmeans_lattice_assign(df: DataFrame, k: int = 4, n_iter: int = 2) -> DataFra
             )
             .select("vec_id", F.col("m.cell").alias("cell"), "v")
         )
-        if it == n_iter:
+        if it == _KMEANS_ITERS:
             break
         assign = assign.localCheckpoint(eager=True)
         upd = (

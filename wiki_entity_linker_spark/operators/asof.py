@@ -20,7 +20,7 @@ making the result deterministic. A hot key serializes its own window
 partition only — same discipline as plans/coref.py, which is this
 operator specialized to one self-joined table.
 
-``tolerance_seconds`` bounds the lookback like ``merge_asof(tolerance=…)``:
+``TOLERANCE_SECONDS`` bounds the lookback like ``merge_asof(tolerance=…)``:
 a carried match older than the bound is nulled out AFTER the window pass
 (the nearest right row is the only possible candidate, so post-filtering
 is exact, not an approximation).
@@ -32,6 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# oldest match, in seconds before the left row, that asof_join keeps
+TOLERANCE_SECONDS = 48 * 3600
+
 
 def asof_join(
     left: DataFrame,
@@ -41,7 +44,6 @@ def asof_join(
     right_ts: str,
     right_tie: str,
     payload: dict[str, str],
-    tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """Left rows + nearest-preceding right payload.
 
@@ -49,7 +51,8 @@ def asof_join(
     output column name → right column carried from the matched row.
     ``right_tie``: right-side column ordering equal-timestamp rights (the
     largest value wins). Returns every ``left`` column plus ``payload``
-    keys and ``matched_ts`` (all null when no right row precedes).
+    keys and ``matched_ts`` (all null when no right row precedes within
+    ``TOLERANCE_SECONDS``).
     """
     out_cols = list(payload.keys())
     left_extra = [c for c in left.columns if c not in on and c != left_ts]
@@ -96,16 +99,13 @@ def asof_join(
     merged = lhs.unionByName(rhs).select(
         "*", F.last("__r", ignorenulls=True).over(win).alias("__m")
     )
-    in_window = F.col("__m").isNotNull()
-    if tolerance_seconds is not None:
-        # interval arithmetic, not epoch-double subtraction: timestamp
-        # microseconds stay exact integers, so the boundary is crisp
-        # (:f formatting — scientific notation does not parse as INTERVAL)
-        in_window = in_window & (
-            F.col("__m.__rts")
-            >= F.col("__ts")
-            - F.expr(f"INTERVAL '{float(tolerance_seconds):f}' SECOND")
-        )
+    # interval arithmetic, not epoch-double subtraction: timestamp
+    # microseconds stay exact integers, so the boundary is crisp
+    # (:f formatting — scientific notation does not parse as INTERVAL)
+    in_window = F.col("__m").isNotNull() & (
+        F.col("__m.__rts")
+        >= F.col("__ts") - F.expr(f"INTERVAL '{float(TOLERANCE_SECONDS):f}' SECOND")
+    )
     return merged.filter(F.col("__side") == 1).select(
         *on,
         F.col("__ts").alias(left_ts),

@@ -18,6 +18,11 @@ from wiki_entity_linker_spark.functions.text import shingles, tokenize
 
 DEFAULT_N_HASHES = 16
 DEFAULT_BANDS = 8  # 8 bands × 2 rows: s-curve threshold ≈ (1/8)^(1/2) ≈ 0.35
+# shingle length (tokens) and family size of minhash_signatures
+_SIG_K_SHINGLE = 3
+_SIG_N_HASHES = 4
+# rows per sorted-neighborhood window
+_SNM_WINDOW = 4
 
 
 def with_file_id(df: DataFrame) -> DataFrame:
@@ -25,31 +30,25 @@ def with_file_id(df: DataFrame) -> DataFrame:
     return df.withColumn("file_id", stable_file_id("repo", "path", "commit"))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "file_id",
-    content_col: str = "content",
-    k_shingle: int = 5,
-    n_hashes: int = DEFAULT_N_HASHES,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """(id, minhash: array<long>) — one shuffle, no UDFs.
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """``(doc_id, minhash: array<long>)`` of the ``text`` column — one
+    shuffle, no UDFs.
 
-    Explode distinct k-token shingles, hash each shingle ONCE (md5-based
-    ``h64``), derive the ``n_hashes`` family members arithmetically
-    (functions/hashing.mh_mix), then take the mins in a single groupBy
-    (map-side partial aggregation makes this robust to huge docs).
+    Explode distinct ``_SIG_K_SHINGLE``-token shingles, hash each shingle
+    ONCE (md5-based ``h64``), derive the ``_SIG_N_HASHES`` family members
+    arithmetically (functions/hashing.mh_mix), then take the mins in a
+    single groupBy (map-side partial aggregation makes this robust to huge
+    docs).
 
-    ``num_partitions``: spread the shingle computation before the explode —
-    small upstream tables otherwise arrive in one partition and serialize
-    the whole scan on one core.
+    The shingle computation is spread over the session's cores before the
+    explode: small upstream tables otherwise arrive in one partition and
+    serialize the whole scan on one core.
     """
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism
-    sh = df.repartition(num_partitions, id_col).select(
-        F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
+    n = df.sparkSession.sparkContext.defaultParallelism
+    sh = df.repartition(n, "doc_id").select(
+        F.col("doc_id"), shingles(tokenize("text"), _SIG_K_SHINGLE).alias("sh")
     )
-    return minhash_from_shingles(sh, id_col, n_hashes)
+    return minhash_from_shingles(sh, "doc_id", _SIG_N_HASHES)
 
 
 def minhash_from_shingles(
@@ -207,17 +206,12 @@ def cross_block_pairs(
     )
 
 
-def sorted_neighborhood_pairs(
-    df: DataFrame,
-    key_col: str,
-    id_col: str,
-    window: int = 4,
-) -> DataFrame:
+def sorted_neighborhood_pairs(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
     """Sorted-neighborhood blocking (Hernández & Stolfo 1995): sort the
     corpus by ``key_col`` (ties broken by ``id_col`` — a strict total
-    order) and emit every pair within ``window`` consecutive rows:
+    order) and emit every pair within ``_SNM_WINDOW`` consecutive rows:
     → ``(id_a, id_b, dist)`` with ``id_a`` earlier in sort order and
-    ``dist`` in 1..window-1. The classic complement to equality blocking:
+    ``dist`` in 1.._SNM_WINDOW-1. The classic complement to equality blocking:
     near-miss keys (typos, prefix drift) land adjacent after sorting even
     though they never collide on an exact block key.
 
@@ -234,8 +228,6 @@ def sorted_neighborhood_pairs(
     so a window spanning two (or ten) buckets joins exactly the same as
     one inside a bucket.
     """
-    if window < 2:
-        raise ValueError(f"window must be >= 2, got {window}")
     keyed = df.select(
         F.col(id_col), F.col(key_col).alias("__k")
     ).withColumn("__bkt", F.substring("__k", 1, 1))
@@ -263,7 +255,7 @@ def sorted_neighborhood_pairs(
     a = pos.select(
         F.col(id_col).alias("id_a"),
         "__pos",
-        F.explode(F.sequence(F.lit(1), F.lit(window - 1))).alias("dist"),
+        F.explode(F.sequence(F.lit(1), F.lit(_SNM_WINDOW - 1))).alias("dist"),
     ).withColumn("__pos_b", F.col("__pos") + F.col("dist"))
     b = pos.select(F.col(id_col).alias("id_b"), F.col("__pos").alias("__pos_b"))
     return a.join(b, "__pos_b").select(
@@ -271,11 +263,7 @@ def sorted_neighborhood_pairs(
     )
 
 
-def meta_block_prune(
-    blocks: DataFrame,
-    id_col: str = "id",
-    block_col: str = "block_key",
-) -> DataFrame:
+def meta_block_prune(blocks: DataFrame) -> DataFrame:
     """Meta-blocking with weight-edge pruning (Papadakis et al.,
     "Meta-Blocking: Taking Entity Resolution to the Next Level", TKDE
     2014): refine a redundancy-positive block collection by scoring each
@@ -284,7 +272,8 @@ def meta_block_prune(
     token/shingle blocking mints too many pairs (the reference's alias
     dictionary has the same problem on popular aliases,
     entity_database.py:85-100; its fix is a hard frequency cut, this one
-    is evidence-weighted).
+    is evidence-weighted). ``blocks`` holds ``(doc_id, g)`` rows, one per
+    document and block key.
 
     Edge weights per pair (``id_a < id_b`` canonical order):
 
@@ -307,7 +296,7 @@ def meta_block_prune(
     # and w two (global mean + final verdict) — cut each once so the
     # posting dedup and the pair aggregation run a single time
     b = (
-        blocks.select(F.col(id_col).alias("id"), F.col(block_col).alias("bk"))
+        blocks.select(F.col("doc_id").alias("id"), F.col("g").alias("bk"))
         .dropDuplicates(["id", "bk"])
         .localCheckpoint(eager=True)
     )

@@ -107,14 +107,3 @@ def bloom_contains_hashed(base: Column | str, bitmap: Column | str) -> Column:
             != 0
         )
     return cond
-
-
-def bloom_contains(key: Column | str, bitmap: Column | str) -> Column:
-    """Membership test for a raw string key (digests it once). Join the
-    1-row bitmap in with ``crossJoin(F.broadcast(...))`` first. True for
-    every inserted key (no false negatives); false positives at the usual
-    (1 - e^{-kn/m})^k rate — callers needing exactness verify hits against
-    the real key set, touching only this pre-filtered sliver.
-    """
-    key = F.col(key) if isinstance(key, str) else key
-    return bloom_contains_hashed(bloom_base_hash(key), bitmap)

@@ -40,6 +40,8 @@ _BROADCAST_MAP_ROWS = 500_000
 # Star-contraction rounds before connected components gives up and raises;
 # rounds needed ≈ log2(graph diameter).
 _CC_MAX_ITER = 20
+# longest path transitive_closure resolves before it raises
+_CLOSURE_MAX_DEPTH = 20
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -202,9 +204,7 @@ def components_with_singletons(
     )
 
 
-def _local_closure(
-    spark, base: DataFrame, depth_cap: int, rounds: int, max_depth: int
-) -> DataFrame:
+def _local_closure(spark, base: DataFrame, depth_cap: int, rounds: int) -> DataFrame:
     """Finish a (bounded) edge set on the driver: BFS closure with min-depth
     tracking — identical output AND identical depth-overflow semantics to
     the distributed doubling loop (which converges iff every reachable
@@ -234,12 +234,7 @@ def _local_closure(
                         if d > depth_cap:
                             overflow = True
     if overflow:
-        raise RuntimeError(
-            f"transitive_closure did not converge within {rounds} doubling "
-            f"rounds (max_depth={max_depth}): the graph has paths longer "
-            "than max_depth. Raise max_depth (rounds grow only "
-            "logarithmically) or break cycles upstream."
-        )
+        _raise_closure_depth(rounds)
     out_schema = (
         "a " + base.schema["a"].dataType.simpleString()
         + ", b " + base.schema["b"].dataType.simpleString()
@@ -248,12 +243,21 @@ def _local_closure(
     return spark.createDataFrame(out, out_schema)
 
 
-def transitive_closure(edges: DataFrame, max_depth: int = 20) -> DataFrame:
+def _raise_closure_depth(rounds: int):
+    raise RuntimeError(
+        f"transitive_closure did not converge within {rounds} doubling "
+        f"rounds (_CLOSURE_MAX_DEPTH={_CLOSURE_MAX_DEPTH}): the graph has "
+        "paths longer than _CLOSURE_MAX_DEPTH. Raise it (rounds grow only "
+        "logarithmically) or break cycles upstream."
+    )
+
+
+def transitive_closure(edges: DataFrame) -> DataFrame:
     """All (src, ancestor) pairs reachable via directed edges — the Spark
     recast of create_all_types_mapping.py:20-49 (depth-capped, cycle-safe).
 
     Uses **iterative doubling** (R := R + R.R): reachable depth doubles per
-    round, so ``ceil(log2(max_depth))`` rounds suffice. Each round references
+    round, so ``ceil(log2(_CLOSURE_MAX_DEPTH))`` rounds suffice. Each round references
     the closure three times (both join sides and the union), so without a cut
     the *plan* triples per round and Catalyst analysis dominates the runtime
     long before the data does; every round therefore ends in a
@@ -276,14 +280,12 @@ def transitive_closure(edges: DataFrame, max_depth: int = 20) -> DataFrame:
     )
     closure = base
     prev = closure.count()
-    # +1 confirmation round: a graph of depth exactly max_depth still
-    # grows in the final doubling round, so convergence needs one extra
-    # no-growth round to be observable
-    rounds = max(1, math.ceil(math.log2(max(2, max_depth)))) + 1
+    # +1 confirmation round: a graph of depth exactly _CLOSURE_MAX_DEPTH
+    # still grows in the final doubling round, so convergence needs one
+    # extra no-growth round to be observable
+    rounds = max(1, math.ceil(math.log2(max(2, _CLOSURE_MAX_DEPTH)))) + 1
     if prev <= _CLOSURE_LOCAL_SOLVE_EDGES:
-        out = _local_closure(
-            edges.sparkSession, base, 2 ** (rounds - 1), rounds, max_depth
-        )
+        out = _local_closure(edges.sparkSession, base, 2 ** (rounds - 1), rounds)
         return out.select(F.col("a").alias("child"), F.col("b").alias("parent"))
     converged = False
     for _ in range(rounds):
@@ -306,12 +308,7 @@ def transitive_closure(edges: DataFrame, max_depth: int = 20) -> DataFrame:
     if not converged:
         # mirror connected_components' loud non-convergence: a silently
         # partial closure corrupts every downstream join
-        raise RuntimeError(
-            f"transitive_closure did not converge within {rounds} doubling "
-            f"rounds (max_depth={max_depth}): the graph has paths longer "
-            f"than max_depth. Raise max_depth (rounds grow only "
-            f"logarithmically) or break cycles upstream."
-        )
+        _raise_closure_depth(rounds)
     return closure.select(F.col("a").alias("child"), F.col("b").alias("parent"))
 
 

@@ -1,9 +1,9 @@
 """Deduplication operators over document/content tables.
 
 First-class training-data-pipeline components (graded alongside the ER
-pipeline): exact hash dedup, MinHash/LSH near-dup, SimHash, n-gram Jaccard,
-embedding-cosine near-dup. All hashes are the portable md5-based ``h64``
-family so every operator has a DuckDB oracle.
+pipeline): exact hash dedup, MinHash/LSH near-dup, SimHash fingerprints,
+n-gram Jaccard, embedding-cosine near-dup. All hashes are the portable
+md5-based ``h64`` family so every operator has a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -29,9 +29,33 @@ from wiki_entity_linker_spark.operators.blocking import (
 )
 from wiki_entity_linker_spark.operators.skew import spread_small_input
 
-# winnowing gram length (tokens) and window length (gram hashes)
+# MinHash near-dup shingle length (tokens), and the Jaccard verify threshold
+# of the incremental clustering
+_NEARDUP_K = 3
+_INCREMENTAL_JACCARD = 0.3
+# SimHash fingerprint width (bits)
+_SIMHASH_BITS = 16
+# n-gram Jaccard: gram length, verify threshold, and the document frequency
+# above which a gram is dropped from the inverted index
+_NGRAM_N = 3
+_NGRAM_JACCARD = 0.05
+_NGRAM_MAX_DF = 100
+# embedding LSH near-dup: members above which a bucket is dropped
+_LSH_MAX_BUCKET = 256
+# ExactSubstr minimum-match gram length and CCNet-style segment length
+# (tokens); the curation plan (plans/curation.py) folds both into its
+# resume key
+SUBSTR_K = 5
+SEG_LEN = 8
+# winnowing gram length (tokens), window length (gram hashes), shared
+# fingerprints per candidate pair, and the posting length above which a
+# fingerprint is dropped
 _WINNOW_K = 4
 _WINNOW_W = 4
+_WINNOW_MIN_SHARED = 2
+_WINNOW_MAX_POSTINGS = 256
+# AllPairs shingle length (tokens)
+_ALLPAIRS_K = 3
 
 
 def exact_dedup(df: DataFrame, id_col: str, content_col: str = "content") -> DataFrame:
@@ -54,23 +78,21 @@ def exact_dedup(df: DataFrame, id_col: str, content_col: str = "content") -> Dat
 
 
 def minhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str,
-    content_col: str = "content",
-    k_shingle: int = 5,
-    jaccard_threshold: float = 0.5,
+    df: DataFrame, id_col: str, jaccard_threshold: float
 ) -> DataFrame:
-    """LSH candidate pairs verified with exact shingle Jaccard.
+    """LSH candidate pairs of the ``text`` column, verified with exact
+    shingle Jaccard.
 
-    shingle → minhash (16 hashes) → band (8 bands of 2 rows) → bucket
-    self-join → exact-Jaccard filter: → ``(id_a, id_b, jaccard)``.
+    ``_NEARDUP_K``-token shingle → minhash (16 hashes) → band (8 bands of
+    2 rows) → bucket self-join → exact-Jaccard filter:
+    → ``(id_a, id_b, jaccard)``.
     """
     df = spread_small_input(df)
     # ONE tokenize/shingle pass: the shingle arrays feed the signature
     # derivation AND both verify sides; without the cut Catalyst re-runs
     # the scan per consumer (measured: 8 parquet scans in this plan)
     toks = df.select(
-        F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
+        F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh")
     ).localCheckpoint(eager=True)
     sigs = minhash_from_shingles(toks, id_col)
     # blocks feed both sides of the pair self-join: cut here too so the
@@ -125,15 +147,11 @@ def _verify_shingle_pairs(
 
 
 def minhash_neardup_clusters_incremental(
-    base_df: DataFrame,
-    new_df: DataFrame,
-    id_col: str,
-    content_col: str = "content",
-    k_shingle: int = 5,
-    jaccard_threshold: float = 0.5,
+    base_df: DataFrame, new_df: DataFrame, id_col: str
 ) -> DataFrame:
     """Cluster ``base_df``, then absorb ``new_df`` incrementally —
-    result-identical to clustering base ∪ new in one shot.
+    result-identical to clustering base ∪ new in one shot (near-dup edges
+    of :func:`minhash_neardup_pairs` at Jaccard ``_INCREMENTAL_JACCARD``).
 
     Why exact (not approximate): MinHash signatures and band keys are
     per-document functions of content, so the one-shot run's candidate set
@@ -162,10 +180,10 @@ def minhash_neardup_clusters_incremental(
     base = spread_small_input(base_df)
     new = spread_small_input(new_df)
     toks_b = base.select(
-        F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
+        F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh")
     ).localCheckpoint(eager=True)
     toks_n = new.select(
-        F.col(id_col), shingles(tokenize(content_col), k_shingle).alias("sh")
+        F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh")
     ).localCheckpoint(eager=True)
     blocks_b = lsh_band_blocks(
         minhash_from_shingles(toks_b, id_col), id_col
@@ -176,7 +194,7 @@ def minhash_neardup_clusters_incremental(
 
     def _verify(pairs: DataFrame, toks: DataFrame) -> DataFrame:
         return _verify_shingle_pairs(
-            pairs, toks, id_col, jaccard_threshold
+            pairs, toks, id_col, _INCREMENTAL_JACCARD
         ).select("id_a", "id_b")
 
     base_comps = components_with_singletons(
@@ -215,91 +233,51 @@ def minhash_neardup_clusters_incremental(
     )
 
 
-def simhash(
-    df: DataFrame, id_col: str, content_col: str = "content", bits: int = 32
-) -> DataFrame:
-    """→ ``(id, simhash)`` — portable SimHash over tokens.
+def simhash(df: DataFrame, id_col: str) -> DataFrame:
+    """→ ``(id, simhash)`` — portable ``_SIMHASH_BITS``-bit SimHash over the
+    tokens of ``text``.
 
     Bit ``i`` of the fingerprint is the sign of Σ_tokens (±1) where the sign
     for a token is bit ``i`` of ``h64(token)``; duplicate tokens weight by
-    multiplicity. Pure explode + groupBy with ``bits`` sum aggregates.
+    multiplicity. Pure explode + groupBy with one sum aggregate per bit.
     """
     tok = spread_small_input(df).select(
-        F.col(id_col), F.explode(tokenize(content_col)).alias("t")
+        F.col(id_col), F.explode(tokenize("text")).alias("t")
     )
     tok = tok.withColumn("h", h64("t"))
     aggs = [
         F.sum(
             F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"s{i}")
-        for i in range(bits)
+        for i in range(_SIMHASH_BITS)
     ]
     sums = tok.groupBy(id_col).agg(*aggs)
     fp = None
-    for i in range(bits):
+    for i in range(_SIMHASH_BITS):
         bit = F.when(F.col(f"s{i}") > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
     return sums.select(id_col, fp.alias("simhash"))
 
 
-def simhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str,
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """SimHash near-dup: band the fingerprint (pigeonhole: ≤``max_hamming``
-    differing bits with ``bands > max_hamming`` bands guarantees one equal
-    band), self-join per band, verify Hamming distance ≤ ``max_hamming``."""
-    sh = simhash(df, id_col)
-    width = 32 // bands
-    mask = (1 << width) - 1
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ":", F.lit(f"b{b}"),
-                F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit(mask)),
-            )
-            for b in range(bands)
-        ]
-    )
-    blocks = sh.select(F.col(id_col), F.explode(band_keys).alias("block_key"))
-    pairs = pairs_from_blocks(blocks, id_col)
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .select("id_a", "id_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    content_col: str = "content",
-    n: int = 3,
-    threshold: float = 0.4,
-    max_doc_freq: int | None = 10000,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup via inverted-index join (no LSH loss).
+def ngram_jaccard_pairs(df: DataFrame, id_col: str) -> DataFrame:
+    """Exact n-gram Jaccard near-dup of the ``text`` column via
+    inverted-index join (no LSH loss): every pair whose ``_NGRAM_N``-gram
+    Jaccard is at least ``_NGRAM_JACCARD``.
 
     Distributed form: explode distinct n-grams, self-join on the n-gram
     (inverted index), count shared grams per pair, then Jaccard =
     |∩| / (|A|+|B|-|∩|). Quadratic only within posting lists, so hot
     n-grams are capped INSIDE the operator: any gram appearing in more than
-    ``max_doc_freq`` documents is dropped from both the index and the
+    ``_NGRAM_MAX_DF`` documents is dropped from both the index and the
     per-document sizes (Jaccard is then over the kept grams). Without the
     cap one stop-gram shared by 10⁶ docs produces 10¹² join rows; with it
-    the posting-list join is bounded at ``max_doc_freq²`` rows per gram.
-    Pass ``max_doc_freq=None`` to disable (exact textbook Jaccard).
+    the posting-list join is bounded at ``_NGRAM_MAX_DF²`` rows per gram.
     """
     src = spread_small_input(
-        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("content"))
+        df.select(F.col(id_col).alias("id"), F.col("text").alias("content"))
     )
     id_type = df.schema[id_col].dataType
-    grams = src.select("id", shingles(tokenize("content"), n).alias("g"))
+    grams = src.select("id", shingles(tokenize("content"), _NGRAM_N).alias("g"))
     # int64-hash the gram join key: the inverted index is shuffled three
     # times (df-count, sizes, self-join) — 8-byte keys instead of n-token
     # strings; Jaccard is over distinct-gram counts, which xxhash64
@@ -313,20 +291,19 @@ def ngram_jaccard_pairs(
     # 4 full document scans in the sf1 plan. The cut stores the exploded
     # (id, gram) rows (two 8-byte columns) and truncates lineage.
     inv = inv.localCheckpoint(eager=True)
-    if max_doc_freq is not None:
-        # the HOT list is tiny by construction → broadcast anti-join; the
-        # second checkpoint stops Catalyst cloning the hot aggregation and
-        # the anti-join into BOTH sides of the self-join below (observed as
-        # two extra aggregations over inv in the sf1 plan)
-        hot = (
-            inv.groupBy("gram")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("gram")
-        )
-        inv = inv.join(F.broadcast(hot), "gram", "left_anti").localCheckpoint(
-            eager=True
-        )
+    # the HOT list is tiny by construction → broadcast anti-join; the
+    # second checkpoint stops Catalyst cloning the hot aggregation and
+    # the anti-join into BOTH sides of the self-join below (observed as
+    # two extra aggregations over inv in the sf1 plan)
+    hot = (
+        inv.groupBy("gram")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > _NGRAM_MAX_DF)
+        .select("gram")
+    )
+    inv = inv.join(F.broadcast(hot), "gram", "left_anti").localCheckpoint(
+        eager=True
+    )
     # sizes from KEPT grams (arrays are distinct, so count(*) = |set|);
     # materialized once — it feeds both sides of the final size join AND a
     # driver-side bounds probe (below) from one tiny table
@@ -412,7 +389,7 @@ def ngram_jaccard_pairs(
                 F.col("inter") / (F.col("sab") - F.col("inter")), 6
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= _NGRAM_JACCARD)
     )
 
 
@@ -443,19 +420,15 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame
 
 
 def embedding_neardup_lsh_pairs(
-    df: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    max_bucket: int | None = None,
+    df: DataFrame, dim: int, threshold: float
 ) -> DataFrame:
     """Embedding-cosine near-dup, scale path: random-hyperplane LSH
     bucket self-join blocking + exact cosine verify (no cross join).
 
-    Each of ``n_tables`` independent tables hashes every vector to the sign
-    pattern of ``n_planes`` seeded random projections (operators/ann.py
-    ``rhp_lsh_buckets`` — plane literals, JVM-side dot products); candidate
+    Each of ``ann.LSH_TABLES`` independent tables hashes every vector to the
+    sign pattern of ``ann.LSH_PLANES`` seeded random projections
+    (operators/ann.py ``rhp_lsh_buckets`` — plane literals, JVM-side dot
+    products); candidate
     pairs are the within-bucket self-joins, unioned across tables and
     deduped, then verified with the same exact cosine as the brute-force
     baseline. Precision vs :func:`embedding_neardup_pairs` is exactly 1
@@ -463,36 +436,35 @@ def embedding_neardup_lsh_pairs(
     ``1-(1-(1-θ/π)^p)^t`` — tune planes/tables per threshold.
 
     At 10⁸+ vectors the bucket self-join shuffles on ``bucket``; near-
-    duplicate-heavy corpora can produce hot buckets.  ``max_bucket`` is the
-    wired-in skew guard: a bucket with more than ``max_bucket`` members is
-    dropped from pairing in that table (the deterministic stopword-drop
-    from ``operators.skew.cap_and_salt_blocks``), bounding the worst bucket
-    at ``max_bucket²/2`` pairs per table.  Members of a dropped bucket are
+    duplicate-heavy corpora can produce hot buckets. Every bucket with more
+    than ``_LSH_MAX_BUCKET`` members is dropped from pairing in its table
+    (the deterministic stopword-drop of
+    ``operators.skew.cap_and_salt_blocks``), bounding the worst bucket at
+    ``_LSH_MAX_BUCKET²/2`` pairs per table. Members of a dropped bucket are
     still recalled by the other tables unless they collide everywhere —
     the usual LSH stopword trade.
     """
-    from wiki_entity_linker_spark.operators.ann import rhp_lsh_buckets
+    from wiki_entity_linker_spark.operators.ann import LSH_TABLES, rhp_lsh_buckets
 
     # All tables in ONE pass: bucket keys are table-prefixed ("t0:", "t1:",
     # …) so the union of the per-table bucket assignments is a single
     # exploded (id, bucket) frame with DISTINCT keys across tables — the
     # per-bucket count/cap and the within-bucket self-join are then one
-    # window shuffle + one join shuffle instead of n_tables of each
+    # window shuffle + one join shuffle instead of one of each per table
     # (r7: 6 shuffles → 2 at the default 3 tables), with the candidate set
     # unchanged (same buckets, same per-table cap semantics).
     bk = None
-    for t in range(n_tables):
-        b_t = rhp_lsh_buckets(df, dim, "vec_id", n_planes, t)
+    for t in range(LSH_TABLES):
+        b_t = rhp_lsh_buckets(df, dim, "vec_id", t)
         bk = b_t if bk is None else bk.unionByName(b_t)
-    if max_bucket is not None:
-        w = Window.partitionBy("bucket")
-        bk = (
-            bk.withColumn("__n", F.count("*").over(w))
-            .filter(F.col("__n") <= max_bucket)
-            .drop("__n")
-        )
+    w = Window.partitionBy("bucket")
+    bk = (
+        bk.withColumn("__n", F.count("*").over(w))
+        .filter(F.col("__n") <= _LSH_MAX_BUCKET)
+        .drop("__n")
+    )
     # cut: both self-join sides consume bk — without it the bucket window
-    # (and the n_tables projection union) is evaluated twice
+    # (and the per-table projection union) is evaluated twice
     bk = bk.localCheckpoint(eager=True)
     a = bk.select(F.col("vec_id").alias("id_a"), "bucket")
     b = bk.select(F.col("vec_id").alias("id_b"), "bucket")
@@ -523,11 +495,11 @@ def embedding_neardup_lsh_pairs(
     )
 
 
-def segment_dedup_stats(docs: DataFrame, seg_len: int = 8) -> DataFrame:
+def segment_dedup_stats(docs: DataFrame) -> DataFrame:
     """Corpus-wide segment-level exact dedup, CCNet-style (Wenzek et al.
     2020 §4.1 deduplicates hashed paragraphs across the whole snapshot;
     the synthetic corpus has no paragraph breaks, so the unit here is a
-    fixed ``seg_len``-token segment — the last segment per document is the
+    fixed ``SEG_LEN``-token segment — the last segment per document is the
     ragged tail).
 
     A segment occurrence is KEPT iff it is the lexicographically first
@@ -545,12 +517,10 @@ def segment_dedup_stats(docs: DataFrame, seg_len: int = 8) -> DataFrame:
     the final per-doc rollup is the third and last shuffle. Nothing is ever
     corpus × corpus.
     """
-    if seg_len < 1:
-        raise ValueError(f"seg_len must be >= 1, got {seg_len}")
     # the segment rows are consumed twice (winner agg + join back) — cut
     # them once so the corpus is scanned and tokenized a single time
     seg = segment_rows(
-        docs.select("doc_id", tokenize("text").alias("t")), seg_len
+        docs.select("doc_id", tokenize("text").alias("t")), SEG_LEN
     ).localCheckpoint(eager=True)
     return segment_stats(seg, seg)
 
@@ -607,11 +577,12 @@ def segment_stats(segs: DataFrame, evidence: DataFrame) -> DataFrame:
     )
 
 
-def exact_substring_coverage(docs: DataFrame, k: int = 5) -> DataFrame:
+def exact_substring_coverage(docs: DataFrame) -> DataFrame:
     """Per-document exact-substring duplicate coverage — the distributed
     recast of suffix-array ExactSubstr dedup (Lee et al. 2022, "Deduplicating
-    Training Data Makes Language Models Better"): a token position p is
-    DUPLICATED when the k-gram starting at p occurs more than once in the
+    Training Data Makes Language Models Better"): with k = ``SUBSTR_K``, a
+    token position p is DUPLICATED when the k-gram starting at p occurs
+    more than once in the
     whole corpus (another document, or elsewhere in the same one — exactly
     the suffix-array rule), and a document's duplicate coverage is the union
     of its [p, p+k) duplicated intervals. The reference repo's unigram
@@ -640,12 +611,10 @@ def exact_substring_coverage(docs: DataFrame, k: int = 5) -> DataFrame:
     byte-offset dedup); the string key here keeps the operator bit-equal to
     the DuckDB oracle.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
     toks = docs.select("doc_id", tokenize("text").alias("t"))
     toks = toks.localCheckpoint(eager=True)
-    grams = substring_gram_rows(toks, k).localCheckpoint(eager=True)
-    return substring_coverage(grams, toks, k)
+    grams = substring_gram_rows(toks, SUBSTR_K).localCheckpoint(eager=True)
+    return substring_coverage(grams, toks, SUBSTR_K)
 
 
 def substring_gram_rows(toks: DataFrame, k: int) -> DataFrame:
@@ -751,19 +720,15 @@ def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     return hashed.select("doc_id", F.explode(fps).alias("fp"))
 
 
-def winnowing_candidate_pairs(
-    docs: DataFrame,
-    min_shared: int = 2,
-    max_postings: int = 256,
-) -> DataFrame:
+def winnowing_candidate_pairs(docs: DataFrame) -> DataFrame:
     """→ ``(id_a, id_b, n_shared)`` document pairs sharing at least
-    ``min_shared`` winnowing fingerprints — MOSS-style verbatim-passage
+    ``_WINNOW_MIN_SHARED`` winnowing fingerprints — MOSS-style verbatim-passage
     candidate pairs (id_a < id_b).
 
     Scale shape: one shuffle keyed by fingerprint builds posting lists
     (map-side combinable collect_list; each doc contributes a fingerprint
     at most once, so list length = document frequency), postings longer
-    than ``max_postings`` are DROPPED — MOSS's own too-common-code
+    than ``_WINNOW_MAX_POSTINGS`` are DROPPED — MOSS's own too-common-code
     suppression rule: a fingerprint shared by everyone identifies nothing
     and would emit O(df²) pairs — then pairs explode from capped lists
     (bounded blowup) into one map-side-combinable pair count. Nothing is
@@ -773,7 +738,7 @@ def winnowing_candidate_pairs(
     postings = (
         fp.groupBy("fp")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= max_postings))
+        .filter((F.size("ds") >= 2) & (F.size("ds") <= _WINNOW_MAX_POSTINGS))
     )
     return (
         postings.select(F.explode("ds").alias("id_a"), "ds")
@@ -781,18 +746,14 @@ def winnowing_candidate_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= _WINNOW_MIN_SHARED)
     )
 
 
-def allpairs_jaccard_join(
-    docs: DataFrame,
-    threshold: str = "0.3",
-    k_shingle: int = 3,
-) -> DataFrame:
+def allpairs_jaccard_join(docs: DataFrame, threshold: str) -> DataFrame:
     """EXACT all-pairs set-similarity join via prefix filtering (Bayardo,
     Ma & Srikant 2007; Chaudhuri et al. 2006) — every pair of documents
-    whose distinct k-shingle sets have Jaccard >= ``threshold``, with NO
+    whose distinct ``_ALLPAIRS_K``-shingle sets have Jaccard >= ``threshold``, with NO
     approximation: → ``(id_a, id_b, inter, union_sz, jaccard)``. The
     completeness lemma: under any single global token order, two sets with
     J >= t must share a token within their first ``sz - ceil(t·sz) + 1``
@@ -830,8 +791,8 @@ def allpairs_jaccard_join(
     )
     sets = toks.select(
         "doc_id",
-        shingles("tk", k_shingle).alias("s"),
-        F.size(shingles("tk", k_shingle)).cast("long").alias("sz"),
+        shingles("tk", _ALLPAIRS_K).alias("s"),
+        F.size(shingles("tk", _ALLPAIRS_K)).cast("long").alias("sz"),
     ).localCheckpoint(eager=True)
     ex = sets.select("doc_id", "sz", F.explode("s").alias("sh"))
     dfreq = ex.groupBy("sh").agg(F.count("*").cast("long").alias("df"))

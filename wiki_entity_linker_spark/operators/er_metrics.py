@@ -31,6 +31,10 @@ from pyspark.sql import functions as F
 
 # decimal places every published metric, probability and weight rounds to
 _DIGITS = 6
+# EM iterations of fs_em_estimate, and the iterations between cuts of its
+# parameter lineage
+_EM_ITERS = 2
+_EM_CUT_EVERY = 1
 
 
 def bcubed(items: DataFrame, sys_col: str, gold_col: str) -> DataFrame:
@@ -306,29 +310,24 @@ def fellegi_sunter_score(
     )
 
 
-def fs_em_estimate(
-    pairs: DataFrame,
-    feature_cols: list[str],
-    n_iter: int = 2,
-    cut_every: int = 1,
-) -> DataFrame:
+def fs_em_estimate(pairs: DataFrame, feature_cols: list[str]) -> DataFrame:
     """UNSUPERVISED Fellegi–Sunter parameter estimation via EM (the
     Splink-style path — real deployments rarely have labeled pairs):
-    starting from fixed literals (λ, m, u) = (0.5, 0.8, 0.2), each
-    iteration computes every pair's match responsibility
+    starting from fixed literals (λ, m, u) = (0.5, 0.8, 0.2), each of
+    ``_EM_ITERS`` iterations computes every pair's match responsibility
     w = λ·Πm / (λ·Πm + (1−λ)·Πu) (E-step, pure row-local math against a
     broadcast 1-row parameter frame) and
     re-estimates m_i = Σ w·aᵢ / Σ w, u_i = Σ (1−w)·aᵢ / Σ (1−w),
     λ = Σ w / n (M-step, ONE combinable aggregation). No labels touched.
 
-    Plan-depth bound (``cut_every``): iteration i's broadcast executes its
-    whole lineage, so a fully lazy n-iteration composition re-runs every
-    prior E-step — O(n²) passes over the pair table and a Catalyst plan
-    that deepens per iteration. Each E-step is a full pass anyway, so the
-    parameter frame (1 row) is materialized via ``localCheckpoint`` every
-    ``cut_every`` iterations (default 1 = every iteration: exactly n
-    passes, Splink-typical n_iter 10–20 stays flat; 0 disables and keeps
-    the single lazy plan). The cuts never change values. Returns one row
+    Plan-depth bound (``_EM_CUT_EVERY``): iteration i's broadcast executes
+    its whole lineage, so a fully lazy n-iteration composition re-runs
+    every prior E-step — O(n²) passes over the pair table and a Catalyst
+    plan that deepens per iteration. Each E-step is a full pass anyway, so
+    the parameter frame (1 row) is materialized via ``localCheckpoint``
+    every ``_EM_CUT_EVERY`` iterations (1 = every iteration: exactly n
+    passes, so Splink-typical 10–20 iterations stay flat). The cuts never
+    change values. Returns one row
     per feature ``(feature, m_prob, u_prob, match_prior)``.
     """
     spark = pairs.sparkSession
@@ -337,7 +336,7 @@ def fs_em_estimate(
         *[F.lit(0.8).alias(f"m_{f}") for f in feature_cols],
         *[F.lit(0.2).alias(f"u_{f}") for f in feature_cols],
     )
-    for it in range(1, n_iter + 1):
+    for it in range(1, _EM_ITERS + 1):
         j = pairs.crossJoin(F.broadcast(params))
         pm = None
         pu = None
@@ -366,7 +365,7 @@ def fs_em_estimate(
                 for f in feature_cols
             ],
         )
-        if cut_every and it % cut_every == 0 and it < n_iter:
+        if it % _EM_CUT_EVERY == 0 and it < _EM_ITERS:
             params = params.localCheckpoint(eager=True)
     return params.select(
         F.explode(

@@ -21,15 +21,18 @@ _MATCHING_LOCAL_SOLVE_EDGES = 500_000
 
 # PageRank fixed-point unit: scores are int64 multiples of 1/_PR_SCALE
 _PR_SCALE = 10**12
+# PageRank power iterations, and the iterations between score lineage cuts
+_PR_ITERS = 3
+_PR_CUT_EVERY = 8
+# peel rounds of k_core and matching rounds of locally_dominant_matching
+# before each raises
+_KCORE_MAX_ROUNDS = 200
+_MATCHING_MAX_ROUNDS = 100
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    n_iter: int = 3,
-    checkpoint_every: int = 8,
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame) -> DataFrame:
     """PageRank on the UNDIRECTED graph of ``edges`` in fixed-point integer
-    arithmetic — ``(node, degree, pr_fp, pr)`` after ``n_iter`` power
+    arithmetic — ``(node, degree, pr_fp, pr)`` after ``_PR_ITERS`` power
     iterations with damping 85/100 over the nodes that appear in the edge
     set.
 
@@ -48,14 +51,12 @@ def pagerank_fixed_point(
     one shuffle join (messages = edges ⋈ scores on src) and one
     map-side-combinable groupBy(dst) sum; edge and degree frames are
     materialized ONCE up front (localCheckpoint) so iterations re-scan
-    nothing upstream, and the score lineage is cut every ``checkpoint_every`` iterations to stop
-    plan growth (the closure.py discipline). Undirected expansion means
-    every node has out-degree ≥ 1 — no dangling-mass special case. Hot
-    nodes (celebrity entities) are single groupBy keys: partial
-    aggregation bounds them; AQE skew-join handles the join side.
+    nothing upstream, and the score lineage is cut every ``_PR_CUT_EVERY``
+    iterations to stop plan growth (the closure.py discipline). Undirected
+    expansion means every node has out-degree ≥ 1 — no dangling-mass
+    special case. Hot nodes (celebrity entities) are single groupBy keys:
+    partial aggregation bounds them; AQE skew-join handles the join side.
     """
-    if n_iter < 0:
-        raise ValueError(f"n_iter must be >= 0, got {n_iter}")
     und = (
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -71,7 +72,7 @@ def pagerank_fixed_point(
     pr = deg.crossJoin(F.broadcast(n_nodes)).select(
         "src", "deg", "n", base.alias("pr")
     )
-    for i in range(n_iter):
+    for i in range(_PR_ITERS):
         msgs = (
             und.join(pr.select("src", F.expr("pr div deg").alias("c")), "src")
             .groupBy("dst")
@@ -90,7 +91,7 @@ def pagerank_fixed_point(
                 ).alias("pr"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+        if (i + 1) % _PR_CUT_EVERY == 0 and i + 1 < _PR_ITERS:
             pr = pr.localCheckpoint(eager=True)
     return pr.select(
         F.col("src").alias("node"),
@@ -178,7 +179,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def k_core(edges: DataFrame, k: int, max_rounds: int = 200) -> DataFrame:
+def k_core(edges: DataFrame, k: int) -> DataFrame:
     """Nodes of the k-core (maximal subgraph with min induced degree ≥ k)
     of the undirected graph of canonical edges, with their in-core degree —
     the density primitive that separates a cluster's cohesive core from
@@ -188,7 +189,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 200) -> DataFrame:
     connected_components): each round semi-joins the surviving edge set
     against the surviving node set, recomputes induced degrees, and drops
     nodes under k; convergence is an exact count comparison, and exceeding
-    ``max_rounds`` raises LOUDLY rather than returning a half-peeled set (a
+    ``_KCORE_MAX_ROUNDS`` raises LOUDLY rather than returning a half-peeled set (a
     path graph peels one node per round, so adversarial chains need the
     bound).
 
@@ -208,7 +209,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 200) -> DataFrame:
     alive = alive.localCheckpoint(eager=True)
     n_alive = alive.count()
     n_at_cut = n_alive
-    for r in range(1, max_rounds + 1):
+    for r in range(1, _KCORE_MAX_ROUNDS + 1):
         surv = (
             und.join(alive.withColumnRenamed("id", "u"), "u", "left_semi")
             .join(alive.withColumnRenamed("id", "v"), "v", "left_semi")
@@ -237,8 +238,8 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 200) -> DataFrame:
             n_at_cut = n_alive
     else:
         raise RuntimeError(
-            f"k_core did not converge within {max_rounds} peel rounds "
-            f"({n_alive} nodes still alive) — raise max_rounds"
+            f"k_core did not converge within {_KCORE_MAX_ROUNDS} peel rounds "
+            f"({n_alive} nodes still alive) — raise _KCORE_MAX_ROUNDS"
         )
     core_edges = (
         und.join(alive.withColumnRenamed("id", "u"), "u", "left_semi")
@@ -276,10 +277,7 @@ def _local_greedy_matching(spark, edges: DataFrame) -> DataFrame:
     )
 
 
-def locally_dominant_matching(
-    scored_pairs: DataFrame,
-    max_rounds: int = 100,
-) -> DataFrame:
+def locally_dominant_matching(scored_pairs: DataFrame) -> DataFrame:
     """Distributed greedy one-to-one matching (Preis 1999 / locally
     dominant edges): the assignment step of cross-database record linkage
     — each record pairs with at most ONE partner, highest scores first.
@@ -290,7 +288,7 @@ def locally_dominant_matching(
     picks its best incident edge (one groupBy-argmax), an edge is matched
     iff it is the best of BOTH endpoints (two semi-joins), matched nodes'
     remaining edges drop (two anti-joins), repeat until no edges remain —
-    LOUD raise past ``max_rounds``. Returns the matched canonical pairs
+    LOUD raise past ``_MATCHING_MAX_ROUNDS``. Returns the matched canonical pairs
     with their score.
 
     When the deduped edge set fits under ``_MATCHING_LOCAL_SOLVE_EDGES``
@@ -320,7 +318,7 @@ def locally_dominant_matching(
             F.col("s").alias("score"),
         )
     matched = None
-    for r in range(1, max_rounds + 1):
+    for r in range(1, _MATCHING_MAX_ROUNDS + 1):
         if edges.isEmpty():
             break
         und = edges.select(
@@ -364,13 +362,13 @@ def locally_dominant_matching(
             .join(taken.withColumnRenamed("node", "eb"), "eb", "left_anti")
         )
         edges = edges.localCheckpoint(eager=True)
-    # the bound is "LOUD past max_rounds", not at it: a graph that drains
+    # the bound is "LOUD past _MATCHING_MAX_ROUNDS", not at it: a graph that drains
     # exactly on the final round must succeed, so test emptiness once more
     # after the loop instead of relying on the next iteration's check
     if not edges.isEmpty():
         raise RuntimeError(
-            f"locally_dominant_matching did not drain within {max_rounds} "
-            "rounds — raise max_rounds"
+            "locally_dominant_matching did not drain within "
+            f"{_MATCHING_MAX_ROUNDS} rounds — raise _MATCHING_MAX_ROUNDS"
         )
     if matched is None:
         return scored_pairs.select(

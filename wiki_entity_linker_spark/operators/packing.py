@@ -29,25 +29,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# range buckets of the prefix sum: this many per session core, at least
+# _MIN_BUCKETS
+_BUCKETS_PER_CORE = 4
+_MIN_BUCKETS = 8
 
-def global_prefix_sum(
-    df: DataFrame,
-    order_col: str,
-    value_col: str,
-    out_col: str = "prefix",
-    n_buckets: int | None = None,
-) -> DataFrame:
+
+def global_prefix_sum(df: DataFrame, order_col: str, value_col: str) -> DataFrame:
     """Exclusive prefix sum of ``value_col`` over the GLOBAL ``order_col``
-    order, without a single-partition global window.
+    order, as the ``seq_start`` column, without a single-partition global
+    window.
 
     ``order_col`` must be numeric with distinct values (the canonical
     packing order — a dense doc id, a zip-index, a sortable hash cast to
     long). Ties would make the prefix ill-defined; ordering inside each
     bucket is by ``order_col`` alone.
     """
-    spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = max(spark.sparkContext.defaultParallelism * 4, 8)
+    n_buckets = max(
+        df.sparkSession.sparkContext.defaultParallelism * _BUCKETS_PER_CORE,
+        _MIN_BUCKETS,
+    )
 
     dt = df.schema[order_col].dataType.simpleString()
     if dt not in ("tinyint", "smallint", "int", "bigint"):
@@ -58,7 +59,7 @@ def global_prefix_sum(
         )
     lo, hi = df.agg(F.min(order_col), F.max(order_col)).first()
     if lo is None:
-        return df.withColumn(out_col, F.lit(0).cast("long"))
+        return df.withColumn("seq_start", F.lit(0).cast("long"))
     span = (int(hi) - int(lo)) + 1
     if span >= 1 << 62:
         # `id - lo` would overflow int64 in the bucket expression and wrap
@@ -95,7 +96,7 @@ def global_prefix_sum(
     return (
         bucketed.join(F.broadcast(offsets), "__bkt")
         .withColumn(
-            out_col,
+            "seq_start",
             F.col("__off")
             + F.coalesce(F.sum(F.col(value_col).cast("long")).over(w_in), F.lit(0)),
         )
@@ -115,7 +116,7 @@ def packed_sequences(
     ``bin_offset`` inside that window. Documents longer than ``window``
     simply span multiple bins, exactly as the concatenation semantics
     dictate."""
-    out = global_prefix_sum(df, id_col, token_count_col, out_col="seq_start")
+    out = global_prefix_sum(df, id_col, token_count_col)
     # integral div (not floor of a float quotient): double division loses
     # precision above 2^53 total tokens and can place seq_start in the
     # wrong bin while bin_offset (exact %) contradicts it

@@ -22,6 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# blocks with more members than this are stopwords and dropped; survivors
+# are salted into chained chunks of ``SALT_CAP`` members. The ER pipeline
+# (plans/er_pipeline.py) folds both into its resume key.
+STOPWORD_BLOCK_MAX = 20000
+SALT_CAP = 64
+
 
 def _salted_keys(cap: int):
     """Per-row array of output block keys given ``__rn``/``__n`` columns:
@@ -38,14 +44,10 @@ def _salted_keys(cap: int):
     )
 
 
-def cap_and_salt_blocks(
-    block_df: DataFrame,
-    max_size: int = 10000,
-    cap: int = 64,
-) -> DataFrame:
-    """Drop blocks over ``max_size`` members, then rewrite the keys of the
-    survivors so no block exceeds ``cap + 1`` members (chained salting).
-    Deterministic: a pure function of (ids, max_size, cap).
+def cap_and_salt_blocks(block_df: DataFrame) -> DataFrame:
+    """Drop blocks over ``STOPWORD_BLOCK_MAX`` members, then rewrite the
+    keys of the survivors so no block exceeds ``SALT_CAP + 1`` members
+    (chained salting). Deterministic: a pure function of the ids.
 
     Stopword-drop and salting are fused into ONE evaluation of the input:
     two windows over the same partition key (unordered count, then ordered
@@ -58,11 +60,11 @@ def cap_and_salt_blocks(
     w_count = Window.partitionBy("block_key")
     w_rank = Window.partitionBy("block_key").orderBy("file_id")
     survivors = block_df.withColumn("__n", F.count("*").over(w_count)).filter(
-        F.col("__n") <= max_size
+        F.col("__n") <= STOPWORD_BLOCK_MAX
     )
     sized = survivors.withColumn("__rn", F.row_number().over(w_rank) - 1)
     return sized.select(
-        "file_id", F.explode(_salted_keys(cap)).alias("block_key")
+        "file_id", F.explode(_salted_keys(SALT_CAP)).alias("block_key")
     )
 
 

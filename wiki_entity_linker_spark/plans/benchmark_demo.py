@@ -38,8 +38,6 @@ GOLDEN = (
     "/root/reference/evaluation-results/baseline/"
     "baseline.wiki-fair-v2.eval_results.json"
 )
-#: longest mention n-gram the demo's linker proposes
-MAX_NGRAM = 5
 
 
 def hyperlink_alias_dict(
@@ -116,13 +114,8 @@ def run_benchmark_demo(
     alias_dict = hyperlink_alias_dict(
         articles, include_label_names=alias_source == "anchors+names"
     )
-    preds = link_articles(articles, alias_dict, max_ngram=MAX_NGRAM)
-    # measured sweep on wiki-fair-v2: all-kinds 0.6242, person-only
-    # 0.6493, person + uniqueness-gated nominals 0.6521 — the enabled
-    # configuration; thing/group pronouns remain available but cost
-    # net F1 here
-    preds = add_coref_links(articles, preds, entity_types(articles),
-                            kinds=("person", "nominal"))
+    preds = link_articles(articles, alias_dict)
+    preds = add_coref_links(articles, preds, entity_types(articles))
     res = results_dict(
         evaluate_cases(articles, preds.select(
             "article_id", "start", "end", "entity_id")))

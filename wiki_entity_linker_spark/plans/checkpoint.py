@@ -10,8 +10,10 @@ together with a manifest recording ``params_hash``, total and
 per-partition row counts. The per-partition lineage is the row count of
 each written part file, read from the parquet footers on the driver, so a
 checkpointed stage runs no Spark job after its write. Re-running with
-identical params skips straight to the stored table; changing any upstream
-param invalidates every downstream stage (hash chaining).
+identical params skips straight to the stored table, read back with the
+schema in its part files' footers, so a resumed stage runs no job until
+its table is used; changing any upstream param invalidates every
+downstream stage (hash chaining).
 
 The module also owns the on-disk format of append chains (plans/
 er_incremental.py, plans/curation_incremental.py, streaming/appends.py): each
@@ -30,6 +32,7 @@ from collections.abc import Callable
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def params_hash(params: dict) -> str:
@@ -120,7 +123,16 @@ class ParquetStore:
         return lineage
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.root, f"{name}.parquet"))
+        """The stage table with the schema Spark stored in its part files'
+        footers (every part file, even an empty frame's only one, carries
+        it), read on the driver: inferring it would run a job."""
+        path = os.path.join(self.root, f"{name}.parquet")
+        part = next(f for f in sorted(os.listdir(path)) if f.startswith("part-"))
+        meta = pq.read_metadata(os.path.join(path, part)).metadata
+        schema = T.StructType.fromJson(
+            json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+        )
+        return spark.read.schema(schema).parquet(path)
 
     def exists(self, spark: SparkSession, name: str) -> bool:
         return os.path.isdir(os.path.join(self.root, f"{name}.parquet"))

@@ -4,21 +4,24 @@ linker → popularity linker → coref linker).
 
 Spark-first recast of the reference's EntityCorefLinker:
 
-* a vectorized regex scan (``mapInPandas``, Arrow-batched) finds pronoun
-  and ``the <noun>`` nominal mentions with exact character offsets;
+* a vectorized regex scan (``mapInPandas``, Arrow-batched) finds
+  he/she-class pronoun and ``the <noun>`` nominal mentions with exact
+  character offsets;
 * antecedent resolution is ONE window pass, fully JVM-side: union the
-  already-linked entity mentions (tagged person / non-person via the
-  QID→type table) with the coref mentions, sort by position per article,
-  and take ``last(<compatible antecedent>, ignorenulls=True)`` over the
-  preceding rows — the classic "nearest preceding compatible mention"
-  as-of join.  No shuffle beyond one hash partition by article; at corpus
-  scale every article resolves independently.
+  already-linked entity mentions (tagged person via the QID→type table)
+  with the coref mentions, sort by position per article, and take
+  ``last(<compatible antecedent>, ignorenulls=True)`` over the preceding
+  rows — the classic "nearest preceding compatible mention" as-of join.
+  No shuffle beyond one hash partition by article; at corpus scale every
+  article resolves independently.
 
 Type compatibility: he/she-class pronouns need a Person/Fictional-Character
-antecedent; it/its need a non-person; they/their accept any non-person
-group; ``the <noun>`` nominals need an antecedent whose whitelist type maps
-to that noun (NOMINAL_NOUNS, the stand-in for the reference's type-word
-data in small-data-files/whitelist_types.tsv).
+antecedent; ``the <noun>`` nominals need an antecedent whose whitelist
+type maps to that noun (NOMINAL_NOUNS, the stand-in for the reference's
+type-word data in small-data-files/whitelist_types.tsv). It/they-class
+pronouns are not linked: on wiki-fair-v2 linking every pronoun kind gave
+F1 0.6242, person pronouns only 0.6493, and person pronouns plus
+uniqueness-gated nominals 0.6521.
 """
 from __future__ import annotations
 
@@ -33,8 +36,6 @@ from pyspark.sql import types as T
 PERSON_TYPES = ("Q215627", "Q95074")  # Person, Fictional Character
 
 PERSON_PRONOUNS = {"he", "she", "his", "her", "him", "himself", "herself"}
-THING_PRONOUNS = {"it", "its", "itself"}
-GROUP_PRONOUNS = {"they", "their", "them", "theirs"}
 
 # head noun of a "the <noun>" nominal -> whitelist type QIDs it may refer to
 NOMINAL_NOUNS = {
@@ -57,9 +58,7 @@ NOMINAL_NOUNS = {
 }
 
 _PRONOUN_RE = re.compile(
-    r"\b(" + "|".join(sorted(
-        PERSON_PRONOUNS | THING_PRONOUNS | GROUP_PRONOUNS,
-        key=len, reverse=True)) + r")\b")
+    r"\b(" + "|".join(sorted(PERSON_PRONOUNS, key=len, reverse=True)) + r")\b")
 _NOMINAL_RE = re.compile(
     r"\b([Tt]he|[Tt]his|[Tt]hat)[ ]([a-z]+(?:[ ][a-z]+)?)\b")
 
@@ -68,7 +67,7 @@ COREF_MENTION_SCHEMA = T.StructType(
         T.StructField("article_id", T.LongType()),
         T.StructField("start", T.LongType()),
         T.StructField("end", T.LongType()),
-        T.StructField("kind", T.StringType()),      # person|thing|group|nominal
+        T.StructField("kind", T.StringType()),      # person|nominal
         T.StructField("noun", T.StringType()),      # nominal head noun or ''
     ]
 )
@@ -84,11 +83,8 @@ def scan_coref_mentions(articles: DataFrame) -> DataFrame:
                 if not text:
                     continue
                 for m in _PRONOUN_RE.finditer(text):
-                    w = m.group(1).lower()
-                    kind = ("person" if w in PERSON_PRONOUNS
-                            else "thing" if w in THING_PRONOUNS else "group")
                     ids.append(aid); ss.append(m.start()); es.append(m.end())
-                    ks.append(kind); ns.append("")
+                    ks.append("person"); ns.append("")
                 for m in _NOMINAL_RE.finditer(text):
                     phrase = m.group(2)
                     head = phrase.split()[-1]
@@ -112,23 +108,19 @@ def scan_coref_mentions(articles: DataFrame) -> DataFrame:
 
 
 def add_coref_links(
-    articles: DataFrame,
-    predictions: DataFrame,
-    entity_types: DataFrame,
-    kinds: tuple = ("person", "thing", "group", "nominal"),
+    articles: DataFrame, predictions: DataFrame, entity_types: DataFrame
 ) -> DataFrame:
     """predictions ∪ resolved coref mentions.
 
     ``predictions``: (article_id, start, end, entity_id, ...)
     ``entity_types``: (entity_id, types) pipe-joined whitelist QIDs.
-    ``kinds``: which mention kinds to link.
 
     A ``the <noun>`` nominal links only when exactly ONE distinct
     type-compatible antecedent precedes it — ambiguity is the dominant
     nominal error source (measured on wiki-fair-v2: unrestricted nominals
     cost net F1, uniqueness-gated nominals add it).
     """
-    mentions = scan_coref_mentions(articles).filter(F.col("kind").isin(*kinds))
+    mentions = scan_coref_mentions(articles)
 
     typed = predictions.select(
         "article_id", "start", "end", "entity_id"
@@ -148,7 +140,6 @@ def add_coref_links(
         F.lit(None).cast("string").alias("kind"),
         F.lit(None).cast("string").alias("noun"),
         F.when(is_person, F.col("entity_id")).alias("person_ent"),
-        F.when(~is_person, F.col("entity_id")).alias("thing_ent"),
         F.col("entity_id").alias("ant_ent"),
         F.coalesce(F.col("types"), F.lit("")).alias("ant_types"),
         F.lit(0).alias("is_mention"),
@@ -160,7 +151,6 @@ def add_coref_links(
         "kind",
         "noun",
         F.lit(None).cast("string").alias("person_ent"),
-        F.lit(None).cast("string").alias("thing_ent"),
         F.lit(None).cast("string").alias("ant_ent"),
         F.lit(None).cast("string").alias("ant_types"),
         F.lit(1).alias("is_mention"),
@@ -172,16 +162,13 @@ def add_coref_links(
     resolved = (
         ants.unionByName(ments)
         .withColumn("prev_person", F.last("person_ent", True).over(w))
-        .withColumn("prev_thing", F.last("thing_ent", True).over(w))
         .filter(F.col("is_mention") == 1)
     )
-    is_person_kind = F.col("kind") == "person"
-    pron = resolved.filter(F.col("kind") != "nominal").select(
+    pron = resolved.filter(F.col("kind") == "person").select(
         "article_id",
         F.col("pos").alias("start"),
         F.col("m_end").alias("end"),
-        F.when(is_person_kind, F.col("prev_person"))
-        .otherwise(F.col("prev_thing")).alias("entity_id"),
+        F.col("prev_person").alias("entity_id"),
     ).filter(F.col("entity_id").isNotNull())
 
     # nominals: nearest preceding antecedent whose types include the noun's

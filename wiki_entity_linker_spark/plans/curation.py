@@ -38,6 +38,8 @@ from wiki_entity_linker_spark.functions.text import (
     tokenize,
 )
 from wiki_entity_linker_spark.operators.dedup import (
+    SEG_LEN,
+    SUBSTR_K,
     segment_rows,
     segment_stats,
     substring_coverage,
@@ -47,12 +49,10 @@ from wiki_entity_linker_spark.plans.checkpoint import StageManager, write_json_a
 from wiki_entity_linker_spark.plans.er_pipeline import _input_fingerprint
 
 
-#: the pipeline's thresholds and budgets. Every stage reads these, and
-#: :func:`resume_params` folds them into the resume key and into
-#: ``curation_meta.json``, so editing one invalidates an old workdir and
-#: makes an append onto it raise.
-SUBSTR_K = 5  # ExactSubstr minimum-match gram length
-SEG_LEN = 8  # CCNet-style segment length (tokens)
+#: the pipeline's thresholds and budgets. Every stage reads these and the
+#: dedup operators' ``SUBSTR_K`` and ``SEG_LEN``, and :func:`resume_params`
+#: folds them all into the resume key and into ``curation_meta.json``, so
+#: editing one invalidates an old workdir and makes an append onto it raise.
 BOILERPLATE_FRAC = 0.25  # drop docs above this dup coverage
 DECONTAM_K = 3  # benchmark-overlap n-gram length
 TOKEN_BUDGET = 1_000_000  # total training-token budget
@@ -61,8 +61,9 @@ EVAL_PER_STRATUM = 3  # eval docs per (source, length-quartile)
 
 
 def resume_params() -> dict:
-    """The constants above as the StageManager params of a full run and of
-    an append (plans/curation_incremental.py)."""
+    """The constants above, with the dedup operators' gram and segment
+    lengths, as the StageManager params of a full run and of an append
+    (plans/curation_incremental.py)."""
     return {
         "substr_k": SUBSTR_K,
         "seg_len": SEG_LEN,

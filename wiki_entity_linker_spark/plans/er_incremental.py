@@ -51,7 +51,7 @@ Reads over a long chain pay one union (or map join) per level;
 :func:`compact_chain` rewrites the resolved view into a self-contained
 workdir and bounds the depth.
 
-Fidelity note: inside blocks larger than ``er_pipeline.SALT_CAP`` the full
+Fidelity note: inside blocks larger than ``skew.SALT_CAP`` the full
 run salts into chained sub-blocks (operators/skew.py), scoring only
 chunk-local pairs and relying on transitive closure; the incremental probe scores a new member
 against ALL old members of the block. The incremental candidate set is
@@ -68,6 +68,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.eval.pairwise import evaluate_against_labeled_pairs
+# the block caps are read as skew.<NAME> at call time, so a patched cap
+# reaches the full run and the append alike
+from wiki_entity_linker_spark.operators import skew
 from wiki_entity_linker_spark.operators.blocking import (
     cross_block_pairs,
     pairs_from_blocks,
@@ -87,9 +90,6 @@ from wiki_entity_linker_spark.plans.checkpoint import (
     chain_base,
     write_chain_base,
 )
-# the decision-rule constants are read as er.<NAME> at call time, so a
-# patched constant reaches the full run and the append alike
-from wiki_entity_linker_spark.plans import er_pipeline as er
 from wiki_entity_linker_spark.plans.er_pipeline import (
     _input_fingerprint,
     build_features,
@@ -332,7 +332,7 @@ def run_er_incremental(
             n_sizes.join(o_sizes, "block_key", "left")
             .filter(
                 F.col("__nn") + F.coalesce(F.col("__on"), F.lit(0))
-                > er.STOPWORD_BLOCK_MAX
+                > skew.STOPWORD_BLOCK_MAX
             )
             .select("block_key")
         )
@@ -343,11 +343,7 @@ def run_er_incremental(
         # against `hot`), so the stopword rule applies to COMBINED old+new
         # block sizes on this leg too — a block over the cap contributes
         # neither cross nor intra pairs, exactly as a full recompute drops it
-        intra = pairs_from_blocks(
-            cap_and_salt_blocks(
-                probe_new, max_size=er.STOPWORD_BLOCK_MAX, cap=er.SALT_CAP
-            )
-        )
+        intra = pairs_from_blocks(cap_and_salt_blocks(probe_new))
         return cross.unionByName(intra).dropDuplicates(["id_a", "id_b"])
 
     pairs = mgr.stage("batch_pairs", _pairs)

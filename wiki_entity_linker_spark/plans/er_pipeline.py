@@ -55,7 +55,12 @@ from wiki_entity_linker_spark.operators.closure import (
     _CC_MAX_ITER,
     components_with_singletons,
 )
-from wiki_entity_linker_spark.operators.skew import cap_and_salt_blocks, spread_small_input
+from wiki_entity_linker_spark.operators.skew import (
+    SALT_CAP,
+    STOPWORD_BLOCK_MAX,
+    cap_and_salt_blocks,
+    spread_small_input,
+)
 from wiki_entity_linker_spark.plans.checkpoint import StageManager
 
 
@@ -101,14 +106,12 @@ def _input_fingerprint(df: DataFrame) -> str:
 K_SHINGLE = 3
 JACCARD_THRESHOLD = 0.16
 COSINE_THRESHOLD = 0.996
-STOPWORD_BLOCK_MAX = 20000
-SALT_CAP = 64
 
 
 def resume_params() -> dict:
-    """The constants above, with the LSH shape and the components round cap
-    the operators own, as the StageManager params of a full run and of an
-    append (plans/er_incremental.py)."""
+    """The constants above, with the LSH shape, the block caps and the
+    components round cap the operators own, as the StageManager params of a
+    full run and of an append (plans/er_incremental.py)."""
     return {
         "k_shingle": K_SHINGLE,
         "n_hashes": DEFAULT_N_HASHES,
@@ -371,9 +374,7 @@ def run_er_pipeline(
     )
     blocks = mgr.stage(
         "blocks",
-        lambda: cap_and_salt_blocks(
-            raw_blocks, max_size=STOPWORD_BLOCK_MAX, cap=SALT_CAP
-        ),
+        lambda: cap_and_salt_blocks(raw_blocks),
     )
 
     # 4. candidate pairs (canonical order, deduped across block types)

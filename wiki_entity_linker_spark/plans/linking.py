@@ -32,10 +32,13 @@ from wiki_entity_linker_spark.operators.argmax import top1_deterministic
 from wiki_entity_linker_spark.operators.spans import suppress_overlaps
 
 MENTION_SCHEMA = "article_id long, start long, end long, surface string"
+#: longest mention n-gram (tokens) the linker proposes
+MAX_NGRAM = 5
 
 
-def mention_candidates(articles: DataFrame, max_ngram: int = 3) -> DataFrame:
-    """(article_id, start, end, surface) for every token n-gram, n <= N.
+def mention_candidates(articles: DataFrame) -> DataFrame:
+    """(article_id, start, end, surface) for every token n-gram,
+    n <= ``MAX_NGRAM``.
 
     Spans are half-open char intervals into ``text`` (the reference's
     universal key). Arrow-batched; the regex scan is per-article Python but
@@ -49,7 +52,7 @@ def mention_candidates(articles: DataFrame, max_ngram: int = 3) -> DataFrame:
             for aid, text in zip(pdf["id"], pdf["text"]):
                 toks = [(m.start(), m.end()) for m in token_re.finditer(text or "")]
                 for i in range(len(toks)):
-                    for n in range(1, max_ngram + 1):
+                    for n in range(1, MAX_NGRAM + 1):
                         if i + n > len(toks):
                             break
                         s, e = toks[i][0], toks[i + n - 1][1]
@@ -65,18 +68,14 @@ def mention_candidates(articles: DataFrame, max_ngram: int = 3) -> DataFrame:
     return articles.select("id", "text").mapInPandas(_scan, schema=MENTION_SCHEMA)
 
 
-def link_articles(
-    articles: DataFrame,
-    alias_dict: DataFrame,
-    max_ngram: int = 3,
-) -> DataFrame:
+def link_articles(articles: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """-> (article_id, start, end, surface, entity_id) linked mentions.
 
     ``alias_dict``: (alias, entity_id, freq) — the
     link-text->most-popular-candidates table (create_databases.py:103-122),
     matched case-insensitively.
     """
-    cands = mention_candidates(articles, max_ngram)
+    cands = mention_candidates(articles)
     matched = cands.withColumn("__k", F.lower(F.col("surface"))).join(
         F.broadcast(alias_dict.withColumn("__k", F.lower(F.col("alias")))), "__k"
     )

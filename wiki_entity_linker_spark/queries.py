@@ -388,13 +388,8 @@ def interval_join_events(spark, sf_dir):
         (F.col("o_orderkey") % 5000).alias("start"),
         (F.col("o_orderkey") % 5000 + 3).alias("end"),
     )
-    # bucket sized to the interval width: candidates per cell scale as
-    # points*intervals/cells, so a bucket ~5x the 3-wide intervals beats
-    # the 256 default by >10x on this dense synthetic key space (the
-    # operator result is bucket-invariant; the oracle doesn't bucket)
-    joined = bucketed_interval_join(
-        e, o, doc_col="doc", bucket=16
-    )
+    # the operator result is bucket-invariant; the oracle doesn't bucket
+    joined = bucketed_interval_join(e, o)
     return joined.groupBy("o_custkey").agg(F.count("*").alias("n_events"))
 
 
@@ -840,9 +835,7 @@ def _minhash_oracle(n_hashes: int, k_shingle: int) -> str:
 @q("minhash_signature", _minhash_oracle(4, 3))
 def minhash_signature(spark, sf_dir):
     """MinHash signature parity check: portable shingle→h64→mix→min chain."""
-    sigs = minhash_signatures(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", k_shingle=3, n_hashes=4
-    )
+    sigs = minhash_signatures(_t(spark, sf_dir, "documents"))
     return sigs.select(
         "doc_id", *[F.col("minhash").getItem(i).alias(f"mh{i}") for i in range(4)]
     )
@@ -880,11 +873,7 @@ def minhash_neardup(spark, sf_dir):
     The oracle replicates the banding exactly, so LSH's probabilistic recall
     is identical on both sides."""
     return minhash_neardup_pairs(
-        _t(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        k_shingle=3,
-        jaccard_threshold=0.3,
+        _t(spark, sf_dir, "documents"), "doc_id", jaccard_threshold=0.3
     )
 
 
@@ -904,7 +893,7 @@ def _simhash_oracle(bits: int) -> str:
 @q("simhash_fingerprint", _simhash_oracle(16))
 def simhash_fingerprint(spark, sf_dir):
     """SimHash document fingerprint (portable bit family)."""
-    return simhash(_t(spark, sf_dir, "documents"), "doc_id", "text", bits=16)
+    return simhash(_t(spark, sf_dir, "documents"), "doc_id")
 
 
 @q(
@@ -930,17 +919,10 @@ def simhash_fingerprint(spark, sf_dir):
 )
 def ngram_jaccard(spark, sf_dir):
     """Exact n-gram Jaccard near-dup via inverted-index join (no LSH loss),
-    with the hot-gram document-frequency cap (max_doc_freq=100) applied
+    with the hot-gram document-frequency cap (100 documents) applied
     INSIDE the operator — the oracle replicates the cap exactly, so the
     scale guard itself is what gets correctness-checked."""
-    return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        n=3,
-        threshold=0.05,
-        max_doc_freq=100,
-    )
+    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), "doc_id")
 
 
 @q(
@@ -964,13 +946,13 @@ def embedding_cosine_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = cosine_topk(emb, queries, k=5)
+    out = cosine_topk(emb, queries)
     return out.select("query_id", "vec_id", "cos", F.col("rank").alias("rnk"))
 
 
 def _neardup_lsh_oracle(
-    dim: int, thr: float, n_planes: int, n_tables: int, seed: int = 42,
-    max_bucket: int | None = None,
+    dim: int, thr: float, n_planes: int, n_tables: int, max_bucket: int,
+    seed: int = 42,
 ) -> str:
     """DuckDB mirror of embedding_neardup_lsh_pairs: the SAME seeded numpy
     plane literals → bucket self-join → distinct pairs → exact-cosine verify,
@@ -995,7 +977,6 @@ def _neardup_lsh_oracle(
     keep = (
         f"vk AS (SELECT * FROM vb QUALIFY count(*) OVER "
         f"(PARTITION BY bucket) <= {max_bucket}),"
-        if max_bucket is not None else "vk AS (SELECT * FROM vb),"
     )
     return f"""
        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -1016,17 +997,12 @@ def _neardup_lsh_oracle(
 def embedding_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs — the bucketed RHP-LSH scale
     path (no cross join in the physical plan; see tests/test_plans.py),
-    with the hot-bucket guard engaged (max_bucket=256, replicated in the
-    oracle's QUALIFY filter). The brute-force baseline
+    with the hot-bucket guard (256 members, replicated in the oracle's
+    QUALIFY filter). The brute-force baseline
     (embedding_neardup_pairs) remains as the small-n parity test in
     tests/test_dedup.py."""
     return embedding_neardup_lsh_pairs(
-        _t(spark, sf_dir, "embeddings"),
-        dim=64,
-        threshold=0.4,
-        n_planes=6,
-        n_tables=3,
-        max_bucket=256,
+        _t(spark, sf_dir, "embeddings"), dim=64, threshold=0.4
     )
 
 
@@ -1240,8 +1216,8 @@ def ann_ivf_topk(spark, sf_dir):
     """IVF approximate nearest neighbors (second scale path next to
     ann_lsh_topk): seeded-centroid Voronoi cells, nprobe probing,
     exact-cosine re-rank — every step replicated in the oracle. Production
-    indexes train the centroids (train_ivf_centroids); the registered query
-    uses data-independent seeded centroids so the oracle stays static."""
+    indexes would train the centroids; the registered query uses
+    data-independent seeded centroids so the oracle stays static."""
     from wiki_entity_linker_spark.operators.ann import ivf_topk, seeded_centroids
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1249,7 +1225,7 @@ def ann_ivf_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     cent = seeded_centroids(64, 16, seed=7)
-    return ivf_topk(emb, queries, cent, k=5, nprobe=4)
+    return ivf_topk(emb, queries, cent)
 
 
 @q("ann_lsh_topk", _lsh_oracle(dim=64, k=5, n_planes=6, n_tables=3))
@@ -1261,7 +1237,7 @@ def ann_lsh_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return lsh_topk(emb, queries, dim=64, k=5, n_planes=6, n_tables=3)
+    return lsh_topk(emb, queries, dim=64)
 
 
 def _cc_oracle(n_hashes: int, bands: int, k_shingle: int, thr: float) -> str:
@@ -1305,9 +1281,9 @@ def er_cluster_documents(spark, sf_dir):
     oracle-checked: banding, verify threshold AND the transitive clustering
     are replicated in DuckDB (recursive CTE)."""
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_neardup_pairs(
-        d, "doc_id", "text", k_shingle=3, jaccard_threshold=0.3
-    ).select("id_a", "id_b")
+    pairs = minhash_neardup_pairs(d, "doc_id", jaccard_threshold=0.3).select(
+        "id_a", "id_b"
+    )
     nodes = d.select(F.col("doc_id").alias("file_id"))
     # the flagship mirrors the ER pipeline's scale path: CC-MR hybrid
     # (driver union-find once star-contraction shrinks the edge set) —
@@ -1330,10 +1306,7 @@ def er_incremental_documents(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     base = d.filter(F.col("doc_id") % 10 != 9)
     batch = d.filter(F.col("doc_id") % 10 == 9)
-    return minhash_neardup_clusters_incremental(
-        base, batch, "doc_id", "text",
-        k_shingle=3, jaccard_threshold=0.3,
-    )
+    return minhash_neardup_clusters_incremental(base, batch, "doc_id")
 
 
 # ===========================================================================
@@ -1875,7 +1848,7 @@ def segment_dedup(spark, sf_dir):
     (hash-keyed winner agg + AQE-splittable join back + per-doc rollup)."""
     from wiki_entity_linker_spark.operators.dedup import segment_dedup_stats
 
-    return segment_dedup_stats(_t(spark, sf_dir, "documents"), seg_len=8)
+    return segment_dedup_stats(_t(spark, sf_dir, "documents"))
 
 
 @q(
@@ -1985,7 +1958,7 @@ def exact_substring_dup(spark, sf_dir):
     duplicate agg + semi join, no pairwise blowup)."""
     from wiki_entity_linker_spark.operators.dedup import exact_substring_coverage
 
-    return exact_substring_coverage(_t(spark, sf_dir, "documents"), k=5)
+    return exact_substring_coverage(_t(spark, sf_dir, "documents"))
 
 
 @q(
@@ -2097,9 +2070,7 @@ def winnowing_pairs(spark, sf_dir):
     the 256 cap is unreachable at oracle scale, measured max posting 4)."""
     from wiki_entity_linker_spark.operators.dedup import winnowing_candidate_pairs
 
-    return winnowing_candidate_pairs(
-        _t(spark, sf_dir, "documents"), min_shared=2
-    )
+    return winnowing_candidate_pairs(_t(spark, sf_dir, "documents"))
 
 
 @q(
@@ -2162,10 +2133,10 @@ def dup_graph_pagerank(spark, sf_dir):
     from wiki_entity_linker_spark.operators.dedup import winnowing_candidate_pairs
     from wiki_entity_linker_spark.operators.graph import pagerank_fixed_point
 
-    edges = winnowing_candidate_pairs(
-        _t(spark, sf_dir, "documents"), min_shared=2
-    ).select("id_a", "id_b")
-    return pagerank_fixed_point(edges, n_iter=3)
+    edges = winnowing_candidate_pairs(_t(spark, sf_dir, "documents")).select(
+        "id_a", "id_b"
+    )
+    return pagerank_fixed_point(edges)
 
 
 @q(
@@ -2233,9 +2204,7 @@ def allpairs_jaccard(spark, sf_dir):
     the candidate join."""
     from wiki_entity_linker_spark.operators.dedup import allpairs_jaccard_join
 
-    return allpairs_jaccard_join(
-        _t(spark, sf_dir, "documents"), threshold="0.5", k_shingle=3
-    )
+    return allpairs_jaccard_join(_t(spark, sf_dir, "documents"), threshold="0.5")
 
 
 @q(
@@ -2401,7 +2370,7 @@ def sorted_neighborhood(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.substring(normalize_content("text"), 1, 12).alias("k")
     )
-    return sorted_neighborhood_pairs(d, "k", "doc_id", window=4)
+    return sorted_neighborhood_pairs(d, "k", "doc_id")
 
 
 def _verdict_ctes(rel: str) -> str:
@@ -2913,7 +2882,7 @@ def snm_fuzzy_pairs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.substring(normalize_content("text"), 1, 12).alias("k")
     )
-    pairs = sorted_neighborhood_pairs(d, "k", "doc_id", window=4)
+    pairs = sorted_neighborhood_pairs(d, "k", "doc_id")
     ka = d.select(F.col("doc_id").alias("id_a"), F.col("k").alias("k_a"))
     kb = d.select(F.col("doc_id").alias("id_b"), F.col("k").alias("k_b"))
     return (
@@ -3161,9 +3130,11 @@ def blocking_quality_documents(spark, sf_dir):
     # exactly; AllPairs at the rational threshold 0.2999995 returns every
     # such pair (its prune/accept tests are exact integer arithmetic), and
     # the final filter re-applies the identical rounded comparison.
-    truth = allpairs_jaccard_join(
-        d, threshold="0.2999995", k_shingle=3
-    ).filter(F.col("jaccard") >= 0.3).select("id_a", "id_b")
+    truth = (
+        allpairs_jaccard_join(d, threshold="0.2999995")
+        .filter(F.col("jaccard") >= 0.3)
+        .select("id_a", "id_b")
+    )
     n_items = d.count()
     return blocking_quality(cand, truth, n_items)
 
@@ -3267,7 +3238,6 @@ def asof_join_events(spark, sf_dir):
         right_ts="ts",
         right_tie="event_id",
         payload={"view_event_id": "event_id", "view_value": "value"},
-        tolerance_seconds=48 * 3600,
     )
     return out.select(
         "event_id",
@@ -3321,10 +3291,9 @@ def triangle_clustering(spark, sf_dir):
     from wiki_entity_linker_spark.operators.graph import triangle_counts
 
     emb = _t(spark, sf_dir, "embeddings")
-    edges = embedding_neardup_lsh_pairs(
-        emb, dim=64, threshold=0.2,
-        n_planes=6, n_tables=3, max_bucket=256,
-    ).select("id_a", "id_b")
+    edges = embedding_neardup_lsh_pairs(emb, dim=64, threshold=0.2).select(
+        "id_a", "id_b"
+    )
     return triangle_counts(edges)
 
 
@@ -3509,10 +3478,9 @@ def kcore_dense(spark, sf_dir):
     from wiki_entity_linker_spark.operators.graph import k_core
 
     emb = _t(spark, sf_dir, "embeddings")
-    edges = embedding_neardup_lsh_pairs(
-        emb, dim=64, threshold=0.2,
-        n_planes=6, n_tables=3, max_bucket=256,
-    ).select("id_a", "id_b")
+    edges = embedding_neardup_lsh_pairs(emb, dim=64, threshold=0.2).select(
+        "id_a", "id_b"
+    )
     return k_core(edges, k=2)
 
 
@@ -3658,9 +3626,9 @@ def _fs_labeled_feature_pairs(spark, sf_dir):
     multi-level model grades — one definition so the estimation and the
     scoring can never drift apart."""
     d = _t(spark, sf_dir, "documents")
-    labeled = minhash_neardup_pairs(
-        d, "doc_id", "text", k_shingle=3, jaccard_threshold=0.0
-    ).select("id_a", "id_b", (F.col("jaccard") >= 0.3).alias("is_match"))
+    labeled = minhash_neardup_pairs(d, "doc_id", jaccard_threshold=0.0).select(
+        "id_a", "id_b", (F.col("jaccard") >= 0.3).alias("is_match")
+    )
     da = d.select(
         F.col("doc_id").alias("id_a"),
         F.col("source").alias("src_a"),
@@ -3818,10 +3786,9 @@ def onetoone_matching(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_neardup_pairs(
-        d, "doc_id", "text", k_shingle=3,
-        jaccard_threshold=0.3,
-    ).select("id_a", "id_b", F.col("jaccard").alias("score"))
+    pairs = minhash_neardup_pairs(d, "doc_id", jaccard_threshold=0.3).select(
+        "id_a", "id_b", F.col("jaccard").alias("score")
+    )
     # sequential-greedy tail-solve under the matching's cut-over (same
     # CC-MR-hybrid discipline as the flagship clustering; result-identical
     # per the locally-dominant == sequential-greedy equivalence, oracle-pinned)
@@ -3910,7 +3877,7 @@ def fs_em_model(spark, sf_dir):
         .drop("is_match")
         .localCheckpoint(eager=True)
     )
-    return fs_em_estimate(feat, ["f_source", "f_lang", "f_len"], n_iter=2)
+    return fs_em_estimate(feat, ["f_source", "f_lang", "f_len"])
 
 
 @q(
@@ -4157,7 +4124,7 @@ def meta_blocking(spark, sf_dir):
         .select("g")
     )
     blocks = grams.join(ok, "g", "left_semi")
-    return meta_block_prune(blocks, id_col="doc_id", block_col="g")
+    return meta_block_prune(blocks)
 
 
 @q(
@@ -4288,16 +4255,14 @@ def _kmeans_oracle(
 @q("kmeans_lloyd", _kmeans_oracle())
 def kmeans_lloyd(spark, sf_dir):
     """Distributed k-means (2 Lloyd iterations, k=4) over the embeddings
-    table on an integer lattice — the fully distributed counterpart to the
-    driver-slice IVF trainer (operators/ann.train_ivf_centroids), for
-    corpora where no representative sample fits one machine. See
+    table on an integer lattice — every step distributed, with no
+    driver-side training slice, for corpora where no representative sample
+    fits one machine. See
     operators/ann.kmeans_lattice_assign for the exact-arithmetic scheme
     and the broadcast-k-rows / (cell,dim)-keyed-M-step scale shape."""
     from wiki_entity_linker_spark.operators.ann import kmeans_lattice_assign
 
-    return kmeans_lattice_assign(
-        _t(spark, sf_dir, "embeddings"), k=4, n_iter=2
-    )
+    return kmeans_lattice_assign(_t(spark, sf_dir, "embeddings"))
 
 
 @q(
@@ -4560,7 +4525,7 @@ def semantic_dedup(spark, sf_dir):
     from wiki_entity_linker_spark.operators.ann import kmeans_lattice_assign
 
     emb = _t(spark, sf_dir, "embeddings")
-    cells = kmeans_lattice_assign(emb, k=4, n_iter=2).localCheckpoint(
+    cells = kmeans_lattice_assign(emb).localCheckpoint(
         eager=True  # consumed twice (pair join + final flag join)
     )
     v = emb.select(

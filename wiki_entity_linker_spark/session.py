@@ -89,14 +89,13 @@ def cluster_conf_profile(
 def get_spark(
     app_name: str = "wiki_entity_linker_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``).
-    ``shuffle_partitions`` defaults to the core count so small local runs
-    don't over-parallelize; on a real cluster this is set to
+    Shuffle partitions follow the core count (at least 8) so small local
+    runs don't over-parallelize; on a real cluster they are set to
     ``2-3 × total executor cores`` via spark-submit conf instead.
     """
     if cores is None:
@@ -106,13 +105,11 @@ def get_spark(
     else:
         master = f"local[{cores}]"
         n_cores = cores
-    if shuffle_partitions is None:
-        shuffle_partitions = max(8, n_cores)
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(8, n_cores)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

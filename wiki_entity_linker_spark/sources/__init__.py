@@ -6,7 +6,6 @@ from wiki_entity_linker_spark.sources.predictions import (  # noqa: F401
 from wiki_entity_linker_spark.sources.tables import (  # noqa: F401
     ARTICLE_SCHEMA,
     filter_qid_rows,
-    load_sf_tables,
     normalize_sparql_values,
     read_articles_jsonl,
     read_tsv,

@@ -18,16 +18,9 @@ string, so the read schema takes each hyperlink as one string and
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-SF_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 # Spans are half-open [start, end) char intervals everywhere.
 SPAN = T.ArrayType(T.LongType())
@@ -87,16 +80,6 @@ ARTICLE_SCHEMA = T.StructType(
         )
     ]
 )
-
-
-def load_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver testdata table present in ``sf_dir``."""
-    out = {}
-    for name in SF_TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            out[name] = spark.read.parquet(p)
-    return out
 
 
 def _decode_hyperlink(raw: Column) -> Column:
