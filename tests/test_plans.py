@@ -63,6 +63,23 @@ def test_scan_stays_jvm_side(spark, sf001):
     assert "EvalPython" not in _plan(hof)
 
 
+def test_er_features_and_scores_start_no_python(spark):
+    """The ER feature build and pair scoring are JVM expressions end to
+    end: no (Arrow or batch) EvalPython node, so no Python worker starts
+    in the ER pipeline."""
+    from wiki_entity_linker_spark.plans.er_pipeline import build_features, score_pairs
+
+    reps = spark.createDataFrame(
+        [(1, "a/b.py", "python", "def f(x):\n    return x"),
+         (2, "c/b.py", "python", "def f(y):\n    return y")],
+        "file_id long, path string, lang string, content string",
+    )
+    feats = build_features(reps)
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    for df in (feats, score_pairs(pairs, feats)):
+        assert "EvalPython" not in _plan(df)
+
+
 def test_minhash_single_shuffle(spark, sf001):
     """The signature groupBy must be the ONLY exchange, with partial
     (map-side) aggregation before it."""

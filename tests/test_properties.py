@@ -2,13 +2,13 @@
 the code whose subtle index math a handful of fixed examples can miss.
 
 Most need no SparkSession: they drive the kernels directly, so hundreds of
-examples run in seconds. The column-expression property batches many
+examples run in seconds. The column-expression properties batch many
 generated inputs into one DataFrame per example.
 """
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from wiki_entity_linker_spark.functions.similarity import (
@@ -104,3 +104,63 @@ def test_ngrams_matches_python_reference(spark, docs):
     for r in rows:
         for k in ks:
             assert r[f"g{k}"] == _ngrams_py(docs[r["i"]], k), (docs[r["i"]], k)
+
+
+_LMIN, _LMAX = -(2**63), 2**63 - 1
+# few distinct keys, so tokens repeat and key sets overlap; the int64
+# extremes check that the sort and the merge compare signed 64-bit keys
+_HASH = st.one_of(st.sampled_from([_LMIN, -1, 0, 1, 7, _LMAX]), st.integers(_LMIN, _LMAX))
+_HASH_LIST = st.lists(_HASH, min_size=0, max_size=30)
+_HASHES = st.one_of(st.none(), _HASH_LIST)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_HASHES, min_size=1, max_size=20))
+@example([None, [], [5], [3, 3, 3], [_LMAX, _LMIN, _LMAX, 0, _LMIN]])
+def test_tf_compress_matches_numpy_unique(spark, docs):
+    """The JVM TF compression of a hashed token array equals
+    ``np.unique(..., return_counts=True)``; a null or empty array gives two
+    empty arrays."""
+    from wiki_entity_linker_spark.functions.similarity import tf_compress
+
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, h array<bigint>")
+    rows = df.select("i", tf_compress("h").alias("tf")).collect()
+    assert len(rows) == len(docs)
+    for r in rows:
+        u, c = np.unique(np.asarray(docs[r["i"]] or [], dtype=np.int64), return_counts=True)
+        assert (r["tf"]["u"], r["tf"]["c"]) == (u.tolist(), c.tolist()), docs[r["i"]]
+
+
+def _tf(tokens):
+    """Compressed TF vector (sorted distinct keys, counts) of a token list."""
+    u, c = np.unique(np.asarray(tokens, dtype=np.int64), return_counts=True)
+    return u.tolist(), c.tolist()
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.tuples(_HASH_LIST, _HASH_LIST), min_size=1, max_size=20))
+@example(
+    [
+        ([1, 2, 2], [3, 4]),  # disjoint
+        ([_LMIN, 5, 5, _LMAX], [_LMAX, 5, _LMIN, 5]),  # identical key sets
+        ([_LMIN, 0, 0, 9], [0, 9, 9, _LMAX]),  # partly overlapping
+        ([], [1]),
+        ([], []),
+        ([7], [7, 7, 7]),
+    ]
+)
+def test_tf_dot_matches_dict_reference(spark, pairs):
+    """The JVM two-pointer TF dot equals the dict-based dot of the two
+    count vectors (0.0 when either side is empty)."""
+    from collections import Counter
+
+    from wiki_entity_linker_spark.functions.similarity import tf_dot
+
+    rows = [(i, *_tf(a), *_tf(b)) for i, (a, b) in enumerate(pairs)]
+    df = spark.createDataFrame(
+        rows, "i int, ua array<bigint>, ca array<int>, ub array<bigint>, cb array<int>"
+    )
+    got = dict(df.select("i", tf_dot("ua", "ca", "ub", "cb").alias("d")).collect())
+    for i, (a, b) in enumerate(pairs):
+        ta, tb = Counter(a), Counter(b)
+        assert got[i] == float(sum(n * tb[k] for k, n in ta.items())), (a, b)

@@ -1,14 +1,16 @@
-"""Pairwise similarity scorers — Arrow-batched pandas UDFs, no per-row Python.
+"""Pairwise similarity scorers — JVM expressions first, one Arrow-batched
+pandas UDF where the JVM has no builtin.
 
 Recast of the reference's batched candidate scorer
 (trained_entity_linker.py:124-142: all candidates of a mention scored as one
-tensor batch): candidate pairs arrive as Arrow record batches and are scored
-per-batch inside one Python call. Nothing here is registered as a
+tensor batch). Where Spark has a JVM-side builtin (``levenshtein``) or the
+score is a short merge over arrays (shingle Jaccard, the hashed
+term-frequency compression and dot) it is a column expression: built-ins
+run inside whole-stage codegen, higher-order functions interpreted, and
+neither starts a Python worker. Only Jaro-Winkler, which the JVM lacks, is
+a pandas UDF: candidate pairs arrive as Arrow record batches and are
+scored per batch inside one Python call. Nothing here is registered as a
 row-at-a-time ``F.udf``.
-
-Where Spark has a JVM-side builtin (``levenshtein``) we prefer it — built-ins
-run inside whole-stage codegen and beat any UDF; the pandas UDFs cover what
-the JVM lacks (Jaro-Winkler, term-frequency cosine).
 """
 
 from __future__ import annotations
@@ -17,14 +19,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType
+
+from wiki_entity_linker_spark.functions.text import _bind
 
 
 def _c(col: Column | str) -> Column:
@@ -275,57 +272,78 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 # ---------------------------------------------------------------------------
 
 def hashed_tokens(tokens: Column | str) -> Column:
-    """Token array -> int64 hash array (JVM xxhash64). Shipping int64 through
-    Arrow is ~3x cheaper than the token strings, and numpy can then vectorize
-    the term-frequency math; hash collisions are negligible for cosine."""
+    """Token array -> int64 hash array (JVM xxhash64). Sorting and merging
+    int64 keys is cheaper than comparing the token strings, and the
+    compressed vectors stay small in the shuffle; hash collisions are
+    negligible for cosine."""
     return F.transform(_c(tokens), lambda t: F.xxhash64(t))
 
 
-_TF_COMPRESSED = StructType(
-    [
-        StructField("u", ArrayType(LongType())),
-        StructField("c", ArrayType(IntegerType())),
-    ]
-)
+def tf_compress(hashes: Column | str) -> Column:
+    """Per-DOC term-frequency compression: hashed token array →
+    ``struct<u: array<bigint>, c: array<int>>`` of its sorted distinct
+    hashes and their counts (``np.unique(..., return_counts=True)``); a
+    null or empty array gives two empty arrays. Computed once per document
+    at feature-build time, so the pair scorer never re-counts per pair and
+    the shuffled payload shrinks ~4x (unique terms << tokens).
 
+    Sort once and keep the positions where a run of equal hashes starts;
+    each count is the next start minus this one (the array size for the
+    last run). The sorted array and the start positions are each bound
+    once (``text._bind``): the lambdas run interpreted, without CSE.
+    ``sort_array``, not ``array_sort``: the latter compares through an
+    interpreted lambda and took twice as long on 400-token rows."""
 
-@F.pandas_udf(_TF_COMPRESSED)
-def tf_compress_udf(htok: pd.Series) -> pd.DataFrame:
-    """Per-DOC term-frequency compression: hashed token array → (sorted
-    unique hashes, counts). Computed once per document at feature-build
-    time so the pair scorer never re-runs np.unique per pair and the
-    shuffled payload shrinks ~4× (unique terms ≪ tokens)."""
-    us, cs = [], []
-    for arr in htok.to_numpy():
-        a = np.asarray(arr if arr is not None else [], dtype=np.int64)
-        u, c = np.unique(a, return_counts=True)
-        us.append(u)
-        cs.append(c.astype(np.int32))
-    return pd.DataFrame({"u": us, "c": cs})
-
-
-@F.pandas_udf(DoubleType())
-def tf_dot_udf(
-    ua: pd.Series, ca: pd.Series, ub: pd.Series, cb: pd.Series
-) -> pd.Series:
-    """Dot product of two compressed TF vectors (sorted unique keys +
-    counts) via sorted intersection — norms are precomputed per doc, so the
-    per-pair Python work is ONE searchsorted pass."""
-    out = np.empty(len(ua), dtype=np.float64)
-    uav, cav, ubv, cbv = (s.to_numpy() for s in (ua, ca, ub, cb))
-    for i in range(len(uav)):
-        x, cx = uav[i], cav[i]
-        y, cy = ubv[i], cbv[i]
-        if x is None or y is None or len(x) == 0 or len(y) == 0:
-            out[i] = 0.0
-            continue
-        x = np.asarray(x, dtype=np.int64)
-        y = np.asarray(y, dtype=np.int64)
-        idx = np.searchsorted(x, y)
-        idx[idx == x.size] = 0
-        mask = x[idx] == y
-        out[i] = float(
-            np.asarray(cx, dtype=np.float64)[idx[mask]]
-            @ np.asarray(cy, dtype=np.float64)[mask]
+    def runs(srt: Column) -> Column:
+        n = F.size(srt)
+        positions = F.when(n > 0, F.sequence(F.lit(0), n - 1)).otherwise(
+            F.array().cast("array<int>")
         )
-    return pd.Series(out)
+        starts = F.filter(
+            positions, lambda i: (i == 0) | (F.get(srt, i) != F.get(srt, i - 1))
+        )
+        return _bind(
+            starts,
+            lambda st: F.struct(
+                F.transform(st, lambda i: F.get(srt, i)).alias("u"),
+                F.transform(
+                    st, lambda i, k: F.coalesce(F.get(st, k + 1), n) - i
+                ).alias("c"),
+            ),
+        )
+
+    hashes = F.coalesce(_c(hashes), F.array().cast("array<bigint>"))
+    return _bind(F.sort_array(hashes), runs)
+
+
+def tf_dot(
+    ua: Column | str, ca: Column | str, ub: Column | str, cb: Column | str
+) -> Column:
+    """Dot product of two compressed TF vectors (sorted distinct keys +
+    counts, as :func:`tf_compress` builds them); 0.0 if either is empty.
+    A two-pointer sorted merge inside one ``aggregate``: the state is
+    ``(i, j, acc)``, each step advances the pointer at the smaller key (both
+    on a match, adding the product of the counts), and ``size(ua) +
+    size(ub)`` steps always reach the end of one side. The sum is exact:
+    counts are integers, summed as bigint."""
+    ua, ca, ub, cb = _c(ua), _c(ca), _c(ub), _c(cb)
+
+    def state(i: Column, j: Column, acc: Column) -> Column:
+        return F.struct(i.alias("i"), j.alias("j"), acc.alias("acc"))
+
+    def step(s: Column, _: Column) -> Column:
+        i, j, acc = s["i"], s["j"], s["acc"]
+        x, y = F.get(ua, i), F.get(ub, j)
+        return (
+            F.when(x.isNull() | y.isNull(), s)
+            .when(x == y, state(i + 1, j + 1, acc + F.get(ca, i).cast("long") * F.get(cb, j)))
+            .when(x < y, state(i + 1, j, acc))
+            .otherwise(state(i, j + 1, acc))
+        )
+
+    return F.aggregate(
+        F.sequence(F.lit(1), F.size(ua) + F.size(ub)),
+        state(F.lit(0), F.lit(0), F.lit(0).cast("long")),
+        step,
+        lambda s: s["acc"].cast("double"),
+    )

@@ -23,6 +23,9 @@ _TOPK = 5
 # (shared with the embedding near-dup blocking, operators/dedup.py)
 LSH_PLANES = 6
 LSH_TABLES = 3
+# table t draws its planes from RandomState(LSH_SEED * 1000 + t); the LSH
+# oracles in queries.py draw the same literals
+LSH_SEED = 42
 # IVF cells each query probes
 _IVF_NPROBE = 4
 # integer-lattice k-means: cells and Lloyd iterations
@@ -91,7 +94,7 @@ def rhp_lsh_buckets(df: DataFrame, dim: int, id_col: str, table: int) -> DataFra
     """→ ``(id, bucket)`` — sign pattern of ``LSH_PLANES`` random
     projections of ``embedding``, drawn for LSH table ``table``."""
     bucket = None
-    for i, plane in enumerate(_plane_literals(dim, LSH_PLANES, 42 * 1000 + table)):
+    for i, plane in enumerate(_plane_literals(dim, LSH_PLANES, LSH_SEED * 1000 + table)):
         bit = F.when(dot(F.col("embedding"), plane) >= 0, F.lit(1 << i)).otherwise(
             F.lit(0)
         )
@@ -118,7 +121,7 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
     return _rerank(cand.dropDuplicates(["query_id", "vec_id"]), vectors, queries)
 
 
-def seeded_centroids(dim: int, n_centroids: int, seed: int = 42) -> list[list[float]]:
+def seeded_centroids(dim: int, n_centroids: int, seed: int) -> list[list[float]]:
     """Data-independent coarse-quantizer centroids from a seeded RNG.
 
     A random-center Voronoi partition is a legitimate IVF coarse quantizer

@@ -13,9 +13,9 @@ is declarative end to end:
 3. ``blocks``       — alias-dictionary blocks ∪ MinHash/LSH band blocks,
                       stopword-capped and salted (explicit skew handling);
 4. ``pairs``        — block self-join → canonical candidate pairs;
-5. ``scores``       — JVM shingle-Jaccard + Arrow-batched pandas-UDF scorers
-                      (TF-IDF cosine, Jaro-Winkler on path stems) — the
-                      batched-candidate-scoring pattern of
+5. ``scores``       — shingle Jaccard and hashed-TF cosine, both JVM
+                      expressions over the per-doc int features (no Python
+                      worker) — the batched-candidate-scoring pattern of
                       trained_entity_linker.py:124-142;
 6. ``edges``        — threshold rule → match edges;
 7. ``components``   — large-star/small-star connected components;
@@ -33,10 +33,9 @@ from pyspark.sql import functions as F
 from wiki_entity_linker_spark.eval.pairwise import evaluate_against_labeled_pairs
 from wiki_entity_linker_spark.functions.similarity import (
     hashed_tokens,
-    jaro_winkler_udf,
-    tf_compress_udf,
-    tf_dot_udf,
     set_jaccard,
+    tf_compress,
+    tf_dot,
 )
 from wiki_entity_linker_spark.functions.text import normalize_content, shingles, tokenize
 from wiki_entity_linker_spark.operators.blocking import (
@@ -146,8 +145,11 @@ def build_features(rep_rows: DataFrame) -> DataFrame:
 
     * ``hsh``: xxhash64 of each distinct k-shingle (int64 array),
     * ``tfu``/``tfc``/``tfn``: compressed TF (sorted unique hashed tokens,
-      counts, precomputed norm) so the pair cosine is one Arrow pass,
-    * ``stem``/``defs``/``fname``: alias blocking keys.
+      counts, precomputed norm) so the pair cosine is one sorted merge,
+    * ``stem``/``defs``: alias blocking keys,
+    * ``fname``: the file name. No stage reads it; it stays because an
+      append unions the base's feature table with its batch's, so
+      dropping a column changes the schema every chain level shares.
 
     Int arrays are ~10× cheaper to intersect per pair than string shingle
     arrays; raw content is never cached or shuffled anywhere.
@@ -169,7 +171,7 @@ def build_features(rep_rows: DataFrame) -> DataFrame:
             "stem",
             "defs",
             F.transform(shingles("toks", K_SHINGLE), lambda s: F.xxhash64(s)).alias("hsh"),
-            tf_compress_udf(hashed_tokens("toks")).alias("tf"),
+            tf_compress(hashed_tokens("toks")).alias("tf"),
         )
         .select(
             "file_id",
@@ -212,8 +214,8 @@ def raw_block_keys(
 
 
 def score_pairs(pairs: DataFrame, feats: DataFrame) -> DataFrame:
-    """Similarity scores for candidate pairs over the per-doc int features;
-    Arrow UDFs only for the cosine (numpy) and name Jaro-Winkler.
+    """Similarity scores for candidate pairs over the per-doc int features,
+    all JVM expressions: no Python worker starts in this stage.
 
     ``shingle_jaccard`` is ``set_jaccard`` over the xxhash64 ``hsh``
     arrays, so it equals the Jaccard of the shingle sets only while no two
@@ -229,7 +231,6 @@ def score_pairs(pairs: DataFrame, feats: DataFrame) -> DataFrame:
         F.col("tfu").alias("tfu_a"),
         F.col("tfc").alias("tfc_a"),
         F.col("tfn").alias("tfn_a"),
-        F.col("fname").alias("fname_a"),
     ).hint("shuffle_hash")
     b = feats.select(
         F.col("file_id").alias("id_b"),
@@ -237,14 +238,13 @@ def score_pairs(pairs: DataFrame, feats: DataFrame) -> DataFrame:
         F.col("tfu").alias("tfu_b"),
         F.col("tfc").alias("tfc_b"),
         F.col("tfn").alias("tfn_b"),
-        F.col("fname").alias("fname_b"),
     ).hint("shuffle_hash")
     # No repartition between the joins and the scorer projection: the
     # join output already moves every feature array once per side, and a
     # third array shuffle dominated the stage at larger corpora (the
     # joined arrays are the payload — ids are noise). Partition-count
     # floors are handled by spark.sql.shuffle.partitions = cores.
-    dot = tf_dot_udf("tfu_a", "tfc_a", "tfu_b", "tfc_b")
+    dot = tf_dot("tfu_a", "tfc_a", "tfu_b", "tfc_b")
     tf_cos = (
         F.when((F.col("tfn_a") == 0) & (F.col("tfn_b") == 0), F.lit(1.0))
         .when((F.col("tfn_a") == 0) | (F.col("tfn_b") == 0), F.lit(0.0))
@@ -259,15 +259,14 @@ def score_pairs(pairs: DataFrame, feats: DataFrame) -> DataFrame:
             # hsh = xxhash64 of DISTINCT shingles → already element-distinct
             F.round(set_jaccard("hsh_a", "hsh_b"), 6).alias("shingle_jaccard"),
             F.round(tf_cos, 6).alias("tf_cosine"),
-            F.round(jaro_winkler_udf("fname_a", "fname_b"), 6).alias("name_jw"),
         )
     )
 
 
 def match_edges(scores: DataFrame) -> DataFrame:
     """Deterministic decision rule → match edges. Content-only on purpose:
-    name_jw is reported for analysis but does not gate (a renamed exact
-    near-copy must still match)."""
+    no file-name score gates (a renamed exact near-copy must still
+    match)."""
     is_match = (F.col("shingle_jaccard") >= JACCARD_THRESHOLD) | (
         F.col("tf_cosine") >= COSINE_THRESHOLD
     )
@@ -380,8 +379,7 @@ def run_er_pipeline(
     # 4. candidate pairs (canonical order, deduped across block types)
     pairs = mgr.stage("pairs", lambda: pairs_from_blocks(blocks))
 
-    # 5. scoring over the per-doc int features (score_pairs); Arrow UDF only
-    # for the cosine (numpy) and name Jaro-Winkler (vectorized kernel).
+    # 5. scoring over the per-doc int features (score_pairs), JVM-side
     scores = mgr.stage("scores", lambda: score_pairs(pairs, feats))
 
     # 6. decision rule → edges (deterministic thresholds)

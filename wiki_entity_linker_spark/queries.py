@@ -28,7 +28,7 @@ from wiki_entity_linker_spark.functions.text import (
     token_count,
     tokenize,
 )
-from wiki_entity_linker_spark.operators.ann import cosine_topk, lsh_topk
+from wiki_entity_linker_spark.operators.ann import LSH_SEED, cosine_topk, lsh_topk
 from wiki_entity_linker_spark.operators.argmax import argmax_with_ties, top1_deterministic
 from wiki_entity_linker_spark.operators.blocking import minhash_signatures
 from wiki_entity_linker_spark.operators.closure import (
@@ -951,8 +951,7 @@ def embedding_cosine_topk(spark, sf_dir):
 
 
 def _neardup_lsh_oracle(
-    dim: int, thr: float, n_planes: int, n_tables: int, max_bucket: int,
-    seed: int = 42,
+    dim: int, thr: float, n_planes: int, n_tables: int, max_bucket: int
 ) -> str:
     """DuckDB mirror of embedding_neardup_lsh_pairs: the SAME seeded numpy
     plane literals → bucket self-join → distinct pairs → exact-cosine verify,
@@ -961,7 +960,7 @@ def _neardup_lsh_oracle(
     import numpy as np
 
     def bucket_expr(t: int) -> str:
-        rng = np.random.RandomState(seed * 1000 + t)
+        rng = np.random.RandomState(LSH_SEED * 1000 + t)
         planes = rng.standard_normal((n_planes, dim))
         terms = [
             f"CASE WHEN list_dot_product(e, [{','.join(repr(float(x)) for x in pl)}])"
@@ -1130,7 +1129,7 @@ def suppress_overlaps_spans(spark, sf_dir):
     return suppress_overlaps(spans_df, "doc_id")
 
 
-def _lsh_oracle(dim: int, k: int, n_planes: int, n_tables: int, seed: int = 42) -> str:
+def _lsh_oracle(dim: int, k: int, n_planes: int, n_tables: int) -> str:
     """DuckDB mirror of lsh_topk: the SAME seeded numpy plane literals are
     embedded into the SQL, so the probabilistic LSH path itself — bucket
     assignment, multi-table candidate union, exact re-rank — is
@@ -1138,7 +1137,7 @@ def _lsh_oracle(dim: int, k: int, n_planes: int, n_tables: int, seed: int = 42) 
     import numpy as np
 
     def bucket_expr(t: int) -> str:
-        rng = np.random.RandomState(seed * 1000 + t)
+        rng = np.random.RandomState(LSH_SEED * 1000 + t)
         planes = rng.standard_normal((n_planes, dim))
         terms = [
             f"CASE WHEN list_dot_product(e, [{','.join(repr(float(x)) for x in pl)}])"
@@ -1174,7 +1173,11 @@ def _lsh_oracle(dim: int, k: int, n_planes: int, n_tables: int, seed: int = 42) 
        FROM ranked WHERE rnk <= {k}"""
 
 
-def _ivf_oracle(dim: int, k: int, n_centroids: int, nprobe: int, seed: int = 7) -> str:
+# seed of the data-independent IVF centroids of ann_ivf_topk and its oracle
+_IVF_SEED = 7
+
+
+def _ivf_oracle(dim: int, k: int, n_centroids: int, nprobe: int) -> str:
     """DuckDB mirror of ivf_topk with the SAME seeded centroid literals:
     cell assignment (lexicographic (distance, index) min — identical
     tie-break to Spark's struct array_min), nprobe probing and exact-cosine
@@ -1184,7 +1187,7 @@ def _ivf_oracle(dim: int, k: int, n_centroids: int, nprobe: int, seed: int = 7) 
 
     values = ", ".join(
         f"({j}, [{','.join(repr(x) for x in c)}]::DOUBLE[])"
-        for j, c in enumerate(seeded_centroids(dim, n_centroids, seed))
+        for j, c in enumerate(seeded_centroids(dim, n_centroids, _IVF_SEED))
     )
     dist = "list_dot_product(e, e) - 2 * list_dot_product(e, c) + list_dot_product(c, c)"
     return f"""
@@ -1224,7 +1227,7 @@ def ann_ivf_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cent = seeded_centroids(64, 16, seed=7)
+    cent = seeded_centroids(64, 16, seed=_IVF_SEED)
     return ivf_topk(emb, queries, cent)
 
 
@@ -3139,7 +3142,7 @@ def blocking_quality_documents(spark, sf_dir):
     return blocking_quality(cand, truth, n_items)
 
 
-def _quantize_oracle(dim: int, levels: int = 255) -> str:
+def _quantize_oracle(dim: int, levels: int) -> str:
     """Per-dim min/max bounds → uint8 codes (floor(x+0.5), half-up both
     engines) → reconstruction error; explicit left-associated sums pin the
     double-addition order so both engines agree bit-for-bit."""
@@ -3172,7 +3175,7 @@ def _quantize_oracle(dim: int, levels: int = 255) -> str:
        FROM erred"""
 
 
-@q("embedding_quantization", _quantize_oracle(64))
+@q("embedding_quantization", _quantize_oracle(64, 255))
 def embedding_quantization(spark, sf_dir):
     """Int8 scalar quantization of the embedding column: per-dimension
     global min/max bounds (ONE combinable aggregate, broadcast back as a
@@ -3795,9 +3798,11 @@ def onetoone_matching(spark, sf_dir):
     return locally_dominant_matching(pairs)
 
 
-def _fs_em_oracle(
-    n_iter: int, lam0: float = 0.5, m0: float = 0.8, u0: float = 0.2
-) -> str:
+# fs_em_estimate's fixed starting point (λ, m, u)
+_FS_EM_START = (0.5, 0.8, 0.2)
+
+
+def _fs_em_oracle(n_iter: int) -> str:
     """Unrolled EM over the same feat CTE the supervised FS oracle builds
     (prefix reused by a guarded split — one definition of the pair/feature
     construction). Products and the responsibility formula are written
@@ -3833,6 +3838,7 @@ def _fs_em_oracle(
         )
         return f"SELECT {cols}, sum(w) / count(*) AS lam FROM {src}"
 
+    lam0, m0, u0 = _FS_EM_START
     stages = []
     params = {f: (repr(m0), repr(u0)) for f in feats}
     params["lam"] = repr(lam0)
@@ -4183,10 +4189,12 @@ def tfidf_keywords(spark, sf_dir):
     )
 
 
-def _kmeans_ctes(
-    k: int = 4, n_iter: int = 2, grid: int = 1000, shift: str = "1.0",
-    dim: int = 64, with_raw: bool = False,
-) -> tuple[list[str], str]:
+# the lattice Lloyd of operators/ann.kmeans_lattice_assign over the 64-dim
+# embeddings: 4 cells, 2 iterations, coordinates round((x + 1.0) * 1000)
+_KM_CELLS, _KM_ITERS, _KM_GRID, _KM_SHIFT, _KM_DIM = 4, 2, 1000, "1.0", 64
+
+
+def _kmeans_ctes(with_raw: bool) -> tuple[list[str], str]:
     """Unrolled integer-lattice Lloyd (operators/ann.kmeans_lattice_assign)
     as a reusable CTE block: same quantization, same floor-div M-step, same
     (distance, cell) tie-break — every intermediate is int64, so the oracle
@@ -4203,19 +4211,19 @@ def _kmeans_ctes(
     def dist(c: str) -> str:
         return (
             f"list_sum([ (e.v[i] - {c}.c[i]) * (e.v[i] - {c}.c[i])"
-            f" for i in range(1, {dim + 1}) ])"
+            f" for i in range(1, {_KM_DIM + 1}) ])"
         )
 
     parts = [
         f"e AS MATERIALIZED (SELECT vec_id,"
-        f" [CAST(round((x + {shift}) * {grid}, 0) AS BIGINT)"
+        f" [CAST(round((x + {_KM_SHIFT}) * {_KM_GRID}, 0) AS BIGINT)"
         f" for x in embedding] AS v{raw_e} FROM embeddings)",
         f"r AS (SELECT vec_id, v,"
         f" row_number() OVER (ORDER BY {key}, vec_id) AS rn FROM e)",
         f"c0 AS MATERIALIZED (SELECT CAST(rn - 1 AS BIGINT) AS cell, v AS c"
-        f" FROM r WHERE rn <= {k})",
+        f" FROM r WHERE rn <= {_KM_CELLS})",
     ]
-    for it in range(1, n_iter + 1):
+    for it in range(1, _KM_ITERS + 1):
         prev = f"c{it - 1}"
         parts.append(
             f"a{it} AS MATERIALIZED (SELECT vec_id, v, cell{raw_o} FROM"
@@ -4224,7 +4232,7 @@ def _kmeans_ctes(
             f" ORDER BY {dist(prev)}, {prev}.cell) AS rk"
             f" FROM e, {prev}) WHERE rk = 1)"
         )
-        if it < n_iter:
+        if it < _KM_ITERS:
             parts.append(
                 f"u{it} AS (SELECT cell, i, CAST(sum(x) AS BIGINT) AS s,"
                 f" CAST(count(*) AS BIGINT) AS n FROM"
@@ -4240,14 +4248,11 @@ def _kmeans_ctes(
                 f" SELECT cell, c FROM c{it - 1}"
                 f" WHERE cell NOT IN (SELECT cell FROM cn{it}))"
             )
-    return parts, f"a{n_iter}"
+    return parts, f"a{_KM_ITERS}"
 
 
-def _kmeans_oracle(
-    k: int = 4, n_iter: int = 2, grid: int = 1000, shift: str = "1.0",
-    dim: int = 64,
-) -> str:
-    parts, final = _kmeans_ctes(k, n_iter, grid, shift, dim)
+def _kmeans_oracle() -> str:
+    parts, final = _kmeans_ctes(with_raw=False)
     joined = ",\n       ".join(parts)
     return f"WITH {joined}\n       SELECT vec_id, cell FROM {final}"
 
@@ -4492,7 +4497,11 @@ def soundex_fuzzy_pairs(spark, sf_dir):
     )
 
 
-def _semantic_dedup_oracle(thr: float = 0.4) -> str:
+# rounded within-cell cosine at which semantic_dedup drops a document
+_SEMDEDUP_COS = 0.4
+
+
+def _semantic_dedup_oracle() -> str:
     parts, final = _kmeans_ctes(with_raw=True)
     joined = ",\n       ".join(parts)
     return f"""WITH {joined},
@@ -4500,12 +4509,12 @@ def _semantic_dedup_oracle(thr: float = 0.4) -> str:
                     round(list_cosine_similarity(a.raw, b.raw), 6) AS cos
              FROM {final} a JOIN {final} b
                ON a.cell = b.cell AND a.vec_id < b.vec_id),
-       d AS (SELECT DISTINCT vid FROM p WHERE cos >= {thr})
+       d AS (SELECT DISTINCT vid FROM p WHERE cos >= {_SEMDEDUP_COS})
        SELECT vec_id, cell, vec_id IN (SELECT vid FROM d) AS is_dup
        FROM {final}"""
 
 
-@q("semantic_dedup", _semantic_dedup_oracle(0.4))
+@q("semantic_dedup", _semantic_dedup_oracle())
 def semantic_dedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): semantic near-duplicate pruning via
     embedding clustering — k-means cells bound the comparison space, exact
@@ -4545,7 +4554,7 @@ def semantic_dedup(spark, sf_dir):
         a.join(b, "cell")
         .filter(F.col("ida") < F.col("vid"))
         .select("vid", F.round(cosine_prenorm("ra", "rb", "na", "nb"), 6).alias("cos"))
-        .filter(F.col("cos") >= 0.4)
+        .filter(F.col("cos") >= _SEMDEDUP_COS)
         .select("vid")
         .dropDuplicates()
         .withColumn("__d", F.lit(True))

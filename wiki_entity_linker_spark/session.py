@@ -115,12 +115,14 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bound pandas-UDF batch memory: the scoring stages carry int64
-        # feature arrays of 10²-10³ elements per row per side, so the 10k
-        # default is ~100-300 MB per in-flight batch × one per core — at 32
-        # wide on one node that inverted the 757k-file scaling leg
-        # (437-483 s vs 402 s at 8 cores; 389 s once bounded). Matches the
-        # cluster profile's arrow.maxRecordsPerBatch rationale.
+        # bound pandas-UDF batch memory. It was measured when the ER scoring
+        # stages still ran Arrow UDFs over int64 feature arrays of 10²-10³
+        # elements per row per side: the 10k default was ~100-300 MB per
+        # in-flight batch × one per core, and at 32 wide on one node that
+        # inverted the 757k-file scaling leg (437-483 s vs 402 s at 8 cores;
+        # 389 s once bounded). The ER pipeline runs no UDF now; the bound
+        # stays for the remaining Arrow paths (Jaro-Winkler scoring, the
+        # mapInPandas/applyInPandas scans), whose rows can be as wide.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config(
             "spark.driver.memory",
