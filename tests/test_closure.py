@@ -298,10 +298,7 @@ def test_pagerank_fixed_point_path_graph(spark, monkeypatch):
         2: (2, 616_666_666_665),
         3: (1, 191_666_666_665),
     }
-    # lineage-cut path is value-identical, and mass stays ~conserved
+    # mass stays ~conserved over the product's iteration count
     monkeypatch.setattr(graph, "_PR_ITERS", 3)
     a = {r["node"]: r["pr_fp"] for r in pagerank_fixed_point(edges).collect()}
-    monkeypatch.setattr(graph, "_PR_CUT_EVERY", 1)
-    b = {r["node"]: r["pr_fp"] for r in pagerank_fixed_point(edges).collect()}
-    assert a == b
     assert 0 <= 10**12 - sum(a.values()) < 3 * 10  # flooring loss only

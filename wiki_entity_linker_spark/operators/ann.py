@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.functions.vectors import cosine_prenorm, dot, norm
+from wiki_entity_linker_spark.session import cut
 
 # neighbors kept per query by every top-k search here
 _TOPK = 5
@@ -210,21 +211,25 @@ def kmeans_lattice_assign(df: DataFrame) -> DataFrame:
     """
     from wiki_entity_linker_spark.functions.hashing import h64
 
-    q = df.select(
-        F.col("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x: F.round((x + F.lit(1.0)) * 1000, 0).cast("long"),
-        ).alias("v"),
-    ).localCheckpoint(eager=True)
+    q = cut(
+        df.select(
+            F.col("vec_id"),
+            F.transform(
+                "embedding",
+                lambda x: F.round((x + F.lit(1.0)) * 1000, 0).cast("long"),
+            ).alias("v"),
+        )
+    )
 
     key = h64(F.col("vec_id").cast("string"))
     cand = q.orderBy(key, "vec_id").limit(_KMEANS_K)
     w0 = Window.orderBy(h64(F.col("vec_id").cast("string")), "vec_id")
-    cents = cand.select(
-        (F.row_number().over(w0) - 1).cast("long").alias("cell"),
-        F.col("v").alias("c"),
-    ).localCheckpoint(eager=True)
+    cents = cut(
+        cand.select(
+            (F.row_number().over(w0) - 1).cast("long").alias("cell"),
+            F.col("v").alias("c"),
+        )
+    )
 
     assign = None
     for it in range(1, _KMEANS_ITERS + 1):
@@ -245,7 +250,7 @@ def kmeans_lattice_assign(df: DataFrame) -> DataFrame:
         )
         if it == _KMEANS_ITERS:
             break
-        assign = assign.localCheckpoint(eager=True)
+        assign = cut(assign)
         upd = (
             assign.select("cell", F.posexplode("v").alias("i", "x"))
             .groupBy("cell", "i")
@@ -263,5 +268,5 @@ def kmeans_lattice_assign(df: DataFrame) -> DataFrame:
             )
         )
         carried = cents.join(upd.select("cell"), "cell", "left_anti")
-        cents = upd.unionByName(carried).localCheckpoint(eager=True)
+        cents = cut(upd.unionByName(carried))
     return assign.select("vec_id", "cell")

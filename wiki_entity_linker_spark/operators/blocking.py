@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from wiki_entity_linker_spark.functions.hashing import h64, mh_family, mh_mix, stable_file_id
 from wiki_entity_linker_spark.functions.text import shingles, tokenize
+from wiki_entity_linker_spark.session import cut
 
 DEFAULT_N_HASHES = 16
 DEFAULT_BANDS = 8  # 8 bands × 2 rows: s-curve threshold ≈ (1/8)^(1/2) ≈ 0.35
@@ -295,10 +296,9 @@ def meta_block_prune(blocks: DataFrame) -> DataFrame:
     # b feeds three consumers (both self-join sides + the block-set sizes)
     # and w two (global mean + final verdict) — cut each once so the
     # posting dedup and the pair aggregation run a single time
-    b = (
+    b = cut(
         blocks.select(F.col("doc_id").alias("id"), F.col("g").alias("bk"))
         .dropDuplicates(["id", "bk"])
-        .localCheckpoint(eager=True)
     )
     nb = b.groupBy("id").agg(F.count("*").cast("long").alias("nb"))
     pairs = (
@@ -322,7 +322,7 @@ def meta_block_prune(blocks: DataFrame) -> DataFrame:
             F.expr("(1000000 * cbs) div (nb_a + nb_b - cbs)").cast("long"),
         )
     )
-    w = w.localCheckpoint(eager=True)
+    w = cut(w)
     mean = w.agg(F.expr("sum(js_w) div count(*)").cast("long").alias("__mw"))
     return (
         w.crossJoin(F.broadcast(mean))

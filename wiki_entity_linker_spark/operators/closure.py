@@ -7,12 +7,17 @@ the same skeleton twice:
 
 * :func:`connected_components` — alternating **large-star / small-star**
   (Kiveris et al., "Connected Components in MapReduce and Beyond"): O(log n)
-  rounds, each round two groupBy-min shuffles; per-round ``localCheckpoint``
-  cuts lineage so plans don't grow (the driver-loop is control flow only —
-  all data stays distributed).
+  rounds, each round two groupBy-min shuffles; a per-round lineage cut
+  keeps plans from growing (the driver-loop is control flow only — all data
+  stays distributed).
 * :func:`transitive_closure` — iterative-doubling reachability (R := R ∪ R.R)
   with a depth cap; cycle safety via per-round ``dropDuplicates``, and the
-  same per-round ``localCheckpoint`` cut.
+  same per-round cut.
+
+Every cut is :func:`~wiki_entity_linker_spark.session.cut`: a reliable
+``checkpoint`` under the session's checkpoint directory when one is set (a
+lost executor costs a re-read), else a ``localCheckpoint`` (no write, but a
+lost executor fails the job).
 
 Each loop picks its own tail-solve cut-over (finish a small residual graph on
 the driver, result-identically) from the module constants below; shuffle
@@ -23,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from wiki_entity_linker_spark.session import cut
 
 # Tail-solve cut-overs, in canonical edges. Connected components (and the
 # merge graph, which runs them): once star-contraction has shrunk the edge
@@ -160,12 +167,12 @@ def connected_components(edges: DataFrame) -> DataFrame:
 
     spark = edges.sparkSession
     converged = False
-    e = _canonical_edges(edges, "id_a", "id_b").localCheckpoint(eager=True)
+    e = cut(_canonical_edges(edges, "id_a", "id_b"))
     prev = _stats(e)
     if prev[0] <= _CC_LOCAL_SOLVE_EDGES:
         return _local_union_find(spark, e)
     for _ in range(_CC_MAX_ITER):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        e = cut(_small_star(_large_star(e)))
         cur = _stats(e)
         if cur[0] <= _CC_LOCAL_SOLVE_EDGES:
             return _local_union_find(spark, e)
@@ -261,7 +268,7 @@ def transitive_closure(edges: DataFrame) -> DataFrame:
     the closure three times (both join sides and the union), so without a cut
     the *plan* triples per round and Catalyst analysis dominates the runtime
     long before the data does; every round therefore ends in a
-    ``localCheckpoint``, the same cut :func:`connected_components` uses, and
+    ``session.cut``, the same cut :func:`connected_components` uses, and
     the returned plan has a constant size whatever the round count.
 
     When the deduped edge set fits under ``_CLOSURE_LOCAL_SOLVE_EDGES`` the
@@ -272,11 +279,10 @@ def transitive_closure(edges: DataFrame) -> DataFrame:
     """
     import math
 
-    base = (
+    base = cut(
         edges.select(F.col("child").alias("a"), F.col("parent").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=True)
     )
     closure = base
     prev = closure.count()
@@ -295,10 +301,9 @@ def transitive_closure(edges: DataFrame) -> DataFrame:
             .select(F.col("l.a").alias("a"), F.col("r.b").alias("b"))
             .filter(F.col("a") != F.col("b"))
         )
-        closure = (
+        closure = cut(
             closure.unionByName(doubled)
             .dropDuplicates(["a", "b"])
-            .localCheckpoint(eager=True)
         )
         n = closure.count()
         if n == prev:
@@ -386,7 +391,7 @@ def merge_components(
             .withColumn(side, F.coalesce("__c", F.col(side)))
             .drop("__c")
         )
-    e = (
+    e = cut(
         e.select(
             F.least("id_a", "id_b").alias("id_a"),
             F.greatest("id_a", "id_b").alias("id_b"),
@@ -396,7 +401,6 @@ def merge_components(
         # joins above are otherwise re-evaluated by every downstream action
         # (edge count, local-solve collect, mini-CC rounds, the caller's
         # stage write), measured as ~3× the merge stage's wall time
-        .localCheckpoint(eager=True)
     )
     # node set of the mini graph: all new nodes (singleton guarantee) plus
     # every contracted endpoint, so touched old labels appear in the output
@@ -407,18 +411,17 @@ def merge_components(
         .unionByName(e.select(F.col("id_b").alias("id")))
     )
     # consumed 3×: merge map, relabel, new rows
-    mini = components_with_singletons(nodes, e, id_col="id").localCheckpoint(eager=True)
+    mini = cut(components_with_singletons(nodes, e, id_col="id"))
     # touched-cluster relabel map: rows of the mini solve whose node id IS an
     # old component label; batch-sized by construction → broadcast when it
     # actually fits (broadcast_if_small)
     old_labels = old_comps.select(F.col("component").alias("id")).dropDuplicates(["id"])
-    merge_map = (
+    merge_map = cut(
         mini.join(old_labels, "id", "left_semi")
         .select(F.col("id").alias("__old_c"), F.col("component").alias("__new_c"))
         .filter(F.col("__old_c") != F.col("__new_c"))
         # materialize once: consumed by the size probe AND the relabel join
         # (and the semi-join against corpus-sized old_labels must not rerun)
-        .localCheckpoint(eager=True)
     )
     relabeled_old = relabel_through_map(
         old_comps, broadcast_if_small(merge_map)

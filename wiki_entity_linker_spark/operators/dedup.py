@@ -28,6 +28,7 @@ from wiki_entity_linker_spark.operators.blocking import (
     pairs_from_blocks,
 )
 from wiki_entity_linker_spark.operators.skew import spread_small_input
+from wiki_entity_linker_spark.session import cut
 
 # MinHash near-dup shingle length (tokens), and the Jaccard verify threshold
 # of the incremental clustering
@@ -91,13 +92,13 @@ def minhash_neardup_pairs(
     # ONE tokenize/shingle pass: the shingle arrays feed the signature
     # derivation AND both verify sides; without the cut Catalyst re-runs
     # the scan per consumer (measured: 8 parquet scans in this plan)
-    toks = df.select(
-        F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh")
-    ).localCheckpoint(eager=True)
+    toks = cut(
+        df.select(F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh"))
+    )
     sigs = minhash_from_shingles(toks, id_col)
     # blocks feed both sides of the pair self-join: cut here too so the
     # minhash aggregation itself runs once
-    blocks = lsh_band_blocks(sigs, id_col).localCheckpoint(eager=True)
+    blocks = cut(lsh_band_blocks(sigs, id_col))
     return _verify_shingle_pairs(
         pairs_from_blocks(blocks, id_col), toks, id_col, jaccard_threshold
     )
@@ -179,18 +180,14 @@ def minhash_neardup_clusters_incremental(
 
     base = spread_small_input(base_df)
     new = spread_small_input(new_df)
-    toks_b = base.select(
-        F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh")
-    ).localCheckpoint(eager=True)
-    toks_n = new.select(
-        F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh")
-    ).localCheckpoint(eager=True)
-    blocks_b = lsh_band_blocks(
-        minhash_from_shingles(toks_b, id_col), id_col
-    ).localCheckpoint(eager=True)
-    blocks_n = lsh_band_blocks(
-        minhash_from_shingles(toks_n, id_col), id_col
-    ).localCheckpoint(eager=True)
+    toks_b = cut(
+        base.select(F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh"))
+    )
+    toks_n = cut(
+        new.select(F.col(id_col), shingles(tokenize("text"), _NEARDUP_K).alias("sh"))
+    )
+    blocks_b = cut(lsh_band_blocks(minhash_from_shingles(toks_b, id_col), id_col))
+    blocks_n = cut(lsh_band_blocks(minhash_from_shingles(toks_n, id_col), id_col))
 
     def _verify(pairs: DataFrame, toks: DataFrame) -> DataFrame:
         return _verify_shingle_pairs(
@@ -220,10 +217,9 @@ def minhash_neardup_clusters_incremental(
     # cut: _verify consumes toks_touch on BOTH join sides — without the cut
     # the touched semi-join + union re-evaluates per side (measured ~2s of
     # the sf1 append's verify stage)
-    toks_touch = (
+    toks_touch = cut(
         toks_b.join(touched, id_col, "left_semi")
         .unionByName(toks_n)
-        .localCheckpoint(eager=True)
     )
     edges = _verify(pairs, toks_touch)
     return merge_components(
@@ -290,7 +286,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str) -> DataFrame:
     # otherwise re-runs the tokenize/shingle scan per consumer — measured as
     # 4 full document scans in the sf1 plan. The cut stores the exploded
     # (id, gram) rows (two 8-byte columns) and truncates lineage.
-    inv = inv.localCheckpoint(eager=True)
+    inv = cut(inv)
     # the HOT list is tiny by construction → broadcast anti-join; the
     # second checkpoint stops Catalyst cloning the hot aggregation and
     # the anti-join into BOTH sides of the self-join below (observed as
@@ -301,16 +297,13 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str) -> DataFrame:
         .filter(F.col("df") > _NGRAM_MAX_DF)
         .select("gram")
     )
-    inv = inv.join(F.broadcast(hot), "gram", "left_anti").localCheckpoint(
-        eager=True
-    )
+    inv = cut(inv.join(F.broadcast(hot), "gram", "left_anti"))
     # sizes from KEPT grams (arrays are distinct, so count(*) = |set|);
     # materialized once — it feeds both sides of the final size join AND a
     # driver-side bounds probe (below) from one tiny table
-    sizes = (
+    sizes = cut(
         inv.groupBy("id")
         .agg(F.count("*").alias("n_grams"))
-        .localCheckpoint(eager=True)
     )
     # The pair aggregation is the scale bottleneck: the self-join emits
     # Σ|posting|²/2 rows and nearly every (id_a, id_b) group is unique, so
@@ -465,7 +458,7 @@ def embedding_neardup_lsh_pairs(
     )
     # cut: both self-join sides consume bk — without it the bucket window
     # (and the per-table projection union) is evaluated twice
-    bk = bk.localCheckpoint(eager=True)
+    bk = cut(bk)
     a = bk.select(F.col("vec_id").alias("id_a"), "bucket")
     b = bk.select(F.col("vec_id").alias("id_b"), "bucket")
     cand = (
@@ -519,9 +512,7 @@ def segment_dedup_stats(docs: DataFrame) -> DataFrame:
     """
     # the segment rows are consumed twice (winner agg + join back) — cut
     # them once so the corpus is scanned and tokenized a single time
-    seg = segment_rows(
-        docs.select("doc_id", tokenize("text").alias("t")), SEG_LEN
-    ).localCheckpoint(eager=True)
+    seg = cut(segment_rows(docs.select("doc_id", tokenize("text").alias("t")), SEG_LEN))
     return segment_stats(seg, seg)
 
 
@@ -594,11 +585,12 @@ def exact_substring_coverage(docs: DataFrame) -> DataFrame:
     length.
 
     Scale shape (100 TB reading): the token frame and the exploded gram
-    stream are each cut once (``localCheckpoint``; the curation verdict
-    stage cuts the same rows as durable stage tables), so the corpus is
-    tokenized and the grams are built a single time — the per-document
-    lengths read the cut token frame. The grams are then shuffled exactly
-    twice, both times keyed by the gram — (1) a COUNT-ONLY duplicate-gram
+    stream are each cut once (``session.cut``: a reliable checkpoint when
+    the session has a checkpoint directory, else a local one; the curation
+    verdict stage cuts the same rows as durable stage tables), so the
+    corpus is tokenized and the grams are built a single time — the
+    per-document lengths read the cut token frame. The grams are then shuffled
+    exactly twice, both times keyed by the gram — (1) a COUNT-ONLY duplicate-gram
     aggregate, map-side partial combine so a boilerplate gram repeated
     billions of times ships one partial row per map task, and (2) a semi
     join keeping only duplicated positions, whose output is at most its
@@ -612,8 +604,8 @@ def exact_substring_coverage(docs: DataFrame) -> DataFrame:
     the DuckDB oracle.
     """
     toks = docs.select("doc_id", tokenize("text").alias("t"))
-    toks = toks.localCheckpoint(eager=True)
-    grams = substring_gram_rows(toks, SUBSTR_K).localCheckpoint(eager=True)
+    toks = cut(toks)
+    grams = cut(substring_gram_rows(toks, SUBSTR_K))
     return substring_coverage(grams, toks, SUBSTR_K)
 
 
@@ -777,7 +769,7 @@ def allpairs_jaccard_join(docs: DataFrame, threshold: str) -> DataFrame:
     candidate join. Shuffle inventory: df-count (combinable), df join to
     the exploded stream (keyed by shingle), per-doc prefix window (keyed
     by id), candidate self-join (keyed by rare shingles), verify joins
-    (keyed by id). Shingle sets are materialized once (localCheckpoint) and
+    (keyed by id). Shingle sets are materialized once (``session.cut``) and
     consumed by all stages.
     """
     from fractions import Fraction
@@ -789,11 +781,13 @@ def allpairs_jaccard_join(docs: DataFrame, threshold: str) -> DataFrame:
     toks = docs.select(F.col("doc_id"), tokenize("text").alias("tk")).filter(
         F.size("tk") > 0
     )
-    sets = toks.select(
-        "doc_id",
-        shingles("tk", _ALLPAIRS_K).alias("s"),
-        F.size(shingles("tk", _ALLPAIRS_K)).cast("long").alias("sz"),
-    ).localCheckpoint(eager=True)
+    sets = cut(
+        toks.select(
+            "doc_id",
+            shingles("tk", _ALLPAIRS_K).alias("s"),
+            F.size(shingles("tk", _ALLPAIRS_K)).cast("long").alias("sz"),
+        )
+    )
     ex = sets.select("doc_id", "sz", F.explode("s").alias("sh"))
     dfreq = ex.groupBy("sh").agg(F.count("*").cast("long").alias("df"))
     # prefix length p = sz - ceil(t*sz) + 1, ceil in exact integers

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.session import cut
+
 # decimal places every published metric, probability and weight rounds to
 _DIGITS = 6
 # EM iterations of fs_em_estimate, and the iterations between cuts of its
@@ -324,9 +326,9 @@ def fs_em_estimate(pairs: DataFrame, feature_cols: list[str]) -> DataFrame:
     its whole lineage, so a fully lazy n-iteration composition re-runs
     every prior E-step — O(n²) passes over the pair table and a Catalyst
     plan that deepens per iteration. Each E-step is a full pass anyway, so
-    the parameter frame (1 row) is materialized via ``localCheckpoint``
-    every ``_EM_CUT_EVERY`` iterations (1 = every iteration: exactly n
-    passes, so Splink-typical 10–20 iterations stay flat). The cuts never
+    the parameter frame (1 row) is cut (``session.cut``) every
+    ``_EM_CUT_EVERY`` iterations (1 = every iteration: exactly n passes,
+    so Splink-typical 10–20 iterations stay flat). The cuts never
     change values. Returns one row
     per feature ``(feature, m_prob, u_prob, match_prior)``.
     """
@@ -366,7 +368,7 @@ def fs_em_estimate(pairs: DataFrame, feature_cols: list[str]) -> DataFrame:
             ],
         )
         if it % _EM_CUT_EVERY == 0 and it < _EM_ITERS:
-            params = params.localCheckpoint(eager=True)
+            params = cut(params)
     return params.select(
         F.explode(
             F.array(

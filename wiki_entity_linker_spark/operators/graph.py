@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wiki_entity_linker_spark.session import cut
+
 
 # Matching tail-solve cut-over, in deduped edges: at or under this the
 # sequential greedy runs on the driver (one Arrow transfer + one sorted scan)
@@ -21,9 +23,8 @@ _MATCHING_LOCAL_SOLVE_EDGES = 500_000
 
 # PageRank fixed-point unit: scores are int64 multiples of 1/_PR_SCALE
 _PR_SCALE = 10**12
-# PageRank power iterations, and the iterations between score lineage cuts
+# PageRank power iterations
 _PR_ITERS = 3
-_PR_CUT_EVERY = 8
 # peel rounds of k_core and matching rounds of locally_dominant_matching
 # before each raises
 _KCORE_MAX_ROUNDS = 200
@@ -50,29 +51,26 @@ def pagerank_fixed_point(edges: DataFrame) -> DataFrame:
     Scale shape: the classic Pregel-lite DataFrame loop — per iteration
     one shuffle join (messages = edges ⋈ scores on src) and one
     map-side-combinable groupBy(dst) sum; edge and degree frames are
-    materialized ONCE up front (localCheckpoint) so iterations re-scan
-    nothing upstream, and the score lineage is cut every ``_PR_CUT_EVERY``
-    iterations to stop plan growth (the closure.py discipline). Undirected
-    expansion means every node has out-degree ≥ 1 — no dangling-mass
-    special case. Hot nodes (celebrity entities) are single groupBy keys:
-    partial aggregation bounds them; AQE skew-join handles the join side.
+    materialized ONCE up front (``session.cut``) so iterations re-scan
+    nothing upstream. Undirected expansion means every node has
+    out-degree ≥ 1 — no dangling-mass special case. Hot nodes (celebrity
+    entities) are single groupBy keys: partial aggregation bounds them; AQE
+    skew-join handles the join side.
     """
-    und = (
+    und = cut(
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .localCheckpoint(eager=True)
     )
-    deg = (
+    deg = cut(
         und.groupBy("src")
         .agg(F.count("*").cast("long").alias("deg"))
-        .localCheckpoint(eager=True)
     )
     n_nodes = deg.select(F.count("*").alias("n"))  # 1 row, broadcast below
     base = F.expr(f"{_PR_SCALE} div n")
     pr = deg.crossJoin(F.broadcast(n_nodes)).select(
         "src", "deg", "n", base.alias("pr")
     )
-    for i in range(_PR_ITERS):
+    for _ in range(_PR_ITERS):
         msgs = (
             und.join(pr.select("src", F.expr("pr div deg").alias("c")), "src")
             .groupBy("dst")
@@ -91,8 +89,6 @@ def pagerank_fixed_point(edges: DataFrame) -> DataFrame:
                 ).alias("pr"),
             )
         )
-        if (i + 1) % _PR_CUT_EVERY == 0 and i + 1 < _PR_ITERS:
-            pr = pr.localCheckpoint(eager=True)
     return pr.select(
         F.col("src").alias("node"),
         F.col("deg").alias("degree"),
@@ -131,7 +127,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     list. Returns ``(node, degree, triangles, clustering_coeff)`` for every
     node in the edge set, coefficient = 2T / (d·(d−1)) (0.0 when d < 2).
     """
-    und = _undirected(edges).localCheckpoint(eager=True)
+    und = cut(_undirected(edges))
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
     # orient u→v iff (deg_u, u) < (deg_v, v): joins deg twice (node-sized
     # dimension; AQE broadcasts it when small, shuffles when not)
@@ -145,7 +141,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
             | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
         )
     )
-    ori = ranked.select("u", "v", "dv").localCheckpoint(eager=True)
+    ori = cut(ranked.select("u", "v", "dv"))
     # wedges from the low vertex; order the two high endpoints so the
     # closing edge's orientation is known (v before w in the total order)
     w1 = ori.select(F.col("u"), F.col("v").alias("x"), F.col("dv").alias("dx"))
@@ -204,9 +200,9 @@ def k_core(edges: DataFrame, k: int) -> DataFrame:
     shrink steps.)
     """
     n_part = max(edges.sparkSession.sparkContext.defaultParallelism, 1)
-    und = _undirected(edges).localCheckpoint(eager=True)
+    und = cut(_undirected(edges))
     alive = und.select(F.col("u").alias("id")).distinct()
-    alive = alive.localCheckpoint(eager=True)
+    alive = cut(alive)
     n_alive = alive.count()
     n_at_cut = n_alive
     for r in range(1, _KCORE_MAX_ROUNDS + 1):
@@ -220,7 +216,7 @@ def k_core(edges: DataFrame, k: int) -> DataFrame:
             .filter(F.col("__d") >= k)
             .select(F.col("u").alias("id"))
         )
-        nxt = nxt.localCheckpoint(eager=True)
+        nxt = cut(nxt)
         n_next = nxt.count()
         if n_next == n_alive:
             alive = nxt
@@ -234,7 +230,7 @@ def k_core(edges: DataFrame, k: int) -> DataFrame:
             # of the current induced graph, so correctness is unaffected)
             # at a partition count matched to the shrunken size
             parts = max(1, min(n_part, n_alive // 50_000 + 1))
-            und = surv.coalesce(parts).localCheckpoint(eager=True)
+            und = cut(surv.coalesce(parts))
             n_at_cut = n_alive
     else:
         raise RuntimeError(
@@ -309,7 +305,7 @@ def locally_dominant_matching(scored_pairs: DataFrame) -> DataFrame:
         .groupBy("ea", "eb")
         .agg(F.max("s").alias("s"))
     )
-    edges = edges.localCheckpoint(eager=True)
+    edges = cut(edges)
     if edges.count() <= _MATCHING_LOCAL_SOLVE_EDGES:
         return _local_greedy_matching(
             scored_pairs.sparkSession, edges
@@ -337,7 +333,7 @@ def locally_dominant_matching(scored_pairs: DataFrame) -> DataFrame:
             .select("node", "s", "ea", "eb")
         )
         # best feeds BOTH semi-joins: cut so the union+argmax runs once
-        best = best.localCheckpoint(eager=True)
+        best = cut(best)
         won = (
             edges.join(
                 best.select(F.col("node").alias("ea"), "eb"), ["ea", "eb"],
@@ -348,7 +344,7 @@ def locally_dominant_matching(scored_pairs: DataFrame) -> DataFrame:
                 "left_semi",
             )
         )
-        won = won.localCheckpoint(eager=True)
+        won = cut(won)
         if won.isEmpty():
             # no locally dominant edge can only mean no edges remain;
             # guarded by the isEmpty() check above, but stay loud
@@ -361,7 +357,7 @@ def locally_dominant_matching(scored_pairs: DataFrame) -> DataFrame:
             edges.join(taken.withColumnRenamed("node", "ea"), "ea", "left_anti")
             .join(taken.withColumnRenamed("node", "eb"), "eb", "left_anti")
         )
-        edges = edges.localCheckpoint(eager=True)
+        edges = cut(edges)
     # the bound is "LOUD past _MATCHING_MAX_ROUNDS", not at it: a graph that drains
     # exactly on the final round must succeed, so test emptiness once more
     # after the loop instead of relying on the next iteration's check

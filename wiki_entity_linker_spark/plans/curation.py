@@ -47,6 +47,7 @@ from wiki_entity_linker_spark.operators.dedup import (
 )
 from wiki_entity_linker_spark.plans.checkpoint import StageManager, write_json_atomic
 from wiki_entity_linker_spark.plans.er_pipeline import _input_fingerprint
+from wiki_entity_linker_spark.session import cut
 
 
 #: the pipeline's thresholds and budgets. Every stage reads these and the
@@ -137,10 +138,10 @@ def _cut(df: DataFrame, mgr, name: str) -> DataFrame:
     With a :class:`~wiki_entity_linker_spark.plans.checkpoint.StageManager`
     the cut is a durable stage table: executor failure replays from the
     stage table, and re-runs resume it. With ``mgr=None`` it is
-    ``localCheckpoint(eager=True)`` — executor-volatile, but it truncates
-    lineage."""
+    :func:`~wiki_entity_linker_spark.session.cut`, whose medium follows the
+    session's checkpoint directory."""
     if mgr is None:
-        return df.localCheckpoint(eager=True)
+        return cut(df)
     return mgr.stage(name, lambda: df)
 
 

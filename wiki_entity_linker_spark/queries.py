@@ -44,6 +44,7 @@ from wiki_entity_linker_spark.operators.dedup import (
     simhash,
 )
 from wiki_entity_linker_spark.operators.spans import suppress_overlaps
+from wiki_entity_linker_spark.session import cut
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
@@ -2008,10 +2009,9 @@ def source_overlap(spark, sf_dir):
     )
     # cut: the per-gram source-set summary feeds BOTH the per-source counts
     # and the shared-pair explode — one corpus shuffle instead of two
-    perg = (
+    perg = cut(
         grams.groupBy("g")
         .agg(F.collect_set("source").alias("ss"))
-        .localCheckpoint(eager=True)
     )
     n = (
         perg.select(F.explode("ss").alias("source"))
@@ -2253,12 +2253,11 @@ def collocation_lift(spark, sf_dir):
     # cuts: toks feeds the unigram AND bigram aggregations, and uni feeds
     # THREE consumers (total-count agg + both lift join sides) — without
     # them Catalyst re-runs the tokenize scan per consumer (4 scans)
-    toks = d.select(tokenize("text").alias("tk")).localCheckpoint(eager=True)
-    uni = (
+    toks = cut(d.select(tokenize("text").alias("tk")))
+    uni = cut(
         toks.select(F.explode("tk").alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     nn = uni.agg(F.sum("c").cast("long").alias("n"))
     big = (
@@ -2319,9 +2318,7 @@ def vocab_coverage(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     # cut: the exploded token stream feeds the vocab aggregation AND the
     # per-doc rollup — one tokenize scan instead of two
-    ex = d.select(
-        "doc_id", F.explode(tokenize("text")).alias("w")
-    ).localCheckpoint(eager=True)
+    ex = cut(d.select("doc_id", F.explode(tokenize("text")).alias("w")))
     uni = ex.groupBy("w").agg(F.count("*").cast("long").alias("c"))
     vocab = (
         uni.orderBy(F.col("c").desc(), "w").limit(30)
@@ -2517,14 +2514,11 @@ def bloom_decontamination(spark, sf_dir):
     # per-doc sizes) and bench feeds TWO (bitmap build, exact verify
     # semi-join) — without them each consumer re-runs the tokenize+shingle
     # scan / the bench dedup shuffle
-    toks = d.select(
-        "doc_id", shingles(tokenize("text"), 3).alias("sh")
-    ).localCheckpoint(eager=True)
-    bench = (
+    toks = cut(d.select("doc_id", shingles(tokenize("text"), 3).alias("sh")))
+    bench = cut(
         toks.filter(F.col("doc_id") % 50 == 0)
         .select(F.explode("sh").alias("g"))
         .dropDuplicates(["g"])
-        .localCheckpoint(eager=True)
     )
     bm = bloom_bitmap(bench, "g")
     # probe as a ROW filter, not a HOF: explode + scalar bloom test stays
@@ -3675,7 +3669,7 @@ def fellegi_sunter_scores(spark, sf_dir):
         fellegi_sunter_weights,
     )
 
-    feat = _fs_labeled_feature_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    feat = cut(_fs_labeled_feature_pairs(spark, sf_dir))
     w = fellegi_sunter_weights(feat, ["f_source", "f_lang", "f_len"])
     return fellegi_sunter_score(
         feat, w, ["f_source", "f_lang", "f_len"], ["id_a", "id_b", "is_match"]
@@ -3698,7 +3692,7 @@ def fs_threshold_sweep(spark, sf_dir):
         fellegi_sunter_weights,
     )
 
-    feat = _fs_labeled_feature_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    feat = cut(_fs_labeled_feature_pairs(spark, sf_dir))
     w = fellegi_sunter_weights(feat, ["f_source", "f_lang", "f_len"])
     scored = fellegi_sunter_score(
         feat, w, ["f_source", "f_lang", "f_len"], ["id_a", "id_b", "is_match"]
@@ -3878,10 +3872,9 @@ def fs_em_model(spark, sf_dir):
 
     # each EM iteration consumes the pair frame once: checkpoint the
     # candidate-generation pipeline so it runs once, not once per iteration
-    feat = (
+    feat = cut(
         _fs_labeled_feature_pairs(spark, sf_dir)
         .drop("is_match")
-        .localCheckpoint(eager=True)
     )
     return fs_em_estimate(feat, ["f_source", "f_lang", "f_len"])
 
@@ -4165,10 +4158,9 @@ def tfidf_keywords(spark, sf_dir):
     toks = d.select("doc_id", F.explode(tokenize("text")).alias("w"))
     # cut: tf feeds BOTH the df aggregation and the scoring join — without
     # it Catalyst re-runs the tokenize+explode+agg pass per consumer
-    tf = (
+    tf = cut(
         toks.groupBy("doc_id", "w")
         .agg(F.count("*").cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
     )
     dfc = tf.groupBy("w").agg(F.count("*").cast("long").alias("df"))
     n = d.agg(F.count("*").cast("long").alias("n"))
@@ -4534,9 +4526,8 @@ def semantic_dedup(spark, sf_dir):
     from wiki_entity_linker_spark.operators.ann import kmeans_lattice_assign
 
     emb = _t(spark, sf_dir, "embeddings")
-    cells = kmeans_lattice_assign(emb).localCheckpoint(
-        eager=True  # consumed twice (pair join + final flag join)
-    )
+    # consumed twice (pair join + final flag join)
+    cells = cut(kmeans_lattice_assign(emb))
     v = emb.select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("raw"),

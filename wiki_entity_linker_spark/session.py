@@ -3,15 +3,18 @@
 Local-mode defaults mirror what a 1000-executor cluster deployment would set
 per-executor: AQE on (runtime skew-join splitting + partition coalescing),
 shuffle partitions sized to cores (not the 200 default), Arrow enabled for the
-pandas-UDF scoring stages, UTC timezone pinned so results are comparable with
-the DuckDB oracle.
+driver-side ``toPandas`` solves and the pandas-UDF paths (Jaro-Winkler query
+scoring, the ``mapInPandas``/``applyInPandas`` scans), UTC timezone pinned so
+results are comparable with the DuckDB oracle.
+
+:func:`cut` is the one lineage cut every operator, plan and query uses.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_driver_memory() -> str:
@@ -48,9 +51,11 @@ def cluster_conf_profile(
     - ``memory.fraction = 0.8 / storageFraction = 0.3``: execution-heavy
       workload (one deliberate cache: the per-doc feature table); most of
       unified memory goes to shuffle/aggregation.
-    - ``arrow.maxRecordsPerBatch = 4096``: the scoring UDFs carry int64
-      feature arrays of ~100-1000 elements per row; 4k rows/batch bounds
-      per-batch memory at a few hundred MB while keeping numpy kernels hot.
+    - ``arrow.maxRecordsPerBatch = 4096``: the Arrow paths (Jaro-Winkler
+      query scoring, the ``mapInPandas``/``applyInPandas`` scans) can carry
+      rows of ~100-1000 array elements or whole article texts; 4k
+      rows/batch bounds per-batch memory at a few hundred MB while keeping
+      numpy kernels hot.
     - ``speculation on``: at 1000 executors stragglers (bad disk, hot node)
       dominate p99 stage time; re-launching the slowest 10% is cheap.
     - ``maxResultSize = 4g``: the driver only ever collects counters and
@@ -153,3 +158,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def cut(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and return it with its lineage truncated.
+
+    Every lineage cut in the package goes through here, so where the rows
+    go is one deployment decision, read from Spark's own setting:
+
+    - a checkpoint directory is set (``spark.checkpoint.dir`` or
+      ``SparkContext.setCheckpointDir``): a reliable
+      ``checkpoint(eager=True)``. The rows are written under that
+      directory, so a lost executor costs a re-read, not the job.
+    - none is set (the default; nothing in this package sets one): a
+      ``localCheckpoint(eager=True)``. The rows stay in executor block
+      storage, which skips the write, but a lost executor fails the job:
+      the truncated lineage cannot recompute its blocks.
+
+    Either way the returned frame's plan is a bare ``LogicalRDD``, so a
+    loop that cuts every round keeps a constant-size plan. Reliable
+    checkpoint files stay on disk after the job unless
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is true.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)

@@ -49,6 +49,7 @@ from wiki_entity_linker_spark.plans.checkpoint import (
     chain_depth,
     chain_head,
 )
+from wiki_entity_linker_spark.session import cut
 
 #: schema of source-file drops (FIXTURES.md §1 / BASELINE.json input_hint)
 SOURCE_SCHEMA = "repo string, path string, commit string, lang string, content string"
@@ -159,9 +160,7 @@ def streaming_curation_append(
         # replay filter: drop already-curated ids so a re-delivered batch
         # degenerates to its genuinely-new suffix (or a clean skip)
         seen = ParquetStore(base).read(session, "verdicts")
-        fresh = batch.join(
-            seen.select("doc_id"), "doc_id", "left_anti"
-        ).localCheckpoint(eager=True)
+        fresh = cut(batch.join(seen.select("doc_id"), "doc_id", "left_anti"))
         if not fresh.take(1):
             return False
         run_curation_increment(session, base, fresh, wd, benchmark=benchmark)
